@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Driver benchmark contract: run the headline query set on
-  * SPARK_GRAFT_SF_DIR, print ONE JSON line
+/** Driver benchmark contract: run the headline query set (or the
+  * queries named on the command line) on SPARK_GRAFT_SF_DIR, print ONE
+  * JSON line
   * {"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}.
+  * Usage: sbt "runMain graft.Bench [query…]"
   *
   * Methodology (BASELINE.md): per query one uncounted warmup, then
   * median of 5 timed runs; each run materializes every row through the
@@ -46,21 +46,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // r15: a lower AQE coalesce floor (minPartitionSize 128 KiB) was
-      // A/B-measured on the full bench and REJECTED — it parallelized
-      // q96's window (−14 %) but cost more elsewhere (q21 +20 %, q50/q06
-      // +30 % task overhead); full-bench totals 6.32 s vs 5.98 s.
-      // Spark's defaults stay; see OPTIMIZATION_r15.md.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val names = if (args.nonEmpty) args.toSeq else headline
+    // r15: a lower AQE coalesce floor (minPartitionSize 128 KiB) was
+    // A/B-measured on the full bench and REJECTED — it parallelized
+    // q96's window (−14 %) but cost more elsewhere (q21 +20 %, q50/q06
+    // +30 % task overhead); full-bench totals 6.32 s vs 5.98 s.
+    // Spark's defaults stay; see OPTIMIZATION_r15.md.
+    val spark = GraftSession.local("graft-bench")
 
     def once(name: String): Double = {
       val t0 = System.nanoTime()
@@ -94,7 +86,7 @@ object Bench {
     // A window whose max/min spread exceeds 1.35 is treated as contended:
     // pause and re-run (up to 3 retries), then keep the window with the
     // LOWEST MEDIAN — the least-polluted sample of the same fixed work.
-    val results = headline.filter(SparkEntry.queries.contains).map { name =>
+    val results = names.filter(SparkEntry.queries.contains).map { name =>
       try {
         once(name) // warmup: JIT + codegen + file-index caches
         var best = (1 to 5).map(_ => once(name)).sorted

@@ -8,29 +8,18 @@ import org.apache.spark.sql.SparkSessionExtensions
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * and every session materializes with the engine's optimizer rules
-  * installed — the ASOF-join lowering and the materialized-view
-  * substitution — plus the full function registry, with no per-session
-  * wiring code. (The library also self-installs these via
-  * `experimental.extraOptimizations` when its APIs are first touched,
-  * so embedded/test use works without the config; this class is the
-  * idiomatic cluster-deployment hook.)
+  * and every session they build runs [[GraftSession.install]] when its
+  * analyzer is built, before its first query plans. That is the same
+  * install point embedded and test sessions reach through
+  * [[GraftSession.local]], the table loader and the engine's APIs, so a
+  * cluster deployment plans with the same ordered rule list, in the same
+  * optimizer batch, as every other session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(session =>
-      graft.plans.LowerAsofJoin(session.asInstanceOf[org.apache.spark.sql.SparkSession]))
-    e.injectOptimizerRule(_ => graft.plans.MaterializedViews.MvRewrite)
-    e.injectOptimizerRule(_ => graft.plans.FkJoinElimination)
-    e.injectOptimizerRule(_ => graft.plans.SemiJoinRewrite)
-    e.injectOptimizerRule(_ => graft.plans.EagerAggregation)
-    e.injectOptimizerRule(_ => graft.plans.AggregateUnionTranspose)
-    e.injectOptimizerRule(_ => graft.plans.OrJoinToUnion)
+  override def apply(e: SparkSessionExtensions): Unit =
     e.injectCheckRule { session =>
-      // piggyback session start to register the function surface once
-      graft.functions.GraftFunctions.registerAll(
-        session.asInstanceOf[org.apache.spark.sql.SparkSession])
+      // the hook that hands over the session itself, once per session
+      GraftSession.install(session)
       _ => ()
     }
-  }
 }

@@ -2,54 +2,65 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, FileSourceScanExec, GenerateExec, MapElementsExec, MapPartitionsExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.window.WindowExec
 
-/** Dev-only whole-surface plan audit: build EVERY declared query against
-  * `$SPARK_GRAFT_SF_DIR` (default sf0.01), walk the executed plan string,
-  * and append one line per query to `<out>/plan_audit.tsv` with counts of
-  * the structures that matter at 100 TB — exchanges, sorts, cartesian /
-  * broadcast-nested-loop joins, SortAggregate fallbacks, Python/Scala
-  * opaque eval nodes, and one-partition exchanges. The audit does NOT
-  * execute the queries (side-effectful registration still runs, as in
-  * the driver); it is a triage list, not a proof.
+/** Dev-only whole-surface plan audit: run EVERY declared query against
+  * `$SPARK_GRAFT_SF_DIR` (default sf0.01) the way [[ExplainDump]] does,
+  * walk the final adaptive plan that ran (query stages and subqueries
+  * included), and append one line per query to `<out>/plan_audit.tsv`
+  * with counts of the structures that matter at 100 TB — shuffle
+  * exchanges and the ones reused instead of re-run, sorts, cartesian /
+  * broadcast-nested-loop joins, SortAggregate fallbacks, opaque
+  * object-mapping nodes, and scans. A triage list, not a proof.
   * Usage: sbt "runMain graft.PlanAudit /tmp/audit"
   */
-object PlanAudit {
+object PlanAudit extends AdaptiveSparkPlanHelper {
+
+  /** TSV column → the physical operators it counts. */
+  private val columns: Seq[(String, SparkPlan => Boolean)] = Seq(
+    "exchanges" -> (_.isInstanceOf[ShuffleExchangeLike]),
+    "reusedExchanges" -> (_.isInstanceOf[ReusedExchangeExec]),
+    "sorts" -> (_.isInstanceOf[SortExec]),
+    "cartesian" -> (_.isInstanceOf[CartesianProductExec]),
+    "bnlj" -> (_.isInstanceOf[BroadcastNestedLoopJoinExec]),
+    "sortAgg" -> (_.isInstanceOf[SortAggregateExec]),
+    "objHashAgg" -> (_.isInstanceOf[ObjectHashAggregateExec]),
+    "mapPartitions" -> {
+      case _: MapPartitionsExec | _: MapElementsExec | _: DeserializeToObjectExec => true
+      case _ => false
+    },
+    "generate" -> (_.isInstanceOf[GenerateExec]),
+    "windows" -> (_.isInstanceOf[WindowExec]),
+    "scans" -> (_.isInstanceOf[FileSourceScanExec]))
+
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/audit")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plan-audit")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-plan-audit")
     new File(outDir).mkdirs()
     val pw = new PrintWriter(new File(outDir, "plan_audit.tsv"))
-    pw.println(Seq("query", "exchanges", "sorts", "cartesian", "bnlj",
-      "sortAgg", "objHashAgg", "mapPartitions", "generate", "windows",
-      "scans", "err").mkString("\t"))
+    pw.println(("query" +: columns.map(_._1) :+ "err").mkString("\t"))
     val names = SparkEntry.queries.keys.toSeq.sorted
     for (name <- names) {
-      try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val p = df.queryExecution.executedPlan.toString
-        def c(pat: String): Int = pat.r.findAllMatchIn(p).size
-        pw.println(Seq(name,
-          c("Exchange (hash|range|Single|[Rr]ound)"), c("\\bSort\\b"),
-          c("CartesianProduct"), c("BroadcastNestedLoopJoin"),
-          c("SortAggregate"), c("ObjectHashAggregate"),
-          c("MapPartitions|mapelements|MapElements|DeserializeToObject"),
-          c("Generate"), c("\\bWindow\\b"), c("Scan parquet"), "").mkString("\t"))
-      } catch {
-        case e: Throwable =>
-          pw.println(Seq(name, "", "", "", "", "", "", "", "", "", "",
-            Option(e.getMessage).getOrElse(e.getClass.getName).take(80)).mkString("\t"))
-      }
+      val row =
+        try {
+          val nodes = collectWithSubqueries(
+            ExplainDump.executed(spark, sfDir, name).queryExecution.executedPlan) {
+            case p => p
+          }
+          columns.map { case (_, is) => nodes.count(is).toString } :+ ""
+        } catch {
+          case e: Throwable =>
+            columns.map(_ => "") :+
+              Option(e.getMessage).getOrElse(e.getClass.getName)
+                .replaceAll("\\s+", " ").take(80)
+        }
+      pw.println((name +: row).mkString("\t"))
       pw.flush()
     }
     pw.close()

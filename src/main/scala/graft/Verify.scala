@@ -1,8 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * Usage: sbt "runMain graft.Verify <sfDir> <outDir> [query,…]" */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -10,14 +10,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String) = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(e => keep(e._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -78,8 +78,7 @@ object Constraints {
       factCols: Seq[String], dimPath: String, dimKeys: Seq[String]): Unit = {
     fks.add(ForeignKey(qualify(spark, factPath), factCols,
       qualify(spark, dimPath), dimKeys)): Unit
-    // constraint-driven rewrites activate with the first declaration
-    graft.plans.FkJoinElimination.ensure(spark)
+    graft.GraftSession.install(spark)
   }
 
   /** Declare `cols` (jointly) unique in the table at `path`
@@ -88,7 +87,7 @@ object Constraints {
       cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "unique key needs 1+ columns")
     uks.add(UniqueKey(qualify(spark, path), cols.sorted)): Unit
-    graft.plans.FkJoinElimination.ensure(spark)
+    graft.GraftSession.install(spark)
   }
 
   def clear(): Unit = { fks.clear(); uks.clear() }

@@ -40,7 +40,7 @@ object Statistics {
     val q = qualify(spark, path)
     tables.merge(q, TableStats(q, rows, ndv),
       (old, fresh) => TableStats(q, fresh.rows, old.ndv ++ fresh.ndv)): Unit
-    graft.plans.AggPushdown.ensure(spark)
+    graft.GraftSession.install(spark)
   }
 
   /** ONE profiling pass — exact row count + an HLL distinct sketch per

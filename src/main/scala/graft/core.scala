@@ -41,6 +41,9 @@ object T {
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   def apply(s: SparkSession, dir: String, name: String): DataFrame = {
+    // a session built elsewhere (not by GraftSession.local) gets the
+    // graft rules and functions on its first table read
+    GraftSession.install(s)
     // events.parquet carries TIMESTAMP(NANOS), which Spark only reads as
     // a raw long (DuckDB truncates ns→µs, so we do the same to stay
     // oracle-identical).

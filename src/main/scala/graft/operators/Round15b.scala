@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{Q, T}
 import graft.catalog.Statistics
-import graft.plans.{AggPushdown, MaterializedViews}
+import graft.plans.MaterializedViews
 
 /** Round-15 pack B: the aggregate-pushdown rule family — rewrites the
   * reference applies through its Volcano planner and Catalyst never
@@ -29,7 +29,6 @@ object Round15b {
     * row per matching line item (plan-gated in AggPushdownSpec). */
   val q173_semi_join_agg = Q(
     (s, dir) => {
-      AggPushdown.ensure(s)
       T(s, dir, "orders")
         .join(T(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
         .groupBy("o_orderpriority")
@@ -73,7 +72,6 @@ object Round15b {
     * negative). */
   val q175_union_tile_transpose = Q(
     (s, dir) => {
-      AggPushdown.ensure(s)
       def li = T(s, dir, "lineitem")
         .withColumn("l_quantity", T.dec2(col("l_quantity")))
       MaterializedViews.registerOnce(s, "q175_mv", li,
@@ -228,7 +226,6 @@ object Round15b {
     * plain shift/mask arithmetic. */
   val d49_zorder_keys = Q(
     (s, dir) => {
-      graft.functions.GraftFunctions.registerAll(s)
       T(s, dir, "orders").createOrReplaceTempView("orders_v49")
       s.sql("""
         SELECT o_orderkey, o_custkey,
@@ -296,7 +293,6 @@ object Round15b {
     * written. */
   val q179_or_join_union = Q(
     (s, dir) => {
-      graft.plans.OrJoinToUnion.ensure(s)
       T(s, dir, "lineitem")
         .withColumn("l_quantity", T.dec2(col("l_quantity")))
         .join(T(s, dir, "part"),

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, Cast, EqualTo, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftOuter, LeftSemi, RightOuter}
@@ -41,19 +40,6 @@ import graft.catalog.Statistics
   * UNION ALL over hot+cold storage answer the hot branch from a tile
   * while only the cold branch is scanned. */
 object AggPushdown {
-
-  /** Install the family into THIS session's optimizer (idempotent), in
-    * canonical order — semi-join first (a strictly better plan than an
-    * eager aggregation of the same multiplicity-insensitive shape),
-    * then eager aggregation, then the union transpose. */
-  def ensure(spark: SparkSession): Unit = {
-    Seq(SemiJoinRewrite, EagerAggregation, AggregateUnionTranspose)
-      .foreach { r =>
-        if (!spark.experimental.extraOptimizations.contains(r))
-          spark.experimental.extraOptimizations =
-            spark.experimental.extraOptimizations :+ r
-      }
-  }
 
   /** Shared: the aggregate calls of an output list, deduplicated by
     * canonical form. */

@@ -71,21 +71,17 @@ case class LowerAsofJoin(spark: SparkSession) extends Rule[LogicalPlan] {
 }
 
 object AsofJoinPlan {
-  /** Install the lowering rule once per session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[LowerAsofJoin]))
-      spark.experimental.extraOptimizations = existing :+ LowerAsofJoin(spark)
-  }
-
-  /** Public API: build the logical node (requires install()). */
+  /** Public API: build the logical node (installs the graft rules, the
+    * lowering among them, into the session). */
   def asof(
       spark: SparkSession,
       left: org.apache.spark.sql.DataFrame,
       right: org.apache.spark.sql.DataFrame,
       key: String, leftTime: String, rightTime: String,
-      payload: Seq[String]): org.apache.spark.sql.DataFrame =
+      payload: Seq[String]): org.apache.spark.sql.DataFrame = {
+    graft.GraftSession.install(spark)
     GraftSqlBridge.ofRows(spark, AsofJoinPlan(
       GraftSqlBridge.logicalPlan(left), GraftSqlBridge.logicalPlan(right),
       key, leftTime, rightTime, payload))
+  }
 }

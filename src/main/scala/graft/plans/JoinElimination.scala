@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, Cast, EqualTo, ExprId, Expression, IsNotNull, Literal}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical
@@ -51,19 +50,6 @@ import graft.catalog.Constraints.ResolvedPair
   * no join to re-fire on, and a snowflake eliminates leaf-by-leaf or
   * whole-subtree to the same result. */
 object FkJoinElimination extends Rule[LogicalPlan] {
-
-  /** Install into THIS session's optimizer (idempotent); called by the
-    * first constraint declaration — the rules only act when declared
-    * constraints exist, so earlier installation would be a no-op.
-    * Installs the whole constraint-rule family. */
-  private[graft] def ensure(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-    if (!spark.experimental.extraOptimizations.contains(UniqueKeyAggregateRemove))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ UniqueKeyAggregateRemove
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     // fast path: no declared constraints, nothing can ever eliminate —

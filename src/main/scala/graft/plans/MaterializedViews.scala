@@ -306,7 +306,7 @@ object MaterializedViews {
           // the registry is JVM-global but extraOptimizations are
           // per-session: a SECOND session hitting this fast path must
           // still get the rewrite rule installed (ADVICE r12)
-          ensureRule(spark)
+          graft.GraftSession.install(spark)
           // a conf'd lattice home must hold on EVERY registration path:
           // a tile that predates the conf (registered homeless, then
           // re-requested through a configured session) gains its home
@@ -402,17 +402,9 @@ object MaterializedViews {
     replacedAll.filterNot(_.queryExecution.analyzed.sameResult(newPlan))
       .foreach(_.unpersist())
 
-    ensureRule(spark)
+    graft.GraftSession.install(spark)
     snapped
   }
-
-  /** Install the rewrite rule in THIS session's optimizer (idempotent).
-    * Sessions are independent: every path that hands a session a live
-    * registry entry must run this, including registerOnce's fast path. */
-  private def ensureRule(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(MvRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewrite
 
   /** Incremental maintenance (ref: materialize/MaterializationService
     * .java — the reference re-populates tiles; here the merge is
@@ -1365,7 +1357,7 @@ object MaterializedViews {
     } else if (registry.containsKey(meta.name)) {
       // live registration wins (it is at least as fresh); just make sure
       // THIS session rewrites through it
-      ensureRule(spark)
+      graft.GraftSession.install(spark)
       Some(meta.name)
     } else {
       // re-apply the recorded source schema on the rebuilt base (ADVICE
@@ -1462,7 +1454,6 @@ object MaterializedViews {
           graft.catalog.Constraints.ForeignKey(
             fp, fc.split('\u0002').toSeq, dp, dk.split('\u0002').toSeq))
       }
-      if (meta.fks.nonEmpty) FkJoinElimination.ensure(spark)
 
       // with a catch-up pending, the tile must not serve until the
       // delta lands: the guard is counted BEFORE the store makes the

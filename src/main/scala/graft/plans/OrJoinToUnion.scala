@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Coalesce, EqualTo, Expression, Literal, Not, Or}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Union}
@@ -34,11 +33,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * inner disjunct that is itself an OR expands recursively at the
   * fixed point. */
 object OrJoinToUnion extends Rule[LogicalPlan] {
-
-  def ensure(spark: SparkSession): Unit =
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(left, right, Inner, Some(Or(c1, c2)), hint)

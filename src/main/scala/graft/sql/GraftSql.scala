@@ -2,8 +2,6 @@ package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.GraftFunctions
-
 /** SQL entry point (ref: SURVEY.md §7.0 layer 4): the default path
   * delegates to spark.sql — Spark's parser covers the shared surface —
   * while a pre-rewriter lowers Calcite-dialect syntax Spark lacks,
@@ -21,7 +19,7 @@ import graft.functions.GraftFunctions
 object GraftSql {
 
   def sql(spark: SparkSession, rawText: String): DataFrame = {
-    GraftFunctions.registerAll(spark)
+    graft.GraftSession.install(spark)
     // conf-driven lattice home: adopt the session's durable tiles once,
     // BEFORE the first statement plans (no-op without the conf)
     graft.plans.MaterializedViews.autoAdopt(spark)

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.GraftFunctions
-
 /** The `STREAM` keyword (ref: site/_docs/stream.md; algebra
   * rel/stream/Delta.java, Chi.java; validation error
   * STREAMING_AGGREGATION_REQUIRES_MONOTONIC tested in
@@ -56,7 +54,7 @@ object StreamSql {
   /** Run a query that may carry the STREAM keyword. Returns a streaming
     * DataFrame for STREAM queries, a batch one otherwise. */
   def sql(spark: SparkSession, text: String): DataFrame = {
-    GraftFunctions.registerAll(spark)
+    graft.GraftSession.install(spark)
     val isStream = streamKw.findFirstIn(text).isDefined
     val referenced = tableIdents(text)
     if (isStream) {

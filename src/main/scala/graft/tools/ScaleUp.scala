@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.T
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, T}
 import org.apache.spark.sql.functions._
 
 /** Dev-only deterministic scale-up of a driver test-data directory, for
@@ -39,15 +38,8 @@ object ScaleUp {
     val dst = if (args.length > 1) args(1) else "/tmp/sf1"
     val k = if (args.length > 2) args(2).toInt else 10
     val stride = 100000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scaleup")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local("graft-scaleup")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
 
     val lower = "abcdefghijklmnopqrstuvwxyz"
     val upper = lower.toUpperCase

@@ -22,12 +22,4 @@ object GraftSqlBridge {
 
   def logicalPlan(df: DataFrame): catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
-
-  /** Materialize the optimizer rules an extensions object would inject
-    * at session build (buildOptimizerRules is private[sql]) — lets the
-    * spec verify the spark.sql.extensions entry point without tearing
-    * down the shared test session. */
-  def optimizerRulesOf(e: SparkSessionExtensions, s: SparkSession)
-      : Seq[catalyst.rules.Rule[catalyst.plans.logical.LogicalPlan]] =
-    e.buildOptimizerRules(s)
 }

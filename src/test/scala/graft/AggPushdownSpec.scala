@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 
 import graft.catalog.{Constraints, Statistics}
-import graft.plans.{AggPushdown, AggregateUnionTranspose, EagerAggregation, MaterializedViews, OrJoinToUnion, SemiJoinRewrite}
+import graft.plans.{AggregateUnionTranspose, EagerAggregation, MaterializedViews, OrJoinToUnion, SemiJoinRewrite}
 
 /** The aggregate-pushdown rule family (SemiJoinRule /
   * AggregateJoinTransposeRule / AggregateUnionTransposeRule parity):
@@ -53,7 +53,6 @@ class AggPushdownSpec extends SparkSpec {
   // ---- SemiJoinRewrite ------------------------------------------------
 
   test("multiplicity-insensitive aggregate over an inner join becomes LEFT SEMI") {
-    AggPushdown.ensure(spark)
     def q = orders.join(lineitem, col("o_orderkey") === col("l_orderkey"))
       .groupBy("o_orderpriority")
       .agg(max("o_totalprice").as("mx"), countDistinct("o_custkey").as("nc"))
@@ -63,7 +62,6 @@ class AggPushdownSpec extends SparkSpec {
   }
 
   test("SELECT DISTINCT over the fan-out side also goes semi, preserved side swapped") {
-    AggPushdown.ensure(spark)
     // reads the RIGHT side only: the preserved side becomes the left child
     def q = lineitem.join(orders, col("l_orderkey") === col("o_orderkey"))
       .select("o_orderpriority").distinct()
@@ -73,14 +71,12 @@ class AggPushdownSpec extends SparkSpec {
   }
 
   test("a multiplicity-SENSITIVE aggregate (SUM) keeps the inner join") {
-    AggPushdown.ensure(spark)
     val q = orders.join(lineitem, col("o_orderkey") === col("l_orderkey"))
       .groupBy("o_orderpriority").agg(sum("o_totalprice").as("rev"))
     assert(joinTypes(q) == Seq(Inner), "SUM observes multiplicity; must refuse")
   }
 
   test("an aggregate reading both sides keeps the inner join") {
-    AggPushdown.ensure(spark)
     val q = orders.join(lineitem, col("o_orderkey") === col("l_orderkey"))
       .groupBy("o_orderpriority")
       .agg(max("o_totalprice").as("mx"), max("l_quantity").as("mq"))
@@ -88,7 +84,6 @@ class AggPushdownSpec extends SparkSpec {
   }
 
   test("FK coverage deletes a LEFT SEMI join outright (the composition end state)") {
-    AggPushdown.ensure(spark)
     Constraints.declareForeignKey(spark, s"$sfDir/orders.parquet", "o_custkey",
       s"$sfDir/customer.parquet", "c_custkey")
     try {
@@ -116,7 +111,6 @@ class AggPushdownSpec extends SparkSpec {
     .agg(sum("o_totalprice").as("rev"), count(lit(1)).as("n"))
 
   test("declared stats push a partial aggregate below the join") {
-    AggPushdown.ensure(spark)
     Statistics.profileAndDeclare(spark, s"$sfDir/orders.parquet", Seq("o_custkey"))
     try {
       def q = starRollup
@@ -130,12 +124,10 @@ class AggPushdownSpec extends SparkSpec {
   }
 
   test("no declared stats: no eager aggregation") {
-    AggPushdown.ensure(spark)
     assert(aggCount(starRollup) == 1, "without NDV evidence the rule must refuse")
   }
 
   test("reduction below the threshold: no eager aggregation") {
-    AggPushdown.ensure(spark)
     Statistics.declare(spark, s"$sfDir/orders.parquet", 1500L,
       Map("o_custkey" -> 1000L))
     try assert(aggCount(starRollup) == 1,
@@ -144,7 +136,6 @@ class AggPushdownSpec extends SparkSpec {
   }
 
   test("eager aggregation cascades down a snowflake at the fixed point") {
-    AggPushdown.ensure(spark)
     Statistics.profileAndDeclare(spark, s"$sfDir/orders.parquet", Seq("o_custkey"))
     Statistics.profileAndDeclare(spark, s"$sfDir/customer.parquet", Seq("c_nationkey"))
     try {
@@ -162,7 +153,6 @@ class AggPushdownSpec extends SparkSpec {
   }
 
   test("eager aggregation pushes into the PRESERVED side of a LEFT join") {
-    AggPushdown.ensure(spark)
     Statistics.profileAndDeclare(spark, s"$sfDir/orders.parquet", Seq("o_custkey"))
     try {
       // half the customers filtered away: dangling orders null-extend,
@@ -183,7 +173,6 @@ class AggPushdownSpec extends SparkSpec {
   }
 
   test("eager aggregation refuses the null-extensible side of a LEFT join") {
-    AggPushdown.ensure(spark)
     Statistics.profileAndDeclare(spark, s"$sfDir/customer.parquet", Seq("c_custkey"))
     try {
       // aggregate inputs come from the RIGHT (null-extended) side: a
@@ -199,7 +188,6 @@ class AggPushdownSpec extends SparkSpec {
   }
 
   test("MIN/MAX-only shapes go semi, not eager (rule order inside the family)") {
-    AggPushdown.ensure(spark)
     Statistics.profileAndDeclare(spark, s"$sfDir/orders.parquet", Seq("o_custkey"))
     try {
       val q = orders.join(customer, col("o_custkey") === col("c_custkey"))
@@ -214,7 +202,6 @@ class AggPushdownSpec extends SparkSpec {
   private def part = T(spark, sfDir, "part")
 
   test("OR-of-equi join expands to a union of two hash joins") {
-    OrJoinToUnion.ensure(spark)
     def q = lineitem.join(part,
         col("l_partkey") === col("p_partkey") ||
           col("l_suppkey") === col("p_partkey"))
@@ -231,7 +218,6 @@ class AggPushdownSpec extends SparkSpec {
   }
 
   test("a hashable conjunct beside the OR: no expansion (the OR is a cheap filter)") {
-    OrJoinToUnion.ensure(spark)
     val q = lineitem.join(part,
         col("l_partkey") === col("p_partkey") &&
           (col("l_suppkey") === col("p_size") || col("l_linenumber") === col("p_size")))
@@ -241,7 +227,6 @@ class AggPushdownSpec extends SparkSpec {
   }
 
   test("a disjunct with no equi pair: no expansion (its branch could not hash)") {
-    OrJoinToUnion.ensure(spark)
     val q = lineitem.join(part,
         col("l_partkey") === col("p_partkey") ||
           col("l_suppkey") < col("p_size"))
@@ -262,7 +247,6 @@ class AggPushdownSpec extends SparkSpec {
     .agg(sum("l_quantity").as("q"), count(lit(1)).as("n"))
 
   test("a registered tile pulls the aggregate below UNION ALL, tile branch from cache") {
-    AggPushdown.ensure(spark)
     MaterializedViews.register(spark, "ut_tile", liDec,
       keys = Seq("l_returnflag"), sums = Seq("l_quantity"))
     try {
@@ -279,7 +263,6 @@ class AggPushdownSpec extends SparkSpec {
   }
 
   test("no tile: the union transpose refuses (the bare transpose is a pessimization)") {
-    AggPushdown.ensure(spark)
     val q = unionRollup
     assert(aggCount(q) == 1,
       s"without a tile to buy, one shuffle beats N+1:\n${q.queryExecution.optimizedPlan}")

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 class AsofPlanSpec extends SparkSpec {
 
   test("custom logical node lowers to the same result as direct leftAsof") {
-    AsofJoinPlan.install(spark)
     val ev = T(spark, sfDir, "events")
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"))
@@ -48,7 +47,6 @@ class AsofPlanSpec extends SparkSpec {
   }
 
   test("node survives downstream operators (filter + aggregate over it)") {
-    AsofJoinPlan.install(spark)
     val ev = T(spark, sfDir, "events")
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"))

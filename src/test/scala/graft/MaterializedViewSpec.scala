@@ -528,15 +528,17 @@ class MaterializedViewSpec extends SparkSpec {
     // an empty registration is not expressible — instead register on the
     // full source, then append a NEW batch (reusing half2 rows as the
     // delta) and check the merge algebra against a direct recompute.
+    // The recompute runs before the tile exists: once it does, the union
+    // transpose answers the `source` branch from the refreshed tile.
+    val expect = source.unionByName(half2).groupBy("o_orderstatus")
+      .agg(sum("o_totalprice").as("t"), count(lit(1)).as("n"),
+        min("o_orderdate").as("lo"), max("o_orderdate").as("hi"))
+      .collect().map(r => r.getString(0) -> r).toMap
     MaterializedViews.register(spark, "mv_inc", source,
       keys = Seq("o_orderstatus"), sums = Seq("o_totalprice"),
       mins = Seq("o_orderdate"), maxs = Seq("o_orderdate"))
     try {
       val refreshed = MaterializedViews.refreshIncremental(spark, "mv_inc", half2)
-      val expect = source.unionByName(half2).groupBy("o_orderstatus")
-        .agg(sum("o_totalprice").as("t"), count(lit(1)).as("n"),
-          min("o_orderdate").as("lo"), max("o_orderdate").as("hi"))
-        .collect().map(r => r.getString(0) -> r).toMap
       val gotRows = refreshed.collect()
       assert(gotRows.length == expect.size)
       gotRows.foreach { r =>

@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.MaterializedViews
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Child program for RestartAdoptSpec: each phase runs in its OWN JVM,
@@ -10,17 +9,9 @@ import org.apache.spark.sql.functions._
   * analog. Exits non-zero on any violated expectation. */
 object RestartAdoptChild {
 
-  private def session(): SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-restart-child")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
   def main(args: Array[String]): Unit = {
     val Array(phase, fact, lat) = args
-    val spark = session()
+    val spark = GraftSession.local("graft-restart-child")
     try phase match {
       case "persist" =>
         import spark.implicits._

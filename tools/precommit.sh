@@ -1,7 +1,9 @@
 #!/usr/bin/env bash
-# Pre-commit gate: no snapshot ships without a green compile and a
-# three-query oracle smoke. Round 8 zeroed its artifacts by committing
-# a non-compiling tree — this script makes that impossible to repeat.
+# Pre-commit gate: no snapshot ships without one session builder and
+# one optimizer-rule install point in src/main, a green compile, the
+# spine parity spec's rule-list checks, and a three-query oracle smoke.
+# Round 8 zeroed its artifacts by committing a non-compiling tree — this
+# script makes that impossible to repeat.
 #
 # Usage: tools/precommit.sh [query,names]   (default smoke: q01,d36,ds10)
 set -euo pipefail
@@ -11,8 +13,24 @@ SMOKE="${1:-q01_pricing_summary,d36_temperature_mix,ds10_band_panel}"
 SF="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.01}"
 OUT=/tmp/precommit_verify
 
+echo "[precommit] engine spine: one session builder, one rule install point..."
+builders="$(grep -rn 'SparkSession\.builder()' src/main || true)"
+if [ "$(printf '%s' "$builders" | grep -c .)" -gt 1 ]; then
+  echo "more than one SparkSession.builder() in src/main; build through GraftSession.local:"
+  echo "$builders"; exit 1
+fi
+assigns="$(grep -rnE 'extraOptimizations[[:space:]]*(\+\+|:\+)?=([^=]|$)' src/main \
+  | grep -v '^src/main/scala/graft/GraftSession\.scala:' || true)"
+if [ -n "$assigns" ]; then
+  echo "extraOptimizations assigned outside GraftSession; call GraftSession.install:"
+  echo "$assigns"; exit 1
+fi
+
 echo "[precommit] sbt compile + Test/compile..."
 sbt -batch compile Test/compile
+
+echo "[precommit] spine parity: rule list (a) and entry points (b)..."
+sbt -batch "testOnly graft.ExtensionsSpec -- -z (a) -z (b)"
 
 echo "[precommit] smoke verify: $SMOKE @ $SF"
 rm -rf "$OUT"
