@@ -2,6 +2,7 @@ package graft
 
 import java.io.{File, PrintWriter}
 
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.execution.{DeserializeToObjectExec, FileSourceScanExec, GenerateExec, MapElementsExec, MapPartitionsExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
@@ -16,7 +17,10 @@ import org.apache.spark.sql.execution.window.WindowExec
   * with counts of the structures that matter at 100 TB — shuffle
   * exchanges and the ones reused instead of re-run, sorts, cartesian /
   * broadcast-nested-loop joins, SortAggregate fallbacks, opaque
-  * object-mapping nodes, and scans. A triage list, not a proof.
+  * object-mapping nodes, and scans — then one column per graft rule
+  * (`GraftSession.rules` order) with the rule's effective runs while
+  * the query was built and run, i.e. whether it fired. A triage list,
+  * not a proof.
   * Usage: sbt "runMain graft.PlanAudit /tmp/audit"
   */
 object PlanAudit extends AdaptiveSparkPlanHelper {
@@ -38,25 +42,40 @@ object PlanAudit extends AdaptiveSparkPlanHelper {
     "windows" -> (_.isInstanceOf[WindowExec]),
     "scans" -> (_.isInstanceOf[FileSourceScanExec]))
 
+  /** A `RuleExecutor.dumpTimeSpent` line: rule, effective / total ns,
+    * effective / total runs. */
+  private val RuleLine = """^(\S+)\s+(\d+) / (\d+)\s+(\d+) / (\d+)\s*$""".r
+
+  /** Effective runs per rule name since the last metering reset. */
+  private def effectiveRuns(): Map[String, Long] =
+    RuleExecutor.dumpTimeSpent().split("\n").toSeq.collect {
+      case RuleLine(rule, _, _, eff, _) => rule -> eff.toLong
+    }.toMap
+
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/audit")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = GraftSession.local("graft-plan-audit")
     new File(outDir).mkdirs()
     val pw = new PrintWriter(new File(outDir, "plan_audit.tsv"))
-    pw.println(("query" +: columns.map(_._1) :+ "err").mkString("\t"))
+    val rules = GraftSession.rules(spark).map(_.ruleName)
+    pw.println(("query" +: columns.map(_._1) ++:
+      rules.map(_.split("[.$]").last) :+ "err").mkString("\t"))
     val names = SparkEntry.queries.keys.toSeq.sorted
     for (name <- names) {
       val row =
         try {
+          RuleExecutor.resetMetrics()
           val nodes = collectWithSubqueries(
             ExplainDump.executed(spark, sfDir, name).queryExecution.executedPlan) {
             case p => p
           }
-          columns.map { case (_, is) => nodes.count(is).toString } :+ ""
+          val fired = effectiveRuns()
+          columns.map { case (_, is) => nodes.count(is).toString } ++:
+            rules.map(r => fired.getOrElse(r, 0L).toString) :+ ""
         } catch {
           case e: Throwable =>
-            columns.map(_ => "") :+
+            (columns ++ rules).map(_ => "") :+
               Option(e.getMessage).getOrElse(e.getClass.getName)
                 .replaceAll("\\s+", " ").take(80)
         }

@@ -145,10 +145,10 @@ object T {
 
   /** Explicit partition count for a CPU-bound per-row stage fed by a
     * source table: enough tasks to spread the rows (`rowsPerTask` per
-    * task), capped at the session's parallelism — the same row-aware
-    * sizing as textops' docParts (r15), shared so per-operator
-    * repartitions scale with the input instead of hard-coding a core
-    * count. Unreadable footers size to full parallelism (tableRows =
+    * task), capped at the session's parallelism — the row-aware sizing
+    * textops' dedup passes introduced (r15, 512 docs per task), shared
+    * so per-operator repartitions scale with the input instead of
+    * hard-coding a core count. Unreadable footers size to full parallelism (tableRows =
     * Long.MaxValue), never toward serializing the work. */
   def sizedParts(s: SparkSession, dir: String, name: String,
       rowsPerTask: Long = 4096L): Int =

@@ -58,22 +58,23 @@ object MaterializedViews {
   private final case class Signature(
       leaves: Seq[Set[String]], joinPairs: Set[(String, String)])
 
+  /** One tile: its definition (signature, partial lists, defining filter,
+    * derived measures), its partials frame and its maintenance state.
+    * [[store]] takes this record with `mvDf` still the unmaterialized
+    * partial aggregate and registers it with `mvDf` replaced by the
+    * cached, lineage-cut checkpoint. */
   private final case class MvDef(
       name: String,
       signature: Signature,
-      keys: Set[String],
-      sums: Set[String],
-      mins: Set[String],
-      maxs: Set[String],
-      approxes: Set[String],
-      hasCount: Boolean,
-      target: LogicalPlan,
-      targetOut: Map[String, Attribute],
       keysSeq: Seq[String],
       sumsSeq: Seq[String],
       minsSeq: Seq[String],
       maxsSeq: Seq[String],
       approxSeq: Seq[String],
+      // count-only partial columns (__mv_cntn without a sum side): a
+      // COUNT(x) over a non-summable column (e.g. a string) rolls up
+      // from these without register ever computing SUM over it
+      cntnsSeq: Seq[String],
       mvDf: DataFrame,
       // the MV's own defining filter, as literal-folded conjuncts; a
       // query substitutes only when its predicate IMPLIES this one —
@@ -82,13 +83,6 @@ object MaterializedViews {
       // the defining source with its filters stripped: the relation the
       // union-compensation residual slice scans
       baseDf: DataFrame,
-      // the defining source's output types: a refresh delta is cast to
-      // these before partial-aggregating, so a cast-projected source
-      // (e.g. a money column normalized to DECIMAL below the rollup)
-      // folds deltas in at the SAME type — otherwise unionByName's set-op
-      // widening would silently degrade an exact decimal partial to
-      // double
-      srcTypes: Map[String, org.apache.spark.sql.types.DataType],
       // derived measures (the reference lattice's measure EXPRESSIONS,
       // e.g. revenue = price * (1 - discount)): canonical folded SQL of
       // the defining expression → partial name, plus the re-applicable
@@ -104,10 +98,6 @@ object MaterializedViews {
       // partials stay exact, but union compensation's residual FILE scan
       // could no longer see those rows — so unionTarget refuses such MVs
       unionSafe: Boolean = true,
-      // count-only partial columns (__mv_cntn without a sum side): a
-      // COUNT(x) over a non-summable column (e.g. a string) rolls up
-      // from these without register ever computing SUM over it
-      cntnsSeq: Seq[String] = Nil,
       // materialized tile size: the substitution's cost key — among
       // MVs that can answer a query, the smallest adequate tile wins
       // (the reference's lattice tile selection, materialize/Lattice
@@ -121,10 +111,37 @@ object MaterializedViews {
       // new gen appends at this index so adopted-but-uncompacted gens
       // on disk are never overwritten
       durableGens: Int = 0) {
-    def cntns: Set[String] = cntnsSeq.toSet
+    val keys: Set[String] = keysSeq.toSet
+    val sums: Set[String] = sumsSeq.toSet
+    val mins: Set[String] = minsSeq.toSet
+    val maxs: Set[String] = maxsSeq.toSet
+    val approxes: Set[String] = approxSeq.toSet
+    val cntns: Set[String] = cntnsSeq.toSet
+    // every cached partials frame: the base generation, then the gens
+    def frames: Seq[DataFrame] = mvDf +: gens
+    // the substitution target: the cache-resolved plan of the partials
+    // (an InMemoryRelation leaf once stored), with every pending stream
+    // generation unioned on in append order
+    val target: LogicalPlan =
+      gens.foldLeft(mvDf.queryExecution.withCachedData) { (t, g) =>
+        logical.Union(Seq(t, g.queryExecution.withCachedData),
+          byName = false, allowMissingCol = false)
+      }
+    val targetOut: Map[String, Attribute] =
+      mvDf.queryExecution.withCachedData.output.map(a => a.name -> a).toMap
+    // the defining source's output types: a refresh delta is cast to
+    // these before partial-aggregating, so a cast-projected source
+    // (e.g. a money column normalized to DECIMAL below the rollup)
+    // folds deltas in at the SAME type — otherwise unionByName's set-op
+    // widening would silently degrade an exact decimal partial to
+    // double
+    val srcTypes: Map[String, org.apache.spark.sql.types.DataType] =
+      baseDf.queryExecution.analyzed.output.map(a => a.name -> a.dataType).toMap
   }
 
   private val registry = new ConcurrentHashMap[String, MvDef]()
+  private def registered(name: String): MvDef = Option(registry.get(name))
+    .getOrElse(throw new IllegalArgumentException(s"unknown MV: $name"))
 
   /** (signature, filters) of a plan that is projects/filters over inner
     * equi-joins of file scans; None for anything else. Name-based and
@@ -202,8 +219,9 @@ object MaterializedViews {
     *     the written path before the write returns (invalidatePath), so
     *     a registered MV always reflects the live table. Appends are
     *     the one algebraically foldable write: TableDml.insertInto
-    *     refreshes single-leaf MVs in place (foldAppendOrInvalidate)
-    *     and drops join MVs, whose delta would need the join partners. */
+    *     folds them into every MV over the path
+    *     (foldAppendOrInvalidate) — a single-leaf MV in place, a join
+    *     MV through its star delta on the maintenance thread. */
   def register(spark: SparkSession, name: String, source: DataFrame,
       keys: Seq[String], sums: Seq[String],
       mins: Seq[String] = Nil, maxs: Seq[String] = Nil,
@@ -241,11 +259,7 @@ object MaterializedViews {
     // the source (analyzed + literal-folded SQL) so a query-side
     // aggregate argument can be matched by name-based expression
     // equality (the reference lattice's measure expressions)
-    val sumDefs = sumExprs.map { case (n, c) =>
-      val e = source.select(c.as(n)).queryExecution.analyzed
-        .asInstanceOf[Project].projectList.head.asInstanceOf[Alias].child
-      foldLiterals(e).sql -> n
-    }.toMap
+    val sumDefs = sumDefsOf(source, sumExprs)
     val cols = partialAggCols(sums, mins, maxs, approxDistincts, sumExprs, counts)
     val mv = source.groupBy(keys.map(col): _*).agg(cols.head, cols.tail: _*)
     // a re-registration under an existing name CARRIES the prior durable
@@ -257,10 +271,10 @@ object MaterializedViews {
     // any queued deferred fold would re-add rows those files already
     // carry; cancel it
     bumpEpoch(name)
-    val out = store(spark, name, signature, keys, sums, mins, maxs, approxDistincts, mv,
-      replacedAll = prior.toSeq.flatMap(d => d.mvDf +: d.gens),
-      filterConjuncts, baseDf, sumDefs = sumDefs, sumExprCols = sumExprs,
-      counts = counts, durableDir = carried)
+    val out = store(spark, MvDef(name, signature, keys, sums, mins, maxs,
+        approxDistincts, counts, mv, filterConjuncts, baseDf, sumDefs = sumDefs,
+        sumExprCols = sumExprs, durableDir = carried),
+      replacedAll = prior.toSeq.flatMap(_.frames))
     // conf-driven lattice home: tiles registered through a session with
     // spark.graft.lattice.dir set persist durably without explicit
     // persistTile calls (the reference stores EVERY materialization).
@@ -293,16 +307,12 @@ object MaterializedViews {
       val parsed = signatureOf(source.queryExecution.analyzed)
       val qFilters = parsed.toSeq.flatMap(_._2).flatMap(splitAnd)
         .map(e => foldLiterals(e).sql).toSet
-      val qSumDefs = sumExprs.map { case (n, c) =>
-        foldLiterals(source.select(c.as(n)).queryExecution.analyzed
-          .asInstanceOf[Project].projectList.head.asInstanceOf[Alias].child).sql -> n
-      }.toMap
       Option(registry.get(name)) match {
         case Some(d) if parsed.map(_._1).contains(d.signature) &&
             d.filterConjuncts.map(_.sql).toSet == qFilters &&
             d.keysSeq == keys && d.sumsSeq == sums && d.minsSeq == mins &&
             d.maxsSeq == maxs && d.approxSeq == approxDistincts &&
-            d.cntnsSeq == counts && d.sumDefs == qSumDefs =>
+            d.cntnsSeq == counts && d.sumDefs == sumDefsOf(source, sumExprs) =>
           // the registry is JVM-global but extraOptimizations are
           // per-session: a SECOND session hitting this fast path must
           // still get the rewrite rule installed (ADVICE r12)
@@ -325,6 +335,22 @@ object MaterializedViews {
     case f if f.foldable && !f.isInstanceOf[Literal] =>
       Literal.create(f.eval(null), f.dataType)
   }
+
+  /** A derived measure's defining Column resolved against `df`, as
+    * literal-folded SQL: the canonical form query-side aggregate
+    * arguments are matched against. An UNRESOLVED Column's .sql is not
+    * re-parseable (Spark 4 renders the ColumnNode wrapper), while the
+    * analyzed expression's .sql is plain name-based SQL that expr()
+    * round-trips — so the durable metadata stores this form too. */
+  private def measureSql(df: DataFrame, name: String,
+      c: org.apache.spark.sql.Column): String =
+    foldLiterals(df.select(c.as(name)).queryExecution.analyzed
+      .asInstanceOf[Project].projectList.head.asInstanceOf[Alias].child).sql
+
+  /** Canonical measure SQL → partial name, per derived measure. */
+  private def sumDefsOf(source: DataFrame,
+      sumExprs: Seq[(String, org.apache.spark.sql.Column)]): Map[String, String] =
+    sumExprs.map { case (n, c) => measureSql(source, n, c) -> n }.toMap
 
   /** The partial-aggregate columns an MV carries per group. The HLL
     * sketch partials (ref: profile/ProfilerImpl.java:577-659 — lattice
@@ -350,18 +376,11 @@ object MaterializedViews {
       approxes.map(c => hll_sketch_agg(col(c)).as(s"__mv_hll_$c")) :+
       count(lit(1)).as("__mv_cnt")
 
-  /** Persist `mv`, splice it into the registry, keep the rewrite rule
-    * installed; unpersists the MV generation it replaces. */
-  private def store(spark: SparkSession, name: String, signature: Signature,
-      keys: Seq[String], sums: Seq[String], mins: Seq[String],
-      maxs: Seq[String], approxes: Seq[String], mv: DataFrame,
-      replacedAll: Seq[DataFrame],
-      filterConjuncts: Seq[Expression], baseDf: DataFrame,
-      unionSafe: Boolean = true,
-      sumDefs: Map[String, String] = Map.empty,
-      sumExprCols: Seq[(String, org.apache.spark.sql.Column)] = Nil,
-      counts: Seq[String] = Nil,
-      durableDir: Option[String] = None): DataFrame = {
+  /** Persist the tile's partials (`d.mvDf`, no pending generations),
+    * splice the tile into the registry, keep the rewrite rule
+    * installed; unpersists the MV generations it replaces. */
+  private def store(spark: SparkSession, d: MvDef,
+      replacedAll: Seq[DataFrame]): DataFrame = {
     // cut the tile's lineage to its file sources BEFORE caching: a later
     // DataFrameWriter append to any source path recaches (Spark's
     // InsertIntoHadoopFsRelationCommand → refreshByPath) every cache
@@ -379,22 +398,13 @@ object MaterializedViews {
     // checkpoint RDD in memory too would keep every tile resident TWICE
     // (ADVICE r14); the disk blocks exist only to rebuild evicted cache
     // partitions and to cut lineage
-    val snapped = mv.localCheckpoint(true,
+    val snapped = d.mvDf.localCheckpoint(true,
       org.apache.spark.storage.StorageLevel.DISK_ONLY)
     snapped.persist()
-    val n = snapped.count() // materialize now; the tile's cost key
-
-    // cache-resolved plan: the whole aggregate collapses to an
-    // InMemoryRelation leaf, which is what we splice into queries
-    val target = snapped.queryExecution.withCachedData
-    registry.put(name, MvDef(name, signature, keys.toSet, sums.toSet,
-      mins.toSet, maxs.toSet, approxes.toSet, hasCount = true, target,
-      target.output.map(a => a.name -> a).toMap,
-      keys, sums, mins, maxs, approxes, snapped, filterConjuncts, baseDf,
-      baseDf.queryExecution.analyzed.output.map(a => a.name -> a.dataType).toMap,
-      sumDefs = sumDefs, sumExprCols = sumExprCols,
-      gens = Nil, unionSafe = unionSafe, cntnsSeq = counts,
-      rowCount = n, durableDir = durableDir))
+    // count() materializes the cache now and gives the tile's cost key;
+    // the record's target is then the cache-resolved plan, the
+    // InMemoryRelation leaf spliced into queries
+    registry.put(d.name, d.copy(mvDf = snapped, rowCount = snapped.count()))
     // every store caches a fresh checkpoint, so the replaced generations
     // can always unpersist (the sameResult guard is kept for the
     // degenerate case of the same frame instance being re-stored)
@@ -406,6 +416,15 @@ object MaterializedViews {
     snapped
   }
 
+  /** Serializes registry read-modify-write sections (refresh, append,
+    * compaction, drop-and-fold barriers) so a stream micro-batch cannot
+    * resurrect an MV a concurrent DML barrier just dropped, and two
+    * concurrent appends cannot lose a generation. The rewrite rule's
+    * read path stays lock-free (plain ConcurrentHashMap reads);
+    * maintenance is rare, so holding the lock across the merge job is
+    * acceptable. */
+  private val maintLock = new Object
+
   /** Incremental maintenance (ref: materialize/MaterializationService
     * .java — the reference re-populates tiles; here the merge is
     * algebraic): given `delta` = rows APPENDED to the MV's source since
@@ -416,25 +435,16 @@ object MaterializedViews {
     * cost of aggregating only the delta (the 100 TB nightly-load path:
     * the fact table is never rescanned). Caller contract: delta holds
     * only new rows (append-only source); updates/deletes need DML-side
-    * recompute of the affected partitions. */
-  /** Serializes registry read-modify-write sections (refresh, append,
-    * compaction, drop-and-fold barriers) so a stream micro-batch cannot
-    * resurrect an MV a concurrent DML barrier just dropped, and two
-    * concurrent appends cannot lose a generation. The rewrite rule's
-    * read path stays lock-free (plain ConcurrentHashMap reads);
-    * maintenance is rare, so holding the lock across the merge job is
-    * acceptable. */
-  private val maintLock = new Object
-
-  /** `deltaInFiles`: pass true ONLY when the delta rows are also
+    * recompute of the affected partitions.
+    *
+    * `deltaInFiles`: pass true ONLY when the delta rows are also
     * physically present in the MV's source files (TableDml.insertInto's
     * fold path) — otherwise the MV is marked union-unsafe, because a
     * union-compensation residual scan of the files could not see those
     * rows. */
   def refreshIncremental(spark: SparkSession, name: String, delta: DataFrame,
       deltaInFiles: Boolean = false): DataFrame = maintLock.synchronized {
-    val d = Option(registry.get(name)).getOrElse(
-      throw new IllegalArgumentException(s"unknown MV: $name"))
+    val d = registered(name)
     val deltaAgg = deltaPartials(spark, d, delta)
     compactInto(spark, d, Some(deltaAgg), deltaInFiles)
   }
@@ -447,21 +457,20 @@ object MaterializedViews {
       asFold: Boolean = false,
       snapshotEntries: Option[Seq[String]] = None): DataFrame = {
     val mergeCols = mergePartialCols(d)
-    val merged0 = (Seq(d.mvDf) ++ d.gens ++ extra).reduce(_ unionByName _)
-      .groupBy(d.keysSeq.map(col): _*)
-      .agg(mergeCols.head, mergeCols.tail: _*)
     // store() checkpoints every generation (lineage-cut, see there), so
     // the merged frame needs no extra snapshot here: the old partials it
     // unions are already LogicalRDD leaves no recache can rebuild, and
     // the durable overwrite below can never invalidate what the new
     // generation reads
-    val merged = merged0
-    val out = store(spark, d.name, d.signature, d.keysSeq, d.sumsSeq, d.minsSeq,
-      d.maxsSeq, d.approxSeq, merged, replacedAll = d.mvDf +: d.gens,
-      d.filterConjuncts, d.baseDf,
-      unionSafe = d.unionSafe && (extra.isEmpty || deltaInFiles),
-      sumDefs = d.sumDefs, sumExprCols = d.sumExprCols,
-      counts = d.cntnsSeq, durableDir = d.durableDir)
+    val merged = (Seq(d.mvDf) ++ d.gens ++ extra).reduce(_ unionByName _)
+      .groupBy(d.keysSeq.map(col): _*)
+      .agg(mergeCols.head, mergeCols.tail: _*)
+    // one generation again: the cached gens merge here, and the next
+    // durable write (below, or the queued fold's) is a full swap that
+    // removes the gen dirs on disk
+    val out = store(spark, d.copy(mvDf = merged, gens = Nil,
+        unionSafe = d.unionSafe && (extra.isEmpty || deltaInFiles), durableGens = 0),
+      replacedAll = d.frames)
     // a durable tile's on-disk copy tracks every compaction (the DML
     // append-fold path lands here), so a later adopt sees fresh partials.
     // A DEFERRED fold writes with the barrier-time leaf entries its delta
@@ -470,7 +479,7 @@ object MaterializedViews {
     // crash from an adopter serving them stale); a later adopt of an
     // intermediate-fold copy catches the remaining appends up from the
     // entry diff (adoptOne). A NON-fold caller (refresh, stream
-    // compaction, persistTile, sync fallback) writes only when NO fold
+    // compaction, persistTile, single-leaf fold) writes only when NO fold
     // is queued — inferring last-fold-ness from the counter alone was
     // the r14 hazard (ADVICE): with one fold still queued, its live
     // fingerprint would cover partials missing that fold's delta.
@@ -493,8 +502,7 @@ object MaterializedViews {
       compactEvery: Int = 8, deltaInFiles: Boolean = false): DataFrame =
     maintLock.synchronized {
       require(compactEvery >= 2, "compactEvery must be at least 2")
-      val d = Option(registry.get(name)).getOrElse(
-        throw new IllegalArgumentException(s"unknown MV: $name"))
+      val d = registered(name)
       val deltaAgg = deltaPartials(spark, d, delta)
       if (d.gens.size + 2 > compactEvery) compactInto(spark, d, Some(deltaAgg), deltaInFiles)
       else {
@@ -505,9 +513,6 @@ object MaterializedViews {
           org.apache.spark.storage.StorageLevel.DISK_ONLY)
         gen.persist()
         gen.count() // materialize the generation now
-        val dTarget = gen.queryExecution.withCachedData
-        val newTarget = logical.Union(Seq(d.target, dTarget),
-          byName = false, allowMissingCol = false)
         // durable write-through: the on-disk copy tracks every batch,
         // not just compactions — a crash loses nothing (the gen merges
         // back at adopt time exactly as the cached generation would).
@@ -515,7 +520,8 @@ object MaterializedViews {
         // compaction instead (its metadata would otherwise pair a live
         // fingerprint with partials lacking the queued append).
         val writeThrough = d.durableDir.isDefined && pendingMaintenance(name) == 0
-        val updated = d.copy(target = newTarget, gens = d.gens :+ gen,
+        // the record unions the gen's cached plan onto its target
+        val updated = d.copy(gens = d.gens :+ gen,
           unionSafe = d.unionSafe && deltaInFiles,
           durableGens = if (writeThrough) d.durableGens + 1 else d.durableGens)
         registry.put(name, updated)
@@ -627,6 +633,12 @@ object MaterializedViews {
 
   /** In-flight deferred folds per tile name. */
   private val pendingFolds = new ConcurrentHashMap[String, Integer]()
+  /** Count one more fold the tile must absorb before it serves. */
+  private def holdFold(name: String): Unit =
+    pendingFolds.merge(name, 1, (a, b) => a + b): Unit
+  /** Release one counted fold; the tile serves again at zero. */
+  private def releaseFold(name: String): Unit =
+    pendingFolds.compute(name, (_, v) => if (v == null || v <= 1) null else v - 1): Unit
 
   /** Monotone per-name epoch: bumped by every operation after which a
     * queued fold's delta no longer applies — re-register (fresh partials
@@ -678,7 +690,7 @@ object MaterializedViews {
   def drop(spark: SparkSession, name: String): Unit = maintLock.synchronized {
     bumpEpoch(name)
     Option(registry.remove(name)).foreach { d =>
-      (d.mvDf +: d.gens).foreach(_.unpersist())
+      d.frames.foreach(_.unpersist())
       // a dropped durable tile must not be resurrected by a later adopt
       d.durableDir.foreach(deleteDir(spark, _))
     }
@@ -686,7 +698,7 @@ object MaterializedViews {
   def clear(): Unit = maintLock.synchronized {
     registry.values.forEach { d =>
       bumpEpoch(d.name)
-      (d.mvDf +: d.gens).foreach(_.unpersist())
+      d.frames.foreach(_.unpersist())
     }
     registry.clear()
   }
@@ -697,9 +709,8 @@ object MaterializedViews {
     * drop every registered MV whose defining signature reads `path`, so
     * a rollup issued after an UPDATE/DELETE/MERGE recomputes from the
     * rewritten source instead of answering from a pre-DML cache.
-    * TableDml calls this before each mutating write returns; appends the
-    * caller WANTS folded in go through refreshIncremental instead (run
-    * it before the append is written, or re-register after). Path
+    * TableDml calls this before each mutating write returns; appends go
+    * through foldAppendOrInvalidate instead, which folds them in. Path
     * containment is prefix-based so a partition-scoped write under the
     * table root invalidates MVs over the whole table. Returns the names
     * of the dropped MVs (empty when nothing read the path). */
@@ -721,20 +732,22 @@ object MaterializedViews {
     * path folds the new rows in algebraically and stays live — the
     * nightly-load path never re-registers. A JOIN MV folds too (r13):
     * inner joins distribute over union on either input, so the star's
-    * delta is the appended rows joined against the OTHER leaves' current
-    * files — Δ(A ⋈ B) = ΔA ⋈ B when only A changed (starDelta; at
+    * delta is the appended rows joined against the OTHER leaves' files
+    * — Δ(A ⋈ B) = ΔA ⋈ B when only A changed (starDeltaSnapshot; at
     * 100 TB a fact append joins the broadcast-small dims, a dim append
-    * pays one fact pass — both beat rebuilding the tile). The appended
-    * rows ARE in the files, so the MV stays union-compensation-safe:
-    * the base relation's file indexes are refreshed so a residual scan
-    * sees the new files. A fold that fails for any reason — including a
-    * path matching MORE than one leaf (self-join: the delta would need
-    * both sides simultaneously) — downgrades to DROP (the barrier's
-    * guarantee is no-stale-MV, never at the cost of failing a committed
-    * write). Returns (folded, dropped) names. */
-  /** `releaseRows`: the caller hands ownership of a PERSISTED delta to
-    * the barrier — unpersisted once every fold that reads it (including
-    * deferred ones, which outlive this call) has completed. */
+    * pays one fact pass — both beat rebuilding the tile), and the fold
+    * runs on the maintenance thread (foldAppend). The appended rows ARE
+    * in the files, so the MV stays union-compensation-safe: the base
+    * relation's file indexes are refreshed so a residual scan sees the
+    * new files. A fold that fails for any reason — including a path
+    * matching MORE than one leaf (self-join: the delta would need both
+    * sides simultaneously) or another leaf listing no data files —
+    * downgrades to DROP (the barrier's guarantee is no-stale-MV, never
+    * at the cost of failing a committed write). `releaseRows`: the
+    * caller hands ownership of a PERSISTED delta to the barrier —
+    * unpersisted once every fold that reads it (including deferred
+    * ones, which outlive this call) has completed. Returns (folded,
+    * dropped) names. */
   def foldAppendOrInvalidate(spark: SparkSession, path: String,
       rows: DataFrame, releaseRows: Boolean = false): (Seq[String], Seq[String]) =
     maintLock.synchronized {
@@ -748,42 +761,11 @@ object MaterializedViews {
           }
           case _ => ()
         }
-        if (d.signature.leaves.size == 1) {
-          compactInto(spark, d, Some(deltaPartials(spark, d, rows)),
-            deltaInFiles = true)
-          (d.name, true)
-        } else starDeltaSnapshot(spark, d, path, rows) match {
-          case Some(delta) =>
-            // JOIN tile: the fold's aggregation (a fact pass for a dim
-            // append) runs on the maintenance thread, not the DML thread
-            // (the r13 scale flag). The delta PLAN is built here — schema
-            // work only, and ambiguous recipes still fail synchronously
-            // into the DROP arm below. Until the fold lands the tile is
-            // pending and the rewrite skips it.
-            val deltaAgg = deltaPartials(spark, d, delta)
-            // the durable copy this fold will write must claim exactly
-            // the files its partials reflect: the listing NOW (the
-            // append is committed, the barrier holds the lock) — by
-            // execution time a later queued append may already be live
-            val entriesNow = d.durableDir.map(_ =>
-              leafEntries(spark, d.signature.leaves.map(_.toSeq)))
-            pendingFolds.merge(d.name, 1, (a, b) => a + b): Unit
-            deferredAny = true
-            val epoch = epochOf(d.name)
-            foldExecutor.submit(new Runnable {
-              def run(): Unit =
-                runDeferredFold(spark, d.name, epoch, deltaAgg, entriesNow)
-            }): Unit
-            (d.name, true)
-          case None =>
-            // a leaf that cannot be pinned to a flat file-list snapshot
-            // (partitioned layout) folds synchronously on the live roots
-            // — correctness over write latency
-            compactInto(spark, d,
-              Some(deltaPartials(spark, d, starDelta(spark, d, path, rows))),
-              deltaInFiles = true)
-            (d.name, true)
-        }
+        // the append is committed and the barrier holds the lock: the
+        // listing NOW is exactly what this fold's delta reflects
+        deferredAny |= foldAppend(spark, d, path, rows,
+          leafEntries(spark, d.signature.leaves))
+        (d.name, true)
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(
@@ -801,6 +783,33 @@ object MaterializedViews {
     (outcomes.collect { case (n, true) => n },
       outcomes.collect { case (n, false) => n })
   }
+
+  /** Fold `rows`, appended under `path`, into tile `d`: the one append
+    * fold of the DML barrier and the adopt catch-up. A single-leaf tile
+    * compacts the delta in now. A JOIN tile's fold (a fact pass for a
+    * dim append) runs on the maintenance thread instead (the r13 scale
+    * flag): the star delta PLAN is built here — schema work only, so an
+    * ambiguous recipe still throws to the caller — and the tile stays
+    * pending, skipped by the rewrite, until the fold lands. Its durable
+    * copy is then written with `entries`, the listing the delta
+    * reflects (by execution time a later queued append may already be
+    * live). Throws when no fold can be built; returns whether the fold
+    * was deferred. */
+  private def foldAppend(spark: SparkSession, d: MvDef, path: String,
+      rows: DataFrame, entries: => Seq[String]): Boolean =
+    if (d.signature.leaves.size == 1) {
+      compactInto(spark, d, Some(deltaPartials(spark, d, rows)), deltaInFiles = true)
+      false
+    } else {
+      val deltaAgg = deltaPartials(spark, d, starDeltaSnapshot(spark, d, path, rows))
+      val entriesNow = d.durableDir.map(_ => entries)
+      holdFold(d.name)
+      val epoch = epochOf(d.name)
+      foldExecutor.submit(new Runnable {
+        def run(): Unit = runDeferredFold(spark, d.name, epoch, deltaAgg, entriesNow)
+      }): Unit
+      true
+    }
 
   /** Execute one deferred fold at its enqueue-time epoch; a bumped epoch
     * (re-register/drop/release since the barrier) skips — the delta no
@@ -821,121 +830,99 @@ object MaterializedViews {
               drop(spark, name)
           }
         }
-      } finally pendingFolds.compute(name,
-        (_, v) => if (v == null || v <= 1) null else v - 1): Unit
+      } finally releaseFold(name)
     }
   }
-
-  /** The star delta with every OTHER leaf pinned to an explicit file
-    * list captured NOW (metadata-only), or None when a leaf has no flat
-    * listing (partitioned layout — the caller folds synchronously).
-    * Throws when the appended path does not identify exactly one leaf
-    * (self-join ambiguity — the caller downgrades to DROP). */
-  private def starDeltaSnapshot(spark: SparkSession, d: MvDef, path: String,
-      rows: DataFrame): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val qualified =
-      p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
-    def touches(leaf: String): Boolean =
-      leaf == qualified || leaf.startsWith(qualified + "/") ||
-        qualified.startsWith(leaf + "/")
-    val hits = d.signature.leaves.zipWithIndex
-      .collect { case (l, i) if l.exists(touches) => i }
-    require(hits.size == 1,
-      s"append touches ${hits.size} leaves of MV ${d.name}; delta needs exactly one")
-    val others = d.signature.leaves.zipWithIndex.map { case (l, i) =>
-      if (i == hits.head) Some(Seq.empty[(Seq[String], Option[String])])
-      else listLeafFiles(spark, l)
-    }
-    if (others.exists(_.isEmpty)) None
-    else {
-      val frames = d.signature.leaves.indices.map { i =>
-        if (i == hits.head) rows
-        else {
-          // one pinned frame per (files, basePath) group, unioned by
-          // name: a FLAT multi-root leaf is one group; a PARTITIONED
-          // root reads its own files under itself as basePath, so the
-          // directory-encoded columns re-derive per root exactly as the
-          // original joint read resolved them relative to each root
-          others(i).get
-            .map { case (files, basePath) =>
-              val reader = basePath.foldLeft(spark.read)(
-                (r, bp) => r.option("basePath", bp))
-              graft.T.normalizeTimestamps(reader.parquet(files: _*))
-            }
-            .reduce(_ unionByName _)
-        }
-      }
-      Some(joinFrames(frames, d.signature.joinPairs.toSeq))
-    }
-  }
-
-  /** Pinned snapshot of a leaf as (files, basePath) read groups, listed
-    * NOW: flat roots pool into one group; a partitioned root becomes its
-    * own group read under itself as basePath, so partition columns
-    * re-derive from the pinned file paths — a fact partitioned by day
-    * folds off the DML thread like a flat one. None when the leaf has
-    * no data files at all. */
-  private def listLeafFiles(spark: SparkSession, roots: Set[String])
-      : Option[Seq[(Seq[String], Option[String])]] = try {
-    val conf = spark.sessionState.newHadoopConf()
-    val flat = scala.collection.mutable.ArrayBuffer.empty[String]
-    val grouped = scala.collection.mutable.ArrayBuffer.empty[(Seq[String], Option[String])]
-    roots.toSeq.sorted.foreach { root =>
-      val files = scala.collection.mutable.ArrayBuffer.empty[String]
-      var nested = false
-      def walk(p: org.apache.hadoop.fs.Path,
-          fs: org.apache.hadoop.fs.FileSystem): Unit =
-        fs.listStatus(p).foreach { st =>
-          val nm = st.getPath.getName
-          if (!nm.startsWith("_") && !nm.startsWith(".")) {
-            if (st.isDirectory) { nested = true; walk(st.getPath, fs) }
-            else files += st.getPath.toString
-          }
-        }
-      val p = new org.apache.hadoop.fs.Path(root)
-      walk(p, p.getFileSystem(conf))
-      if (files.nonEmpty) {
-        if (nested) grouped += ((files.toSeq, Some(root)))
-        else flat ++= files
-      }
-    }
-    if (flat.nonEmpty) grouped += ((flat.toSeq, None))
-    if (grouped.isEmpty) None else Some(grouped.toSeq)
-  } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The star's delta for a one-sided append: the appended rows stand in
-    * for their leaf, every other leaf reads its CURRENT files (unchanged
-    * since registration — only `path` was written), and the join recipe
-    * re-applies. Exact because inner joins distribute over union on
-    * either input. Throws when the path matches zero or several leaves
-    * (the caller downgrades to DROP). */
-  private def starDelta(spark: SparkSession, d: MvDef, path: String,
+    * for their leaf, and every OTHER leaf reads an explicit file list
+    * captured NOW (metadata-only; the snapshot that keeps queued folds
+    * exact). Exact because inner joins distribute over union on either
+    * input.
+    * Throws when the appended path does not identify exactly one leaf
+    * (self-join ambiguity), or another leaf lists no data files or
+    * cannot be listed (the caller drops the tile). */
+  private def starDeltaSnapshot(spark: SparkSession, d: MvDef, path: String,
       rows: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val qualified =
-      p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
-    def touches(leaf: String): Boolean =
-      leaf == qualified || leaf.startsWith(qualified + "/") ||
-        qualified.startsWith(leaf + "/")
+    val touches = touchesPath(spark, path)
     val hits = d.signature.leaves.zipWithIndex
       .collect { case (l, i) if l.exists(touches) => i }
     require(hits.size == 1,
       s"append touches ${hits.size} leaves of MV ${d.name}; delta needs exactly one")
     val frames = d.signature.leaves.zipWithIndex.map { case (l, i) =>
       if (i == hits.head) rows
-      else graft.T.normalizeTimestamps(spark.read.parquet(l.toSeq.sorted: _*))
+      else {
+        val groups = listLeafFiles(spark, l)
+        require(groups.nonEmpty, s"a leaf of MV ${d.name} lists no data files")
+        // one pinned frame per (files, basePath) group, unioned by
+        // name: a FLAT multi-root leaf is one group; a PARTITIONED
+        // root reads its own files under itself as basePath, so the
+        // directory-encoded columns re-derive per root exactly as the
+        // original joint read resolved them relative to each root
+        groups.map { case (files, basePath) =>
+          val reader = basePath.foldLeft(spark.read)(
+            (r, bp) => r.option("basePath", bp))
+          graft.T.normalizeTimestamps(reader.parquet(files: _*))
+        }.reduce(_ unionByName _)
+      }
     }
     joinFrames(frames, d.signature.joinPairs.toSeq)
   }
 
-  private def touchedBy(spark: SparkSession, path: String): Seq[MvDef] = {
+  /** Pinned snapshot of a leaf as (files, basePath) read groups, listed
+    * NOW: flat roots pool into one group; a partitioned root becomes its
+    * own group read under itself as basePath, so partition columns
+    * re-derive from the pinned file paths — a fact partitioned by day
+    * folds off the DML thread like a flat one. Empty when the leaf has
+    * no data files at all. */
+  private def listLeafFiles(spark: SparkSession, roots: Set[String])
+      : Seq[(Seq[String], Option[String])] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val listed = roots.toSeq.sorted.map { root =>
+      val (files, nested) = dataFiles(conf, root)
+      (root, files.map(_.getPath.toString), nested)
+    }
+    val flat = listed.collect { case (_, files, false) => files }.flatten
+    listed.collect { case (root, files, true) if files.nonEmpty => (files, Some(root)) } ++
+      (if (flat.isEmpty) Nil else Seq((flat, None)))
+  }
+
+  /** The data files under one source root, walked recursively with
+    * Spark's hidden-path rule at every level (a `_` or `.` name other
+    * than a `k=v` partition directory, or an in-flight `._COPYING_`
+    * file, is not table data — so neither `_SUCCESS` nor the files of
+    * a `_temporary` write directory count), and whether any sit below
+    * a subdirectory (a partitioned layout). Throws when the root cannot
+    * be listed. */
+  private def dataFiles(conf: org.apache.hadoop.conf.Configuration, root: String)
+      : (Seq[org.apache.hadoop.fs.FileStatus], Boolean) = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(conf)
+    var nested = false
+    def walk(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).toSeq.filterNot { st =>
+        val nm = st.getPath.getName
+        (nm.startsWith("_") && !nm.contains("=")) || nm.startsWith(".") ||
+          nm.endsWith("._COPYING_")
+      }.flatMap { st =>
+        if (st.isDirectory) { nested = true; walk(st.getPath) } else Seq(st)
+      }
+    val files = walk(p)
+    (files, nested)
+  }
+
+  /** The touched-leaf test for a write to `path`: a leaf root is touched
+    * when it is the path, lies under it, or contains it. */
+  private def touchesPath(spark: SparkSession, path: String): String => Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val qualified =
       p.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(p).toString
-    def touches(leaf: String): Boolean =
-      leaf == qualified || leaf.startsWith(qualified + "/") ||
-        qualified.startsWith(leaf + "/")
+    leaf => leaf == qualified || leaf.startsWith(qualified + "/") ||
+      qualified.startsWith(leaf + "/")
+  }
+
+  private def touchedBy(spark: SparkSession, path: String): Seq[MvDef] = {
+    val touches = touchesPath(spark, path)
     import scala.jdk.CollectionConverters._
     registry.values.asScala
       .filter(_.signature.leaves.exists(_.exists(touches))).toSeq
@@ -1031,28 +1018,19 @@ object MaterializedViews {
   /** The source leaves' data-file listings as `path|length|mtime`
     * entries, root-sorted then entry-sorted within each root — the
     * tile's validity evidence (the fingerprint hashes this list, and
-    * adoptOne diffs it to catch appended files up). Spark bookkeeping
-    * files (_SUCCESS, dot-files) are excluded; they change benignly. */
+    * adoptOne diffs it to catch appended files up). It lists through
+    * dataFiles, so Spark bookkeeping (_SUCCESS, dot-files, an
+    * uncommitted `_temporary` write) is excluded; it changes benignly. */
   private def leafEntries(spark: SparkSession,
-      leaves: Seq[Seq[String]]): Seq[String] = {
+      leaves: Seq[Iterable[String]]): Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    leaves.flatten.sorted.foreach { root =>
+    leaves.flatten.sorted.flatMap { root =>
       val p = new org.apache.hadoop.fs.Path(root)
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) {
-        val it = fs.listFiles(p, true)
-        val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val f = it.next()
-          val nm = f.getPath.getName
-          if (!nm.startsWith("_") && !nm.startsWith("."))
-            entries += s"${f.getPath}|${f.getLen}|${f.getModificationTime}"
-        }
-        out ++= entries.sorted
-      } else out += s"missing:$root"
+      if (p.getFileSystem(conf).exists(p))
+        dataFiles(conf, root)._1
+          .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").sorted
+      else Seq(s"missing:$root")
     }
-    out.toSeq
   }
 
   /** MD5 over the leaf entries — the tile's validity key. */
@@ -1063,7 +1041,7 @@ object MaterializedViews {
   }
 
   private def leafFingerprint(spark: SparkSession,
-      leaves: Seq[Seq[String]]): String =
+      leaves: Seq[Iterable[String]]): String =
     fingerprintOf(leafEntries(spark, leaves))
 
   /** Hadoop paths reject ':' in components (ddl:name); collapse to a
@@ -1106,15 +1084,14 @@ object MaterializedViews {
       snapshotEntries: Option[Seq[String]] = None): Unit = {
     val dir = d.durableDir.getOrElse(
       throw new IllegalStateException(s"MV ${d.name} has no durable home"))
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val staged = new org.apache.hadoop.fs.Path(
-      p.getParent, "." + p.getName + ".staging")
-    val fp = writeDurableInto(spark, d, staged.toString, snapshotEntries)
-    durableCommitHook()
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
-    if (!fs.rename(staged, p))
-      throw new java.io.IOException(s"durable tile commit failed: $staged -> $p")
+    // the fingerprint recorded in the metadata row: from the snapshot
+    // entries when given, else the live source listings at write time
+    val fp = commitStaged(spark, dir, beforeSwap = () => durableCommitHook()) { staged =>
+      d.mvDf.write.mode("overwrite").parquet(s"$staged/data")
+      val meta = tileMetaOf(spark, d, snapshotEntries)
+      writeMeta(spark, meta, staged)
+      meta.fingerprint
+    }
     // the full swap removed any gen-N increments; the registry entry
     // tracks the on-disk generation count for the write-through path
     registry.computeIfPresent(d.name, (_, cur) =>
@@ -1125,22 +1102,31 @@ object MaterializedViews {
     // the entry diff; only a LIVE-listing write self-checks for the
     // out-of-band race
     if (snapshotEntries.isEmpty &&
-        leafFingerprint(spark, d.signature.leaves.map(_.toSeq)) != fp) {
+        leafFingerprint(spark, d.signature.leaves) != fp) {
       System.err.println(s"[graft] durable tile ${d.name}: source changed " +
         "during persist; self-invalidating")
       drop(spark, d.name)
     }
   }
 
-  /** Stage the partials + metadata under `dir`; returns the fingerprint
-    * recorded in the metadata row (from the snapshot entries when given,
-    * else the live source listings at write time). */
-  private def writeDurableInto(spark: SparkSession, d: MvDef, dir: String,
-      snapshotEntries: Option[Seq[String]] = None): String = {
-    d.mvDf.write.mode("overwrite").parquet(s"$dir/data")
-    val meta = tileMetaOf(spark, d, snapshotEntries)
-    writeMeta(spark, meta, dir)
-    meta.fingerprint
+  /** The one staged commit of every durable write: `write` fills a
+    * dot-prefixed `.<name>.staging` sibling of `target`, `beforeSwap`
+    * runs, and the sibling is renamed over `target` (TableDml's commit
+    * pattern). A concurrent or cross-process adopter sees the old copy
+    * or the new one, never a torn one; the staging dirs are invisible
+    * to adoptTiles. */
+  private def commitStaged[A](spark: SparkSession, target: String,
+      beforeSwap: () => Unit = () => ())(write: String => A): A = {
+    val p = new org.apache.hadoop.fs.Path(target)
+    val staged = new org.apache.hadoop.fs.Path(
+      p.getParent, "." + p.getName + ".staging")
+    val out = write(staged.toString)
+    beforeSwap()
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(p)) fs.delete(p, true)
+    if (!fs.rename(staged, p))
+      throw new java.io.IOException(s"durable commit failed: $staged -> $p")
+    out
   }
 
   private def tileMetaOf(spark: SparkSession, d: MvDef,
@@ -1150,7 +1136,7 @@ object MaterializedViews {
     // a deferred fold passes the barrier-time listing its partials
     // actually reflect; everything else records the live listing
     val entries = entriesOverride.getOrElse(
-      leafEntries(spark, d.signature.leaves.map(_.toSeq)))
+      leafEntries(spark, d.signature.leaves))
     val srcFields = d.baseDf.queryExecution.analyzed.output
     TileMeta(
       name = d.name, keys = d.keysSeq, sums = d.sumsSeq, cntns = d.cntnsSeq,
@@ -1161,14 +1147,7 @@ object MaterializedViews {
       filterSqls = d.filterConjuncts.map(_.sql),
       sumDefKeys = sumDefSeq.map(_._1), sumDefNames = sumDefSeq.map(_._2),
       sumExprNames = d.sumExprCols.map(_._1),
-      // resolve each derived-measure Column against the source before
-      // taking SQL: an UNRESOLVED Column's .sql is not re-parseable
-      // (Spark 4 renders the ColumnNode wrapper), while the analyzed
-      // expression's .sql is plain name-based SQL that expr() round-trips
-      sumExprSqls = d.sumExprCols.map { case (n, c) =>
-        foldLiterals(d.baseDf.select(c.as(n)).queryExecution.analyzed
-          .asInstanceOf[Project].projectList.head.asInstanceOf[Alias].child).sql
-      },
+      sumExprSqls = d.sumExprCols.map { case (n, c) => measureSql(d.baseDf, n, c) },
       unionSafe = d.unionSafe,
       fingerprint = fingerprintOf(entries),
       srcCols = srcFields.map(_.name),
@@ -1190,13 +1169,9 @@ object MaterializedViews {
   private def writeMeta(spark: SparkSession, meta: TileMeta, dir: String): Unit = {
     val session = spark
     import session.implicits._
-    val p = new org.apache.hadoop.fs.Path(s"$dir/meta")
-    val staged = new org.apache.hadoop.fs.Path(p.getParent, ".meta.staging")
-    Seq(meta).toDS().repartition(1).write.mode("overwrite").parquet(staged.toString)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
-    if (!fs.rename(staged, p))
-      throw new java.io.IOException(s"meta commit failed: $staged -> $p")
+    commitStaged(spark, s"$dir/meta") { staged =>
+      Seq(meta).toDS().repartition(1).write.mode("overwrite").parquet(staged)
+    }
   }
 
   /** Stream-generation write-through (the r13 durability-window fix):
@@ -1227,18 +1202,12 @@ object MaterializedViews {
     // would double-count the delta
     val meta = tileMetaOf(spark, d, gens = idx + 1L)
     if (!deltaInFiles) writeMeta(spark, meta, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/gen-$idx")
-    val staged = new org.apache.hadoop.fs.Path(
-      p.getParent, "." + p.getName + ".staging")
-    gen.write.mode("overwrite").parquet(staged.toString)
-    durableCommitHook()
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
-    if (!fs.rename(staged, p))
-      throw new java.io.IOException(s"durable gen commit failed: $staged -> $p")
+    commitStaged(spark, s"$dir/gen-$idx", beforeSwap = () => durableCommitHook()) { staged =>
+      gen.write.mode("overwrite").parquet(staged)
+    }
     durableGenMetaHook()
     if (deltaInFiles) writeMeta(spark, meta, dir)
-    if (leafFingerprint(spark, d.signature.leaves.map(_.toSeq)) != meta.fingerprint) {
+    if (leafFingerprint(spark, d.signature.leaves) != meta.fingerprint) {
       System.err.println(s"[graft] durable tile ${d.name}: source changed " +
         "during gen persist; self-invalidating")
       drop(spark, d.name)
@@ -1277,8 +1246,7 @@ object MaterializedViews {
     * behind an in-session invalidation. */
   def persistTile(spark: SparkSession, name: String, latticeDir: String): String =
     maintLock.synchronized {
-      val d0 = Option(registry.get(name)).getOrElse(
-        throw new IllegalArgumentException(s"unknown MV: $name"))
+      val d0 = registered(name)
       if (d0.gens.nonEmpty) compactInto(spark, d0, None, deltaInFiles = false): Unit
       val tileDir = s"$latticeDir/${pathSlug(name)}"
       registry.put(name, registry.get(name).copy(durableDir = Some(tileDir)))
@@ -1458,27 +1426,22 @@ object MaterializedViews {
       // with a catch-up pending, the tile must not serve until the
       // delta lands: the guard is counted BEFORE the store makes the
       // registration visible to the lock-free rewrite path
-      if (catchUp.isDefined)
-        pendingFolds.merge(meta.name, 1, (a, b) => a + b): Unit
+      if (catchUp.isDefined) holdFold(meta.name)
       try {
-        store(spark, meta.name, sig, meta.keys, meta.sums, meta.mins,
-          meta.maxs, meta.approxes, mv, replacedAll = Nil, filterConjuncts,
-          base, unionSafe = meta.unionSafe,
-          sumDefs = meta.sumDefKeys.zip(meta.sumDefNames).toMap,
-          sumExprCols = sumExprCols,
-          counts = meta.cntns, durableDir = Some(tileDir)): Unit
-        // on-disk gen dirs must not be overwritten by the next append
-        if (meta.gens > 0)
-          registry.computeIfPresent(meta.name, (_, cur) =>
-            cur.copy(durableGens = meta.gens.toInt)): Unit
+        // durableGens: on-disk gen dirs must not be overwritten by the
+        // next append
+        store(spark, MvDef(meta.name, sig, meta.keys, meta.sums, meta.mins,
+            meta.maxs, meta.approxes, meta.cntns, mv, filterConjuncts, base,
+            sumDefs = meta.sumDefKeys.zip(meta.sumDefNames).toMap,
+            sumExprCols = sumExprCols, unionSafe = meta.unionSafe,
+            durableDir = Some(tileDir), durableGens = meta.gens.toInt),
+          replacedAll = Nil): Unit
       } catch {
         case scala.util.control.NonFatal(e) =>
           // adoptCatchUp's own finally never ran: balance the guard
           // here, or the name stays excluded from every rewrite and
           // write-through for the life of the JVM
-          if (catchUp.isDefined)
-            pendingFolds.compute(meta.name,
-              (_, v) => if (v == null || v <= 1) null else v - 1): Unit
+          if (catchUp.isDefined) releaseFold(meta.name)
           throw e
       }
       catchUp.foreach { case (root, files) =>
@@ -1504,7 +1467,7 @@ object MaterializedViews {
     // (append-only entry diff → catch-up fold; anything else → discard)
     bumpEpoch(name)
     Option(registry.remove(name)).foreach(d =>
-      (d.mvDf +: d.gens).foreach(_.unpersist()))
+      d.frames.foreach(_.unpersist()))
   }
 
   /** The live listing as an APPEND-ONLY extension of the recorded one:
@@ -1539,14 +1502,15 @@ object MaterializedViews {
     Some((owners.flatten.head._2, files))
   }
 
-  /** Fold the appended files into the just-adopted tile — THIS tile
-    * only (the DML barrier's multi-tile fan-out would double-count the
-    * delta into sibling tiles adopted with a fresher copy). The
-    * adoption guard taken before store() is released here; the
-    * single-leaf sync fold ran under it (so its durable write was
-    * skipped) and re-persists with the live listing once caught up,
-    * while a deferred join fold persists itself with the listing
-    * captured now. Failures drop the tile — never-serve-stale. */
+  /** Fold the appended files into the just-adopted tile through the
+    * barrier's foldAppend — THIS tile only (the DML barrier's
+    * multi-tile fan-out would double-count the delta into sibling tiles
+    * adopted with a fresher copy). The adoption guard taken before
+    * store() is released here; the single-leaf sync fold ran under it
+    * (so its durable write was skipped) and re-persists with the live
+    * listing once caught up, while a deferred join fold persists itself
+    * with the adopt-time listing. Failures drop the tile —
+    * never-serve-stale. */
   private def adoptCatchUp(spark: SparkSession, name: String, root: String,
       files: Seq[String], liveEntries: Seq[String]): Unit = {
     try {
@@ -1554,31 +1518,13 @@ object MaterializedViews {
       System.err.println(s"[graft] durable tile $name: ${files.size} " +
         "appended file(s) since persist; catching up")
       val rows = graft.T.normalizeTimestamps(spark.read.parquet(files: _*))
-      if (d.signature.leaves.size == 1)
-        compactInto(spark, d, Some(deltaPartials(spark, d, rows)),
-          deltaInFiles = true): Unit
-      else starDeltaSnapshot(spark, d, root, rows) match {
-        case Some(delta) =>
-          val deltaAgg = deltaPartials(spark, d, delta)
-          val entriesNow = d.durableDir.map(_ => liveEntries)
-          pendingFolds.merge(name, 1, (a, b) => a + b): Unit
-          val epoch = epochOf(name)
-          foldExecutor.submit(new Runnable {
-            def run(): Unit =
-              runDeferredFold(spark, name, epoch, deltaAgg, entriesNow)
-          }): Unit
-        case None =>
-          compactInto(spark, d,
-            Some(deltaPartials(spark, d, starDelta(spark, d, root, rows))),
-            deltaInFiles = true): Unit
-      }
+      foldAppend(spark, d, root, rows, liveEntries): Unit
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(
           s"[graft] durable tile $name: catch-up fold failed (${e.getMessage}); dropping")
         drop(spark, name)
-    } finally pendingFolds.compute(name,
-      (_, v) => if (v == null || v <= 1) null else v - 1): Unit
+    } finally releaseFold(name)
     // the sync fold ran with the adoption guard counted, so compactInto
     // skipped the durable write: persist the caught-up tile now
     if (pendingMaintenance(name) == 0)
@@ -1599,7 +1545,7 @@ object MaterializedViews {
       graft.T.normalizeTimestamps(spark.read.parquet(paths: _*))), pairs)
 
   /** Fold `frames0` into one inner-join tree along `pairs` (the greedy
-    * merge rebuildJoin documents); also reused by starDelta with an
+    * merge rebuildJoin documents); also reused by starDeltaSnapshot with an
     * append delta standing in for one leaf. */
   private def joinFrames(frames0: Seq[DataFrame],
       pairs: Seq[(String, String)]): DataFrame = {
@@ -2434,7 +2380,7 @@ object MaterializedViews {
           Some(Min(tout(a.name)).toAggregateExpression())
         case Max(a: AttributeReference) if mv.keys.contains(a.name) =>
           Some(Max(tout(a.name)).toAggregateExpression())
-        case Count(Seq(Literal(_, _))) if mv.hasCount =>
+        case Count(Seq(Literal(_, _))) =>
           Some(Sum(tout("__mv_cnt")).toAggregateExpression())
         // COUNT(x): the per-column non-null partial counts (carried for
         // the AVG rollup, or registered count-only for non-summable

@@ -26,7 +26,8 @@ object TableDml {
     * rows in algebraically and stay live (the append IS
     * refreshIncremental's delta contract) — including JOIN MVs, whose
     * delta is the appended rows joined against the unchanged leaves
-    * (MaterializedViews.starDelta; inner joins distribute over union).
+    * (MaterializedViews.foldAppendOrInvalidate; inner joins distribute
+    * over union).
     * When a fold will run, `rows` is persisted BEFORE the write so the
     * fold aggregates the same snapshot that landed in the files (a
     * non-deterministic source plan would otherwise fold a different

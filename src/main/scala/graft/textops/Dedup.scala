@@ -40,37 +40,13 @@ object Dedup {
     *
     * The corpus arrives as few large parquet files, so we repartition by
     * doc with an explicit count first (AQE would coalesce the byte-small
-    * shuffle to one partition and serialize the CPU-heavy work). */
-  /** Partition count for the CPU-heavy per-doc passes: spread across
-    * the full parallelism once there are enough input bytes to amortize
-    * a task, but don't schedule 32 near-empty tasks for a megabyte
-    * corpus — per-stage latency would dominate (the explicit repartition
-    * exists to defeat AQE's byte-based coalescing at LARGE inputs,
-    * where shingling is CPU-bound on few bytes; at small inputs we size
-    * like AQE would). */
-  private[textops] def docParts(s: SparkSession, dir: String): Int = {
-    val bytes =
-      try java.nio.file.Files.size(java.nio.file.Paths.get(dir, "documents.parquet"))
-      catch { case _: Exception => Long.MaxValue }
-    // r15: size by BOTH bytes (1 MiB of text per task, was 4 MiB) and
-    // ROWS (512 docs per task). Shingling + the 64-slot signature cost
-    // is per-row dominated on short documents (split/alloc/64-mult loop
-    // ≈ tens of µs per doc regardless of length), so a byte-only
-    // heuristic serialized the whole minhash pass onto 2 of 32 cores at
-    // sf0.1 (measured: 270–325 ms signature stage, 2 tasks). At large
-    // inputs the min() caps at defaultParallelism exactly as before —
-    // the constants only decide how soon full parallelism engages.
-    // clamp in Long BEFORE the Int conversion (r16, advisor): on the
-    // stat-failure path (bytes = Long.MaxValue) the old `.toInt` wrapped
-    // negative and the outer max() silently serialized the exact
-    // workload this sizing exists to spread.
-    val rows = T.tableRows(dir, "documents")
-    math.max(2, math.min(s.sparkContext.defaultParallelism.toLong,
-      math.max(bytes / (1L << 20), rows / 512L)).toInt)
-  }
-
+    * shuffle to one partition and serialize the CPU-heavy work). The
+    * count is row-aware, 512 docs per task up to the full parallelism:
+    * shingling and the 64-slot signature cost per row on short
+    * documents, and byte-only sizing serialized the minhash pass onto 2
+    * of 32 cores at sf0.1 (r15: a 270–325 ms signature stage). */
   private[graft] def docShingles(s: SparkSession, dir: String): DataFrame =
-    shingleOf(s, T(s, dir, "documents"), docParts(s, dir))
+    shingleOf(s, T(s, dir, "documents"), T.sizedParts(s, dir, "documents", 512L))
 
   /** Same shingling over an arbitrary (doc_id, text, ...) relation —
     * callers that only need a SUBSET (e.g. candidate verification)
@@ -256,7 +232,7 @@ object Dedup {
     import org.apache.spark.unsafe.types.UTF8String
     T(s, dir, "documents")
       .select(col("doc_id"), col("text"))
-      .repartition(docParts(s, dir), col("doc_id"))
+      .repartition(T.sizedParts(s, dir, "documents", 512L), col("doc_id"))
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, text) =>
         val w = text.split(' ')
@@ -352,7 +328,7 @@ object Dedup {
       // candidate docs are shingled exactly once.
       val sets = Dedup.shingleOf(s,
         T(s, dir, "documents").join(candDocs, Seq("doc_id"), "left_semi"),
-        docParts(s, dir))
+        T.sizedParts(s, dir, "documents", 512L))
         .repartition(col("doc_id"))
       cand
         .join(sets.select(col("doc_id").as("doc_a"), col("ws").as("ws_a"), col("sz").as("sz_a")), Seq("doc_a"))

@@ -405,6 +405,46 @@ class DmlLatticeSpec extends SparkSpec {
     }
   }
 
+  test("a join leaf with no data files left drops the tile at the append barrier, never stale") {
+    val fact = java.nio.file.Files.createTempDirectory("dmle").toString + "/f"
+    val dim = java.nio.file.Files.createTempDirectory("dmle").toString + "/d"
+    Seq((1L, 10, 5.0), (2L, 20, 7.0)).toDF("id", "k", "v").write.parquet(fact)
+    Seq((10, "x"), (20, "y")).toDF("dk", "name").write.parquet(dim)
+    try {
+      val star = spark.read.parquet(fact)
+        .join(spark.read.parquet(dim), col("k") === col("dk"))
+      MaterializedViews.register(spark, "empty_leaf", star,
+        keys = Seq("name"), sums = Seq("v"))
+      // out of band: the dim loses every data file (its _SUCCESS stays),
+      // so the star delta has no listing to pin the dim side to
+      new java.io.File(dim).listFiles()
+        .filter(f => f.getName.startsWith("part-")).foreach(f => assert(f.delete()))
+      TableDml.insertInto(spark, fact, Seq((3L, 30, 11.0)).toDF("id", "k", "v"))
+      assert(MaterializedViews.pendingMaintenance("empty_leaf") == 0,
+        "no fold may stay queued for the unpinnable append")
+      assert(!MaterializedViews.isRegistered("empty_leaf"),
+        "the barrier must drop the tile it cannot fold")
+      // the dim comes back out of band; a stale tile would now answer
+      // without the appended fact row
+      Seq((10, "x"), (20, "y"), (30, "z")).toDF("dk", "name")
+        .write.mode("append").parquet(dim)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.groupBy("name").agg(sum("v").as("t")).orderBy("name")
+          .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+      val rollup = rows(spark.read.parquet(fact)
+        .join(spark.read.parquet(dim), col("k") === col("dk")))
+      val factRows = spark.read.parquet(fact).as[(Long, Int, Double)].collect()
+      val dimRows = spark.read.parquet(dim).as[(Int, String)].collect()
+      val recompute = (for ((_, k, v) <- factRows; (dk, n) <- dimRows if k == dk)
+        yield (n, v)).groupBy(_._1).map { case (n, vs) => (n, vs.map(_._2).sum) }
+        .toSeq.sortBy(_._1)
+      assert(rollup == recompute)
+      assert(rollup == Seq(("x", 5.0), ("y", 7.0), ("z", 11.0)))
+    } finally {
+      MaterializedViews.clear()
+    }
+  }
+
   test("correlated dimensions: the pair-aware profile admits the tile the product rejects") {
     import spark.implicits._
     // quarter is DETERMINED by month: card(month)=24, card(quarter)=8,

@@ -664,6 +664,33 @@ class MaterializedViewDurableSpec extends SparkSpec {
     } finally MaterializedViews.clear()
   }
 
+  test("files of an uncommitted _temporary write are not table data: the tile still adopts") {
+    val fact = tmp("mvdur") + "/t"; writeFact(fact)
+    val lat = tmp("mvdur_lat")
+    try {
+      MaterializedViews.register(spark, "dur_tmpw", spark.read.parquet(fact),
+        keys = Seq("tag"), sums = Seq("amt"))
+      MaterializedViews.persistTile(spark, "dur_tmpw", lat)
+      MaterializedViews.release(spark, "dur_tmpw")
+      // a writer's task output before its job commits, staged where
+      // Hadoop's output committer puts it; Spark's reader skips it
+      val part = new java.io.File(fact).listFiles()
+        .find(_.getName.startsWith("part-")).get
+      val staged = new java.io.File(fact,
+        "_temporary/0/_temporary/attempt_0/" + part.getName)
+      assert(staged.getParentFile.mkdirs())
+      java.nio.file.Files.copy(part.toPath, staged.toPath)
+      val s2 = spark.newSession()
+      assert(MaterializedViews.adoptTiles(s2, lat) == Seq("dur_tmpw"),
+        "an uncommitted file must not move the tile's fingerprint")
+      val q = s2.read.parquet(fact).groupBy("tag").agg(sum("amt").as("t"))
+        .orderBy("tag")
+      assert(noFactScan(q), s"adopted tile must serve:\n${q.queryExecution.optimizedPlan}")
+      assert(q.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq ==
+        Seq(("a", 40.0), ("b", 70.0), ("c", 40.0)))
+    } finally MaterializedViews.clear()
+  }
+
   test("a tampered gen increment discards the tile at adopt: layouts are verified") {
     import spark.implicits._
     val fact = tmp("mvdur") + "/t"; writeFact(fact)
