@@ -23,8 +23,8 @@ import org.apache.spark.sql.SparkSession
   * Under those three, fact ⋈ dim on ⋀ fᵢ = dᵢ has EXACTLY one row per
   * fact row — so an aggregate over fact columns is identical on the
   * fact and on the star, which is what lets a fact-only rollup be
-  * answered from a star tile (MaterializedViews.fkTileRewrite) and a
-  * never-read dim join be deleted (FkJoinElimination).
+  * answered from a star tile (MaterializedViews.MvRewrite's fkCovers)
+  * and a never-read dim join be deleted (FkJoinElimination).
   *
   * Unique keys (ref: schema/Statistic.java `getKeys` +
   * rel/rules/ProjectJoinRemoveRule.java) are the weaker declaration: a

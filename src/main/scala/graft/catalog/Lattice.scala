@@ -136,7 +136,7 @@ object Lattice {
     * survivors get the exact three-condition verification
     * (Constraints.verifyAndDeclare) and, when valid, are DECLARED — so
     * an UNDECLARED schema gains FK star tiles
-    * (MaterializedViews.fkTileRewrite) and join elimination
+    * (MaterializedViews.MvRewrite's fkCovers) and join elimination
     * (FkJoinElimination) from one profiling call, no manual catalog
     * work. The sketch is the 100-TB gate: a non-unique key (ratio ≥ 2
     * in practice, far from the ~1.6% HLL error) is rejected for the

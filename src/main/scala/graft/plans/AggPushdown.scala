@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, Cast, EqualTo, Expression, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, Cast, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, JoinHint, LogicalPlan, Project, Union}
@@ -23,8 +23,8 @@ import graft.catalog.Statistics
   *     and join-key columns, and a final aggregate above re-combines.
   *     Gated by declared [[graft.catalog.Statistics]] (the reference
   *     consults RelMdDistinctRowCount the same way): it fires only when
-  *     the profiled NDV bound proves the partial shrinks its side by
-  *     `spark.graft.eagerAgg.minReduction` (default 4×).
+  *     the profiled NDV bound proves the partial shrinks its side at
+  *     least 4×.
   *   - [[AggregateUnionTranspose]] (ref: rel/rules/
   *     AggregateUnionTransposeRule.java) — partial aggregates push below
   *     UNION ALL, but ONLY when at least one branch's pushed aggregate
@@ -179,19 +179,18 @@ object SemiJoinRewrite extends Rule[LogicalPlan] {
   * so the group matches the far side as a unit and each (row, match)
   * pair is accounted exactly once by (group, match) × partial.
   *
-  * Gated by declared Statistics — rows/ndv(partial keys) must clear
-  * `spark.graft.eagerAgg.minReduction` (default 4) — and resolved
-  * through the producing leaf, so a renamed column never borrows
-  * another table's profile. Applies recursively across a join tree at
-  * the optimizer's fixed point (the partial lands just above the fact
-  * scan of a snowflake), and terminates because a pushed partial's
-  * keys no longer resolve to a leaf through the new Aggregate. */
+  * Gated by declared Statistics — rows/ndv(partial keys) must reach
+  * `minReduction` (4) — and resolved through the producing leaf, so a
+  * renamed column never borrows another table's profile. Applies
+  * recursively across a join tree at the optimizer's fixed point (the
+  * partial lands just above the fact scan of a snowflake), and
+  * terminates because a pushed partial's keys no longer resolve to a
+  * leaf through the new Aggregate. */
 object EagerAggregation extends Rule[LogicalPlan] {
   import AggPushdown._
 
-  private def minReduction: Double =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.eagerAgg.minReduction", "4.0").toDouble
+  /** The least rows/ndv ratio a partial must prove to be pushed. */
+  private val minReduction = 4.0
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case agg @ Aggregate(g, a, child, hint)
@@ -213,7 +212,9 @@ object EagerAggregation extends Rule[LogicalPlan] {
     // stay 0, which SUM-of-partials would turn into NULL — refuse
     if (g.isEmpty || !g.forall(_.isInstanceOf[AttributeReference])) return None
     if (!(g ++ a).forall(_.deterministic)) return None
-    val pairs = equiPairs(j.condition.get).getOrElse(return None)
+    // a non-equi conjunct can distinguish rows within a partial group,
+    // so nothing pushes
+    val pairs = StarShape.equiPairs(j.condition.get).getOrElse(return None)
     // outer joins admit the push only into the PRESERVED side: an
     // unmatched partial group null-extends exactly once and still
     // carries its whole partial, so the accounting argument holds
@@ -270,22 +271,6 @@ object EagerAggregation extends Rule[LogicalPlan] {
       if (factLeft) Join(partialAgg, other, j.joinType, j.condition, j.hint)
       else Join(other, partialAgg, j.joinType, j.condition, j.hint)
     Some((rewriteFinals(a, mapping), j2))
-  }
-
-  /** Conjunction of attr=attr pairs, or None — a non-equi conjunct can
-    * distinguish rows within a partial group, so nothing pushes. */
-  private def equiPairs(cond: Expression)
-      : Option[Seq[(AttributeReference, AttributeReference)]] = {
-    def split(e: Expression): Seq[Expression] = e match {
-      case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-        split(l) ++ split(r)
-      case o => Seq(o)
-    }
-    val conjs = split(cond).map {
-      case EqualTo(x: AttributeReference, y: AttributeReference) => Some((x, y))
-      case _ => None
-    }
-    if (conjs.exists(_.isEmpty)) None else Some(conjs.flatten)
   }
 }
 

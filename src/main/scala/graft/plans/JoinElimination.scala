@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, Cast, EqualTo, ExprId, Expression, IsNotNull, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, Cast, EqualTo, ExprId, Expression, IsNotNull, Literal, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan, Project}
@@ -9,6 +9,68 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 
 import graft.catalog.Constraints
 import graft.catalog.Constraints.ResolvedPair
+
+/** The scan/join shape MvRewrite's tile signatures and
+  * FkJoinElimination's dropped sides both match: projects/filters over
+  * inner equi-joins of file scans (the SubstitutionVisitor's
+  * canonicalize step). `leaves` are the scans' root paths in plan
+  * order, `filters` the split filter conjuncts, and `joins` each inner
+  * join with its attr=attr pairs, children before parents. */
+private[plans] final case class StarShape(
+    leaves: Seq[Set[String]], filters: Seq[Expression],
+    joins: Seq[(Join, Seq[(AttributeReference, AttributeReference)])])
+
+private[plans] object StarShape extends PredicateHelper {
+
+  /** The shape of `p`, or None for anything else. Peels bare-attribute
+    * and same-name-cast Projects, SubqueryAlias, View and ResolvedHint;
+    * an inner join qualifies only when every conjunct of its condition
+    * is attr=attr. */
+  def of(p: LogicalPlan): Option[StarShape] = p match {
+    case Project(ps, ch) if ps.forall(peelable) => of(ch)
+    case logical.Filter(cond, ch) =>
+      of(ch).map(s => s.copy(filters = splitConjunctivePredicates(cond) ++ s.filters))
+    case a: logical.SubqueryAlias => of(a.child)
+    // a temp-view source carries a View wrapper under its alias — the
+    // same name-transparency argument as SubqueryAlias applies
+    case v: logical.View => of(v.child)
+    case h: logical.ResolvedHint => of(h.child)
+    case j: Join if j.joinType == Inner && j.condition.isDefined =>
+      for {
+        pairs <- equiPairs(j.condition.get)
+        l <- of(j.left)
+        r <- of(j.right)
+      } yield StarShape(l.leaves ++ r.leaves, l.filters ++ r.filters,
+        l.joins ++ r.joins :+ (j -> pairs))
+    case lr: LogicalRelation => lr.relation match {
+      case fs: HadoopFsRelation =>
+        Some(StarShape(Seq(fs.location.rootPaths.map(_.toString).toSet), Nil, Nil))
+      case _ => None
+    }
+    case _ => None
+  }
+
+  /** A Project entry the walk sees through: a bare attribute, or an
+    * identity-preserving same-name cast (the loader's TIMESTAMP_NTZ→
+    * TIMESTAMP normalization projects every column through one). */
+  def peelable(e: NamedExpression): Boolean = e match {
+    case _: AttributeReference => true
+    case Alias(Cast(a: AttributeReference, _, _, _), n) => a.name == n
+    case _ => false
+  }
+
+  /** The condition as attr=attr pairs; None when any conjunct is
+    * anything else. */
+  def equiPairs(cond: Expression): Option[Seq[(AttributeReference, AttributeReference)]] =
+    sequence(splitConjunctivePredicates(cond).map {
+      case EqualTo(a: AttributeReference, b: AttributeReference) => Some((a, b))
+      case _ => None
+    })
+
+  /** All the values, or None when any is missing. */
+  def sequence[A](xs: Seq[Option[A]]): Option[Seq[A]] =
+    if (xs.forall(_.isDefined)) Some(xs.flatten) else None
+}
 
 /** Constraint-based join elimination (ref: rel/rules/
   * ProjectJoinRemoveRule.java — the reference removes a join when only
@@ -49,7 +111,7 @@ import graft.catalog.Constraints.ResolvedPair
   * merely broadcasting. Fixed-point safe: the rewrite output contains
   * no join to re-fire on, and a snowflake eliminates leaf-by-leaf or
   * whole-subtree to the same result. */
-object FkJoinElimination extends Rule[LogicalPlan] {
+object FkJoinElimination extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     // fast path: no declared constraints, nothing can ever eliminate —
@@ -91,7 +153,9 @@ object FkJoinElimination extends Rule[LogicalPlan] {
   private def attemptInner(refs: AttributeSet, cond: Expression,
       keep: LogicalPlan, drop: LogicalPlan): Option[LogicalPlan] = {
     if (!refs.subsetOf(keep.outputSet)) return None
-    val condPairs = equiPairsOf(cond).getOrElse(return None)
+    // a non-equi conjunct could filter an inner join's unique match
+    // away, losing the kept row
+    val condPairs = StarShape.equiPairs(cond).getOrElse(return None)
     val info = dropInfo(drop).getOrElse(return None)
     // resolve each outer pair: keep-side attr to its producing keep
     // leaf, drop-side attr to its producing drop leaf
@@ -143,7 +207,7 @@ object FkJoinElimination extends Rule[LogicalPlan] {
   private def attemptOuter(refs: AttributeSet, cond: Expression,
       keep: LogicalPlan, drop: LogicalPlan): Option[LogicalPlan] = {
     if (!refs.subsetOf(keep.outputSet)) return None
-    val conjs = splitConj(cond)
+    val conjs = splitConjunctivePredicates(cond)
     if (!conjs.forall(_.deterministic)) return None
     val info = dropInfo(drop).getOrElse(return None)
     // one leaf only: an inner join INSIDE the dropped side can multiply
@@ -175,73 +239,29 @@ object FkJoinElimination extends Rule[LogicalPlan] {
 
   // ---- shared shape analysis ---------------------------------------------
 
-  /** What a droppable subtree looks like: projects/filters over inner
-    * equi-joins of file scans. `innerPairs` are the subtree's own join
-    * pairs, leaf-resolved; `pairAttrIds` the exprIds of every attribute
-    * those pairs touch (their inferred IsNotNull filters are vacuous
-    * exactly when the pairs prove FK-covered). */
+  /** What a droppable subtree looks like: a [[StarShape]].
+    * `innerPairs` are the subtree's own join pairs, leaf-resolved;
+    * `pairAttrIds` the exprIds of every attribute those pairs touch
+    * (their inferred IsNotNull filters are vacuous exactly when the
+    * pairs prove FK-covered). */
   private final case class DropInfo(
       leaves: Seq[Set[String]], filters: Seq[Expression],
       innerPairs: Seq[ResolvedPair], pairAttrIds: Set[ExprId])
 
-  private def dropInfo(p: LogicalPlan): Option[DropInfo] = p match {
-    // bare attributes, or identity-preserving same-name casts (the
-    // loader's TIMESTAMP_NTZ→TIMESTAMP normalization projects every
-    // column through such a cast)
-    case Project(ps, ch) if ps.forall {
-      case _: AttributeReference => true
-      case Alias(Cast(a: AttributeReference, _, _, _), n) => a.name == n
-      case _ => false
-    } => dropInfo(ch)
-    case logical.Filter(cond, ch) =>
-      dropInfo(ch).map(i => i.copy(filters = splitConj(cond) ++ i.filters))
-    case a: logical.SubqueryAlias => dropInfo(a.child)
-    case v: logical.View => dropInfo(v.child)
-    case h: logical.ResolvedHint => dropInfo(h.child)
-    case jn: Join if jn.joinType == Inner && jn.condition.isDefined =>
-      for {
-        l <- dropInfo(jn.left)
-        r <- dropInfo(jn.right)
-        pairs <- equiPairsOf(jn.condition.get)
-        resolved <- traverseOpt(pairs) { case (a, b) =>
-          for {
-            la <- producingLeaf(jn, a)
-            lb <- producingLeaf(jn, b)
-          } yield ResolvedPair(la, a.name, lb, b.name)
-        }
-      } yield DropInfo(
-        l.leaves ++ r.leaves, l.filters ++ r.filters,
-        l.innerPairs ++ r.innerPairs ++ resolved,
-        l.pairAttrIds ++ r.pairAttrIds ++
-          pairs.flatMap(p => Seq(p._1.exprId, p._2.exprId)))
-    case lr: LogicalRelation => lr.relation match {
-      case fs: HadoopFsRelation =>
-        Some(DropInfo(Seq(fs.location.rootPaths.map(_.toString).toSet),
-          Seq.empty, Seq.empty, Set.empty))
-      case _ => None
+  /** Each pair resolves to its producing leaves at ITS join: resolving
+    * from the subtree root fails once a pruning Project above the join
+    * drops a key. */
+  private def dropInfo(p: LogicalPlan): Option[DropInfo] =
+    StarShape.of(p).flatMap { star =>
+      val pairs = star.joins.flatMap { case (jn, ps) => ps.map(jn -> _) }
+      StarShape.sequence(pairs.map { case (jn, (a, b)) =>
+        for {
+          la <- producingLeaf(jn, a)
+          lb <- producingLeaf(jn, b)
+        } yield ResolvedPair(la, a.name, lb, b.name)
+      }).map(resolved => DropInfo(star.leaves, star.filters, resolved,
+        pairs.flatMap { case (_, (a, b)) => Seq(a.exprId, b.exprId) }.toSet))
     }
-    case _ => None
-  }
-
-  /** The condition as attr=attr equi pairs; None when any conjunct is
-    * anything else (a non-equi conjunct could filter an inner join's
-    * unique match away, losing the kept row). */
-  private def equiPairsOf(cond: Expression)
-      : Option[Seq[(AttributeReference, AttributeReference)]] =
-    traverseOpt(splitConj(cond)) {
-      case EqualTo(a: AttributeReference, b: AttributeReference) => Some((a, b))
-      case _ => None
-    }
-
-  private def splitConj(cond: Expression): Seq[Expression] = cond match {
-    case And(l, r) => splitConj(l) ++ splitConj(r)
-    case other => Seq(other)
-  }
-
-  private def traverseOpt[A, B](xs: Seq[A])(f: A => Option[B]): Option[Seq[B]] = {
-    val out = xs.map(f)
-    if (out.exists(_.isEmpty)) None else Some(out.flatten)
-  }
 
   /** Root paths of the scan leaf that PRODUCES `attr` (peeling the
     * same-name normalization cast the loader interposes), or None when

@@ -3,7 +3,7 @@ package graft.plans
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Cast, Divide, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, Cast, Divide, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual, Literal, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -16,8 +16,11 @@ import org.apache.spark.sql.functions._
 /** Materialized-view substitution — the reference's MV rewrite family
   * (ref: rel/rules/materialize/MaterializedViewRules.java:1 +
   * plan/SubstitutionVisitor.java:1, lattices materialize/Lattice
-  * .java:1), scoped as SURVEY §7 prescribes: single-source aggregate
-  * ROLLUP first.
+  * .java:1). [[MvRewrite]] answers an aggregate from a tile of the
+  * same scan/join shape, of a join-superset star whose extra joins
+  * declared foreign keys prove lossless, or of a star the query joins
+  * further dimensions onto; plain GROUP BY and GROUPING SETS / ROLLUP /
+  * CUBE alike.
   *
   * `register` materializes `source.groupBy(keys).agg(partials)` into
   * the Spark cache; a user-provided optimizer rule then rewrites any
@@ -30,7 +33,8 @@ import org.apache.spark.sql.functions._
   * The source may be a single file scan OR inner equi-joins of file
   * scans (the lattice star-join case): matching is by canonical
   * signature — leaf scan paths + the set of join column pairs, both
-  * name-based — so column-pruning Projects, broadcast hints, aliases,
+  * name-based, read off the shared [[StarShape]] walk — so
+  * column-pruning Projects, broadcast hints, aliases,
   * and join reorder on the query side don't break recognition
   * (plan/SubstitutionVisitor.java's canonicalize-then-unify). Both
   * compensation directions are supported: a query predicate IMPLYING
@@ -143,57 +147,17 @@ object MaterializedViews {
   private def registered(name: String): MvDef = Option(registry.get(name))
     .getOrElse(throw new IllegalArgumentException(s"unknown MV: $name"))
 
-  /** (signature, filters) of a plan that is projects/filters over inner
-    * equi-joins of file scans; None for anything else. Name-based and
-    * order-insensitive: leaves sort canonically, join pairs normalize
-    * to sorted column-name tuples. */
-  private def signatureOf(p: LogicalPlan): Option[(Signature, Seq[Expression])] = p match {
-    // bare attributes, or identity-preserving same-name casts (the
-    // loader's TIMESTAMP_NTZ→TIMESTAMP normalization projects every
-    // column through such a cast)
-    case Project(ps, ch) if ps.forall {
-      case _: AttributeReference => true
-      case Alias(Cast(a: AttributeReference, _, _, _), n) => a.name == n
-      case _ => false
-    } => signatureOf(ch)
-    case logical.Filter(cond, ch) =>
-      signatureOf(ch).map { case (sig, fs) => (sig, cond +: fs) }
-    case a: logical.SubqueryAlias => signatureOf(a.child)
-    // a temp-view source carries a View wrapper under its alias — the
-    // same name-transparency argument as SubqueryAlias applies
-    case v: logical.View => signatureOf(v.child)
-    case h: logical.ResolvedHint => signatureOf(h.child)
-    case j: Join if j.joinType == Inner =>
-      for {
-        cond <- j.condition
-        pairs <- equiPairs(cond)
-        l <- signatureOf(j.left)
-        r <- signatureOf(j.right)
-      } yield (Signature(
-        (l._1.leaves ++ r._1.leaves).sortBy(_.toSeq.sorted.mkString("|")),
-        l._1.joinPairs ++ r._1.joinPairs ++ pairs), l._2 ++ r._2)
-    case lr: LogicalRelation => lr.relation match {
-      case fs: HadoopFsRelation =>
-        Some((Signature(Seq(fs.location.rootPaths.map(_.toString).toSet), Set.empty),
-          Seq.empty))
-      case _ => None
+  /** (signature, filter conjuncts) of a [[StarShape]] plan; None for
+    * anything else. Name-based and order-insensitive: leaves sort
+    * canonically, join pairs normalize to sorted column-name tuples. */
+  private def signatureOf(p: LogicalPlan): Option[(Signature, Seq[Expression])] =
+    StarShape.of(p).map { star =>
+      val pairs = star.joins.flatMap(_._2).map { case (a, b) =>
+        if (a.name <= b.name) (a.name, b.name) else (b.name, a.name)
+      }
+      (Signature(star.leaves.sortBy(_.toSeq.sorted.mkString("|")), pairs.toSet),
+        star.filters)
     }
-    case _ => None
-  }
-
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other => Seq(other)
-  }
-
-  /** A conjunction of attribute=attribute predicates as normalized
-    * name pairs; None if the condition has any other shape. */
-  private def equiPairs(cond: Expression): Option[Set[(String, String)]] = cond match {
-    case And(l, r) => for { a <- equiPairs(l); b <- equiPairs(r) } yield a ++ b
-    case EqualTo(a: AttributeReference, b: AttributeReference) =>
-      Some(Set(if (a.name <= b.name) (a.name, b.name) else (b.name, a.name)))
-    case _ => None
-  }
 
   /** Register + materialize an MV over `source` (a file-based scan,
     * optionally FILTERED — the reference's MaterializedViewFilterScanRule
@@ -245,7 +209,7 @@ object MaterializedViews {
     // literal-fold the defining filter so register-time (analyzed, casts
     // unfolded) conjuncts compare equal to query-time (optimized, folded)
     // conjuncts
-    val filterConjuncts = srcFilters.flatMap(splitAnd).map(foldLiterals)
+    val filterConjuncts = srcFilters.map(foldLiterals)
     // the unfiltered base relation — union compensation scans ONLY the
     // residual slice of it when a query's range is wider than the MV's
     val baseDf =
@@ -305,8 +269,7 @@ object MaterializedViews {
       // same table is a different MV), every partial list, and the
       // derived-measure expressions by canonical SQL
       val parsed = signatureOf(source.queryExecution.analyzed)
-      val qFilters = parsed.toSeq.flatMap(_._2).flatMap(splitAnd)
-        .map(e => foldLiterals(e).sql).toSet
+      val qFilters = parsed.toSeq.flatMap(_._2).map(e => foldLiterals(e).sql).toSet
       Option(registry.get(name)) match {
         case Some(d) if parsed.map(_._1).contains(d.signature) &&
             d.filterConjuncts.map(_.sql).toSet == qFilters &&
@@ -1348,7 +1311,7 @@ object MaterializedViews {
       val (sig, srcFilters) = signatureOf(source.queryExecution.analyzed)
         .getOrElse(throw new IllegalStateException(
           s"rebuilt source for ${meta.name} is not signable"))
-      val filterConjuncts = srcFilters.flatMap(splitAnd).map(foldLiterals)
+      val filterConjuncts = srcFilters.map(foldLiterals)
       val sumExprCols = meta.sumExprNames.zip(meta.sumExprSqls.map(expr))
 
       // verify the rebuilt source reproduces the stored partial layout
@@ -1415,7 +1378,7 @@ object MaterializedViews {
 
       // re-declare the constraints persisted with the tile, so a
       // zero-API restarted driver regains fact-only FK subsumption
-      // (fkTileRewrite) without a model file
+      // (MvRewrite's fkCovers) without a model file
       meta.fks.foreach { row =>
         val Array(fp, fc, dp, dk) = row.split('\u0001')
         graft.catalog.Constraints.declareQualified(
@@ -1580,7 +1543,7 @@ object MaterializedViews {
   }
 
   /** The substitution rule (runs in the user-provided optimizer batch). */
-  object MvRewrite extends Rule[LogicalPlan] {
+  object MvRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
     override def apply(plan: LogicalPlan): LogicalPlan =
       // fast path: the rule stays installed after the last drop()/
@@ -1601,8 +1564,7 @@ object MaterializedViews {
             // above the rewritten Expand.
             case logical.Filter(cond, expand: logical.Expand)
                 if cond.references.subsetOf(
-                  org.apache.spark.sql.catalyst.expressions.AttributeSet(
-                    expand.output.filterNot(expand.child.outputSet.contains))) =>
+                  AttributeSet(expand.output.filterNot(expand.child.outputSet.contains))) =>
               expandRewrite(groupings, aggExprs, expand).map {
                 case Aggregate(g2, a2, newExpand, _) =>
                   Aggregate(g2, a2, logical.Filter(cond, newExpand), None)
@@ -1615,15 +1577,24 @@ object MaterializedViews {
           }).getOrElse(agg)
       }
 
+    /** A Project holding more than the star walk peels (bare attributes
+      * and same-name normalization casts): Catalyst's extracted grouping
+      * expressions, which hide the scan shape from signature matching. */
+    private def groupingProject(ps: Seq[NamedExpression]): Boolean =
+      !ps.forall(StarShape.peelable)
+
+    /** A deterministic, aggregate-free expression over at least one
+      * attribute, every one of which `ok` admits. */
+    private def derivedFrom(e: Expression)(ok: Attribute => Boolean): Boolean =
+      e.deterministic && e.references.nonEmpty &&
+        !e.exists(_.isInstanceOf[AggregateExpression]) && e.references.forall(ok)
+
     /** Catalyst extracts non-trivial grouping expressions into a
       * `_groupingexpression` Project below the Aggregate (so the plan
-      * groups by a bare attribute). That Project hides the scan shape
-      * from signature matching — inline its alias definitions back into
-      * the grouping/aggregate expressions and match against its child.
-      * Only fires when the Project holds something beyond bare
-      * attributes and same-name normalization casts (those belong to
-      * the signature peeler), and every alias is deterministic and
-      * aggregate-free. */
+      * groups by a bare attribute). Inline a grouping Project's alias
+      * definitions back into the grouping/aggregate expressions and
+      * match against its child. Only fires when every alias is
+      * deterministic and aggregate-free. */
     private def inlineGroupingProject(groupings: Seq[Expression],
         aggExprs: Seq[NamedExpression], child: LogicalPlan)
         : (Seq[Expression], Seq[NamedExpression], LogicalPlan) = child match {
@@ -1632,11 +1603,7 @@ object MaterializedViews {
             case Alias(e, _) => e.deterministic &&
               !e.exists(_.isInstanceOf[AggregateExpression])
             case _ => false
-          } && ps.exists {
-            case Alias(Cast(ar: AttributeReference, _, _, _), n) => ar.name != n
-            case _: Alias => true
-            case _ => false
-          } =>
+          } && groupingProject(ps) =>
         val defs = ps.collect { case al @ Alias(e, _) => al.exprId -> e }.toMap
         // a bare reference to an inlined alias at the TOP of the agg
         // list would stop being a NamedExpression after substitution
@@ -1652,32 +1619,36 @@ object MaterializedViews {
       case _ => (groupings, aggExprs, child)
     }
 
-    /** Exact-shape substitution: signatureOf peels pruning Projects and
-      * collects Filters; a query matches an MV when its scan+join shape
-      * is identical, its predicate IMPLIES the MV's defining predicate
-      * (filter subsumption — the MaterializedViewFilterScanRule /
-      * SubstitutionVisitor analog), and the compensating residual
-      * references grouping-key columns only (so it commutes with the
-      * rollup and can re-apply on the MV). */
+    /** Tile substitution for a plain aggregate: signatureOf peels pruning
+      * Projects and collects Filters, and a query matches a tile when its
+      * scan+join shape is the tile's own — or a join-subset the tile's
+      * declared foreign keys cover (fkCovers) — its predicate IMPLIES the
+      * tile's defining predicate (filter subsumption — the
+      * MaterializedViewFilterScanRule / SubstitutionVisitor analog), and
+      * the compensating residual references grouping-key columns only
+      * (so it commutes with the rollup and can re-apply on the tile).
+      * One candidate loop (firstTile) tries exact-signature tiles first,
+      * then FK-covered ones, each cheapest first; rollupExprs maps the
+      * aggregate and tileTarget builds the compensated target. */
     private def exactRewrite(groupings: Seq[Expression],
         aggExprs: Seq[NamedExpression], child: LogicalPlan): Option[LogicalPlan] =
-      signatureOf(child).flatMap { case (sig, filters) =>
-        val conjs = filters.flatMap(splitAnd)
-        candidates.iterator.flatMap { mv =>
-          if (mv.signature != sig) None
-          // rollup-ability first: it is the cheap check, and
-          // unionTarget runs a full analyzer pass building the
-          // residual subtree — never pay that for an aggregate the
-          // MV cannot answer anyway
-          else rollupExprs(mv, groupings, aggExprs).flatMap { case (g, a) =>
-            compensation(mv, conjs, sig)
-              .map(c => targetWithFilters(mv, c))
-              .orElse(unionTarget(mv, conjs, sig))
-              .map(child => Aggregate(g, a, child, None))
-          }
-        }.nextOption()
-          .orElse(fkTileRewrite(groupings, aggExprs, sig, conjs))
+      signatureOf(child).flatMap { case (sig, conjs) =>
+        // rollup-ability first: it is the cheap check, and a union
+        // target runs a full analyzer pass building the residual
+        // subtree — never pay that for an aggregate the tile cannot
+        // answer anyway
+        def answer(mv: MvDef) = rollupExprs(mv, groupings, aggExprs).flatMap {
+          case (g, a) => tileTarget(mv, conjs, sig).map(Aggregate(g, a, _, None))
+        }
+        firstTile(_.signature == sig)(answer)
+          .orElse(firstTile(fkCovers(_, sig))(answer))
       }
+
+    /** The candidate loop: the first registered tile, cheapest first,
+      * that `admits` the query and that `answer` turns into a plan. */
+    private def firstTile(admits: MvDef => Boolean)(
+        answer: MvDef => Option[LogicalPlan]): Option[LogicalPlan] =
+      candidates.iterator.filter(admits).flatMap(answer).nextOption()
 
     /** Multiset containment: `b` removed from `a` leaf-by-leaf; Some =
       * the leftover leaves of `a`, None = `b` has a leaf `a` lacks. */
@@ -1690,7 +1661,11 @@ object MaterializedViews {
       if (ok) Some(rem.toSeq) else None
     }
 
-    /** Constraint-based tile answering (ref: rel/rules/materialize/
+    /** Is every join `mv` has beyond `sig` proven lossless by a declared
+      * foreign key? (False when the signatures are identical — the exact
+      * signature owns that case.)
+      *
+      * Constraint-based tile answering (ref: rel/rules/materialize/
       * MaterializedViewJoinRule compensation over
       * RelOptReferentialConstraint; Statistic.getReferentialConstraints):
       * a query over a SUBSET of a tile's star — most importantly the
@@ -1701,32 +1676,12 @@ object MaterializedViews {
       * and grouping is identical on the fact and on the star. The usual
       * compensation applies on the shared part: a tile carrying its own
       * dim-side filter is never implied by a fact-only query and stays
-      * blocked. Union compensation is deliberately NOT offered on this
-      * path — the residual would re-scan the star, not the fact; a
-      * second tile is the right tool for a wider range.
+      * blocked. A strictly wider fact-side range unions the tile with a
+      * FACT-ONLY residual slice, never the dims (fkUnionTarget).
       *
       * At 100 TB: ONE wide star tile answers every join-subset rollup —
       * without constraints each subset would need its own
       * materialization (or re-pay the fact scan). */
-    private def fkTileRewrite(groupings: Seq[Expression],
-        aggExprs: Seq[NamedExpression], sig: Signature,
-        conjs: Seq[Expression]): Option[LogicalPlan] =
-      candidates.iterator.flatMap { mv =>
-        if (!fkCovers(mv, sig)) None
-        else rollupExprs(mv, groupings, aggExprs).flatMap { case (g, a) =>
-          compensation(mv, conjs, sig)
-            .map(c => targetWithFilters(mv, c))
-            // a strictly wider fact-side range unions the tile with a
-            // FACT-ONLY residual slice (never the dims) — sound when the
-            // whole partial layout is fact-computable (fkUnionTarget)
-            .orElse(fkUnionTarget(mv, conjs, sig))
-            .map(child => Aggregate(g, a, child, None))
-        }
-      }.nextOption()
-
-    /** Is every join `mv` has beyond `sig` proven lossless by a declared
-      * foreign key? (False when the signatures are identical — the exact
-      * path owns that case.) */
     private def fkCovers(mv: MvDef, sig: Signature): Boolean =
       mv.signature != sig &&
         sig.joinPairs.subsetOf(mv.signature.joinPairs) &&
@@ -1773,7 +1728,7 @@ object MaterializedViews {
       @scala.annotation.tailrec
       def peel(p: LogicalPlan, fs: Seq[Expression]): (LogicalPlan, Seq[Expression]) = p match {
         case Project(ps, ch) if ps.forall(_.isInstanceOf[AttributeReference]) => peel(ch, fs)
-        case logical.Filter(cond, ch) => peel(ch, fs ++ splitAnd(cond))
+        case logical.Filter(cond, ch) => peel(ch, fs ++ splitConjunctivePredicates(cond))
         case a: logical.SubqueryAlias => peel(a.child, fs)
         case h: logical.ResolvedHint => peel(h.child, fs)
         case other => (other, fs)
@@ -1802,11 +1757,8 @@ object MaterializedViews {
       // signature (all carried partials are exact, any works)
       findStar(child, Nil, Nil).filter(_._4.nonEmpty).flatMap {
         case (sig, star, collected, dims) =>
-          candidates.iterator
-            .filter(_.signature == sig)
-            .flatMap(mv => buildJoinComp(mv, star, collected, dims,
-              groupings, aggExprs))
-            .nextOption()
+          firstTile(_.signature == sig)(
+            buildJoinComp(_, star, collected, dims, groupings, aggExprs))
       }
     }
 
@@ -1818,17 +1770,14 @@ object MaterializedViews {
         groupings: Seq[Expression], aggExprs: Seq[NamedExpression])
         : Option[LogicalPlan] = {
       val starOut = star.outputSet
-      val dimOut = org.apache.spark.sql.catalyst.expressions.AttributeSet(
-        dims.flatMap(_._1.output))
+      val dimOut = AttributeSet(dims.flatMap(_._1.output))
       // every join-condition conjunct must be attr=attr where each
       // star-side column is an MV grouping key (dim-side attrs pass
       // through, covering dim-to-dim snowflake bridges)
-      def condOk(e: Expression): Boolean = splitAnd(e).forall {
-        case EqualTo(a: AttributeReference, b: AttributeReference) =>
-          Seq(a, b).forall(at => dimOut.contains(at) ||
-            (starOut.contains(at) && mv.keys.contains(at.name)))
-        case _ => false
-      }
+      def condOk(e: Expression): Boolean = StarShape.equiPairs(e).exists(_.forall {
+        case (a, b) => Seq(a, b).forall(at => dimOut.contains(at) ||
+          (starOut.contains(at) && mv.keys.contains(at.name)))
+      })
       if (!dims.forall { case (_, cond) => condOk(cond) }) return None
       // filters collected along the way must split cleanly: star-side
       // conjuncts join the MV compensation, dim-side conjuncts re-apply
@@ -1836,27 +1785,17 @@ object MaterializedViews {
       val (starAbove, rest) = collected.partition(_.references.subsetOf(starOut))
       val (dimAbove, mixed) = rest.partition(_.references.subsetOf(dimOut))
       if (mixed.nonEmpty) return None
-      val conjs = starAbove.flatMap(splitAnd)
 
       rollupExprs(mv, groupings, aggExprs, dimOut).flatMap { case (g, a) =>
-        compensation(mv, conjs, mv.signature)
-          .map(c => targetWithFilters(mv, c))
-          .orElse(unionTarget(mv, conjs, mv.signature))
-          .map { newStar =>
-            def rebind(e: Expression): Expression = e.transform {
-              case at: AttributeReference if starOut.contains(at) =>
-                val out = mv.targetOut(at.name)
-                if (out.dataType == at.dataType) out
-                else Cast(out, at.dataType, Some(conf.sessionLocalTimeZone))
-            }
-            val joined = dims.foldLeft(newStar: LogicalPlan) {
-              case (acc, (dim, cond)) =>
-                Join(acc, dim, Inner, Some(rebind(cond)), logical.JoinHint.NONE)
-            }
-            val filtered = dimAbove.foldLeft(joined)(
-              (p, f) => logical.Filter(f, p))
-            Aggregate(g, a, filtered, None)
+        tileTarget(mv, starAbove, mv.signature).map { newStar =>
+          val joined = dims.foldLeft(newStar: LogicalPlan) {
+            case (acc, (dim, cond)) => Join(acc, dim, Inner,
+              Some(rebindToTile(mv, cond)(starOut.contains)), logical.JoinHint.NONE)
           }
+          val filtered = dimAbove.foldLeft(joined)(
+            (p, f) => logical.Filter(f, p))
+          Aggregate(g, a, filtered, None)
+        }
       }
     }
 
@@ -1870,23 +1809,24 @@ object MaterializedViews {
       * SAME Expand is exact — all rows of a tile group share every key,
       * so nulling a key per set merges whole groups, which is precisely
       * what the partial merge computes. The rewrite:
-      *   - re-points Expand's child at the compensated tile (filter
-      *     subsumption / union compensation, as in the exact path);
+      *   - re-points Expand's child at the compensated tile (tileTarget,
+      *     as in the exact path; an FK-matched tile unions a FACT-ONLY
+      *     residual slice — sound under Expand because the union adds
+      *     one more generation of partials, and the per-set merge treats
+      *     generations alike);
       *   - routes the needed tile columns (partials + keys the
       *     aggregates read) THROUGH Expand as passthrough outputs;
       *   - rewrites each grouping ENTRY (a key attribute, by name) to
       *     the tile's key column, keeping Catalyst's null/grouping-id
       *     literals verbatim;
       *   - converts the aggregate functions to partial merges
-      *     (rollupAgg) over the passthrough attributes.
+      *     (rollupOutput) over the passthrough attributes.
       * The Aggregate's own grouping attributes and grouping-id keep
       * their exprIds, so nothing above the node re-resolves. At 100 TB
       * this is the cube-dashboard play: one day×dim tile answers every
       * ROLLUP/CUBE panel with zero fact scans. */
     private def expandRewrite(groupings: Seq[Expression],
         aggExprs: Seq[NamedExpression], expand: logical.Expand): Option[LogicalPlan] = {
-      def seqOpt[A](xs: Seq[Option[A]]): Option[Seq[A]] =
-        if (xs.forall(_.isDefined)) Some(xs.map(_.get)) else None
       if (!groupings.forall(_.isInstanceOf[AttributeReference])) return None
       // Catalyst extracts a non-trivial grouping expression (year(d) in
       // ROLLUP(year(d), ...)) into the Project below Expand and lets the
@@ -1903,18 +1843,11 @@ object MaterializedViews {
         case _ => Map.empty[org.apache.spark.sql.catalyst.expressions.ExprId, Expression]
       }
       val sigPlan = expand.child match {
-        case Project(ps, ch) if ps.exists {
-          case Alias(Cast(a: AttributeReference, _, _, _), n) => a.name != n
-          case _: Alias => true
-          case _ => false
-        } => Project(ps.filter {
-          case _: AttributeReference => true
-          case Alias(Cast(a: AttributeReference, _, _, _), n) => a.name == n
-          case _ => false
-        }, ch)
+        case Project(ps, ch) if groupingProject(ps) =>
+          Project(ps.filter(StarShape.peelable), ch)
         case other => other
       }
-      signatureOf(sigPlan).flatMap { case (sig, filters) =>
+      signatureOf(sigPlan).flatMap { case (sig, conjs) =>
         val childOut = expand.child.outputSet
         // grouping positions carry fresh attributes (key-or-null copies
         // + the grouping-id); passthrough positions reuse the child's
@@ -1927,119 +1860,68 @@ object MaterializedViews {
         // per-set column) does not commute with the tile merge
         val aggArgRefs = aggExprs.flatMap(_.collect {
           case ae: AggregateExpression => ae.references
-        }).foldLeft(org.apache.spark.sql.catalyst.expressions.AttributeSet.empty)(_ ++ _)
-        val conjs = filters.flatMap(splitAnd)
-        val groupingAttrSet = org.apache.spark.sql.catalyst.expressions.AttributeSet(
-          groupings.flatMap(_.references))
-        candidates.iterator.flatMap { mv =>
-          if (!aggArgRefs.subsetOf(childOut)) None
-          else
-          // the tile answers its own signature, or a join-SUBSET of its
-          // star when declared foreign keys prove the extra joins
-          // lossless (fkCovers — the fact-only grouping-sets panel)
-          if (mv.signature != sig && !fkCovers(mv, sig)) None
-          else {
-            // tile columns the rewritten plan reads, routed through
-            // Expand: one passthrough attribute per partial/key name,
-            // allocated on first use (nullable — a union-compensated
-            // target may widen nullability)
-            val passed = scala.collection.mutable.LinkedHashMap[String, Attribute]()
-            def lookup(name: String): Expression = passed.getOrElseUpdate(name,
-              mv.targetOut(name).newInstance().withNullability(true))
-            val rollup = rollupAgg(mv, lookup,
-              org.apache.spark.sql.catalyst.expressions.AttributeSet.empty) _
-            val newAggExprs = seqOpt(aggExprs.map {
-              case a: AttributeReference if groupingAttrSet.contains(a) =>
-                Some(a: NamedExpression)
-              // any deterministic expression over the GROUPING outputs
-              // (a bare copy, or a Cast the optimizer collapsed into the
-              // select list) passes through — those attrs keep their
-              // exprIds across the rewrite
-              case al @ Alias(e, _) if e.deterministic &&
-                  !e.exists(_.isInstanceOf[AggregateExpression]) &&
-                  e.references.nonEmpty &&
-                  e.references.subsetOf(groupingAttrSet) =>
-                Some(al: NamedExpression)
-              case al @ Alias(ae: AggregateExpression, nm)
-                  if !ae.isDistinct && ae.filter.isEmpty =>
-                rollup(ae.aggregateFunction)
-                  .map(e => Alias(e, nm)(exprId = al.exprId): NamedExpression)
-              // a Cast the optimizer collapsed around the aggregate
-              // commutes with the rollup, as in the exact path
-              case al @ Alias(c @ Cast(ae: AggregateExpression, _, _, _), nm)
-                  if !ae.isDistinct && ae.filter.isEmpty =>
-                rollup(ae.aggregateFunction)
-                  .map(e => Alias(c.copy(child = e), nm)(exprId = al.exprId): NamedExpression)
-              // COUNT(DISTINCT key): the tile carries each key combination
-              // once per group, so the distinct count re-aggregates over
-              // the key passthrough exactly (duplicated rows from a
-              // union-compensated target dedup away) — as in the exact path
-              case al @ Alias(ae: AggregateExpression, nm)
-                  if ae.isDistinct && ae.filter.isEmpty =>
-                (ae.aggregateFunction match {
-                  case Count(Seq(a: AttributeReference)) if mv.keys.contains(a.name) =>
-                    Some(Count(lookup(a.name)).toAggregateExpression(isDistinct = true))
-                  case _ => None
-                }).map(e => Alias(e, nm)(exprId = al.exprId): NamedExpression)
-              case _ => None
-            })
-            // each grouping ENTRY is a tile key, a key-DERIVED expression
-            // (via the extracted Project alias — equal keys imply equal
-            // value, so the set-merge IS the partial merge, as in the
-            // exact path's keyDerived groupings), or one of Catalyst's
-            // planted literals (typed null / grouping-id). Key references
-            // rebind by name, a cast closing the loader's
-            // type-normalization gap.
-            def keyExpr(e: Expression): Option[Expression] =
-              if (e.deterministic && e.references.nonEmpty &&
-                  !e.exists(_.isInstanceOf[AggregateExpression]) &&
-                  e.references.forall(a => mv.keys.contains(a.name)))
-                Some(e.transform {
-                  case a: AttributeReference if mv.keys.contains(a.name) =>
-                    val out = mv.targetOut(a.name)
-                    if (out.dataType == a.dataType) out
-                    else Cast(out, a.dataType, Some(conf.sessionLocalTimeZone))
-                })
-              else None
-            // exprId lookup FIRST: a grouping alias that merely shares a
-            // tile key's NAME (e.g. date_trunc(..).as("o_orderdate"))
-            // must rebind through its definition, never to the raw key —
-            // the same exprId-before-name rule rollupExprs documents
-            def entryOf(e: Expression): Option[Expression] = e match {
-              case a: AttributeReference if exprDefs.contains(a.exprId) =>
-                keyExpr(exprDefs(a.exprId))
-              case a: AttributeReference if mv.keys.contains(a.name) => keyExpr(a)
-              case l: Literal => Some(l)
-              case _ => None
-            }
-            val groupRows = seqOpt(expand.projections.map(row =>
-              seqOpt(groupPos.map { case (_, i) => entryOf(row(i)) })))
-            (newAggExprs, groupRows) match {
-              case (Some(aggs), Some(rows)) =>
-                compensation(mv, conjs, sig)
-                  .map(c => targetWithFilters(mv, c))
-                  // exact-signature tiles union their own residual; an
-                  // FK-matched tile unions a FACT-ONLY residual slice
-                  // (fkUnionTarget — never the star). Sound under
-                  // Expand for the same reason the covered path is: the
-                  // union contributes one more generation of partials,
-                  // and the per-set merge treats generations alike.
-                  .orElse(if (mv.signature == sig)
-                    unionTarget(mv, conjs, sig)
-                  else fkUnionTarget(mv, conjs, sig))
-                  .map { target =>
-                    val passSeq = passed.toSeq
-                    val newOutput = passSeq.map(_._2) ++ groupPos.map(_._1)
-                    val newProjections = rows.map(groupEntries =>
-                      passSeq.map { case (n, _) => mv.targetOut(n): Expression } ++
-                        groupEntries)
-                    Aggregate(groupings, aggs,
-                      logical.Expand(newProjections, newOutput, target), None)
-                  }
-              case _ => None
-            }
+        }).foldLeft(AttributeSet.empty)(_ ++ _)
+        val groupingAttrSet = AttributeSet(groupings.flatMap(_.references))
+        if (!aggArgRefs.subsetOf(childOut)) None
+        // the tile answers its own signature, or a join-SUBSET of its
+        // star when declared foreign keys prove the extra joins
+        // lossless (fkCovers — the fact-only grouping-sets panel)
+        else firstTile(mv => mv.signature == sig || fkCovers(mv, sig)) { mv =>
+          // tile columns the rewritten plan reads, routed through
+          // Expand: one passthrough attribute per partial/key name,
+          // allocated on first use (nullable — a union-compensated
+          // target may widen nullability)
+          val passed = scala.collection.mutable.LinkedHashMap[String, Attribute]()
+          def lookup(name: String): Expression = passed.getOrElseUpdate(name,
+            mv.targetOut(name).newInstance().withNullability(true))
+          val newAggExprs = StarShape.sequence(aggExprs.map {
+            case a: AttributeReference if groupingAttrSet.contains(a) =>
+              Some(a: NamedExpression)
+            // any deterministic expression over the GROUPING outputs
+            // (a bare copy, or a Cast the optimizer collapsed into the
+            // select list) passes through — those attrs keep their
+            // exprIds across the rewrite
+            case al @ Alias(e, _) if derivedFrom(e)(groupingAttrSet.contains) =>
+              Some(al: NamedExpression)
+            case other => rollupOutput(mv, lookup, AttributeSet.empty)(other)
+          })
+          // each grouping ENTRY is a tile key, a key-DERIVED expression
+          // (via the extracted Project alias — equal keys imply equal
+          // value, so the set-merge IS the partial merge, as in the
+          // exact path's keyDerived groupings), or one of Catalyst's
+          // planted literals (typed null / grouping-id). Key references
+          // rebind by name (rebindToTile).
+          def keyExpr(e: Expression): Option[Expression] =
+            if (derivedFrom(e)(a => mv.keys.contains(a.name)))
+              Some(rebindToTile(mv, e)(a => mv.keys.contains(a.name)))
+            else None
+          // exprId lookup FIRST: a grouping alias that merely shares a
+          // tile key's NAME (e.g. date_trunc(..).as("o_orderdate"))
+          // must rebind through its definition, never to the raw key —
+          // the same exprId-before-name rule rollupExprs documents
+          def entryOf(e: Expression): Option[Expression] = e match {
+            case a: AttributeReference if exprDefs.contains(a.exprId) =>
+              keyExpr(exprDefs(a.exprId))
+            case a: AttributeReference if mv.keys.contains(a.name) => keyExpr(a)
+            case l: Literal => Some(l)
+            case _ => None
           }
-        }.nextOption()
+          val groupRows = StarShape.sequence(expand.projections.map(row =>
+            StarShape.sequence(groupPos.map { case (_, i) => entryOf(row(i)) })))
+          for {
+            aggs <- newAggExprs
+            rows <- groupRows
+            target <- tileTarget(mv, conjs, sig)
+          } yield {
+            val passSeq = passed.toSeq
+            val newOutput = passSeq.map(_._2) ++ groupPos.map(_._1)
+            val newProjections = rows.map(groupEntries =>
+              passSeq.map { case (n, _) => mv.targetOut(n): Expression } ++
+                groupEntries)
+            Aggregate(groupings, aggs,
+              logical.Expand(newProjections, newOutput, target), None)
+          }
+        }
       }
     }
 
@@ -2150,21 +2032,37 @@ object MaterializedViews {
       else None
     }
 
+    /** The one tile target every path substitutes: the tile under the
+      * compensating filters when the query's predicate implies the
+      * tile's, else union compensation — over the tile's own source for
+      * an exact-signature tile (unionTarget), over the query's FACT-side
+      * relation for an FK-covered one (fkUnionTarget). */
+    private def tileTarget(mv: MvDef, conjs: Seq[Expression],
+        sig: Signature): Option[LogicalPlan] =
+      compensation(mv, conjs, sig).map(targetWithFilters(mv, _))
+        .orElse(if (mv.signature == sig) unionTarget(mv, conjs, sig)
+          else fkUnionTarget(mv, conjs, sig))
+
     /** The compensated substitution target: key-only filters commute
       * with the rollup and re-apply on the MV, with references rebound
-      * to its attributes. A filter Catalyst pushed below the loader's
-      * type-normalization Project references the pre-cast type
-      * (TIMESTAMP_NTZ) — cast the rebound attribute back so the
-      * comparison stays resolved. */
+      * to its attributes. */
     private def targetWithFilters(mv: MvDef, filters: Seq[Expression]): LogicalPlan =
       filters.foldLeft(mv.target) { (t, cond) =>
-        logical.Filter(cond.transform {
-          case a: AttributeReference if mv.keys.contains(a.name) =>
-            val out = mv.targetOut(a.name)
-            if (out.dataType == a.dataType) out
-            else Cast(out, a.dataType, Some(conf.sessionLocalTimeZone))
-        }, t)
+        logical.Filter(rebindToTile(mv, cond)(a => mv.keys.contains(a.name)), t)
       }
+
+    /** `e` with every attribute `rebinds` admits re-pointed, by name, at
+      * the tile's output column. An expression Catalyst pushed or
+      * inlined from below the loader's type-normalization Project
+      * references the pre-cast type (TIMESTAMP_NTZ) — cast the tile
+      * column back so the expression stays resolved. */
+    private def rebindToTile(mv: MvDef, e: Expression)(
+        rebinds: AttributeReference => Boolean): Expression = e.transform {
+      case a: AttributeReference if rebinds(a) =>
+        val out = mv.targetOut(a.name)
+        if (out.dataType == a.dataType) out
+        else Cast(out, a.dataType, Some(conf.sessionLocalTimeZone))
+    }
 
     /** Range negation for the union-compensation residual. */
     private def negate(e: Expression): Option[Expression] = e match {
@@ -2301,21 +2199,58 @@ object MaterializedViews {
         }
       }
 
+    /** One aggregate OUTPUT rolled up over the tile's carried columns,
+      * keeping its name and exprId: a plain aggregate, a Cast the
+      * optimizer collapsed around one (it commutes with the rollup, so
+      * it re-applies around the rolled-up expression), or
+      * COUNT(DISTINCT k). The tile carries every distinct key
+      * combination as a row, so a distinct count over a GROUPING-KEY
+      * column re-aggregates exactly over the key column (duplicated
+      * (g, k) rows from a union-compensated target dedup away); DISTINCT
+      * over a dim column is multiplicity-insensitive too. None for any
+      * other shape. Both rollupExprs and expandRewrite map their
+      * aggregates through here, each after its own pass-through cases;
+      * `tout` and `dimOut` are as in rollupAgg. */
+    private def rollupOutput(mv: MvDef, tout: String => Expression,
+        dimOut: AttributeSet)(ne: NamedExpression): Option[NamedExpression] = {
+      def named(al: Alias)(e: Expression): NamedExpression =
+        Alias(e, al.name)(exprId = al.exprId)
+      ne match {
+        case al @ Alias(ae: AggregateExpression, _)
+            if !ae.isDistinct && ae.filter.isEmpty =>
+          rollupAgg(mv, tout, dimOut)(ae.aggregateFunction).map(named(al))
+        case al @ Alias(c @ Cast(ae: AggregateExpression, _, _, _), _)
+            if !ae.isDistinct && ae.filter.isEmpty =>
+          rollupAgg(mv, tout, dimOut)(ae.aggregateFunction)
+            .map(e => named(al)(c.copy(child = e)))
+        case al @ Alias(ae: AggregateExpression, _)
+            if ae.isDistinct && ae.filter.isEmpty =>
+          (ae.aggregateFunction match {
+            case Count(Seq(a: AttributeReference)) if dimOut.contains(a) =>
+              Some(Count(a).toAggregateExpression(isDistinct = true))
+            case Count(Seq(a: AttributeReference)) if mv.keys.contains(a.name) =>
+              Some(Count(tout(a.name)).toAggregateExpression(isDistinct = true))
+            case _ => None
+          }).map(named(al))
+        case _ => None
+      }
+    }
+
     /** Rewrite ONE aggregate function into its partial-merge form over
-      * the MV's carried columns, or None when the MV cannot answer it.
+      * the MV's carried columns, or None when the MV cannot answer it
+      * (rollupOutput's per-function step).
       * `tout` resolves a target-output column NAME (a partial like
       * `__mv_sum_x`, or a grouping key) to the expression that carries
-      * it in the rewritten plan — the exact/join paths pass
-      * `mv.targetOut` (the cached relation's own attributes); the
-      * grouping-sets path passes a lookup that routes the same columns
-      * THROUGH the Expand node. `dimOut` is the compensated dimensions'
-      * output (join path only): dim-column aggregates re-weight by the
-      * carried group count — the aggregate-join-transpose identity.
-      * Decimal dim columns are left blocked (the weighted product would
-      * re-type the result). */
+      * it in the rewritten plan — rollupExprs (the exact, FK and join
+      * paths) passes `mv.targetOut` (the cached relation's own
+      * attributes); expandRewrite passes a lookup that routes the same
+      * columns THROUGH the Expand node. `dimOut` is the compensated
+      * dimensions' output (join path only): dim-column aggregates
+      * re-weight by the carried group count — the aggregate-join-
+      * transpose identity. Decimal dim columns are left blocked (the
+      * weighted product would re-type the result). */
     private def rollupAgg(mv: MvDef, tout: String => Expression,
-        dimOut: org.apache.spark.sql.catalyst.expressions.AttributeSet)
-        (fn: AggregateFunction): Option[Expression] = {
+        dimOut: AttributeSet)(fn: AggregateFunction): Option[Expression] = {
       def cntAttr: Expression = tout("__mv_cnt")
       def weighted(a: AttributeReference): Option[Expression] = a.dataType match {
         case org.apache.spark.sql.types.DoubleType | org.apache.spark.sql.types.FloatType =>
@@ -2443,9 +2378,7 @@ object MaterializedViews {
       * a dim column that merely shares an MV key's name never rebinds to
       * the wrong side. */
     private def rollupExprs(mv: MvDef, groupings: Seq[Expression],
-        aggExprs: Seq[NamedExpression],
-        dimOut: org.apache.spark.sql.catalyst.expressions.AttributeSet =
-          org.apache.spark.sql.catalyst.expressions.AttributeSet.empty)
+        aggExprs: Seq[NamedExpression], dimOut: AttributeSet = AttributeSet.empty)
         : Option[(Seq[Expression], Seq[NamedExpression])] = {
       // a deterministic expression whose every reference is an MV
       // grouping key (or a compensated-dim column) commutes with the
@@ -2454,71 +2387,31 @@ object MaterializedViews {
       // merge computes (the lattice time-hierarchy rollup:
       // GROUP BY year(d) answered from a day-keyed tile)
       def keyDerived(e: Expression): Boolean =
-        e.deterministic && e.references.nonEmpty &&
-          !e.exists(_.isInstanceOf[AggregateExpression]) &&
-          e.references.forall(a =>
-            dimOut.contains(a) || mv.keys.contains(a.name))
-      def rebindKeys(e: Expression): Expression = e.transform {
-        case a: AttributeReference if !dimOut.contains(a) &&
-            mv.keys.contains(a.name) =>
-          val out = mv.targetOut(a.name)
-          // a grouping expression inlined from below the loader's
-          // normalization Project references the pre-cast type — close
-          // the gap like targetWithFilters does
-          if (out.dataType == a.dataType) out
-          else Cast(out, a.dataType, Some(conf.sessionLocalTimeZone))
-      }
-      // grouping keys must be bare attributes covered by the MV keys,
-      // attributes of the compensated dimension (kept as-is), or
-      // key-derived expressions (rebound)
-      val newGroupings = groupings.map {
-        case a: AttributeReference if dimOut.contains(a) => Some(a)
-        case a: AttributeReference if mv.keys.contains(a.name) =>
-          Some(mv.targetOut(a.name))
-        case e if keyDerived(e) => Some(rebindKeys(e))
-        case _ => None
-      }
-      if (newGroupings.exists(_.isEmpty)) return None
-
-      val rollup = rollupAgg(mv, mv.targetOut, dimOut) _
-
-      val newAggExprs = aggExprs.map {
-        case a: AttributeReference if dimOut.contains(a) => Some(a)
-        case a: AttributeReference if mv.keys.contains(a.name) =>
-          Some(Alias(mv.targetOut(a.name), a.name)(exprId = a.exprId))
-        // grouping-expression pass-through (the SELECT-list copy of a
-        // key-derived grouping like year(d)): rebind its key references
-        case al @ Alias(e, nm) if keyDerived(e) =>
-          Some(Alias(rebindKeys(e), nm)(exprId = al.exprId))
-        case al @ Alias(ae: AggregateExpression, nm)
-            if !ae.isDistinct && ae.filter.isEmpty =>
-          rollup(ae.aggregateFunction).map(e => Alias(e, nm)(exprId = al.exprId))
-        // a Cast the optimizer collapsed into the aggregate list (e.g.
-        // `sum(x) ... .cast("double")` projected away) commutes with the
-        // rollup: re-apply it around the rolled-up expression
-        case al @ Alias(c @ Cast(ae: AggregateExpression, _, _, _), nm)
-            if !ae.isDistinct && ae.filter.isEmpty =>
-          rollup(ae.aggregateFunction).map(e =>
-            Alias(c.copy(child = e), nm)(exprId = al.exprId))
-        // COUNT(DISTINCT k) over a GROUPING-KEY column: the MV carries
-        // every distinct key combination as a row, so the distinct
-        // count re-aggregates exactly over the key column (duplicated
-        // (g, k) rows from a union-compensated target dedup away).
-        // DISTINCT over a dim column is multiplicity-insensitive too.
-        case al @ Alias(ae: AggregateExpression, nm)
-            if ae.isDistinct && ae.filter.isEmpty =>
-          (ae.aggregateFunction match {
-            case Count(Seq(a: AttributeReference)) if dimOut.contains(a) =>
-              Some(Count(a).toAggregateExpression(isDistinct = true))
-            case Count(Seq(a: AttributeReference)) if mv.keys.contains(a.name) =>
-              Some(Count(mv.targetOut(a.name)).toAggregateExpression(isDistinct = true))
-            case _ => None
-          }).map(e => Alias(e, nm)(exprId = al.exprId))
-        case _ => None
-      }
-      if (newAggExprs.exists(_.isEmpty)) return None
-
-      Some((newGroupings.map(_.get), newAggExprs.map(_.get)))
+        derivedFrom(e)(a => dimOut.contains(a) || mv.keys.contains(a.name))
+      def rebindKeys(e: Expression): Expression =
+        rebindToTile(mv, e)(a => !dimOut.contains(a) && mv.keys.contains(a.name))
+      for {
+        // grouping keys must be bare attributes covered by the MV keys,
+        // attributes of the compensated dimension (kept as-is), or
+        // key-derived expressions (rebound)
+        g <- StarShape.sequence(groupings.map {
+          case a: AttributeReference if dimOut.contains(a) => Some(a)
+          case a: AttributeReference if mv.keys.contains(a.name) =>
+            Some(mv.targetOut(a.name))
+          case e if keyDerived(e) => Some(rebindKeys(e))
+          case _ => None
+        })
+        a <- StarShape.sequence(aggExprs.map {
+          case a: AttributeReference if dimOut.contains(a) => Some(a)
+          case a: AttributeReference if mv.keys.contains(a.name) =>
+            Some(Alias(mv.targetOut(a.name), a.name)(exprId = a.exprId))
+          // grouping-expression pass-through (the SELECT-list copy of a
+          // key-derived grouping like year(d)): rebind its key references
+          case al @ Alias(e, nm) if keyDerived(e) =>
+            Some(Alias(rebindKeys(e), nm)(exprId = al.exprId))
+          case other => rollupOutput(mv, mv.targetOut, dimOut)(other)
+        })
+      } yield (g, a)
     }
   }
 }

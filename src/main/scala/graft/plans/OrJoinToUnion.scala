@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Coalesce, EqualTo, Expression, Literal, Not, Or}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Coalesce, EqualTo, Expression, Literal, Not, Or, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -32,7 +32,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * already hash-joins on it and the OR is a cheap post-filter); an
   * inner disjunct that is itself an OR expands recursively at the
   * fixed point. */
-object OrJoinToUnion extends Rule[LogicalPlan] {
+object OrJoinToUnion extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case j @ Join(left, right, Inner, Some(Or(c1, c2)), hint)
@@ -48,16 +48,11 @@ object OrJoinToUnion extends Rule[LogicalPlan] {
   /** Does the (possibly conjunctive) disjunct contain at least one
     * attr=attr pair across the join — the conjunct that makes the
     * branch hashable? */
-  private def hasEquiPair(c: Expression, j: Join): Boolean = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case o => Seq(o)
-    }
-    conjuncts(c).exists {
+  private def hasEquiPair(c: Expression, j: Join): Boolean =
+    splitConjunctivePredicates(c).exists {
       case EqualTo(a: AttributeReference, b: AttributeReference) =>
         (j.left.outputSet.contains(a) && j.right.outputSet.contains(b)) ||
           (j.left.outputSet.contains(b) && j.right.outputSet.contains(a))
       case _ => false
     }
-  }
 }

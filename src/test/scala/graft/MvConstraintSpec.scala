@@ -128,6 +128,42 @@ class MvConstraintSpec extends SparkSpec {
     } finally { MaterializedViews.clear(); Constraints.clear() }
   }
 
+  test("tile choice: GROUP BY prefers the exact-signature tile, ROLLUP the cheapest") {
+    // both tiles can answer a fact-only rollup by status: the fact tile
+    // on (status, priority) by its own signature, the smaller star tile
+    // on (status) through the declared FK
+    val orders = T(spark, sfDir, "orders")
+      .withColumn("o_totalprice", col("o_totalprice").cast("decimal(12,2)"))
+    MaterializedViews.register(spark, "choice_fact", orders,
+      keys = Seq("o_orderstatus", "o_orderpriority"), sums = Seq("o_totalprice"))
+    MaterializedViews.register(spark, "choice_star", star,
+      keys = Seq("o_orderstatus"), sums = Seq("o_totalprice"))
+    try {
+      Constraints.declareForeignKey(spark, factPath, "o_custkey", dimPath, "c_custkey")
+      def byStatus = orders.groupBy("o_orderstatus")
+        .agg(sum("o_totalprice").as("t"), count(lit(1)).as("n"))
+        .orderBy("o_orderstatus")
+      def rollupStatus = orders.rollup(col("o_orderstatus"))
+        .agg(sum("o_totalprice").as("t"), count(lit(1)).as("n"), grouping_id().as("gid"))
+        .orderBy("gid", "o_orderstatus")
+      // the fact tile is the only one carrying o_orderpriority
+      def readsFactTile(q: org.apache.spark.sql.DataFrame) =
+        q.queryExecution.optimizedPlan.collect {
+          case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r.output
+        }.flatten.exists(_.name == "o_orderpriority")
+      def rows(q: org.apache.spark.sql.DataFrame) = q.collect().map(_.toSeq).toSeq
+      assert(hasTile(byStatus) && readsFactTile(byStatus),
+        s"GROUP BY must read the exact-signature tile first:\n${byStatus.queryExecution.optimizedPlan}")
+      assert(hasTile(rollupStatus) && !readsFactTile(rollupStatus),
+        s"ROLLUP must read the smaller FK tile:\n${rollupStatus.queryExecution.optimizedPlan}")
+      val got = (rows(byStatus), rows(rollupStatus))
+      MaterializedViews.clear()
+      assert(!hasTile(byStatus) && !hasTile(rollupStatus))
+      assert((rows(byStatus), rows(rollupStatus)) == got,
+        "both tile answers must equal the unrewritten recompute")
+    } finally { MaterializedViews.clear(); Constraints.clear() }
+  }
+
   // ---- FK union compensation (r14) --------------------------------------
 
   test("a wider fact-side range unions the star tile with a FACT-ONLY residual slice") {

@@ -1,16 +1,18 @@
 #!/usr/bin/env bash
 # Pre-commit gate: no snapshot ships without one session builder and
 # one optimizer-rule install point in src/main, a green compile, the
-# spine parity spec's rule-list checks, and a five-query oracle smoke.
+# spine parity spec's rule-list checks, and a ten-query oracle smoke.
 # Round 8 zeroed its artifacts by committing a non-compiling tree — this
 # script makes that impossible to repeat.
 #
 # Usage: tools/precommit.sh [query,names]
-#   (default smoke: q01,d36,ds10, the q150 join tile and the q159 FK tile)
+#   (default smoke: q01,d36,ds10 and the tile-matching branches: the q150
+#   join tile, q159 FK tile, q149 union residual, q151 join compensation,
+#   q154 grouping sets, q160 FK residual and q164 FK join elimination)
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-SMOKE="${1:-q01_pricing_summary,d36_temperature_mix,ds10_band_panel,q150_mv_join_rollup,q159_mv_fk_tile}"
+SMOKE="${1:-q01_pricing_summary,d36_temperature_mix,ds10_band_panel,q150_mv_join_rollup,q159_mv_fk_tile,q149_mv_union_rollup,q151_mv_snowflake_rollup,q154_mv_grouping_sets,q160_mv_fk_union,q164_fk_join_elim}"
 SF="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.01}"
 OUT=/tmp/precommit_verify
 
