@@ -19,14 +19,11 @@ object ExplainDump {
     * downgrades and coalesced reads only appear post-execution. Built
     * twice: queries with register-once MV/constraint side effects
     * (q148/q150/q159/q160/...) show their HIT plan only on the second
-    * build — the plan the timed bench runs actually execute. The MV,
-    * constraint and statistics registries are JVM-global, so they are
-    * cleared first: each path is described alone, never answered by a
-    * tile or constraint an earlier path left behind. */
+    * build — the plan the timed bench runs actually execute. The
+    * JVM-global registries are cleared first, so each path is described
+    * alone. */
   def executed(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    graft.plans.MaterializedViews.clear()
-    graft.catalog.Constraints.clear()
-    graft.catalog.Statistics.clear()
+    GraftSession.clearRegistries()
     SparkEntry.queries(name)(spark, sfDir)
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.queryExecution.toRdd.foreach(_ => ())

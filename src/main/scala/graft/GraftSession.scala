@@ -51,6 +51,15 @@ object GraftSession {
     }
   }
 
+  /** Empty the JVM-global MV, constraint and statistics registries, so
+    * the next path a main builds plans alone: never answered by a tile,
+    * or rewritten by a constraint, that an earlier path left behind. */
+  def clearRegistries(): Unit = {
+    MaterializedViews.clear()
+    graft.catalog.Constraints.clear()
+    graft.catalog.Statistics.clear()
+  }
+
   /** The local session of the mains and specs: `SPARK_GRAFT_CPUS` cores
     * (default: every available processor), as many shuffle partitions,
     * UTC, no UI, ERROR logging, and the graft rules and functions

@@ -13,6 +13,8 @@ object Verify {
     val spark = GraftSession.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(e => keep(e._1)).foreach { case (name, fn) =>
+      // each path is checked through the plan it has alone
+      GraftSession.clearRegistries()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -141,6 +141,10 @@ object MaterializedViews {
     // double
     val srcTypes: Map[String, org.apache.spark.sql.types.DataType] =
       baseDf.queryExecution.analyzed.output.map(a => a.name -> a.dataType).toMap
+    // the file scans of the defining source: the leaves' relations
+    def fileRelations: Seq[HadoopFsRelation] =
+      baseDf.queryExecution.analyzed.collect { case lr: LogicalRelation => lr.relation }
+        .collect { case fs: HadoopFsRelation => fs }
   }
 
   private val registry = new ConcurrentHashMap[String, MvDef]()
@@ -344,30 +348,9 @@ object MaterializedViews {
     * installed; unpersists the MV generations it replaces. */
   private def store(spark: SparkSession, d: MvDef,
       replacedAll: Seq[DataFrame]): DataFrame = {
-    // cut the tile's lineage to its file sources BEFORE caching: a later
-    // DataFrameWriter append to any source path recaches (Spark's
-    // InsertIntoHadoopFsRelationCommand → refreshByPath) every cache
-    // entry reading it — a cached tile whose plan still reads the files
-    // would silently REBUILD from the post-append live listing, and
-    // every algebraic fold on top would then double-count the delta
-    // (caught by DmlLatticeSpec's queued-folds case). A checkpointed
-    // plan is a LogicalRDD leaf: the recache has no file lineage to
-    // rebuild through, so the stored partials are immutable by
-    // construction — matching the reference's stored-materialization
-    // model (materialize/MaterializationService.java), where a
-    // materialization is a TABLE, not a live view of its sources.
-    // DISK_ONLY checkpoint blocks: the in-memory copy of the partials
-    // is the InMemoryRelation cache built right below — holding the
-    // checkpoint RDD in memory too would keep every tile resident TWICE
-    // (ADVICE r14); the disk blocks exist only to rebuild evicted cache
-    // partitions and to cut lineage
-    val snapped = d.mvDf.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    snapped.persist()
-    // count() materializes the cache now and gives the tile's cost key;
-    // the record's target is then the cache-resolved plan, the
-    // InMemoryRelation leaf spliced into queries
-    registry.put(d.name, d.copy(mvDf = snapped, rowCount = snapped.count()))
+    // the row count is the tile's cost key
+    val (snapped, rows) = materialize(d.mvDf)
+    registry.put(d.name, d.copy(mvDf = snapped, rowCount = rows))
     // every store caches a fresh checkpoint, so the replaced generations
     // can always unpersist (the sameResult guard is kept for the
     // degenerate case of the same frame instance being re-stored)
@@ -377,6 +360,26 @@ object MaterializedViews {
 
     graft.GraftSession.install(spark)
     snapped
+  }
+
+  /** Store a generation of partials as a table: lineage cut, cached
+    * and counted by ONE job that has finished when this returns. The
+    * cut comes BEFORE caching: a later append to a source path recaches
+    * (refreshByPath) every cache entry reading it, so a tile whose plan
+    * still read the files would rebuild from the post-append listing and
+    * the next fold would double-count the delta (DmlLatticeSpec's
+    * queued-folds case). A checkpointed plan is a LogicalRDD leaf with
+    * no file lineage: a stored table, as in the reference's
+    * materialize/MaterializationService.java. The lazy checkpoint runs
+    * only the plan's shuffle-map stages here; the count over the
+    * cache-resolved plan writes its blocks and builds the columnar cache
+    * in one pass. DISK_ONLY blocks keep each tile resident once (ADVICE
+    * r14): they only cut lineage and rebuild evicted cache partitions. */
+  private def materialize(df: DataFrame): (DataFrame, Long) = {
+    val snapped = df.localCheckpoint(false,
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    snapped.persist()
+    (snapped, snapped.queryExecution.toRdd.count())
   }
 
   /** Serializes registry read-modify-write sections (refresh, append,
@@ -469,13 +472,7 @@ object MaterializedViews {
       val deltaAgg = deltaPartials(spark, d, delta)
       if (d.gens.size + 2 > compactEvery) compactInto(spark, d, Some(deltaAgg), deltaInFiles)
       else {
-        // generations get the same lineage cut as store(): a cached
-        // partial whose plan still reads source files would be rebuilt
-        // from the live listing by a later write's recache
-        val gen = deltaAgg.localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        gen.persist()
-        gen.count() // materialize the generation now
+        val (gen, _) = materialize(deltaAgg)
         // durable write-through: the on-disk copy tracks every batch,
         // not just compactions — a crash loses nothing (the gen merges
         // back at adopt time exactly as the cached generation would).
@@ -717,13 +714,7 @@ object MaterializedViews {
     var deferredAny = false
     val outcomes = touchedBy(spark, path).map { d =>
       try {
-        d.baseDf.queryExecution.analyzed.foreach {
-          case lr: LogicalRelation => lr.relation match {
-            case fs: HadoopFsRelation => fs.location.refresh()
-            case _ => ()
-          }
-          case _ => ()
-        }
+        d.fileRelations.foreach(_.location.refresh())
         // the append is committed and the barrier holds the lock: the
         // listing NOW is exactly what this fold's delta reflects
         deferredAny |= foldAppend(spark, d, path, rows,
@@ -749,11 +740,13 @@ object MaterializedViews {
 
   /** Fold `rows`, appended under `path`, into tile `d`: the one append
     * fold of the DML barrier and the adopt catch-up. A single-leaf tile
-    * compacts the delta in now. A JOIN tile's fold (a fact pass for a
-    * dim append) runs on the maintenance thread instead (the r13 scale
-    * flag): the star delta PLAN is built here — schema work only, so an
-    * ambiguous recipe still throws to the caller — and the tile stays
-    * pending, skipped by the rewrite, until the fold lands. Its durable
+    * compacts the delta in now: one job (materialize) after AQE's
+    * shuffle-map jobs. A JOIN tile's fold (a fact pass for a dim append)
+    * runs on the maintenance thread instead (the r13 scale flag): the
+    * star delta PLAN is built here from a file listing and the leaves'
+    * registered schemas, with no Spark job, so an ambiguous recipe still
+    * throws to the caller — and the tile stays pending, skipped by the
+    * rewrite, until the fold lands. Its durable
     * copy is then written with `entries`, the listing the delta
     * reflects (by execution time a later queued append may already be
     * live). Throws when no fold can be built; returns whether the fold
@@ -777,9 +770,14 @@ object MaterializedViews {
   /** Execute one deferred fold at its enqueue-time epoch; a bumped epoch
     * (re-register/drop/release since the barrier) skips — the delta no
     * longer applies to what the registry holds. Failures drop the tile,
-    * the barrier's no-stale guarantee. */
+    * the barrier's no-stale guarantee. The fold's jobs carry only its
+    * own description: the maintenance thread inherits the local
+    * properties of the DML caller that started it, whose
+    * cancelJobGroup must not cancel (so drop) every later fold. */
   private def runDeferredFold(spark: SparkSession, name: String, epoch: Long,
       deltaAgg: DataFrame, snapshotEntries: Option[Seq[String]]): Unit = {
+    org.apache.spark.sql.GraftSqlBridge.clearLocalProperties(spark.sparkContext)
+    spark.sparkContext.setJobDescription(s"graft MV fold $name")
     foldTaskHook()
     maintLock.synchronized {
       try {
@@ -799,12 +797,14 @@ object MaterializedViews {
 
   /** The star's delta for a one-sided append: the appended rows stand in
     * for their leaf, and every OTHER leaf reads an explicit file list
-    * captured NOW (metadata-only; the snapshot that keeps queued folds
-    * exact). Exact because inner joins distribute over union on either
-    * input.
+    * captured NOW (the snapshot that keeps queued folds exact) with the
+    * schema of its relation in the defining source, so building the
+    * delta runs no Spark job. Exact because inner joins distribute over
+    * union on either input.
     * Throws when the appended path does not identify exactly one leaf
-    * (self-join ambiguity), or another leaf lists no data files or
-    * cannot be listed (the caller drops the tile). */
+    * (self-join ambiguity), or another leaf has no relation in the
+    * source, lists no data files or cannot be listed (the caller drops
+    * the tile). */
   private def starDeltaSnapshot(spark: SparkSession, d: MvDef, path: String,
       rows: DataFrame): DataFrame = {
     val touches = touchesPath(spark, path)
@@ -812,9 +812,16 @@ object MaterializedViews {
       .collect { case (l, i) if l.exists(touches) => i }
     require(hits.size == 1,
       s"append touches ${hits.size} leaves of MV ${d.name}; delta needs exactly one")
+    // each leaf's schema, keyed by the root paths StarShape derives the
+    // leaf from: a bare read of the pinned files would infer it from
+    // their footers in a job
+    val schemas = d.fileRelations
+      .map(fs => fs.location.rootPaths.map(_.toString).toSet -> fs.schema).toMap
     val frames = d.signature.leaves.zipWithIndex.map { case (l, i) =>
       if (i == hits.head) rows
       else {
+        val schema = schemas.getOrElse(l, throw new IllegalArgumentException(
+          s"a leaf of MV ${d.name} has no file relation in its source"))
         val groups = listLeafFiles(spark, l)
         require(groups.nonEmpty, s"a leaf of MV ${d.name} lists no data files")
         // one pinned frame per (files, basePath) group, unioned by
@@ -823,7 +830,7 @@ object MaterializedViews {
         // directory-encoded columns re-derive per root exactly as the
         // original joint read resolved them relative to each root
         groups.map { case (files, basePath) =>
-          val reader = basePath.foldLeft(spark.read)(
+          val reader = basePath.foldLeft(spark.read.schema(schema))(
             (r, bp) => r.option("basePath", bp))
           graft.T.normalizeTimestamps(reader.parquet(files: _*))
         }.reduce(_ unionByName _)

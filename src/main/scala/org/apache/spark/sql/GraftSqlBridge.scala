@@ -22,4 +22,9 @@ object GraftSqlBridge {
 
   def logicalPlan(df: DataFrame): catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].logicalPlan
+
+  /** Drop every Spark local property of the calling thread
+    * (SparkContext.setLocalProperties is private[spark]). */
+  def clearLocalProperties(sc: org.apache.spark.SparkContext): Unit =
+    sc.setLocalProperties(new java.util.Properties)
 }

@@ -2,7 +2,9 @@ package graft
 
 import graft.catalog.Lattice
 import graft.plans.{MaterializedViews, TableDml}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageKinds}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** TableModify DML (update/delete/merge copy-on-write) and the lattice
   * tile recommender feeding MV substitution.
@@ -231,6 +233,77 @@ class DmlLatticeSpec extends SparkSpec {
     } finally MaterializedViews.clear()
   }
 
+  // ---- jobs a fold runs ------------------------------------------------
+
+  private def prop(e: SparkListenerJobStart, key: String): String =
+    Option(e.properties).map(_.getProperty(key)).orNull
+
+  /** Every job started while `body` runs (and any the listener bus had
+    * queued before it), delivered: a marked job run after `body` is
+    * awaited, and the bus delivers job starts in order. */
+  private def jobStarts(body: => Unit): Seq[SparkListenerJobStart] = {
+    val sc = spark.sparkContext
+    val marker = s"job-starts-marker-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val delivered = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (prop(e, "spark.job.description") == marker) delivered.countDown()
+        else seen.add(e): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      val desc = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(desc)
+      assert(delivered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus never delivered the marker job")
+    } finally sc.removeSparkListener(listener)
+    seen.asScala.toSeq
+  }
+
+  /** The jobs of `body` run on this thread, under a job group of its own. */
+  private def callerJobs(body: => Unit): Seq[SparkListenerJobStart] = {
+    val group = s"caller-${java.util.UUID.randomUUID}"
+    spark.sparkContext.setJobGroup(group, "a DML caller")
+    try jobStarts(body).filter(prop(_, "spark.jobGroup.id") == group)
+    finally spark.sparkContext.clearJobGroup()
+  }
+
+  private def stageNames(jobs: Seq[SparkListenerJobStart]): String =
+    jobs.map(_.stageInfos.map(_.name).mkString("[", ", ", "]")).mkString("; ")
+
+  test("one materialization per fold: a single-leaf fold checkpoints and caches in one job") {
+    val t = freshTable()
+    try {
+      MaterializedViews.register(spark, "one_pass", spark.read.parquet(t),
+        keys = Seq("tag"), sums = Seq("amt"))
+      val jobs = callerJobs(TableDml.insertInto(spark, t,
+        Seq((4L, "a", 40.0), (5L, "d", 50.0)).toDF("id", "tag", "amt")))
+      // the fold runs on this thread; apart from AQE's shuffle-map jobs
+      // it is one job, which writes the checkpoint blocks and builds the
+      // columnar cache together
+      val foldJobs = jobs.filter(StageKinds.resultJob)
+        .filter(_.stageInfos.exists(_.name.contains("MaterializedViews.scala")))
+      assert(foldJobs.size == 1, s"fold result jobs: ${stageNames(foldJobs)}")
+      val q = spark.read.parquet(t).groupBy("tag").agg(sum("amt").as("s"))
+      val tiles = q.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }
+      assert(tiles.size == 1, s"the rollup must ride the tile:\n${q.queryExecution.optimizedPlan}")
+      assert(tiles.head.cacheBuilder.isCachedColumnBuffersLoaded,
+        "the stored generation's cache is built before the insert returns")
+      val rdds = tiles.head.cacheBuilder.cachedPlan.collect {
+        case r: org.apache.spark.sql.execution.RDDScanExec => r.rdd
+      }
+      assert(rdds.nonEmpty && rdds.forall(_.isCheckpointed),
+        s"the cached plan reads a checkpointed RDD:\n${tiles.head.cacheBuilder.cachedPlan}")
+      assert(q.orderBy("tag").collect().map(r => (r.getString(0), r.getDouble(1))).toSeq ==
+        Seq(("a", 50.0), ("b", 20.0), ("c", 30.0), ("d", 50.0)))
+    } finally MaterializedViews.clear()
+  }
+
   // ---- deferred join-tile append folds (r14) ----------------------------
 
   private def noScan(q: org.apache.spark.sql.DataFrame): Boolean = {
@@ -290,6 +363,75 @@ class DmlLatticeSpec extends SparkSpec {
       MaterializedViews.foldTaskHook = () => ()
       MaterializedViews.clear()
     }
+  }
+
+  test("no DML-thread job for the other leaves' schema: a join-tile append runs only its write") {
+    val fact = java.nio.file.Files.createTempDirectory("dmls").toString + "/f"
+    val dim = java.nio.file.Files.createTempDirectory("dmls").toString + "/d"
+    Seq((1L, 10, 5.0), (2L, 20, 7.0)).toDF("id", "k", "v").write.parquet(fact)
+    Seq((10, "x"), (20, "y")).toDF("dk", "name").write.parquet(dim)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val star = spark.read.parquet(fact)
+        .join(spark.read.parquet(dim), col("k") === col("dk"))
+      MaterializedViews.register(spark, "defer_s", star,
+        keys = Seq("name"), sums = Seq("v"))
+      MaterializedViews.foldTaskHook = () => {
+        MaterializedViews.foldTaskHook = () => ()
+        gate.await()
+      }
+      // the star delta pins the dim's files with the dim relation's own
+      // schema: building it infers nothing from parquet footers
+      val jobs = callerJobs(TableDml.insertInto(spark, fact,
+        Seq((3L, 10, 11.0)).toDF("id", "k", "v")))
+      assert(MaterializedViews.pendingMaintenance("defer_s") == 1)
+      assert(jobs.size == 1 && jobs.head.stageInfos.exists(_.name.contains("TableDml.scala")),
+        s"the DML thread must run only the write: ${stageNames(jobs)}")
+      gate.countDown()
+      MaterializedViews.awaitMaintenance()
+      val q = spark.read.parquet(fact)
+        .join(spark.read.parquet(dim), col("k") === col("dk"))
+        .groupBy("name").agg(sum("v").as("t")).orderBy("name")
+      assert(noScan(q), s"tile must serve:\n${q.queryExecution.optimizedPlan}")
+      assert(q.collect().map(r => (r.getString(0), r.getDouble(1))).toSeq ==
+        Seq(("x", 16.0), ("y", 7.0)))
+    } finally {
+      gate.countDown()
+      MaterializedViews.foldTaskHook = () => ()
+      MaterializedViews.clear()
+    }
+  }
+
+  test("deferred fold jobs run under their own description, never the DML caller's job group") {
+    val fact = java.nio.file.Files.createTempDirectory("dmlg").toString + "/f"
+    val dim = java.nio.file.Files.createTempDirectory("dmlg").toString + "/d"
+    Seq((1L, 10, 5.0), (2L, 20, 7.0)).toDF("id", "k", "v").write.parquet(fact)
+    Seq((10, "x"), (20, "y")).toDF("dk", "name").write.parquet(dim)
+    val group = s"caller-${java.util.UUID.randomUUID}"
+    try {
+      val star = spark.read.parquet(fact)
+        .join(spark.read.parquet(dim), col("k") === col("dk"))
+      MaterializedViews.register(spark, "defer_g", star,
+        keys = Seq("name"), sums = Seq("v"))
+      // the caller's job group is set while the fold is queued, so the
+      // maintenance thread starting now would inherit it
+      val jobs = jobStarts {
+        spark.sparkContext.setJobGroup(group, "a DML caller")
+        try {
+          TableDml.insertInto(spark, dim, Seq((30, "z")).toDF("dk", "name"))
+          MaterializedViews.awaitMaintenance()
+        } finally spark.sparkContext.clearJobGroup()
+      }
+      val foldJobs = jobs.filter(prop(_, "spark.job.description") == "graft MV fold defer_g")
+      assert(foldJobs.nonEmpty, s"no job carries the fold's description: ${stageNames(jobs)}")
+      assert(foldJobs.forall(j => prop(j, "spark.jobGroup.id") == null),
+        "a fold job carries a job group")
+      assert(jobs.filter(prop(_, "spark.jobGroup.id") == group)
+        .forall(_.stageInfos.exists(_.name.contains("TableDml.scala"))),
+        "only the caller's own write may carry its job group")
+      assert(MaterializedViews.isRegistered("defer_g") &&
+        MaterializedViews.pendingMaintenance("defer_g") == 0)
+    } finally MaterializedViews.clear()
   }
 
   test("queued folds on BOTH sides of a join tile stay exact: no double-counted cross delta") {

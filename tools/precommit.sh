@@ -1,7 +1,9 @@
 #!/usr/bin/env bash
 # Pre-commit gate: no snapshot ships without one session builder and
 # one optimizer-rule install point in src/main, a green compile, the
-# spine parity spec's rule-list checks, and a ten-query oracle smoke.
+# spine parity spec's rule-list checks, the tile-fold job checks (one
+# job stores a fold's generation; a join-tile append runs no job on
+# the DML thread beyond its write), and a ten-query oracle smoke.
 # Round 8 zeroed its artifacts by committing a non-compiling tree — this
 # script makes that impossible to repeat.
 #
@@ -34,6 +36,9 @@ sbt -batch compile Test/compile
 
 echo "[precommit] spine parity: rule list (a) and entry points (b)..."
 sbt -batch "testOnly graft.ExtensionsSpec -- -z (a) -z (b)"
+
+echo "[precommit] tile folds: one job per stored generation, no DML-thread schema job..."
+sbt -batch "testOnly graft.DmlLatticeSpec -- -z \"one materialization per fold\" -z \"no DML-thread job for the other leaves\""
 
 echo "[precommit] smoke verify: $SMOKE @ $SF"
 rm -rf "$OUT"
