@@ -31,20 +31,18 @@ object Advisor {
   private val fromKeywords = Seq("LATERAL", "TABLE", "VALUES", "UNNEST")
   private val exprKeywords = Seq("CASE", "CAST", "EXISTS", "NOT", "NULL", "INTERVAL")
 
-  private def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
-
   /** Completions for `sql` with the cursor at `cursor` (0-based offset;
     * the cursor may sit mid-word — the word's typed prefix filters). */
   def completionHints(spark: SparkSession, sql: String, cursor: Int): Seq[Hint] = {
     val cur = math.min(math.max(cursor, 0), sql.length)
     // the word under the cursor: its typed prefix + optional qualifier
     var ws = cur
-    while (ws > 0 && isWordChar(sql.charAt(ws - 1))) ws -= 1
+    while (ws > 0 && SqlText.isWordChar(sql.charAt(ws - 1))) ws -= 1
     val prefix = sql.substring(ws, cur)
     val qualifier =
       if (ws > 0 && sql.charAt(ws - 1) == '.') {
         var qs = ws - 1
-        while (qs > 0 && isWordChar(sql.charAt(qs - 1))) qs -= 1
+        while (qs > 0 && SqlText.isWordChar(sql.charAt(qs - 1))) qs -= 1
         Some(sql.substring(qs, ws - 1))
       } else None
 

@@ -38,16 +38,16 @@ object AsofSql {
     * COLUMNS from both sides — an expression operand (subscript,
     * function call, arithmetic) is rejected with the same message. */
   private def validateOn(sql0: String): Unit = {
-    val masked = GraftSql.maskLiterals(sql0.trim.stripSuffix(";"))
+    val masked = SqlText.mask(sql0.trim.stripSuffix(";"))
     val m = asofRe.findFirstMatchIn(masked).getOrElse(return)
-    val mcAt = GraftSql.topLevelIndex(masked, "MATCH_CONDITION", m.end)
+    val mcAt = SqlText.topLevelIndex(masked, "MATCH_CONDITION", m.end)
     if (mcAt < 0) return
-    val onAt = GraftSql.topLevelIndex(masked, "ON", mcAt)
+    val onAt = SqlText.topLevelIndex(masked, "ON", mcAt)
     if (onAt < 0) return
     val onEnd = Seq("WHERE", "GROUP BY", "ORDER BY", "HAVING", "LIMIT",
         "UNION", "INTERSECT", "EXCEPT", "JOIN", "LEFT", "RIGHT", "FULL",
         "INNER", "CROSS")
-      .map(k => GraftSql.topLevelIndex(masked, k, onAt + 2))
+      .map(k => SqlText.topLevelIndex(masked, k, onAt + 2))
       .filter(_ >= 0).minOption.getOrElse(masked.length)
     val on = masked.substring(onAt + 2, onEnd).trim
     val colEq = "(?is)^\\(?\\s*[\\w.`\"]+\\s*=\\s*[\\w.`\"]+\\s*\\)?$"
@@ -61,16 +61,16 @@ object AsofSql {
     * (reference-identical) when the statement is out of scope. */
   private def narrow(sql0: String): String = {
     val sql = sql0.trim.stripSuffix(";")
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val m = asofRe.findFirstMatchIn(masked).getOrElse(return sql0)
     val head = headRe.findFirstMatchIn(masked).getOrElse(return sql0)
     val isLeft = m.group(1) != null
 
     val left = sql.substring(head.end, m.start).trim
-    val mcAt = GraftSql.topLevelIndex(masked, "MATCH_CONDITION", m.end)
+    val mcAt = SqlText.topLevelIndex(masked, "MATCH_CONDITION", m.end)
     if (mcAt < 0) return sql0
     val right = sql.substring(m.end, mcAt).trim
-    val onAt = GraftSql.topLevelIndex(masked, "ON", mcAt)
+    val onAt = SqlText.topLevelIndex(masked, "ON", mcAt)
     if (onAt < 0) return sql0
     val cond = sql.substring(mcAt + "MATCH_CONDITION".length, onAt).trim
     val on = sql.substring(onAt + 2).trim
@@ -128,20 +128,20 @@ object AsofSql {
     * otherwise the statement passes through for a visible error. */
   private def lateral(sql0: String): String = {
     val sql = sql0.trim.stripSuffix(";")
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val m = asofRe.findFirstMatchIn(masked).getOrElse(return sql0)
     val isLeft = m.group(1) != null
-    val mcAt = GraftSql.topLevelIndex(masked, "MATCH_CONDITION", m.end)
+    val mcAt = SqlText.topLevelIndex(masked, "MATCH_CONDITION", m.end)
     if (mcAt < 0) return sql0
     val right = sql.substring(m.end, mcAt).trim
-    val onAt = GraftSql.topLevelIndex(masked, "ON", mcAt)
+    val onAt = SqlText.topLevelIndex(masked, "ON", mcAt)
     if (onAt < 0) return sql0
     // the ON expression runs to the next top-level clause keyword (or EOF);
     // a further chained join is out of scope for this fallback
     val onEnd = Seq("WHERE", "GROUP BY", "ORDER BY", "HAVING", "LIMIT",
         "UNION", "INTERSECT", "EXCEPT", "JOIN", "LEFT", "RIGHT", "FULL",
         "INNER", "CROSS")
-      .map(k => GraftSql.topLevelIndex(masked, k, onAt + 2))
+      .map(k => SqlText.topLevelIndex(masked, k, onAt + 2))
       .filter(_ >= 0).minOption.getOrElse(sql.length)
     val on = sql.substring(onAt + 2, onEnd).trim
     val cond = sql.substring(mcAt + "MATCH_CONDITION".length, onAt).trim

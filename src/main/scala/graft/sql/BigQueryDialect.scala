@@ -33,7 +33,7 @@ object BigQueryDialect {
   private[sql] def rewriteSafeCastIntervalLit(sql: String): String = {
     val re = ("(?is)\\bSAFE_CAST\\s*\\(\\s*(INTERVAL\\s+'([^']*)'\\s+(\\w+(?:\\s+TO\\s+\\w+)?)" +
       "|\"[^\"]*\"|'[^']*'|NULL)\\s+AS\\s+INTERVAL\\s+(\\w+(?:\\s+TO\\s+\\w+)?)\\s*\\)").r
-    maskedReplace(sql, re) { (m, o) =>
+    SqlText.replaceMasked(sql, re) { (m, o) =>
       val target = m.group(4).trim.toUpperCase(java.util.Locale.ROOT)
       // literal text from the ORIGINAL (masking blanks quoted chars)
       val src = Option(m.group(2)).map(_ => o.substring(m.start(2), m.end(2)))
@@ -103,9 +103,9 @@ object BigQueryDialect {
     * Spark's ANSI union rejects INT-vs-STRING branches. Each item of a
     * mixed column is wrapped in CAST(... AS STRING). */
   private[sql] def rewriteMixedUnionLits(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     for (m <- "(?is)\\(\\s*SELECT\\b".r.findAllMatchIn(masked)) {
-      val close = GraftSql.closeParen(masked, m.start)
+      val close = SqlText.closeOf(masked, m.start)
       if (close > 0) {
         val body = sql.substring(m.start + 1, close)
         val mbody = masked.substring(m.start + 1, close)
@@ -116,7 +116,7 @@ object BigQueryDialect {
             val sel = "(?is)^\\s*SELECT\\b".r.findFirstMatchIn(mb)
               .map(_.end).getOrElse(-1)
             if (sel < 0) return sql
-            GraftSql.splitTopLevel(b.substring(sel))
+            SqlText.splitTop(b.substring(sel))
           }
           val n = itemss.head.length
           if (itemss.forall(_.length == n)) {
@@ -194,7 +194,7 @@ object BigQueryDialect {
       })).getOrElse {
         ifnull.findFirstMatchIn(e) match {
           case Some(im) =>
-            val args = GraftSql.splitTopLevel(im.group(1)).map(a => litClass(a))
+            val args = SqlText.splitTop(im.group(1)).map(a => litClass(a))
             args.find(a => a != "null" && a != "unknown").getOrElse(
               if (args.forall(_ == "null")) "null" else "unknown")
           case None => "unknown"
@@ -209,11 +209,11 @@ object BigQueryDialect {
     * so the sub-second part truncates via calcite_ts (the same device
     * as the core corpus's bare-cast truncation). */
   private[sql] def rewriteTsUnitTrunc(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     for (m <- "(?i)\\b(timestamp_millis|timestamp_micros)\\s*\\(".r
         .findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       val already = "(?is).*\\bcalcite_ts\\s*\\(\\s*$".r
         .matches(masked.substring(0, m.start))
       if (close > 0 && !already)
@@ -229,10 +229,10 @@ object BigQueryDialect {
     * (functions/BigQueryFns time family) — so the safe cast becomes a
     * try-parse onto it: NULL on malformed input, like BigQuery. */
   private[sql] def rewriteSafeCastTime(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     for (m <- "(?is)\\bSAFE_CAST\\s*\\(".r.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close > 0) {
         val content = masked.substring(open + 1, close)
         val t = "(?is)\\s+AS\\s+TIME\\s*$".r.findFirstMatchIn(content)
@@ -252,9 +252,9 @@ object BigQueryDialect {
     * zero); Spark's `/` is always fractional. Literal-only on purpose —
     * column-typed division keeps Spark's product semantics. */
   private[sql] def rewriteIntLitDiv(sql: String): String =
-    GraftSql.replaceMasked(sql,
+    SqlText.replaceMasked(sql,
       "(?<![\\w.'])(-?\\d+)\\s*/\\s*(-?\\d+)(?![\\w.])".r) { (m, orig) =>
-      s"DIV(${GraftSql.origGroup(m, orig, 1)}, ${GraftSql.origGroup(m, orig, 2)})"
+      s"DIV(${SqlText.origGroup(m, orig, 1)}, ${SqlText.origGroup(m, orig, 2)})"
     }
 
   /** LPAD/RPAD over BYTES (x'..' literals): BigQuery returns BYTES,
@@ -265,13 +265,13 @@ object BigQueryDialect {
     * yields the hex STRING the recorded output shows. Matched on the
     * ORIGINAL text (the literal content is invisible on the mask). */
   private[sql] def rewriteBinaryPad(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val hexLit = "(?is)^\\s*[Xx]'([0-9A-Fa-f]*)'\\s*$".r
     for (m <- "(?i)\\b([LR]PAD)\\s*\\(".r.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close > 0) {
-        val args = GraftSql.splitElemsOf(sql, masked, open + 1, close)
+        val args = SqlText.splitElems(sql, masked, open + 1, close)
         if (args.length >= 2 && hexLit.findFirstIn(args.head).isDefined) {
           val fn = sql.substring(m.start(1), m.end(1))
           val v = hexLit.findFirstMatchIn(args.head).get.group(1)
@@ -292,17 +292,17 @@ object BigQueryDialect {
     * `json_scope=>"..."` named argument becomes the positional third
     * argument (functions/BigQueryFns.ContainsSubstrDeep). */
   private def rewriteContainsSubstr(sql: String): String = {
-    val s1 = GraftSql.replaceMasked(sql, "(?i)\\bjson_scope\\s*=>\\s*".r)((_, _) => "")
-    val masked = GraftSql.maskLiterals(s1)
+    val s1 = SqlText.replaceMasked(sql, "(?i)\\bjson_scope\\s*=>\\s*".r)((_, _) => "")
+    val masked = SqlText.mask(s1)
     val re = "(?i)\\bCONTAINS_SUBSTR\\s*\\(\\s*\\(".r
     re.findFirstMatchIn(masked) match {
       case None => s1
       case Some(m) =>
         val tupleOpen = m.end - 1
-        val tupleClose = GraftSql.closeParen(masked, tupleOpen)
+        val tupleClose = SqlText.closeOf(masked, tupleOpen)
         if (tupleClose < 0) return s1
         val inner = masked.substring(tupleOpen + 1, tupleClose)
-        if (GraftSql.splitTopLevel(inner).length > 1)
+        if (SqlText.splitTop(inner).length > 1)
           rewriteContainsSubstr(s1.substring(0, tupleOpen) + "struct" +
             s1.substring(tupleOpen))
         else s1
@@ -312,10 +312,10 @@ object BigQueryDialect {
   /** `DATETIME '2008-12-25 15:30:00'` — BigQuery's DATETIME is Spark's
     * TIMESTAMP_NTZ. */
   private def rewriteDatetimeLiteral(sql: String): String =
-    maskedReplace(sql, "(?i)\\bDATETIME\\s+'".r)((_, _) => "TIMESTAMP_NTZ '")
+    SqlText.replaceMasked(sql, "(?i)\\bDATETIME\\s+'".r)((_, _) => "TIMESTAMP_NTZ '")
 
   private def rewriteCurrentDatetime(sql: String): String =
-    maskedReplace(sql,
+    SqlText.replaceMasked(sql,
       "(?i)(?<![.\\w])CURRENT_DATETIME\\s*(\\(\\s*('[^']*')?\\s*\\))?".r) { (m, orig) =>
       if (m.start(2) >= 0)
         s"CAST(from_utc_timestamp(current_timestamp(), ${orig.substring(m.start(2), m.end(2))}) AS TIMESTAMP_NTZ)"
@@ -324,38 +324,32 @@ object BigQueryDialect {
 
   /** `TIME '15:30:00'` → the engine's string TIME encoding. */
   private def rewriteTimeLiteral(sql: String): String =
-    maskedReplace(sql, "(?i)\\bTIME\\s+'".r)((_, _) => "'")
+    SqlText.replaceMasked(sql, "(?i)\\bTIME\\s+'".r)((_, _) => "'")
 
   /** `ARRAY['a', 'b']` → `array('a', 'b')` (bracket list literal). */
   private[sql] def rewriteArrayLiteral(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\bARRAY\\s*\\[".r
     re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
-        var depth = 1
-        var i = m.end
-        while (i < masked.length && depth > 0) {
-          val c = masked.charAt(i)
-          if (c == '[') depth += 1 else if (c == ']') depth -= 1
-          i += 1
-        }
-        if (depth != 0) sql
+        val close = SqlText.closeOf(masked, m.end - 1)
+        if (close < 0) sql
         else rewriteArrayLiteral(sql.substring(0, m.start) + "array(" +
-          sql.substring(m.end, i - 1) + ")" + sql.substring(i))
+          sql.substring(m.end, close) + ")" + sql.substring(close + 1))
     }
   }
 
   /** BigQuery LOG(x, base) is base-last — Spark's log(base, x) is
     * base-first. Lowered to a ln ratio so the output can't re-match. */
   private[sql] def rewriteLog(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\bLOG\\s*\\(".r
     re.findAllMatchIn(masked).foreach { m =>
       val open = m.end - 1
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close >= 0) {
-        val args = splitTop(sql.substring(open + 1, close)).map(_.trim)
+        val args = SqlText.splitTop(sql.substring(open + 1, close)).map(_.trim)
         if (args.size == 2)
           return rewriteLog(sql.substring(0, m.start) +
             s"(ln(${args(0)}) / ln(${args(1)}))" + sql.substring(close + 1))
@@ -368,13 +362,13 @@ object BigQueryDialect {
     * date_trunc (unit becomes a string); TIME_TRUNC uses the string
     * TIME runtime. */
   private[sql] def rewriteTruncs(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\b(DATETIME|TIMESTAMP|TIME)_TRUNC\\s*\\(".r
     re.findAllMatchIn(masked).foreach { m =>
       val open = m.end - 1
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close >= 0) {
-        val args = splitTop(sql.substring(open + 1, close)).map(_.trim)
+        val args = SqlText.splitTop(sql.substring(open + 1, close)).map(_.trim)
         val unit = if (args.size >= 2) args(1).stripPrefix("`").stripSuffix("`") else ""
         if (args.size >= 2 && unit.matches("(?i)\\w+")) {
           val repl = m.group(1).toUpperCase match {
@@ -388,20 +382,6 @@ object BigQueryDialect {
       }
     }
     sql
-  }
-
-  /** Generic masked find/replace: matches on the literal-masked text,
-    * splices replacement text computed from the original. */
-  private def maskedReplace(sql: String, re: scala.util.matching.Regex)(
-      f: (scala.util.matching.Regex.Match, String) => String): String = {
-    val masked = GraftSql.maskLiterals(sql)
-    val sb = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(masked).foreach { m =>
-      sb.append(sql.substring(last, m.start)).append(f(m, sql))
-      last = m.end
-    }
-    sb.append(sql.substring(last)).toString
   }
 
   /** BigQuery quotes strings with EITHER ' or "; Spark reads " as an
@@ -474,13 +454,13 @@ object BigQueryDialect {
     * own date_add takes an integer day count, so only the INTERVAL form
     * is rewritten). DATETIME/TIMESTAMP variants return their own type. */
   private[sql] def rewriteAddSub(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\b(DATE|DATETIME|TIMESTAMP|TIME)_(ADD|SUB)\\s*\\(".r
     re.findAllMatchIn(masked).foreach { m =>
       val open = m.end - 1
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close >= 0) {
-        val args = splitTop(sql.substring(open + 1, close))
+        val args = SqlText.splitTop(sql.substring(open + 1, close))
         if (args.size == 2 && args(1).trim.toUpperCase.startsWith("INTERVAL")) {
           val add = m.group(2).equalsIgnoreCase("ADD")
           val repl = m.group(1).toUpperCase match {
@@ -506,13 +486,13 @@ object BigQueryDialect {
     * TIMESTAMP(expr[, tz]). TIME(...) is left alone — Spark has no TIME
     * type (the engine's TIME surface is covered separately, q109). */
   private[sql] def rewriteCtors(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\b(DATETIME|DATE|TIMESTAMP|TIME)\\s*\\(".r
     re.findAllMatchIn(masked).foreach { m =>
       val open = m.end - 1
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close >= 0) {
-        val args = splitTop(sql.substring(open + 1, close)).map(_.trim)
+        val args = SqlText.splitTop(sql.substring(open + 1, close)).map(_.trim)
         val name = m.group(1).toUpperCase
         val repl: Option[String] = (name, args.size) match {
           case ("DATETIME", 6) => Some(s"make_timestamp_ntz(${args.mkString(", ")})")
@@ -542,7 +522,7 @@ object BigQueryDialect {
   }
 
   private def renameFns(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     var out = sql
     var m = masked
     for ((from, to) <- renames) {
@@ -566,15 +546,15 @@ object BigQueryDialect {
     * Parameterized units like WEEK(MONDAY) pass through untouched (and
     * fail visibly) — a documented gap. */
   private[sql] def rewriteDiffs(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\b(DATE_DIFF|DATETIME_DIFF|TIMESTAMP_DIFF|TIME_DIFF)\\s*\\(".r
     re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
         val open = m.end - 1
-        val close = GraftSql.closeParen(masked, open)
+        val close = SqlText.closeOf(masked, open)
         if (close < 0) return sql
-        val args = splitTop(sql.substring(open + 1, close))
+        val args = SqlText.splitTop(sql.substring(open + 1, close))
         if (args.size != 3) return sql
         val unit0 = args(2).trim.stripPrefix("`").stripSuffix("`")
           .replaceAll("\\s+", "") // WEEK(MONDAY) normalizes to one token
@@ -604,14 +584,14 @@ object BigQueryDialect {
     var go = true
     while (go) {
       go = false
-      val masked = GraftSql.maskLiterals(sql)
+      val masked = SqlText.mask(sql)
       val re = "(?i)\\bDATE_TRUNC\\s*\\(".r
       re.findFirstMatchIn(masked.substring(from)).foreach { m0 =>
         val start = from + m0.start
         val open = from + m0.end - 1
-        val close = GraftSql.closeParen(masked, open)
+        val close = SqlText.closeOf(masked, open)
         if (close >= 0) {
-          val args = splitTop(sql.substring(open + 1, close)).map(_.trim)
+          val args = SqlText.splitTop(sql.substring(open + 1, close)).map(_.trim)
           val unit = if (args.size == 2)
             args(1).replaceAll("\\s+", "").toUpperCase(java.util.Locale.ROOT) else ""
           val d = if (args.nonEmpty) args(0) else ""
@@ -648,13 +628,13 @@ object BigQueryDialect {
   /** `UNIX_DATE(x)` accepts DATETIME in BigQuery; Spark's unix_date is
     * DATE-only — wrap the argument in a DATE cast (identity for DATE). */
   private[sql] def rewriteUnixDate(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\bUNIX_DATE\\s*\\(".r
     re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
         val open = m.end - 1
-        val close = GraftSql.closeParen(masked, open)
+        val close = SqlText.closeOf(masked, open)
         if (close < 0) return sql
         val arg = sql.substring(open + 1, close)
         if (arg.toUpperCase(java.util.Locale.ROOT).contains(" AS DATE")) return sql
@@ -691,40 +671,21 @@ object BigQueryDialect {
   private def rewriteBrackets(sql: String): String = rewriteSafeSubscript(sql)
 
   private[sql] def rewriteSafeSubscript(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\[\\s*(SAFE_)?(OFFSET|ORDINAL)\\s*\\(".r
     val m = re.findFirstMatchIn(masked).getOrElse(return sql)
     // the subscript's index expression
     val open = masked.indexOf('(', m.start)
-    val closeIdx = GraftSql.closeParen(masked, open)
+    val closeIdx = SqlText.closeOf(masked, open)
     if (closeIdx < 0) return sql
     val closeBracket = masked.indexOf(']', closeIdx)
     if (closeBracket < 0) return sql
     val idx = sql.substring(open + 1, closeIdx).trim
-    // backward scan for the start of the subscripted primary expression:
-    // identifier chains (a.b_c), call/paren groups, and prior subscripts
-    var s = m.start - 1
-    def depthBack(openCh: Char, closeCh: Char): Unit = {
-      var depth = 1
-      s -= 1
-      while (s >= 0 && depth > 0) {
-        val c = masked.charAt(s)
-        if (c == closeCh) depth += 1 else if (c == openCh) depth -= 1
-        s -= 1
-      }
-    }
-    var scanning = true
-    while (scanning && s >= 0) {
-      masked.charAt(s) match {
-        case c if c.isLetterOrDigit || c == '_' || c == '.' || c == '`' => s -= 1
-        case ')' => depthBack('(', ')')
-        case ']' => depthBack('[', ']')
-        case _ => scanning = false
-      }
-    }
-    val exprStart = s + 1
+    // the subscripted primary: identifier chains (a.b_c), call/paren
+    // groups, and prior subscripts
+    val exprStart = SqlText.primaryStart(masked, m.start)
+    if (exprStart < 0) return sql
     val target = sql.substring(exprStart, m.start).trim
-    if (target.isEmpty) return sql
     val safe = m.group(1) != null
     val isOffset = m.group(2).equalsIgnoreCase("OFFSET")
     // SAFE_: index 0 is a hard error even for try_element_at — nullif
@@ -744,23 +705,4 @@ object BigQueryDialect {
 
   private def rewriteExtractFields(sql: String): String =
     sql.replaceAll("(?i)\\bEXTRACT\\s*\\(\\s*DAYOFYEAR\\b", "EXTRACT(DOY")
-
-  private def splitTop(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var inStr = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(' || c == '[') depth += 1
-      else if (c == ')' || c == ']') depth -= 1
-      else if (c == ',' && depth == 0) { out += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
 }

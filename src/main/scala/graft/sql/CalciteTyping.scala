@@ -2,7 +2,7 @@ package graft.sql
 
 import scala.util.chaining._
 
-import GraftSql.{closeParen, maskLiterals}
+import SqlText.{closeOf, mask}
 
 /** Conformance-dialect adapter for the reference's AVG-family return
   * types (RelDataTypeSystemImpl.deriveAvgAggType — the result keeps
@@ -29,7 +29,7 @@ object CalciteTyping {
       pivotManual(decimalLitCastDown(timeLiteralArith(intervalOrderedRange(
         inIsPostfix(orderByGrouping(valuesRowStrip(rowTypeCast(
           decimalPrecisionClamp(bareCastTimestampTrunc(sql0)))))))))))))
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     // measure statements restructure through MeasureSql — the wrapper's
     // sample would reference columns outside the measure's context
     if ("(?i)\\bMEASURE\\b|\\bAGGREGATE\\s*\\(".r.findFirstIn(masked).isDefined) return sql
@@ -41,30 +41,27 @@ object CalciteTyping {
         !"(?is).*\\bagg_typed\\s*\\($".r.matches(before)
       }
       val open = masked.indexOf('(', m.start)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (prevWordOk && close > 0) {
-        val argsOrig = sql.substring(open + 1, close)
         // sample: the first argument (DISTINCT stripped); two-argument
         // COVAR/REGR derive the LEAST RESTRICTIVE of both argument
         // types (CALCITE-7696) — their sample SUMS the operands, whose
         // arithmetic derivation is exactly the wider type
-        val lens = GraftSql.splitTopLevel(masked.substring(open + 1, close)).map(_.length)
-        val starts = lens.scanLeft(0)((a, b) => a + b + 1).init
-        val args = starts.zip(lens).map { case (st, n) => argsOrig.substring(st, st + n).trim }
+        val args = SqlText.splitElems(sql, masked, open + 1, close)
         val first = args.head.replaceAll("(?is)^(DISTINCT|ALL)\\s+", "")
           .pipe(f => if (args.length > 1) s"($f) + (${args(1)})" else f)
         // optional FILTER (...) and OVER (...)|OVER w suffixes
         var end = close + 1
         val filt = "(?is)^\\s*FILTER\\s*\\(".r.findFirstMatchIn(masked.substring(end))
         filt.foreach { fm =>
-          val fc = closeParen(masked, end + fm.end - 1)
+          val fc = closeOf(masked, end + fm.end - 1)
           if (fc > 0) end = fc + 1
         }
         var overTxt = ""
         val over = "(?is)^\\s*OVER\\s*(\\(|[A-Za-z_]\\w*)".r.findFirstMatchIn(masked.substring(end))
         over.foreach { om =>
           if (om.group(1) == "(") {
-            val oc = closeParen(masked, end + om.end - 1)
+            val oc = closeOf(masked, end + om.end - 1)
             if (oc > 0) { overTxt = " " + sql.substring(end + om.start, oc + 1).trim; end = oc + 1 }
           } else { overTxt = " " + sql.substring(end + om.start, end + om.end).trim; end = end + om.end }
         }
@@ -95,12 +92,12 @@ object CalciteTyping {
     var changed = true
     while (changed) {
       changed = false
-      val masked = maskLiterals(sql)
+      val masked = mask(sql)
       val re = "(?i)\\bCAST\\s*\\(".r
       val it = re.findAllMatchIn(masked).toList
       for (m <- it if !changed) {
         val open = masked.indexOf('(', m.start)
-        val close = closeParen(masked, open)
+        val close = closeOf(masked, open)
         if (close > 0) {
           val content = sql.substring(open + 1, close)
           // source = a bare/quoted numeric literal (spaces inside the
@@ -159,23 +156,15 @@ object CalciteTyping {
     var go = true
     while (go) {
       go = false
-      val masked = maskLiterals(sql)
+      val masked = mask(sql)
       val post = ("(?is)\\)\\s*(SECOND|MINUTE|HOUR|DAY)S?\\s+AS\\s+(\\w+)").r
       post.findAllMatchIn(masked).toSeq.foreach { m =>
         if (!go) {
           // matching open paren of the `)` the match starts at
-          var depth = 0
-          var open = -1
-          var i = m.start
-          while (i >= 0 && open < 0) {
-            val c = masked.charAt(i)
-            if (c == ')') depth += 1
-            else if (c == '(') { depth -= 1; if (depth == 0) open = i }
-            i -= 1
-          }
+          val open = SqlText.openOf(masked, m.start)
           if (open >= 0) {
             val inner = sql.substring(open + 1, m.start)
-            val im = maskLiterals(inner)
+            val im = mask(inner)
             val minusAt = {
               var d = 0; var at = -1; var j = 0
               while (j < im.length && at < 0) {
@@ -206,7 +195,7 @@ object CalciteTyping {
     val frameRe = ("(?is)\\bORDER\\s+BY\\s+(\\w+)\\s+RANGE\\s+BETWEEN\\s+" +
       "INTERVAL\\s+(\\d+)\\s+(SECOND|MINUTE|HOUR|DAY)S?\\s+(PRECEDING|FOLLOWING)\\s+AND\\s+" +
       "INTERVAL\\s+(\\d+)\\s+(SECOND|MINUTE|HOUR|DAY)S?\\s+(PRECEDING|FOLLOWING)").r
-    GraftSql.replaceMasked(sql, frameRe)((m, o) =>
+    SqlText.replaceMasked(sql, frameRe)((m, o) =>
       units.get(m.group(1).toLowerCase(java.util.Locale.ROOT)) match {
         case Some(ku) =>
           def scaled(n: String, u: String) =
@@ -238,27 +227,27 @@ object CalciteTyping {
     * unsigned.iq:142); Spark's `/` is always fractional. Literal/literal
     * only — typed-column division keeps Spark's product semantics. */
   private def intLitDiv(sql: String): String = {
-    val s1 = GraftSql.replaceMasked(sql,
+    val s1 = SqlText.replaceMasked(sql,
       "(?<![\\w.'])(-?\\d+)\\s*/\\s*(-?\\d+)(?![\\w.])".r) { (m, orig) =>
-      s"DIV(${GraftSql.origGroup(m, orig, 1)}, ${GraftSql.origGroup(m, orig, 2)})"
+      s"DIV(${SqlText.origGroup(m, orig, 1)}, ${SqlText.origGroup(m, orig, 2)})"
     }
     // CAST-expression left operands (unsigned.iq:142 —
     // CAST(1000 AS INT UNSIGNED) / 30): the paren-matched form of the
     // bare-identifier branch below, single-pass so its own ELSE-branch
     // division is never re-visited
     val s1b = {
-      val masked = maskLiterals(s1)
+      val masked = mask(s1)
       val sb = new StringBuilder
       var last = 0
       for (m <- "(?is)\\)\\s*/\\s*(-?\\d+|[A-Za-z_]\\w*)(?![\\w.(])".r
           .findAllMatchIn(masked) if m.start >= last) {
-        val open = GraftSql.openParenOf(masked, m.start)
+        val open = SqlText.openOf(masked, m.start)
         val cm = if (open > 0)
           "(?is)\\bCAST\\s*$".r.findFirstMatchIn(masked.substring(0, open)) else None
         cm.foreach { c =>
           if (c.start >= last) {
             val a = s1.substring(c.start, m.start + 1)
-            val b = GraftSql.origGroup(m, s1, 1)
+            val b = SqlText.origGroup(m, s1, 1)
             val ints = "('tinyint', 'smallint', 'int', 'bigint')"
             sb.append(s1.substring(last, c.start))
               .append(s"(CASE WHEN typeof($a) IN $ints AND typeof($b) IN $ints " +
@@ -276,10 +265,10 @@ object CalciteTyping {
     // runtime type turns out fractional (pi DIV 2 would not type-check);
     // `interval (expr) unit` stays untouched — its parser needs the
     // plain division text.
-    GraftSql.replaceMasked(s1b,
+    SqlText.replaceMasked(s1b,
       "(?<![\\w.'])([A-Za-z_]\\w*|\\d+)\\s*/\\s*([A-Za-z_]\\w*|\\d+)(?![\\w.(])".r) { (m, orig) =>
-      val a = GraftSql.origGroup(m, orig, 1)
-      val b = GraftSql.origGroup(m, orig, 2)
+      val a = SqlText.origGroup(m, orig, 1)
+      val b = SqlText.origGroup(m, orig, 2)
       val before = orig.substring(0, m.start)
       if ("(?is).*\\binterval\\s*\\(\\s*$".r.matches(before)) m.matched
       else {
@@ -300,13 +289,13 @@ object CalciteTyping {
     * exact math. FILTER and OVER suffixes ride every inner aggregate.
     * Conformance dialect only (like the rest of this adapter). */
   private def decomposeIntVariance(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val re = ("(?i)\\b(var_pop|var_samp|variance|stddev|stddev_pop|stddev_samp|" +
       "covar_pop|covar_samp|regr_sxx|regr_syy)\\s*\\(").r
     for (m <- re.findAllMatchIn(masked)) {
       val fn = m.group(1).toLowerCase(java.util.Locale.ROOT)
       val open = masked.indexOf('(', m.start)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       // our own emission puts the native call right after "ELSE CAST(",
       // and the main agg_typed pass may later wrap it — skip both on
       // the recursion re-scans
@@ -320,23 +309,19 @@ object CalciteTyping {
           var filterTxt = ""
           val filt = "(?is)^\\s*FILTER\\s*\\(".r.findFirstMatchIn(masked.substring(end))
           filt.foreach { fm2 =>
-            val fc = closeParen(masked, end + fm2.end - 1)
+            val fc = closeOf(masked, end + fm2.end - 1)
             if (fc > 0) { filterTxt = " " + sql.substring(end + fm2.start, fc + 1).trim; end = fc + 1 }
           }
           var overTxt = ""
           val over = "(?is)^\\s*OVER\\s*(\\(|[A-Za-z_]\\w*)".r.findFirstMatchIn(masked.substring(end))
           over.foreach { om =>
             if (om.group(1) == "(") {
-              val oc = closeParen(masked, end + om.end - 1)
+              val oc = closeOf(masked, end + om.end - 1)
               if (oc > 0) { overTxt = " " + sql.substring(end + om.start, oc + 1).trim; end = oc + 1 }
             } else { overTxt = " " + sql.substring(end + om.start, end + om.end).trim; end = end + om.end }
           }
           val twoArg = Set("covar_pop", "covar_samp", "regr_sxx", "regr_syy")(fn)
-          val args = GraftSql.splitTopLevel(masked.substring(open + 1, close))
-            .map(_.length)
-            .scanLeft(0)((acc, l) => acc + l + 1).init
-            .zip(GraftSql.splitTopLevel(masked.substring(open + 1, close)).map(_.length))
-            .map { case (st, n2) => sql.substring(open + 1 + st, open + 1 + st + n2).trim }
+          val args = SqlText.splitElems(sql, masked, open + 1, close)
           // EXCLUDE-framed windows lower through ExcludeFrameSql, whose
           // parser reads the NATIVE call — don't decompose under them
           if ("(?is)^\\s*WITHIN\\s+DISTINCT\\b".r.findFirstIn(masked.substring(end)).isEmpty &&
@@ -426,29 +411,27 @@ object CalciteTyping {
     * included. Applies to `(SELECT <simple cols> ...) PIVOT (...)`
     * shapes; anything else keeps Spark's native pivot. */
   private[sql] def pivotManual(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val pm = "(?i)\\bPIVOT\\s*\\(".r.findFirstMatchIn(masked).getOrElse(return sql)
     val pOpen = masked.indexOf('(', pm.start)
-    val pClose = closeParen(masked, pOpen)
+    val pClose = closeOf(masked, pOpen)
     if (pClose < 0) return sql
     // source must be a parenthesized subselect directly before PIVOT
     val before = masked.substring(0, pm.start)
     val srcClose = before.reverse.dropWhile(_.isWhitespace).length - 1
     if (srcClose < 0 || masked.charAt(srcClose) != ')') return sql
-    val srcOpen = GraftSql.openParenOf(masked, srcClose)
+    val srcOpen = SqlText.openOf(masked, srcClose)
     if (srcOpen < 0 ||
       "(?is)^\\(\\s*SELECT\\b".r.findFirstIn(masked.substring(srcOpen)).isEmpty) return sql
     // source select list → the full column set: bare identifiers, or
     // aliased expressions (`CASE ... END AS gender` contributes gender)
     val srcBody = masked.substring(srcOpen + 1, srcClose)
-    val srcFrom = "(?is)\\bFROM\\b".r.findAllMatchIn(srcBody).find { f =>
-      val pre = srcBody.substring(0, f.start)
-      pre.count(_ == '(') == pre.count(_ == ')')
-    }.getOrElse(return sql)
+    val srcFrom = SqlText.topLevelIndex(srcBody, "FROM")
+    if (srcFrom < 0) return sql
     val srcSelEnd = "(?is)^\\s*SELECT\\s".r.findFirstMatchIn(srcBody)
       .map(_.end - 1).getOrElse(return sql)
-    val srcCols = GraftSql.splitElemsOf(sql, masked,
-      srcOpen + 1 + srcSelEnd, srcOpen + 1 + srcFrom.start).map { item =>
+    val srcCols = SqlText.splitElems(sql, masked,
+      srcOpen + 1 + srcSelEnd, srcOpen + 1 + srcFrom).map { item =>
       val t = item.trim
       "(?is)\\s+AS\\s+([A-Za-z_]\\w*|`[^`]*`)\\s*$".r.findFirstMatchIn(t)
         .map(_.group(1).stripPrefix("`").stripSuffix("`"))
@@ -461,22 +444,21 @@ object CalciteTyping {
     // pivot clause: aggs FOR forcols IN (values)
     val body = sql.substring(pOpen + 1, pClose)
     val bodyM = masked.substring(pOpen + 1, pClose)
-    val forM = "(?is)\\bFOR\\b".r.findAllMatchIn(bodyM).find { f =>
-      val pre = bodyM.substring(0, f.start)
-      pre.count(_ == '(') == pre.count(_ == ')')
-    }.getOrElse(return sql)
-    val inM = "(?is)\\bIN\\s*\\(".r.findFirstMatchIn(bodyM.substring(forM.end)).getOrElse(return sql)
-    val forColsTxt = body.substring(forM.end, forM.end + inM.start).trim
-    val forCols = GraftSql.splitTopLevel(
+    val forAt = SqlText.topLevelIndex(bodyM, "FOR")
+    if (forAt < 0) return sql
+    val forEnd = forAt + "FOR".length
+    val inM = "(?is)\\bIN\\s*\\(".r.findFirstMatchIn(bodyM.substring(forEnd)).getOrElse(return sql)
+    val forColsTxt = body.substring(forEnd, forEnd + inM.start).trim
+    val forCols = SqlText.splitTop(
       forColsTxt.stripPrefix("(").stripSuffix(")")).map(_.trim)
     if (!forCols.forall(c => "^[A-Za-z_]\\w*$".r.matches(c))) return sql
-    val inOpen = pOpen + 1 + forM.end + inM.end - 1
-    val inClose = closeParen(masked, inOpen)
+    val inOpen = pOpen + 1 + forEnd + inM.end - 1
+    val inClose = closeOf(masked, inOpen)
     if (inClose < 0 || inClose > pClose) return sql
 
     // aggregates: FN(arg) [AS? alias]
     final case class Agg(fn: String, arg: String, name: String)
-    val aggs = GraftSql.splitElemsOf(sql, masked, pOpen + 1, pOpen + 1 + forM.start).map { a =>
+    val aggs = SqlText.splitElems(sql, masked, pOpen + 1, pOpen + 1 + forAt).map { a =>
       // quoted aliases arrive as backticks (clean0 re-quotes the
       // corpus's double quotes before this adapter runs)
       val m2 = ("(?is)^\\s*(SUM|COUNT|MIN|MAX|AVG)\\s*\\(\\s*(\\*|[A-Za-z_]\\w*)\\s*\\)" +
@@ -493,13 +475,13 @@ object CalciteTyping {
     }
     // values: literal | (tuple) [AS? label]
     final case class Val(comps: Seq[String], label: String)
-    val vals = GraftSql.splitElemsOf(sql, masked, inOpen + 1, inClose).map { v =>
+    val vals = SqlText.splitElems(sql, masked, inOpen + 1, inClose).map { v =>
       val vm = ("(?is)^\\s*('[^']*'\\s*\\|\\|\\s*'[^']*'|\\([^)]*\\)|'[^']*'|-?\\d+(?:\\.\\d+)?|[A-Za-z_]\\w*)" +
         "(?:\\s+(?:AS\\s+)?(`[^`]*`|\"[^\"]*\"|[A-Za-z_]\\w*))?\\s*$").r
         .findFirstMatchIn(v).getOrElse(return sql)
       val lit = vm.group(1)
       val comps =
-        if (lit.startsWith("(")) GraftSql.splitTopLevel(lit.stripPrefix("(").stripSuffix(")")).map(_.trim)
+        if (lit.startsWith("(")) SqlText.splitTop(lit.stripPrefix("(").stripSuffix(")")).map(_.trim)
         else Seq(lit)
       val label = Option(vm.group(2))
         .map { l =>
@@ -550,46 +532,16 @@ object CalciteTyping {
   }
 
   private def anyValueAsMax(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     "(?i)\\bANY_VALUE\\s*\\(".r.findAllMatchIn(masked).collectFirst {
       case m if {
-        val close = closeParen(masked, masked.indexOf('(', m.start))
+        val close = closeOf(masked, masked.indexOf('(', m.start))
         close > 0 &&
           "(?is)^\\s*(OVER|IGNORE\\s+NULLS|RESPECT\\s+NULLS)\\b".r
             .findFirstIn(masked.substring(close + 1)).isEmpty
       } => anyValueAsMax(sql.substring(0, m.start) + "max(" +
         sql.substring(masked.indexOf('(', m.start) + 1))
     }.getOrElse(sql)
-  }
-
-  /** Backward scan from `end` (exclusive) over one expression primary:
-    * identifier chains (dots, backticks, masked literal chars) and
-    * call/paren/bracket groups. Returns the primary's start, or -1. */
-  private def primaryStart(masked: String, end: Int): Int = {
-    var s = end - 1
-    while (s >= 0 && masked.charAt(s).isWhitespace) s -= 1
-    if (s < 0) return -1
-    def depthBack(openCh: Char, closeCh: Char): Unit = {
-      var depth = 1
-      s -= 1
-      while (s >= 0 && depth > 0) {
-        val c = masked.charAt(s)
-        if (c == closeCh) depth += 1 else if (c == openCh) depth -= 1
-        s -= 1
-      }
-    }
-    val first = s
-    var scanning = true
-    while (scanning && s >= 0) {
-      masked.charAt(s) match {
-        case c if c.isLetterOrDigit || c == '_' || c == '.' || c == '`' ||
-          c == '\'' || c == '\u0001' => s -= 1
-        case ')' => depthBack('(', ')')
-        case ']' => depthBack('[', ']')
-        case _ => scanning = false
-      }
-    }
-    if (s + 1 > first) -1 else s + 1
   }
 
   /** `x IN (SELECT …) IS [NOT] TRUE|FALSE|UNKNOWN` — the reference's
@@ -603,16 +555,16 @@ object CalciteTyping {
     * the UNKNOWN cases from scalar COUNT subqueries (correlation-safe:
     * scalar subqueries plan anywhere). */
   private[sql] def inIsPostfix(sql0: String): String = {
-    val masked = maskLiterals(sql0)
+    val masked = mask(sql0)
     for (m <- "(?is)\\)\\s*IS\\s+(?:NOT\\s+)?(?:TRUE|FALSE|UNKNOWN)\\b".r
         .findAllMatchIn(masked)) {
-      val open = GraftSql.openParenOf(masked, m.start)
+      val open = SqlText.openOf(masked, m.start)
       if (open > 0 &&
           "(?is)^\\s*SELECT\\b".r.findFirstIn(masked.substring(open + 1, m.start)).isDefined) {
         val inM = "(?is)\\b(NOT\\s+)?IN\\s*$".r
           .findFirstMatchIn(masked.substring(0, open))
         if (inM.isDefined) {
-          val opStart = primaryStart(masked, inM.get.start)
+          val opStart = SqlText.primaryStart(masked, inM.get.start)
           // the operand must not already sit right after '(' (wrapped)
           val pre = if (opStart > 0) masked.substring(0, opStart).reverse.dropWhile(_.isWhitespace) else ""
           if (opStart >= 0 && !pre.startsWith("(")) {
@@ -643,44 +595,36 @@ object CalciteTyping {
     * call into the select list as a hidden `__gordN` column, wrap in
     * `SELECT * EXCEPT (…)` and order by the hidden names. */
   private[sql] def orderByGrouping(sql0: String): String = {
-    val masked = maskLiterals(sql0)
-    def depth0(pos: Int): Boolean = {
-      val pre = masked.substring(0, pos)
-      pre.count(_ == '(') == pre.count(_ == ')')
-    }
-    val ob = "(?is)\\bORDER\\s+BY\\b".r.findAllMatchIn(masked)
-      .filter(m => depth0(m.start)).toList.lastOption.getOrElse(return sql0)
-    if ("(?is)\\bGROUP\\s+BY\\b".r.findAllMatchIn(masked)
-        .forall(m => !depth0(m.start))) return sql0
+    val masked = mask(sql0)
+    val obAt = SqlText.lastTopLevelIndex(masked, "ORDER BY")
+    if (obAt < 0 || SqlText.topLevelIndex(masked, "GROUP BY") < 0) return sql0
+    val obEnd = SqlText.matchWords(masked, obAt, Array("ORDER", "BY"))
     // order-item region: up to a depth-0 LIMIT/OFFSET/FETCH or the end
-    val tailEnd = "(?i)\\b(LIMIT|OFFSET|FETCH)\\b".r.findAllMatchIn(masked)
-      .filter(m => m.start > ob.end && depth0(m.start))
-      .map(_.start).minOption.getOrElse(masked.length)
-    val itemsM = masked.substring(ob.end, tailEnd)
+    val tailEnd = SqlText.clauseEnd(masked, obEnd, "LIMIT", "OFFSET", "FETCH")
+    val itemsM = masked.substring(obEnd, tailEnd)
     val gre = "(?i)\\b(GROUPING|GROUPING_ID)\\s*\\(".r
     if (gre.findFirstIn(itemsM).isEmpty) return sql0
     // body must be a single SELECT (no depth-0 set ops)
-    if ("(?i)\\b(UNION|INTERSECT|EXCEPT|MINUS)\\b".r.findAllMatchIn(masked)
-        .exists(m => m.start < ob.start && depth0(m.start))) return sql0
-    val from = "(?is)\\bFROM\\b".r.findAllMatchIn(masked)
-      .filter(m => m.start < ob.start && depth0(m.start))
-      .toList.headOption.getOrElse(return sql0)
+    if (Seq("UNION", "INTERSECT", "EXCEPT", "MINUS")
+        .exists(kw => (0 until obAt).contains(SqlText.topLevelIndex(masked, kw)))) return sql0
+    val from = SqlText.topLevelIndex(masked, "FROM")
+    if (from < 0 || from > obAt) return sql0
     // replace calls right-to-left in the order items, collecting them
-    var items = sql0.substring(ob.end, tailEnd)
+    var items = sql0.substring(obEnd, tailEnd)
     val calls = scala.collection.mutable.ArrayBuffer.empty[String]
     val found = gre.findAllMatchIn(itemsM).toList
     for ((g, i) <- found.zipWithIndex.reverse) {
       val open = itemsM.indexOf('(', g.start)
-      val close = closeParen(itemsM, open)
+      val close = closeOf(itemsM, open)
       if (close < 0) return sql0
-      calls.insert(0, sql0.substring(ob.end + g.start, ob.end + close + 1))
+      calls.insert(0, sql0.substring(obEnd + g.start, obEnd + close + 1))
       items = items.substring(0, g.start) + s"__gord$i" + items.substring(close + 1)
     }
     val hidden = calls.zipWithIndex
       .map { case (c, i) => s"$c AS __gord$i" }.mkString(", ")
     val names = calls.indices.map(i => s"__gord$i").mkString(", ")
-    val body = sql0.substring(0, from.start) + s", $hidden " +
-      sql0.substring(from.start, ob.start)
+    val body = sql0.substring(0, from) + s", $hidden " +
+      sql0.substring(from, obAt)
     s"SELECT * EXCEPT ($names) FROM ($body) __gq ORDER BY" + items +
       sql0.substring(tailEnd)
   }
@@ -690,7 +634,7 @@ object CalciteTyping {
     * operator.iq:318); Spark would make it a single struct column.
     * Strips the redundant ROW wrapper. */
   private[sql] def valuesRowStrip(sql0: String): String = {
-    val masked = maskLiterals(sql0)
+    val masked = mask(sql0)
     for (vm <- "(?i)\\bVALUES\\b".r.findAllMatchIn(masked)) {
       var j = vm.end
       var scanning = true
@@ -698,13 +642,13 @@ object CalciteTyping {
         while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
         if (j >= masked.length || masked.charAt(j) != '(') scanning = false
         else {
-          val close = closeParen(masked, j)
+          val close = closeOf(masked, j)
           if (close < 0) scanning = false
           else {
             val rm = "(?is)^\\s*ROW\\s*\\(".r.findFirstMatchIn(masked.substring(j + 1, close))
             rm.foreach { r =>
               val rowOpen = j + 1 + r.end - 1
-              val rowClose = closeParen(masked, rowOpen)
+              val rowClose = closeOf(masked, rowOpen)
               if (rowClose > 0 && masked.substring(rowClose + 1, close).trim.isEmpty)
                 return valuesRowStrip(sql0.substring(0, j + 1) +
                   sql0.substring(rowOpen + 1, rowClose) + sql0.substring(close))
@@ -724,12 +668,12 @@ object CalciteTyping {
     * (cast.iq:2049) → Spark's `STRUCT<a: T, …>`, recursively. */
   private[sql] def rowTypeCast(sql0: String): String = {
     def convert(t: String): String = {
-      val m = maskLiterals(t)
+      val m = mask(t)
       "(?is)^\\s*ROW\\s*\\(".r.findFirstMatchIn(m) match {
-        case Some(r) if closeParen(m, r.end - 1) == m.length - m.reverse.takeWhile(_.isWhitespace).length - 1 =>
+        case Some(r) if closeOf(m, r.end - 1) == m.length - m.reverse.takeWhile(_.isWhitespace).length - 1 =>
           val open = r.end - 1
-          val close = closeParen(m, open)
-          val fields = GraftSql.splitElemsOf(t, m, open + 1, close).map { f =>
+          val close = closeOf(m, open)
+          val fields = SqlText.splitElems(t, m, open + 1, close).map { f =>
             val ft = f.trim
             val nm = "^([A-Za-z_]\\w*|`[^`]*`)\\s+".r.findFirstMatchIn(ft)
               .getOrElse(return t)
@@ -739,10 +683,10 @@ object CalciteTyping {
         case _ => t.trim
       }
     }
-    val masked = maskLiterals(sql0)
+    val masked = mask(sql0)
     for (m <- "(?is)\\bAS\\s+(ROW)\\s*\\(".r.findAllMatchIn(masked)) {
       val open = m.start(1) + masked.substring(m.start(1)).indexOf('(')
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       // `CAST(NULL AS ROW(...))` stays for TypesSql.rewriteCastRow,
       // whose POSITIONAL field naming (col1..colN) lets the null unify
       // with bare ROW(..) constructors in one ARRAY[..] (unnest.iq:633)
@@ -762,7 +706,7 @@ object CalciteTyping {
     * reference clamps to its own max the same way (CALCITE-4871,
     * cast.iq:860) instead of rejecting. */
   private[sql] def decimalPrecisionClamp(sql0: String): String =
-    GraftSql.replaceMasked(sql0,
+    SqlText.replaceMasked(sql0,
       "(?i)\\b(DECIMAL|NUMERIC|DEC)\\s*\\(\\s*(\\d+)\\s*(?:,\\s*(\\d+))?\\s*\\)".r) { (m, orig) =>
       val p = m.group(2).toInt
       if (p <= 38) orig.substring(m.start, m.end)
@@ -788,10 +732,10 @@ object CalciteTyping {
     var changed = true
     while (changed) {
       changed = false
-      val masked = maskLiterals(sql)
+      val masked = mask(sql)
       for (m <- "(?i)\\bCAST\\s*\\(".r.findAllMatchIn(masked).toList if !changed) {
         val open = masked.indexOf('(', m.start)
-        val close = closeParen(masked, open)
+        val close = closeOf(masked, open)
         val already = "(?is).*\\bcalcite_ts\\s*\\(\\s*$".r
           .matches(masked.substring(0, m.start))
         if (close > 0 && !already) {
@@ -830,11 +774,11 @@ object CalciteTyping {
     * wrap is applied only inside those calls, by the conformance
     * harness, for the fixtures whose widths it knows. */
   def charPadInCalls(sql: String, widths: Map[String, Int]): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val spans = "(?i)\\b(LISTAGG|JSON_OBJECTAGG|JSON_ARRAYAGG|JSON_OBJECT)\\s*\\(".r
       .findAllMatchIn(masked).flatMap { m =>
         val open = masked.indexOf('(', m.start)
-        val close = closeParen(masked, open)
+        val close = closeOf(masked, open)
         if (close > 0) Some((open, close)) else None
       }.toSeq
     if (spans.isEmpty) return sql
@@ -861,21 +805,13 @@ object CalciteTyping {
     * comparisons, and post-UNNEST cells are trimmed anyway). */
   def charLitArrayPad(sql: String): String = {
     if (!"(?is)^\\s*VALUES\\b.*".r.matches(sql)) return sql
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val litRe = "'[^']*'".r
     var out = sql
     var delta = 0
     for (m <- "(?i)\\bARRAY\\s*\\[".r.findAllMatchIn(masked)) {
       val open = masked.indexOf('[', m.start)
-      var depth = 0
-      var close = -1
-      var i = open
-      while (i < masked.length && close < 0) {
-        val c = masked.charAt(i)
-        if (c == '[') depth += 1
-        else if (c == ']') { depth -= 1; if (depth == 0) close = i }
-        i += 1
-      }
+      val close = closeOf(masked, open)
       if (close > 0) {
         val lits = litRe.findAllMatchIn(sql.substring(open + 1, close)).toSeq
         val widths = lits.map(_.matched.length - 2)

@@ -1,6 +1,6 @@
 package graft.sql
 
-import GraftSql.{closeParen, maskLiterals, replaceMasked, origGroup, splitTopLevel}
+import SqlText.{closeOf, commaRanges, mask, openOf, origGroup, primaryStart, replaceMasked, splitElems, splitTop}
 
 /** Collection-literal and subscript surface of the reference dialect
   * (Parser.jj: ARRAY/MAP constructors-by-enumeration, the `expr[index]`
@@ -12,36 +12,6 @@ import GraftSql.{closeParen, maskLiterals, replaceMasked, origGroup, splitTopLev
   * them) and splice replacement text from the original. */
 object CollectionSql {
 
-  /** Split on commas at paren AND bracket depth 0 (`s` is masked). */
-  private def splitTopB(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '(' || c == '[') depth += 1
-      else if (c == ')' || c == ']') depth -= 1
-      else if (c == ',' && depth == 0) { out += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
-
-  /** Matching `]` for the `[` at `open` (bracket depth; `s` is masked). */
-  private def closeBracket(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '[') depth += 1
-      else if (c == ']') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
   /** `ARRAY[e, ...]` / `MAP[k, v, ...]` constructors-by-enumeration →
     * Spark's `array(...)` / `map(...)`. Nested literals lower inside-out
     * across iterations; `MULTISET[...]` stays (its ALL-ops surface lives
@@ -51,12 +21,12 @@ object CollectionSql {
   def rewriteArrayMap(sql: String): String = {
     val re = "(?i)\\b(ARRAY|MAP|MULTISET)\\s*\\[".r
     var cur = sql
-    var m = re.findFirstMatchIn(maskLiterals(cur))
+    var m = re.findFirstMatchIn(mask(cur))
     while (m.isDefined) {
       val mm = m.get
-      val masked = maskLiterals(cur)
+      val masked = mask(cur)
       val open = masked.indexOf('[', mm.start)
-      val close = closeBracket(masked, open)
+      val close = closeOf(masked, open)
       if (close < 0) return cur
       // a MULTISET is an array with bag semantics downstream (its ALL
       // ops lower via functions/Multiset.scala); displays match the
@@ -65,14 +35,11 @@ object CollectionSql {
         case "multiset" => "array"
         case other => other
       }
-      val items = splitTopB(masked.substring(open + 1, close))
-      var cursor = open + 1
-      val inner = items.map { it =>
-        val orig = cur.substring(cursor, cursor + it.length)
-        cursor += it.length + 1
-        val tm = it.trim // masked twin: structure tests can't see literals
+      val inner = commaRanges(masked, open + 1, close).map { case (a, b) =>
+        val orig = cur.substring(a, b)
+        val tm = masked.substring(a, b).trim // structure tests can't see literals
         if (tm.startsWith("(") && tm.endsWith(")") &&
-            splitTopB(tm.substring(1, tm.length - 1)).length > 1)
+            commaRanges(tm, 1, tm.length - 1).length > 1)
           "struct" + orig.trim
         else orig
       }.mkString(",")
@@ -127,7 +94,7 @@ object CollectionSql {
             s"filter(array($inner), __mx -> __mx <=> __mv)))"
         else fn + "(" + inner + ")"
       cur = cur.substring(0, mm.start) + body + cur.substring(close + 1)
-      m = re.findFirstMatchIn(maskLiterals(cur))
+      m = re.findFirstMatchIn(mask(cur))
     }
     cur
   }
@@ -154,11 +121,11 @@ object CollectionSql {
     * maps inside a zip) are left unchanged for the caller's skip lists.
     */
   def rewriteUnnest(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val re = "(?i)\\bUNNEST\\s*\\(".r
     for (m <- re.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (close > 0) {
         val arg = sql.substring(open + 1, close).trim
         val argM = masked.substring(open + 1, close).trim
@@ -176,9 +143,9 @@ object CollectionSql {
           alias = sql.substring(end + am.start(1), end + am.end(1))
           if (am.group(2) != null) {
             val lOpen = end + am.end(2) - 1
-            val lClose = closeParen(masked, lOpen)
+            val lClose = closeOf(masked, lOpen)
             if (lClose > 0) {
-              cols = GraftSql.splitTopLevel(sql.substring(lOpen + 1, lClose)).map(_.trim)
+              cols = SqlText.splitTop(sql.substring(lOpen + 1, lClose)).map(_.trim)
               end = lClose + 1
             } else end = end + am.end
           } else end = end + am.end
@@ -202,7 +169,7 @@ object CollectionSql {
           val between = beforeTrim.substring(commaAt + 1).trim
           between.isEmpty || between.equalsIgnoreCase("LATERAL")
         }
-        val args = splitTopB(argM)
+        val args = splitTop(argM)
         def kindOf(a: String): String =
           if ("(?is)^MAP\\s*\\(.*".r.matches(a)) "map"
           else if ("(?is)^ARRAY\\s*\\(\\s*STRUCT\\s*\\(.*".r.matches(a)) "struct"
@@ -234,8 +201,8 @@ object CollectionSql {
               def structArity(maskedArg: String): Int = {
                 val sm = "(?is)STRUCT\\s*\\(".r.findFirstMatchIn(maskedArg).get
                 val sOpen = maskedArg.indexOf('(', sm.end - 1)
-                val sClose = closeParen(maskedArg, sOpen)
-                splitTopB(maskedArg.substring(sOpen + 1, sClose)).length
+                val sClose = closeOf(maskedArg, sOpen)
+                splitTop(maskedArg.substring(sOpen + 1, sClose)).length
               }
               val zexprs = args.indices.map(i =>
                 if (kinds(i) == "map") s"map_entries(${origArgs(i)})" else origArgs(i))
@@ -327,7 +294,7 @@ object CollectionSql {
     * over identifier chains, call/paren groups, and prior subscripts —
     * the same walk the BigQuery dialect's SAFE_ subscripts use. */
   def rewriteItem(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     var i = 0
     while (i < masked.length) {
       if (masked.charAt(i) == '[') {
@@ -338,29 +305,10 @@ object CollectionSql {
         while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
         val pc = if (p >= 0) masked.charAt(p) else ' '
         if (pc.isLetterOrDigit || pc == '_' || pc == ')' || pc == ']' || pc == '`') {
-          var s = p
-          def depthBack(openCh: Char, closeCh: Char): Unit = {
-            var depth = 1
-            s -= 1
-            while (s >= 0 && depth > 0) {
-              val c = masked.charAt(s)
-              if (c == closeCh) depth += 1 else if (c == openCh) depth -= 1
-              s -= 1
-            }
-          }
-          var scanning = true
-          while (scanning && s >= 0) {
-            masked.charAt(s) match {
-              case c if c.isLetterOrDigit || c == '_' || c == '.' || c == '`' || c == '\u0001' => s -= 1
-              case ')' => depthBack('(', ')')
-              case ']' => depthBack('[', ']')
-              case _ => scanning = false
-            }
-          }
-          val exprStart = s + 1
+          val exprStart = primaryStart(masked, i)
           val target = sql.substring(exprStart, i).trim
           val kw = target.toUpperCase(java.util.Locale.ROOT)
-          val close = closeBracket(masked, i)
+          val close = closeOf(masked, i)
           if (target.nonEmpty && close > 0 &&
               kw != "MULTISET" && kw != "ARRAY" && kw != "MAP") {
             val idx = sql.substring(i + 1, close)
@@ -384,10 +332,10 @@ object CollectionSql {
     * TO) pass through to Spark's own. */
   def rewriteFloorCeil(sql: String): String = {
     val re = "(?i)\\b(FLOOR|CEIL|CEILING)\\s*\\(".r
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     for (m <- re.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (close > 0) {
         val innerM = masked.substring(open + 1, close)
         val toRe = "(?is)\\s+TO\\s+([A-Za-z]+)\\s*$".r
@@ -411,17 +359,17 @@ object CollectionSql {
     * multi-arg COUNT is Spark-native and passes through. */
   def rewriteCompositeCount(sql: String): String = {
     val re = "(?i)\\bCOUNT\\s*\\(".r
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     for (m <- re.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (close > 0) {
         val innerOrig = sql.substring(open + 1, close)
-        val args = splitTopLevel(masked.substring(open + 1, close))
+        val args = splitTop(masked.substring(open + 1, close))
         if (args.length > 1 &&
             !"(?is)^\\s*DISTINCT\\b".r.findFirstIn(innerOrig).isDefined &&
             !"(?is)^\\s*ALL\\b".r.findFirstIn(innerOrig).isDefined) {
-          val origArgs = splitTopLevel(innerOrig).map(_.trim)
+          val origArgs = splitTop(innerOrig).map(_.trim)
           val cond = origArgs.map(a => s"($a) IS NOT NULL").mkString(" AND ")
           return rewriteCompositeCount(sql.substring(0, m.start) +
             s"COUNT(CASE WHEN $cond THEN 1 END)" + sql.substring(close + 1))
@@ -439,16 +387,16 @@ object CollectionSql {
     val s0 = {
       // single-argument LISTAGG defaults its separator to ',' in the
       // reference (SqlListaggAggFunction); Spark's defaults to ''
-      val masked = maskLiterals(sql)
+      val masked = mask(sql)
       val re = "(?i)\\bLISTAGG\\s*\\(".r
       re.findAllMatchIn(masked).collectFirst {
         case m if {
           val open = masked.indexOf('(', m.start)
-          val close = closeParen(masked, open)
-          close > 0 && splitTopB(masked.substring(open + 1, close)).length == 1
+          val close = closeOf(masked, open)
+          close > 0 && splitTop(masked.substring(open + 1, close)).length == 1
         } =>
           val open = masked.indexOf('(', m.start)
-          val close = closeParen(masked, open)
+          val close = closeOf(masked, open)
           rewriteAggSpellings(sql.substring(0, close) + ", ','" + sql.substring(close))
       }.getOrElse(sql)
     }
@@ -459,11 +407,11 @@ object CollectionSql {
     // which Spark's own any_value supports)
     val s1 = replaceMasked(s0, "(?i)\\bEVERY\\s*\\(".r)((_, _) => "bool_and(")
     val re = "(?i)\\bGROUPING\\s*\\(".r
-    val masked = maskLiterals(s1)
+    val masked = mask(s1)
     for (m <- re.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = closeParen(masked, open)
-      if (close > 0 && splitTopLevel(masked.substring(open + 1, close)).length > 1)
+      val close = closeOf(masked, open)
+      if (close > 0 && splitTop(masked.substring(open + 1, close)).length > 1)
         return rewriteAggSpellings(s1.substring(0, m.start) + "grouping_id(" +
           s1.substring(open + 1, close) + ")" + s1.substring(close + 1))
     }
@@ -478,11 +426,11 @@ object CollectionSql {
     * `SOME(pred)` as an AGGREGATE (not a quantifier — only when no
     * comparison operator precedes) is bool_or. */
   def rewriteBagAggs(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     "(?i)\\b(FUSION|INTERSECTION)\\s*\\(".r.findFirstMatchIn(masked) match {
       case Some(m) =>
         val open = masked.indexOf('(', m.start)
-        val close = closeParen(masked, open)
+        val close = closeOf(masked, open)
         if (close < 0) return sql
         val x = sql.substring(open + 1, close)
         val rep =
@@ -513,11 +461,11 @@ object CollectionSql {
     * subqueries): append a generated alias. Aliased laterals pass
     * through. */
   def rewriteLateralAlias(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val re = "(?i)\\bLATERAL\\s*\\(".r
     for (m <- re.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (close > 0) {
         val after = masked.substring(close + 1)
         val tok = "(?is)^\\s*(AS\\s+)?(`[^`]*`|[A-Za-z_]\\w*)".r.findFirstMatchIn(after)
@@ -541,36 +489,18 @@ object CollectionSql {
     * `(s1 > s2 AND s1 < e2) OR (s2 > s1 AND s2 < e1) OR s1 = s2`
     * over least/greatest-normalized bounds. */
   def rewriteOverlaps(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val re = "(?i)\\)\\s*OVERLAPS\\s*\\(".r
     for (m <- re.findAllMatchIn(masked)) {
       // left operand: the paren group CLOSING at m.start
       val lClose = m.start
-      var depth = 1
-      var i = lClose - 1
-      while (i >= 0 && depth > 0) {
-        val c = masked.charAt(i)
-        if (c == ')') depth += 1 else if (c == '(') depth -= 1
-        if (depth > 0) i -= 1
-      }
-      val lOpen = i
+      val lOpen = openOf(masked, lClose)
       val rOpen = masked.lastIndexOf('(', m.end - 1)
-      val rClose = closeParen(masked, rOpen)
+      val rClose = closeOf(masked, rOpen)
       if (lOpen >= 0 && rClose > 0) {
-        val lParts = splitTopB(masked.substring(lOpen + 1, lClose)).map(_.trim)
-        val rParts = splitTopB(masked.substring(rOpen + 1, rClose)).map(_.trim)
-        if (lParts.length == 2 && rParts.length == 2) {
-          def orig(o: Int, c: Int) = splitTopB(masked.substring(o + 1, c)) // lengths
-          val lo = {
-            val lens = orig(lOpen, lClose).map(_.length)
-            val starts = lens.scanLeft(lOpen + 1)((a, b) => a + b + 1).init
-            starts.zip(lens).map { case (s, n) => sql.substring(s, s + n).trim }
-          }
-          val ro = {
-            val lens = orig(rOpen, rClose).map(_.length)
-            val starts = lens.scanLeft(rOpen + 1)((a, b) => a + b + 1).init
-            starts.zip(lens).map { case (s, n) => sql.substring(s, s + n).trim }
-          }
+        val lo = splitElems(sql, masked, lOpen + 1, lClose)
+        val ro = splitElems(sql, masked, rOpen + 1, rClose)
+        if (lo.length == 2 && ro.length == 2) {
           val (s1, e1) = (s"least(${lo(0)}, ${lo(1)})", s"greatest(${lo(0)}, ${lo(1)})")
           val (s2, e2) = (s"least(${ro(0)}, ${ro(1)})", s"greatest(${ro(0)}, ${ro(1)})")
           val rep = s"(($s1 > $s2 AND $s1 < $e2) OR ($s2 > $s1 AND $s2 < $e1) OR $s1 = $s2)"
@@ -586,7 +516,7 @@ object CollectionSql {
     * Fires only on the bare word: `pi(`, `x.pi`, and an `AS pi` alias
     * stay untouched. */
   def rewritePi(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val sb = new StringBuilder
     var last = 0
     for (m <- "(?i)(?<![\\w.`])PI(?![\\w(.`])".r.findAllMatchIn(masked)) {

@@ -3,7 +3,7 @@ package graft.sql
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import GraftSql.{closeParen, maskLiterals}
+import SqlText.{clauseEnd, closeOf, mask, openOf}
 
 /** Manual-Correlate fallback (SURVEY §7.3 #2): executes correlated
   * subquery shapes Spark's decorrelator rejects — correlation through
@@ -87,7 +87,7 @@ object Decorrelate {
     catch { case scala.util.control.NonFatal(_) => None }
 
   private def run(spark: SparkSession, sql: String): Option[DataFrame] = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val bindings = aliasBindings(sql, masked)
     if (bindings.isEmpty) return None
     val cteEnd = ctePrefixEnd(masked)
@@ -107,7 +107,7 @@ object Decorrelate {
     // candidate subqueries: "( SELECT" anywhere, outermost-correlated only
     val subRe = "\\(\\s*(?i:SELECT)\\b".r
     val all = subRe.findAllMatchIn(masked).map { m =>
-      val close = closeParen(masked, m.start)
+      val close = closeOf(masked, m.start)
       (m.start, close)
     }.filter(_._2 > 0).toList
 
@@ -248,20 +248,12 @@ object Decorrelate {
         .findFirstMatchIn(masked.substring(close + 1 + aliasM.end)).getOrElse(return None)
       val condStart = close + 1 + aliasM.end + onM.end
       // condition extent: to the next top-level clause keyword / end
-      var j = condStart
-      var depth = 0
-      val boundary = ("(?is)^(WHERE|GROUP|ORDER|LIMIT|OFFSET|FETCH|UNION|" +
-        "INTERSECT|EXCEPT|JOIN|LEFT|RIGHT|FULL|INNER|CROSS|NATURAL|HAVING|QUALIFY|WINDOW)\\b").r
-      var condEnd = -1
-      while (j < masked.length && condEnd < 0) {
-        val ch = masked.charAt(j)
-        if (ch == '(') depth += 1
-        else if (ch == ')') { if (depth == 0) condEnd = j else depth -= 1 }
-        else if (depth == 0 && !masked.charAt(j - 1).isLetterOrDigit &&
-          boundary.findFirstIn(masked.substring(j)).isDefined) condEnd = j
-        j += 1
+      val condEnd = clauseEnd(masked, condStart, "WHERE", "GROUP", "ORDER", "LIMIT",
+        "OFFSET", "FETCH", "UNION", "INTERSECT", "EXCEPT", "JOIN", "LEFT", "RIGHT", "FULL",
+        "INNER", "CROSS", "NATURAL", "HAVING", "QUALIFY", "WINDOW") match {
+        case e if e == masked.length => sql.replaceAll("[;\\s]+$", "").length
+        case e => e
       }
-      if (condEnd < 0) condEnd = sql.replaceAll("[;\\s]+$", "").length
       val (keyRows, keyTypes) = keysFor(refs, open, close, 300).getOrElse(return None)
       if (keyRows.isEmpty) return None
       val segs = keyRows.map { row =>
@@ -424,7 +416,7 @@ object Decorrelate {
       val alias = m.group(1)
       if (!keywords(alias.toUpperCase)) {
         val close = m.start // position of ')'
-        val open = openParen(masked, close)
+        val open = openOf(masked, close)
         if (open >= 0 &&
           "^\\(\\s*(?i:SELECT|VALUES)".r.findFirstIn(masked.substring(open)).isDefined)
           add(alias, Binding(open, sql.substring(open, close + 1),
@@ -492,17 +484,6 @@ object Decorrelate {
       }
     }
     out.toList
-  }
-
-  private def openParen(s: String, close: Int): Int = {
-    var depth = 0
-    var i = close
-    while (i >= 0) {
-      if (s.charAt(i) == ')') depth += 1
-      else if (s.charAt(i) == '(') { depth -= 1; if (depth == 0) return i }
-      i -= 1
-    }
-    -1
   }
 
   /** Typed SQL literal for a key value. */

@@ -1,6 +1,6 @@
 package graft.sql
 
-import GraftSql.{closeParen, maskLiterals, splitTopLevel}
+import SqlText.{closeOf, mask, splitTop}
 
 /** SQL:2016 window frame EXCLUSION (`ROWS ... EXCLUDE CURRENT ROW /
   * GROUP / TIES / NO OTHERS` — winagg.iq:1054, Postgres-verified in the
@@ -38,7 +38,7 @@ object ExcludeFrameSql {
   private val exRe = "(?is)\\bEXCLUDE\\s+(CURRENT\\s+ROW|GROUP|TIES|NO\\s+OTHERS)".r
 
   def rewrite(sql: String): String = {
-    val masked0 = maskLiterals(sql)
+    val masked0 = mask(sql)
     if (exRe.findFirstIn(masked0).isEmpty) return sql
     // EXCLUDE NO OTHERS alone is the default semantics — drop in place,
     // using MASKED match positions so a string literal containing the
@@ -48,7 +48,7 @@ object ExcludeFrameSql {
     val dropped = noOthers.sortBy(-_.start).foldLeft(sql) { (s, m) =>
       s.substring(0, m.start) + s.substring(m.end)
     }
-    val masked = maskLiterals(dropped)
+    val masked = mask(dropped)
     if (exRe.findFirstIn(masked).isEmpty) return dropped
     lower(dropped).getOrElse(sql)
   }
@@ -60,7 +60,7 @@ object ExcludeFrameSql {
   /** None = shape not supported; keep the original text (documented
     * construct gap rather than a wrong answer). */
   private def lower(sql: String): Option[String] = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val selM = "(?is)^\\s*SELECT\\s".r.findFirstMatchIn(masked).getOrElse(return None)
     // top-level FROM
     var i = selM.end
@@ -94,7 +94,7 @@ object ExcludeFrameSql {
     // select items
     val items = {
       val m = masked.substring(selM.end, fromAt)
-      val lens = splitTopLevel(m).map(_.length)
+      val lens = splitTop(m).map(_.length)
       val starts = lens.scanLeft(0)((a, b) => a + b + 1).init
       starts.zip(lens).map { case (st, n) =>
         (sql.substring(selM.end + st, selM.end + st + n).trim,
@@ -112,19 +112,14 @@ object ExcludeFrameSql {
           case Some(m) => m
         }
         val oOpen = itemMasked.indexOf('(', pos + om.start)
-        val oClose = closeParen(itemMasked, oOpen)
+        val oClose = closeOf(itemMasked, oOpen)
         if (oClose < 0) return None
         // aggregate call immediately before OVER
         var p = pos + om.start - 1
         while (p >= 0 && itemMasked.charAt(p).isWhitespace) p -= 1
         if (p < 0 || itemMasked.charAt(p) != ')') return None
-        var d = 1
-        var j = p - 1
-        while (j >= 0 && d > 0) {
-          val c = itemMasked.charAt(j)
-          if (c == ')') d += 1 else if (c == '(') d -= 1
-          if (d > 0) j -= 1
-        }
+        val j = SqlText.openOf(itemMasked, p)
+        if (j < 0) return None
         val fnM = "(?is)([A-Za-z_]\\w*)\\s*$".r.findFirstMatchIn(itemMasked.substring(0, j))
           .getOrElse(return None)
         val fn = fnM.group(1)
@@ -140,11 +135,11 @@ object ExcludeFrameSql {
         val specM = itemMasked.substring(oOpen + 1, oClose)
         val partM = "(?is)\\bPARTITION\\s+BY\\s+(.*?)(?=\\bORDER\\b|\\bROWS\\b|\\bRANGE\\b|$)".r
           .findFirstMatchIn(specM)
-        val part = partM.map(m2 => splitTopLevel(spec.substring(m2.start(1), m2.end(1)))
+        val part = partM.map(m2 => splitTop(spec.substring(m2.start(1), m2.end(1)))
           .map(_.trim)).getOrElse(Nil)
         val ordM = "(?is)\\bORDER\\s+BY\\s+(.*?)(?=\\bROWS\\b|\\bRANGE\\b|$)".r
           .findFirstMatchIn(specM)
-        val order = ordM.map(m2 => splitTopLevel(spec.substring(m2.start(1), m2.end(1)))
+        val order = ordM.map(m2 => splitTop(spec.substring(m2.start(1), m2.end(1)))
           .map(_.trim
             .replaceAll("(?is)\\s+NULLS\\s+(FIRST|LAST)$", "")
             .replaceAll("(?is)\\s+(ASC|DESC)$", "")))

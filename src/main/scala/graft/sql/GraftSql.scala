@@ -8,7 +8,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * mirroring how the reference's babel parser lowers foreign dialects
   * (babel/; sql/parser/SqlParser.java:170).
   *
-  * Rewrites (token-aware: quotes and parens are respected):
+  * Every rewrite finds structure through [[SqlText]], the one lexical
+  * rule: `'...'` literals and `` `...` `` identifiers are masked, so
+  * nothing inside them can fire a rewrite or split a list, and `(` and
+  * `[` both nest when a scan looks for a matching close, a depth-0
+  * comma or keyword, or the start of a primary. Rewrites include:
   *  - `QUALIFY <pred>` (qualify.iq) → wrap the query in a subselect and
   *    filter: `SELECT * FROM (q) __q WHERE pred` (ORDER BY/LIMIT stay
   *    outside, per QUALIFY evaluation order).
@@ -17,6 +21,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    → our similar_to expression; NOT SIMILAR TO likewise.
   */
 object GraftSql {
+  import SqlText._
 
   def sql(spark: SparkSession, rawText: String): DataFrame = {
     graft.GraftSession.install(spark)
@@ -42,7 +47,7 @@ object GraftSql {
       // so match any mask/word run and splice the original back out
       val nextVal =
         ("(?is)(NEXT|CURRENT)\\s+VALUE\\s+FOR\\s+([\\w" + "\\u0001" + "`.]+)\\s+AS\\s+(\\w+)\\s*(,)?").r
-      nextVal.findFirstMatchIn(maskLiterals(text)) match {
+      nextVal.findFirstMatchIn(mask(text)) match {
         case Some(m) =>
           val kind = text.substring(m.start(1), m.end(1)).toUpperCase(java.util.Locale.ROOT)
           // quoted/qualified spellings (`s`.`my_seq`) resolve by the
@@ -116,10 +121,10 @@ object GraftSql {
     * same statement with its REPLACE list dropped and reordering to that
     * schema — skipped when names are ambiguous or the shapes differ. */
   private def starReplaceOrder(spark: SparkSession, text: String, df: DataFrame): DataFrame = {
-    val masked = maskLiterals(text)
+    val masked = mask(text)
     val m = "(?is)\\*\\s+REPLACE\\s*\\(".r.findFirstMatchIn(masked).getOrElse(return df)
     val open = m.end - 1
-    val close = closeParen(masked, open)
+    val close = closeOf(masked, open)
     if (close < 0) return df
     val plain = text.substring(0, m.start + 1) + text.substring(close + 1)
     try {
@@ -182,14 +187,13 @@ object GraftSql {
     if (first.head.errorClass == "PARSE_SYNTAX_ERROR") return first
 
     // per-select-item decomposition of the outer SELECT
-    val masked = maskLiterals(clean)
+    val masked = mask(clean)
     val up = clean.trim.toUpperCase
     val selAt = masked.toUpperCase.indexOf("SELECT")
     val fromAt = topLevelIndex(masked, "FROM")
     if (!up.startsWith("SELECT") || fromAt < 0) return first
     val listStart = selAt + "SELECT".length
-    val items = splitTopLevel(clean.substring(listStart, fromAt))
-    if (items.isEmpty) return first
+    val items = commaRanges(masked, listStart, fromAt)
     val tail = clean.substring(fromAt)
     // select items re-analyze over the FROM clause alone — a failing
     // WHERE/GROUP side must not mask an item's own diagnostic (the
@@ -205,10 +209,9 @@ object GraftSql {
       val col = offset - (upTo.lastIndexOf('\n') + 1)
       (Some(line), Some(col))
     }
-    var cursor = listStart
-    val perItem = items.flatMap { it =>
-      val at = cursor + it.takeWhile(_.isWhitespace).length
-      cursor += it.length + 1 // the consumed comma
+    val perItem = items.flatMap { case (a, b) =>
+      val it = clean.substring(a, b)
+      val at = a + it.takeWhile(_.isWhitespace).length
       validateOne(spark, s"SELECT ${it.trim} $fromOnly").map { e =>
         val (l, c) = position(at)
         e.copy(line = l, column = c)
@@ -306,46 +309,6 @@ object GraftSql {
     sb.toString
   }
 
-  /** Same-length copy with every char INSIDE a '...' literal replaced by
-    * U+0001 (quotes preserved): regexes FIND on the mask — positions map
-    * 1:1 — while replacement text is spliced from the original, so a
-    * keyword inside a string literal or a backtick-quoted identifier can
-    * never trigger a rewrite (backtick content is masked too). */
-  private[graft] def maskLiterals(s: String): String = {
-    val a = s.toCharArray
-    var inStr = false
-    var inTick = false
-    var i = 0
-    while (i < a.length) {
-      if (inStr) { if (a(i) == '\'') inStr = false else a(i) = '\u0001' }
-      else if (inTick) { if (a(i) == '`') inTick = false else a(i) = '\u0001' }
-      else if (a(i) == '\'') inStr = true
-      else if (a(i) == '`') inTick = true
-      i += 1
-    }
-    new String(a)
-  }
-
-  /** replaceAllIn driven by matches on the MASKED text; `f` receives the
-    * masked match (positions valid in the original) plus the original
-    * text for group extraction. */
-  private[sql] def replaceMasked(sql: String, re: scala.util.matching.Regex)(
-      f: (scala.util.matching.Regex.Match, String) => String): String = {
-    val sb = new StringBuilder
-    var last = 0
-    re.findAllMatchIn(maskLiterals(sql)).foreach { m =>
-      sb.append(sql.substring(last, m.start)).append(f(m, sql))
-      last = m.end
-    }
-    sb.append(sql.substring(last))
-    sb.toString
-  }
-
-  /** Group `i` of a masked match, read from the ORIGINAL text (masked
-    * group content would have its literal chars destroyed). */
-  private[sql] def origGroup(m: scala.util.matching.Regex.Match, orig: String, i: Int): String =
-    if (m.start(i) < 0) null else orig.substring(m.start(i), m.end(i))
-
   /** Statement-level DDL the engine owns (ref: server module,
     * sql/ddl/SqlCreateSequence via SqlDdlParserImpl): CREATE/DROP
     * SEQUENCE route to the sequence catalog; all other DDL (CREATE
@@ -371,8 +334,6 @@ object GraftSql {
         .orElse(ForeignSchemaSql.maybeRun(spark, text))
     }
   }
-
-  private[graft] def rewriteProbe(sql: String): String = rewrite(sql)
 
   /** Conformance-harness toggle (CorpusSpec only): make the reference's
     * Oracle-style default null ordering explicit AFTER every other
@@ -417,50 +378,28 @@ object GraftSql {
     * distinct deptno, count(*) as c ... order by count(*)`), ordering
     * by the alias is equivalent. Substitute it. */
   private[graft] def rewriteDistinctOrderByAlias(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     if ("(?is)^\\s*SELECT\\s+DISTINCT\\b".r.findFirstIn(masked).isEmpty) return sql
     def norm(s: String) = s.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", "")
     // select items: DISTINCT .. top-level FROM
     val selM = "(?is)^\\s*SELECT\\s+DISTINCT\\s".r.findFirstMatchIn(masked).getOrElse(return sql)
-    var i = selM.end
-    var depth = 0
-    var fromAt = -1
-    while (i < masked.length && fromAt < 0) {
-      val c = masked.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && masked.regionMatches(true, i, "FROM", 0, 4) &&
-        !masked.charAt(i - 1).isLetterOrDigit &&
-        (i + 4 >= masked.length || !masked.charAt(i + 4).isLetterOrDigit)) fromAt = i
-      i += 1
-    }
+    val fromAt = topLevelIndex(masked, "FROM", selM.end)
     if (fromAt < 0) return sql
-    val aliasOf = splitElemsOf(sql, masked, selM.end, fromAt).flatMap { item =>
+    val aliasOf = splitElems(sql, masked, selM.end, fromAt).flatMap { item =>
       "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_]\\w*|`[^`]*`)\\s*$".r.findFirstMatchIn(item.trim)
         .map(mm => norm(mm.group(1)) -> mm.group(2))
     }.toMap
     if (aliasOf.isEmpty) return sql
     // top-level ORDER BY after FROM
-    val obM = "(?is)\\bORDER\\s+BY\\s".r.findAllMatchIn(masked).filter { m =>
-      m.start > fromAt && {
-        val pre = masked.substring(fromAt, m.start)
-        pre.count(_ == '(') == pre.count(_ == ')')
-      }
-    }.toSeq.lastOption.getOrElse(return sql)
-    var j = obM.end - 1
-    depth = 0
-    var obEnd = -1
-    while (j < masked.length && obEnd < 0) {
-      val c = masked.charAt(j)
-      if (c == '(') depth += 1
-      else if (c == ')') { if (depth == 0) obEnd = j else depth -= 1 }
-      else if (depth == 0 && !masked.charAt(j - 1).isLetterOrDigit &&
-        "(?is)^(LIMIT|OFFSET|FETCH)\\b".r.findFirstIn(masked.substring(j)).isDefined) obEnd = j
-      j += 1
+    val ob = lastTopLevelIndex(masked, "ORDER BY")
+    if (ob < fromAt) return sql
+    val byEnd = matchWords(masked, ob, Array("ORDER", "BY"))
+    val obEnd = clauseEnd(masked, byEnd, "LIMIT", "OFFSET", "FETCH") match {
+      case e if e == masked.length => sql.replaceAll("[;\\s]+$", "").length
+      case e => e
     }
-    if (obEnd < 0) obEnd = sql.replaceAll("[;\\s]+$", "").length
     var changed = false
-    val newItems = splitElemsOf(sql, masked, obM.end - 1, obEnd).map { item =>
+    val newItems = splitElems(sql, masked, byEnd, obEnd).map { item =>
       val t = item.trim
       val sm = "(?is)^(.*?)(\\s+(?:ASC|DESC))?(\\s+NULLS\\s+(?:FIRST|LAST))?\\s*$".r
         .findFirstMatchIn(t).get
@@ -477,7 +416,7 @@ object GraftSql {
       }
     }
     if (!changed) sql
-    else sql.substring(0, obM.end - 1) + " " + newItems.mkString(", ") + sql.substring(obEnd)
+    else sql.substring(0, byEnd) + " " + newItems.mkString(", ") + sql.substring(obEnd)
   }
 
   /** Rank-family window calls WITHOUT an ORDER BY (winagg.iq:553 —
@@ -488,17 +427,17 @@ object GraftSql {
     * (= the whole partition under a constant key), matching
     * `nth_value(...) over ()`. */
   private[graft] def rewriteUnorderedWindow(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val re = ("(?is)\\b(row_number|rank|dense_rank|ntile|nth_value|" +
       "cume_dist|percent_rank)\\s*\\(").r
     for (m <- re.findAllMatchIn(masked)) {
       val argOpen = masked.indexOf('(', m.start)
-      val argClose = closeParen(masked, argOpen)
+      val argClose = closeOf(masked, argOpen)
       if (argClose > 0) {
         val om = "(?is)^\\s*OVER\\s*\\(".r.findFirstMatchIn(masked.substring(argClose + 1))
         om.foreach { o =>
           val oOpen = argClose + 1 + o.end - 1
-          val oClose = closeParen(masked, oOpen)
+          val oClose = closeOf(masked, oOpen)
           if (oClose > 0 &&
               "(?is)\\bORDER\\s+BY\\b".r.findFirstIn(masked.substring(oOpen, oClose)).isEmpty) {
             val sep = if (sql.substring(oOpen + 1, oClose).trim.isEmpty) "" else " "
@@ -520,25 +459,14 @@ object GraftSql {
     * non-empty, or when the subquery contains a NULL; else FALSE.
     * WHERE-clause forms keep Spark's native (correct) semi-join path. */
   private[graft] def rewriteProjectionIn(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val selM = "(?is)^\\s*SELECT\\s".r.findFirstMatchIn(masked).getOrElse(return sql)
-    var i = selM.end
-    var depth = 0
-    var fromAt = -1
-    while (i < masked.length && fromAt < 0) {
-      val c = masked.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && masked.regionMatches(true, i, "FROM", 0, 4) &&
-          !masked.charAt(i - 1).isLetterOrDigit &&
-          (i + 4 >= masked.length || !masked.charAt(i + 4).isLetterOrDigit)) fromAt = i
-      i += 1
-    }
+    val fromAt = topLevelIndex(masked, "FROM", selM.end)
     if (fromAt < 0) return sql
     for (m <- "(?is)\\b(NOT\\s+)?IN\\s*\\(".r.findAllMatchIn(masked.substring(0, fromAt))
            if m.start > selM.end) {
       val open = masked.indexOf('(', m.end - 1)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (close > 0 && close < fromAt &&
           "(?is)^\\s*(SELECT|WITH)\\b".r.findFirstIn(masked.substring(open + 1, close)).isDefined) {
         // LHS: a single identifier/qualified identifier or literal
@@ -579,21 +507,14 @@ object GraftSql {
     * identical (FALSE AND UNKNOWN = FALSE; OR yields UNKNOWN only with
     * no TRUE). Subquery RHS passes through untouched. */
   private[graft] def rewriteTupleInList(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     for (m <- "(?is)\\)\\s*(NOT\\s+)?IN\\s*\\(".r.findAllMatchIn(masked)) {
       val rOpen = masked.indexOf('(', m.end - 1)
-      val rClose = closeParen(masked, rOpen)
+      val rClose = closeOf(masked, rOpen)
       val firstIn = masked.substring(rOpen + 1, if (rClose > 0) rClose else masked.length).trim
       if (rClose > 0 && firstIn.startsWith("(")) {
         // LHS tuple: the ')' at m.start closes it
-        var depth = 1
-        var i = m.start - 1
-        while (i >= 0 && depth > 0) {
-          val c = masked.charAt(i)
-          if (c == ')') depth += 1 else if (c == '(') depth -= 1
-          if (depth > 0) i -= 1
-        }
-        val lOpen = i
+        val lOpen = openOf(masked, m.start)
         // must be a bare tuple, not a function call or subquery: a
         // preceding identifier makes it a call UNLESS it's a keyword
         val isCall = lOpen > 0 && {
@@ -606,8 +527,8 @@ object GraftSql {
             "(?is)[`\\)\\d]\\s*$".r.findFirstIn(before).isDefined)
         }
         if (lOpen >= 0 && !isCall) {
-          val lhs = splitElemsOf(sql, masked, lOpen + 1, m.start)
-          val rhsTuples = splitElemsOf(sql, masked, rOpen + 1, rClose)
+          val lhs = splitElems(sql, masked, lOpen + 1, m.start)
+          val rhsTuples = splitElems(sql, masked, rOpen + 1, rClose)
           val allTuples = rhsTuples.forall(_.trim.startsWith("("))
           // a row SUBQUERY on either side is not a tuple — splitting it
           // on commas would corrupt it
@@ -617,8 +538,8 @@ object GraftSql {
               rhsTuples.exists(t => subqRe.findFirstIn(t.trim).isDefined)
           if (lhs.length >= 2 && allTuples && !anySubq) {
             val tuples = rhsTuples.map { t =>
-              val tm = maskLiterals(t)
-              splitElemsOf(t, tm, tm.indexOf('(') + 1, closeParen(tm, tm.indexOf('(')))
+              val tm = mask(t)
+              splitElems(t, tm, tm.indexOf('(') + 1, closeOf(tm, tm.indexOf('(')))
             }
             if (tuples.forall(_.length == lhs.length)) {
               val ors = tuples.map(vals =>
@@ -636,15 +557,6 @@ object GraftSql {
     sql
   }
 
-  /** Top-level comma elements of sql[from, to), split on the MASKED
-    * twin so literals never break the split (shared by the tuple-IN,
-    * grouping-sets, and unpivot rewrites). */
-  private[sql] def splitElemsOf(sql: String, masked: String, from: Int, to: Int): Seq[String] = {
-    val lens = splitTopLevel(masked.substring(from, to)).map(_.length)
-    val starts = lens.scanLeft(0)((a, b) => a + b + 1).init
-    starts.zip(lens).map { case (st, n) => sql.substring(from + st, from + st + n).trim }
-  }
-
   /** Single-field row comparison `ROW(a) <op> ROW(b)` (misc.iq:165) —
     * unwrap to the scalar comparison so Spark's implicit coercions apply
     * (struct comparison requires identical field types). Runs before the
@@ -658,12 +570,12 @@ object GraftSql {
     * pivot clause takes no alias, so wrap the pivot in a subquery and
     * alias that. */
   private def rewritePivotAlias(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val pAt = topLevelIndex(masked, "PIVOT")
     if (pAt < 0) return sql
     val open = masked.indexOf('(', pAt)
     if (open < 0) return sql
-    val close = closeParen(masked, open)
+    val close = closeOf(masked, open)
     if (close < 0) return sql
     val aliasRe = "(?is)^\\s*AS\\s+(\\w+)".r
     val am = aliasRe.findFirstMatchIn(masked.substring(close + 1)).getOrElse(return sql)
@@ -686,8 +598,8 @@ object GraftSql {
     * (`comm AS 'commission'`, SqlUnpivot); Spark spells them as alias
     * identifiers. Scoped to statements containing UNPIVOT. */
   private def rewriteUnpivotLabel(sql: String): String = {
-    val masked0 = maskLiterals(sql)
-    val up = topLevelIndexAnyDepth(masked0, "UNPIVOT")
+    val masked0 = mask(sql)
+    val up = anyDepthIndex(masked0, "UNPIVOT")
     if (up < 0) return sql
     replaceMasked(sql, "(?is)\\bAS\\s+('[^']*')".r)((m, o) =>
       "AS `" + origGroup(m, o, 1).stripPrefix("'").stripSuffix("'") + "`")
@@ -699,19 +611,19 @@ object GraftSql {
     * behavior, applied by the conformance harness only (the product
     * surface is Spark's case-preserving one; q135 depends on it). */
   private[graft] def upperUnpivotLabels(s1: String): String = {
-    val masked = maskLiterals(s1)
-    val upAt = topLevelIndexAnyDepth(masked, "UNPIVOT")
+    val masked = mask(s1)
+    val upAt = anyDepthIndex(masked, "UNPIVOT")
     if (upAt < 0) return s1
     val open = masked.indexOf('(', upAt)
     if (open < 0) return s1
-    val close = closeParen(masked, open)
+    val close = closeOf(masked, open)
     if (close < 0) return s1
     val inAt = masked.substring(0, close).toUpperCase.indexOf(" IN ", open)
     if (inAt < 0) return s1
     val listOpen = masked.indexOf('(', inAt)
-    val listClose = closeParen(masked, listOpen)
+    val listClose = closeOf(masked, listOpen)
     if (listOpen < 0 || listClose < 0 || listClose > close) return s1
-    val entries = splitTopLevel(s1.substring(listOpen + 1, listClose)).map { e =>
+    val entries = splitTop(s1.substring(listOpen + 1, listClose)).map { e =>
       val t = e.trim
       if (t.matches("\\w+")) s"$t AS `${t.toUpperCase}`" else t
     }
@@ -727,7 +639,7 @@ object GraftSql {
     * IF-range-check BEFORE the casts lower (single pass — the wrapped
     * text re-embeds the casts, which rewriteUnsignedCast then lowers). */
   private def rewriteUnsignedArith(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val maxOf = Map("TINYINT" -> BigInt(255), "SMALLINT" -> BigInt(65535),
       "INT" -> BigInt("4294967295"), "INTEGER" -> BigInt("4294967295"),
       "" -> BigInt("4294967295"), "BIGINT" -> BigInt("18446744073709551615"))
@@ -737,7 +649,7 @@ object GraftSql {
     var last = 0
     for (m <- castRe.findAllMatchIn(masked) if m.start >= last) {
       val open = masked.indexOf('(', m.start)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (close > 0) {
         val inner = masked.substring(open + 1, close)
         unsTypeRe.findFirstMatchIn(inner).foreach { tm =>
@@ -777,7 +689,7 @@ object GraftSql {
               (masked.charAt(end).isLetterOrDigit || masked.charAt(end) == '_' ||
                 masked.charAt(end) == '.')) end += 1
             if (end < masked.length && masked.charAt(end) == '(') {
-              val c2 = closeParen(masked, end)
+              val c2 = closeOf(masked, end)
               if (c2 > 0) end = c2 + 1
             }
             if (end > k && m.start >= last) {
@@ -839,16 +751,16 @@ object GraftSql {
     var changed = true
     while (changed) {
       changed = false
-      val masked = maskLiterals(cur)
+      val masked = mask(cur)
       var i = if (masked.toUpperCase.contains("UNSIGNED"))
         masked.toUpperCase.indexOf("CAST") else -1
       while (i >= 0 && !changed) {
         val open = masked.indexOf('(', i + 4)
         val onlyWs = open > 0 && masked.substring(i + 4, open).forall(_.isWhitespace)
-        val close = if (onlyWs) closeParen(masked, open) else -1
+        val close = if (onlyWs) closeOf(masked, open) else -1
         if (close > 0) {
           val innerM = masked.substring(open + 1, close)
-          val asAt = topLevelIndexLast(innerM, "AS")
+          val asAt = lastTopLevelIndex(innerM, "AS")
           if (asAt >= 0) typeRe.findFirstMatchIn(innerM.substring(asAt)).foreach { m =>
             val e = cur.substring(open + 1, open + 1 + asAt).trim
             val (c, max) = carriers(m.group(1).toUpperCase)
@@ -868,14 +780,6 @@ object GraftSql {
     cur
   }
 
-  /** Last top-level occurrence of a keyword (word-bounded, depth 0). */
-  private def topLevelIndexLast(s: String, kw: String): Int = {
-    var last = -1
-    var at = topLevelIndex(s, kw)
-    while (at >= 0) { last = at; at = topLevelIndex(s, kw, at + kw.length) }
-    last
-  }
-
   /** VARIANT operations Spark's analyzer rejects (variant.iq):
     *  - equality: the reference delegates to the contained values,
     *    requiring the same runtime type (variant.iq:108-117) — lowered
@@ -887,7 +791,7 @@ object GraftSql {
     *    ITEM over a variant array, null for non-arrays (variant.iq:131)
     *    → `try_variant_get(.., '$[n-1]')`. */
   private def rewriteVariantOps(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     if (!masked.toUpperCase.contains("VARIANT")) return sql
     val vshape = "(?is)(CAST\\s*\\((?:[^()]|\\([^()]*\\))*AS\\s+VARIANT\\s*\\)|VARIANTNULL\\s*\\(\\s*\\))"
     val eqRe = (vshape + "\\s*=\\s*" + vshape).r
@@ -927,11 +831,11 @@ object GraftSql {
       var changed = true
       while (changed) {
         changed = false
-        val masked = maskLiterals(cur)
+        val masked = mask(cur)
         val re = "(?is)\\bCAST\\s*\\(".r
         for (m <- re.findAllMatchIn(masked) if !changed) {
           val open = masked.indexOf('(', m.start)
-          val close = closeParen(masked, open)
+          val close = closeOf(masked, open)
           if (close > 0) {
             val innerM = masked.substring(open + 1, close)
             if ("(?is)^\\s*MAP\\s*[\\[(].*\\bAS\\s+VARIANT\\s*$".r.matches(innerM)) {
@@ -992,11 +896,11 @@ object GraftSql {
       var go = true
       while (go) {
         go = false
-        val masked = maskLiterals(cur)
+        val masked = mask(cur)
         val re = "(?is)\\bCAST\\s*\\(".r
         for (m <- re.findAllMatchIn(masked) if !go) {
           val open = masked.indexOf('(', m.start)
-          val close = closeParen(masked, open)
+          val close = closeOf(masked, open)
           if (close > 0) {
             val innerM = masked.substring(open + 1, close)
             val pm = "(?is)\\bAS\\s+TIMESTAMP\\s*\\(\\s*(\\d)\\s*\\)\\s*$".r.findFirstMatchIn(innerM)
@@ -1097,7 +1001,7 @@ object GraftSql {
     * subquery machinery, one pass, scale-free. */
   private def rewriteLateralValues(sql: String): String = {
     val re = "(?is)(\\bCROSS\\s+JOIN\\s+|,\\s*)?\\bLATERAL\\s*\\(\\s*VALUES\\b".r
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val m = re.findAllMatchIn(masked).toSeq.headOption.getOrElse(return sql)
     // only FROM-item positions lower to LATERAL VIEW: `LEFT/INNER JOIN
     // LATERAL (VALUES ...) ON ...` would leave its ON clause dangling,
@@ -1110,11 +1014,11 @@ object GraftSql {
       if (!fromAt) return sql
     }
     val open = masked.indexOf('(', m.start)
-    val close = closeParen(masked, open)
+    val close = closeOf(masked, open)
     if (close < 0) return sql
     val valuesAt = masked.toUpperCase(java.util.Locale.ROOT).indexOf("VALUES", open)
     val rowsTxt = sql.substring(valuesAt + 6, close)
-    val rows = splitTopLevel(rowsTxt).map(_.trim)
+    val rows = splitTop(rowsTxt).map(_.trim)
     // every row must be a parenthesized tuple
     if (rows.isEmpty || !rows.forall(r => r.startsWith("(") && r.endsWith(")")))
       return sql
@@ -1127,7 +1031,7 @@ object GraftSql {
     // field to its output column name
     val colNames = cols.split(",").map(_.trim)
     val structs = rows.map { r =>
-      val items = splitTopLevel(r.substring(1, r.length - 1))
+      val items = splitTop(r.substring(1, r.length - 1))
       if (items.length != colNames.length) return sql
       items.zip(colNames).map { case (v, c) => s"($v) AS $c" }
         .mkString("struct(", ", ", ")")
@@ -1156,16 +1060,16 @@ object GraftSql {
     * before the constructor rewrite turns ROW into struct. */
   private def rewriteRowNullCheck(sql: String): String = {
     def fieldsNull(args: String): String =
-      splitTopLevel(args).map(_.trim).map { f =>
+      splitTop(args).map(_.trim).map { f =>
         "(?is)^ROW\\s*\\((.*)\\)$".r.findFirstMatchIn(f) match {
           case Some(inner) => fieldsNull(inner.group(1))
           case None => s"$f IS NULL"
         }
       }.mkString("(", " AND ", ")")
     val re = "(?is)\\bROW\\s*\\(".r
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val hit = re.findAllMatchIn(masked).flatMap { m =>
-      val close = closeParen(masked, masked.indexOf('(', m.start))
+      val close = closeOf(masked, masked.indexOf('(', m.start))
       if (close < 0) None
       else "(?is)^\\s*IS\\s+(NOT\\s+)?NULL".r.findFirstMatchIn(masked.substring(close + 1))
         .map(t => (m.start, close, t.group(1) != null, close + 1 + t.end))
@@ -1194,7 +1098,7 @@ object GraftSql {
     * wraps in ANY_VALUE; the reference's enumerable engine computes
     * ANY_VALUE as MAX, so MAX is used here for value parity). */
   private def rewriteSelectBy(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val selRe = "(?is)^\\s*SELECT\\s".r
     if (selRe.findFirstIn(masked).isEmpty) return sql
     val fromAt = topLevelIndex(masked, "FROM")
@@ -1202,8 +1106,8 @@ object GraftSql {
     val byAt = topLevelIndex(masked, "BY")
     if (byAt < 0 || byAt >= fromAt) return sql
     val selStart = masked.toUpperCase.indexOf("SELECT") + "SELECT".length
-    val selItems = splitTopLevel(sql.substring(selStart, byAt))
-    val byItems = splitTopLevel(sql.substring(byAt + 2, fromAt))
+    val selItems = splitTop(sql.substring(selStart, byAt))
+    val byItems = splitTop(sql.substring(byAt + 2, fromAt))
     if (byItems.isEmpty || selItems.isEmpty) return sql
     val byRe = "(?is)^(.*?)(?:\\s+AS\\s+(\\w+))?(\\s+(?:ASC|DESC))?(\\s+NULLS\\s+(?:FIRST|LAST))?\\s*$".r
     case class By(expr: String, alias: Option[String], mods: String)
@@ -1234,20 +1138,20 @@ object GraftSql {
     * among the items (select.iq:390) ranks the full input, not the
     * one-per-group survivors, matching the reference. */
   private[graft] def rewriteDistinctOn(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val re = "(?is)^(\\s*SELECT\\s+)DISTINCT\\s+ON\\s*\\(".r
     val m = re.findFirstMatchIn(masked).getOrElse(return sql)
     val open = m.end - 1
-    val close = closeParen(masked, open)
+    val close = closeOf(masked, open)
     if (close < 0) return sql
-    val keys = splitTopLevel(sql.substring(open + 1, close)).map(_.trim)
+    val keys = splitTop(sql.substring(open + 1, close)).map(_.trim)
     val fromAt = topLevelIndex(masked, "FROM", close + 1)
     if (fromAt < 0) return sql
     val orderAt = topLevelIndex(masked, "ORDER", fromAt)
     if (orderAt < 0) return sql // Postgres requires the ORDER BY; let Spark report
     val byAt = topLevelIndex(masked, "BY", orderAt)
     val orderList = sql.substring(byAt + 2).trim.stripSuffix(";")
-    val items = splitTopLevel(sql.substring(close + 1, fromAt)).map(_.trim)
+    val items = splitTop(sql.substring(close + 1, fromAt)).map(_.trim)
     val rest = sql.substring(fromAt + 4, orderAt).trim
     // bare columns pass through *; computed items materialize inner-side
     val colRe = "(?is)^[\\w.`]+$".r
@@ -1287,36 +1191,13 @@ object GraftSql {
     * semicolon is stripped before the LIMIT is appended. */
   private def rewriteTop(sql: String): String = {
     val re = "(?is)^(\\s*SELECT)\\s+TOP\\s+(\\d+)\\s".r
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     re.findFirstMatchIn(masked) match {
-      case Some(m) if !hasTopLevelSetOp(masked, m.end) =>
+      case Some(m) if !Seq("UNION", "INTERSECT", "EXCEPT").exists(topLevelIndex(masked, _, m.end) >= 0) =>
         val body = sql.substring(m.end).replaceFirst("(?s)\\s*;\\s*$", "")
         sql.substring(0, m.end(1)) + " " + body + s" LIMIT ${m.group(2)}"
       case _ => sql
     }
-  }
-
-  /** True if a paren-depth-0 UNION / INTERSECT / EXCEPT keyword occurs at
-    * or after `from` in the masked text (literals already neutralized). */
-  private def hasTopLevelSetOp(masked: String, from: Int): Boolean = {
-    val up = masked.toUpperCase
-    var depth = 0
-    var i = from
-    while (i < up.length) {
-      up.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0)
-            for (kw <- Seq("UNION", "INTERSECT", "EXCEPT"))
-              if (up.startsWith(kw, i) &&
-                  (i == 0 || !up.charAt(i - 1).isLetterOrDigit) &&
-                  (i + kw.length >= up.length || !up.charAt(i + kw.length).isLetterOrDigit))
-                return true
-      }
-      i += 1
-    }
-    false
   }
 
   /** Windowing table-valued functions TUMBLE/HOP/SESSION: full grammar
@@ -1398,13 +1279,14 @@ object GraftSql {
     * dynamic-table case the clause exists for. */
   private[sql] def rewriteExtend(sql: String): String = {
     val re = "(?is)\\bFROM\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+EXTEND\\s*\\(".r
-    re.findFirstMatchIn(maskLiterals(sql)) match {
+    val masked = mask(sql)
+    re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
         val open = m.end - 1
-        val close = closeParen(sql, open)
+        val close = closeOf(masked, open)
         if (close < 0) return sql
-        val decls = splitTopLevel(sql.substring(open + 1, close)).map(_.trim).map { d =>
+        val decls = splitTop(sql.substring(open + 1, close)).map(_.trim).map { d =>
           val parts = d.split("\\s+", 2)
           require(parts.length == 2, s"EXTEND: malformed column declaration '$d'")
           s"CAST(NULL AS ${parts(1)}) AS ${parts(0)}"
@@ -1426,12 +1308,13 @@ object GraftSql {
     * (fixed.calcite6375) and stay unsupported here. */
   private def rewriteCastFormat(sql: String): String = {
     val kw = "CAST"
-    var at = topLevelIndexAnyDepth(sql, kw)
+    val masked = mask(sql)
+    var at = anyDepthIndex(masked, kw)
     while (at >= 0) {
-      val open = sql.indexOf('(', at + kw.length)
-      if (open < 0 || sql.substring(at + kw.length, open).trim.nonEmpty)
+      val open = masked.indexOf('(', at + kw.length)
+      if (open < 0 || masked.substring(at + kw.length, open).trim.nonEmpty)
         return sql
-      val close = closeParen(sql, open)
+      val close = closeOf(masked, open)
       if (close < 0) return sql
       val inner = sql.substring(open + 1, close)
       val re = "(?is)^(.*\\S)\\s+AS\\s+(\\w+)\\s+FORMAT\\s*'((?:[^']|'')*)'\\s*$".r
@@ -1451,8 +1334,7 @@ object GraftSql {
             sql.substring(0, at) + lowered + sql.substring(close + 1))
         case _ =>
           // plain CAST — look for the next one
-          val next = topLevelIndexAnyDepth(sql.substring(at + kw.length), kw)
-          at = if (next < 0) -1 else at + kw.length + next
+          at = anyDepthIndex(masked, kw, at + kw.length)
       }
     }
     sql
@@ -1467,13 +1349,14 @@ object GraftSql {
     * identical results. */
   private def rewriteStarReplace(sql: String): String = {
     val re = "(?is)\\*\\s+REPLACE\\s*\\(".r
-    re.findFirstMatchIn(maskLiterals(sql)) match {
+    val masked = mask(sql)
+    re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
         val open = m.end - 1
-        val close = closeParen(sql, open)
+        val close = closeOf(masked, open)
         if (close < 0) return sql
-        val items0 = splitTopLevel(sql.substring(open + 1, close))
+        val items0 = splitTop(sql.substring(open + 1, close))
         // a QUALIFIED star's REPLACE targets must carry the same
         // qualifier (e.* REPLACE(x AS d.deptno) is "unknown column" —
         // select.iq:330); matching qualifiers strip to the simple name
@@ -1500,26 +1383,6 @@ object GraftSql {
     }
   }
 
-  /** Split on top-level commas (paren- and string-aware). */
-  private[sql] def splitTopLevel(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var inStr = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (c == ',' && depth == 0) { out += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
-  }
-
   /** Lower SQL/JSON `JSON_VALUE(doc, 'path' [behavior ON EMPTY]
     * [behavior ON ERROR])` (behavior = NULL | ERROR | DEFAULT <expr>;
     * ref: SqlStdOperatorTable.java:1655, runtime/JsonFunctions.java) to
@@ -1528,18 +1391,15 @@ object GraftSql {
     * nothing (ON EMPTY) — same lowering as functions/JsonValue.scala. */
   private def rewriteJsonValue(sql: String): String = {
     val kw = "JSON_VALUE"
-    val at = topLevelIndexAnyDepth(sql, kw)
+    val masked = mask(sql)
+    val at = anyDepthIndex(masked, kw)
     if (at < 0) return sql
-    val open = sql.indexOf('(', at + kw.length)
+    val open = masked.indexOf('(', at + kw.length)
     if (open < 0) return sql
-    val close = closeParen(sql, open)
+    val close = closeOf(masked, open)
     if (close < 0) return sql
-    val inner = sql.substring(open + 1, close)
     // first top-level comma separates doc from path+behaviors
-    val comma = topLevelIndex(inner, ",", wordy = false)
-    if (comma < 0) return sql
-    val doc = inner.substring(0, comma).trim
-    val rest = inner.substring(comma + 1).trim
+    val (doc, rest) = docAndRest(sql, masked, open, close).getOrElse(return sql)
     // path is a leading quoted string
     if (!rest.startsWith("'")) return sql
     var pe = 1
@@ -1573,6 +1433,14 @@ object GraftSql {
     rewriteJsonValue(sql.substring(0, at) + lowered + sql.substring(close + 1))
   }
 
+  /** The trimmed first argument of the call whose parens are at
+    * (open, close), and the trimmed rest after its depth-0 comma. */
+  private def docAndRest(sql: String, masked: String, open: Int, close: Int): Option[(String, String)] =
+    commaRanges(masked, open + 1, close) match {
+      case Seq(_) => None
+      case (a, b) +: _ => Some((sql.substring(a, b).trim, sql.substring(b + 1, close).trim))
+    }
+
   /** `ROW(t1.*, t2.*).<name><N>` — the reference uniquifies duplicate
     * row-field names with a numeric suffix (SqlValidatorUtil.uniquify:
     * the first occurrence keeps the name, the k-th duplicate becomes
@@ -1587,7 +1455,7 @@ object GraftSql {
     replaceMasked(sql, re) { (m, o) =>
       val whole = o.substring(m.start, m.end)
       try {
-        val args = splitTopLevel(o.substring(m.start(1), m.end(1))).map(_.trim)
+        val args = splitTop(o.substring(m.start(1), m.end(1))).map(_.trim)
         val fields = args.flatMap { a =>
           "(?is)^([A-Za-z_]\\w*)\\s*\\.\\s*\\*$".r.findFirstMatchIn(a) match {
             case Some(t) =>
@@ -1624,17 +1492,14 @@ object GraftSql {
     * the simple member paths Spark's JSONPath accepts). */
   private def rewriteJsonExists(sql: String): String = {
     val kw = "JSON_EXISTS"
-    val at = topLevelIndexAnyDepth(sql, kw)
+    val masked = mask(sql)
+    val at = anyDepthIndex(masked, kw)
     if (at < 0) return sql
-    val open = sql.indexOf('(', at + kw.length)
+    val open = masked.indexOf('(', at + kw.length)
     if (open < 0) return sql
-    val close = closeParen(sql, open)
+    val close = closeOf(masked, open)
     if (close < 0) return sql
-    val inner = sql.substring(open + 1, close)
-    val comma = topLevelIndex(inner, ",", wordy = false)
-    if (comma < 0) return sql
-    val doc = inner.substring(0, comma).trim
-    val rest = inner.substring(comma + 1).trim
+    val (doc, rest) = docAndRest(sql, masked, open, close).getOrElse(return sql)
     if (!rest.startsWith("'")) return sql
     var pe = 1
     while (pe < rest.length && rest.charAt(pe) != '\'') pe += 1
@@ -1653,127 +1518,6 @@ object GraftSql {
          WHEN get_json_object(($doc), '$$') IS NULL THEN $onError
          ELSE get_json_object(($doc), '$path') IS NOT NULL END"""
     rewriteJsonExists(sql.substring(0, at) + lowered + sql.substring(close + 1))
-  }
-
-  /** topLevelIndex ignoring paren depth (JSON_VALUE sits inside select
-    * lists, i.e. at arbitrary depth); still string-aware. When
-    * wordy=false matches a bare character sequence at depth 0 only. */
-  private[sql] def topLevelIndexAnyDepth(s: String, keyword: String): Int = {
-    val words = keyword.toUpperCase.split("\\s+")
-    var inStr = false
-    var inTick = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else if (c == '\'') inStr = true
-      else if (c == '`') inTick = true
-      else if (matchWords(s, i, words) >= 0) return i
-      i += 1
-    }
-    -1
-  }
-
-  /** Depth-0, string-aware index of a single character token. */
-  private def topLevelIndex(s: String, token: String, wordy: Boolean): Int = {
-    var depth = 0
-    var inStr = false
-    var inTick = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ => if (depth == 0 && s.startsWith(token, i)) return i
-      }
-      i += 1
-    }
-    -1
-  }
-
-  // ---- lexer-lite helpers ---------------------------------------------
-
-  /** Index of a top-level (depth-0, outside strings) case-insensitive
-    * keyword sequence; -1 if absent. Multi-word keywords ("ORDER BY")
-    * match with any run of whitespace between the words. */
-  private[sql] def topLevelIndex(s: String, keyword: String, from: Int = 0): Int = {
-    val words = keyword.toUpperCase.split("\\s+")
-    var depth = 0
-    var inStr = false
-    var inTick = false
-    var i = from
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (inTick) { if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inStr = true
-        case '`' => inTick = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          if (depth == 0 && matchWords(s, i, words) >= 0) return i
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** If the whole-word keyword sequence `words` starts at `start`, return
-    * the index just past it; -1 otherwise. */
-  private[sql] def matchWords(s: String, start: Int, words: Array[String]): Int = {
-    if (start > 0 && isWordChar(s.charAt(start - 1))) return -1
-    var i = start
-    var w = 0
-    while (w < words.length) {
-      val kw = words(w)
-      if (!s.regionMatches(true, i, kw, 0, kw.length)) return -1
-      i += kw.length
-      if (i < s.length && isWordChar(s.charAt(i))) return -1
-      w += 1
-      if (w < words.length) {
-        val j = i
-        while (i < s.length && s.charAt(i).isWhitespace) i += 1
-        if (i == j) return -1
-      }
-    }
-    i
-  }
-
-  private[sql] def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
-
-  /** Index of the ')' matching the '(' at `open` (string-aware). */
-  /** Index of the '(' matching the ')' at `close`, or -1. */
-  private[sql] def openParenOf(s: String, close: Int): Int = {
-    var depth = 0
-    var i = close
-    while (i >= 0) {
-      if (s.charAt(i) == ')') depth += 1
-      else if (s.charAt(i) == '(') { depth -= 1; if (depth == 0) return i }
-      i -= 1
-    }
-    -1
-  }
-
-  private[sql] def closeParen(s: String, open: Int): Int = {
-    var depth = 0
-    var inStr = false
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(') depth += 1
-      else if (c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
   }
 
   /** BigQuery SAFE_CAST (SqlLibraryOperators.java:2725) → TRY_CAST
@@ -1817,34 +1561,23 @@ object GraftSql {
     "regr_count", "regr_avgx", "regr_avgy")
 
   private[graft] def rewriteWindowFilter(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     for (m <- "(?is)\\bFILTER\\s*\\(\\s*WHERE\\b".r.findAllMatchIn(masked)) {
       val fOpen = masked.indexOf('(', m.start)
-      val fClose = closeParen(masked, fOpen)
+      val fClose = closeOf(masked, fOpen)
       if (fClose > 0 &&
           "(?is)^\\s*OVER\\b".r.findFirstIn(masked.substring(fClose + 1)).isDefined) {
         var p = m.start - 1
         while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
         if (p >= 0 && masked.charAt(p) == ')') {
-          var depth = 1
-          var i = p - 1
-          while (i >= 0 && depth > 0) {
-            val c = masked.charAt(i)
-            if (c == ')') depth += 1 else if (c == '(') depth -= 1
-            if (depth > 0) i -= 1
-          }
-          val aOpen = i
+          val aOpen = openOf(masked, p)
           val fnOk = aOpen > 0 &&
             "(?is)[A-Za-z_]\\w*\\s*$".r.findFirstIn(masked.substring(0, aOpen))
               .exists(f => windowFilterAggs.contains(f.trim.toLowerCase))
           if (fnOk) {
             val pred = sql.substring(fOpen + 1, fClose).trim
               .replaceFirst("(?is)^WHERE\\s+", "")
-            val rawArgs = sql.substring(aOpen + 1, p)
-            val lens = splitTopLevel(masked.substring(aOpen + 1, p)).map(_.length)
-            val starts = lens.scanLeft(0)((a, b) => a + b + 1).init
-            val args = starts.zip(lens).map { case (st, n) =>
-              rawArgs.substring(st, st + n).trim }
+            val args = splitElems(sql, masked, aOpen + 1, p)
             val newArgs =
               if (args.length == 1 && args.head == "*") s"CASE WHEN $pred THEN 1 END"
               else args.zipWithIndex.map { case (a, ix) =>
@@ -1872,40 +1605,34 @@ object GraftSql {
   private def rewriteQualify(sql: String): String = {
     // recurse into parenthesized groups so QUALIFY inside a subquery/CTE
     // body is lowered too
+    val masked = mask(sql)
     val sb = new StringBuilder
-    var inStr = false
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (!inStr && c == '(') {
-        val close = closeParen(sql, i)
-        if (close < 0) { sb.append(sql.substring(i)); i = sql.length }
-        else {
-          sb.append('(').append(rewriteQualify(sql.substring(i + 1, close))).append(')')
-          i = close + 1
-        }
-      } else {
-        if (c == '\'') inStr = !inStr
-        sb.append(c)
-        i += 1
+    var last = 0
+    var open = masked.indexOf('(')
+    while (open >= 0) {
+      val close = closeOf(masked, open)
+      if (close < 0) open = -1
+      else {
+        sb.append(sql.substring(last, open)).append('(')
+          .append(rewriteQualify(sql.substring(open + 1, close))).append(')')
+        last = close + 1
+        open = masked.indexOf('(', last)
       }
     }
-    rewriteQualifyTop(sb.toString)
+    rewriteQualifyTop(sb.append(sql.substring(last)).toString)
   }
 
   private def rewriteQualifyTop(sql: String): String = {
-    val qi = topLevelIndex(sql, "QUALIFY")
+    val masked = mask(sql)
+    val qi = topLevelIndex(masked, "QUALIFY")
     if (qi < 0) return sql
     val head = sql.substring(0, qi).trim
-    val tail = sql.substring(qi + "QUALIFY".length)
-    // find where the trailing clauses start (top level within tail)
-    val stops = Seq("ORDER BY", "LIMIT", "OFFSET", "WINDOW")
-      .map(k => topLevelIndex(tail, k)).filter(_ >= 0)
-    val predEnd = if (stops.isEmpty) tail.length else stops.min
-    val rawPred = tail.substring(0, predEnd).trim
-    val trailing = tail.substring(predEnd)
+    // the predicate runs to the first trailing clause
+    val predEnd = clauseEnd(masked, qi, "ORDER BY", "LIMIT", "OFFSET", "WINDOW")
+    val rawPred = sql.substring(qi + "QUALIFY".length, predEnd).trim
+    val trailing = sql.substring(predEnd)
     val (pred, windows) = extractWindowExprs(rawPred)
-    val fromIdx = topLevelIndex(head, "FROM")
+    val fromIdx = topLevelIndex(mask(head), "FROM")
     if (windows.isEmpty || fromIdx < 0)
       s"SELECT * FROM ($head) __qualify WHERE $pred $trailing"
     else {
@@ -1926,49 +1653,34 @@ object GraftSql {
     * `__qw<k>` placeholder; returns (rewritten predicate, spans). */
   private def extractWindowExprs(pred: String): (String, Seq[String]) = {
     val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)] // [start, end)
-    var inStr = false
+    val masked = mask(pred)
     var i = 0
     val over = Array("OVER")
-    while (i < pred.length) {
-      val c = pred.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; i += 1 }
-      else if (c == '\'') { inStr = true; i += 1 }
-      else {
-        val afterOver = matchWords(pred, i, over)
-        if (afterOver >= 0) {
-          // forward: whitespace then the (spec)
-          var j = afterOver
-          while (j < pred.length && pred.charAt(j).isWhitespace) j += 1
-          val specEnd = if (j < pred.length && pred.charAt(j) == '(') closeParen(pred, j) else -1
-          // backward: whitespace, the fn's (args), the fn identifier
-          var b = i - 1
-          while (b >= 0 && pred.charAt(b).isWhitespace) b -= 1
-          val argsClose = b
-          val fnStart: Int =
-            if (argsClose >= 0 && pred.charAt(argsClose) == ')') {
-              // matching '(' of the argument list, scanning backward
-              var depth = 0
-              var k = argsClose
-              var open = -1
-              while (k >= 0 && open < 0) {
-                val ch = pred.charAt(k)
-                if (ch == ')') depth += 1
-                else if (ch == '(') { depth -= 1; if (depth == 0) open = k }
-                k -= 1
-              }
-              if (open < 0) -1
-              else {
-                var f = open - 1
-                while (f >= 0 && (isWordChar(pred.charAt(f)) || pred.charAt(f) == '.')) f -= 1
-                if (f + 1 == open) -1 else f + 1 // require a fn identifier
-              }
-            } else -1
-          if (specEnd >= 0 && fnStart >= 0) {
-            spans += ((fnStart, specEnd + 1))
-            i = specEnd + 1
-          } else i = afterOver
-        } else i += 1
-      }
+    while (i < masked.length) {
+      val afterOver = matchWords(masked, i, over)
+      if (afterOver >= 0) {
+        // forward: whitespace then the (spec)
+        var j = afterOver
+        while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
+        val specEnd = if (j < masked.length && masked.charAt(j) == '(') closeOf(masked, j) else -1
+        // backward: whitespace, the fn's (args), the fn identifier
+        var b = i - 1
+        while (b >= 0 && masked.charAt(b).isWhitespace) b -= 1
+        val fnStart: Int =
+          if (b >= 0 && masked.charAt(b) == ')') {
+            val open = openOf(masked, b)
+            if (open < 0) -1
+            else {
+              var f = open - 1
+              while (f >= 0 && (isWordChar(masked.charAt(f)) || masked.charAt(f) == '.')) f -= 1
+              if (f + 1 == open) -1 else f + 1 // require a fn identifier
+            }
+          } else -1
+        if (specEnd >= 0 && fnStart >= 0) {
+          spans += ((fnStart, specEnd + 1))
+          i = specEnd + 1
+        } else i = afterOver
+      } else i += 1
     }
     if (spans.isEmpty) (pred, Seq.empty)
     else {

@@ -1,6 +1,6 @@
 package graft.sql
 
-import GraftSql.{closeParen, maskLiterals, splitTopLevel}
+import SqlText.{clauseEnd, closeOf, commaRanges, groupEnd, mask, openOf, topLevelIndex}
 
 /** Grouping-set surfaces beyond Spark's grammar (reference:
   * SqlGroupedWindowFunction / the validator's grouping-set expansion in
@@ -33,33 +33,24 @@ object GroupingSetsSql {
     * ORDER tail follows; the branches share one scan and Catalyst
     * merges their partial aggregates map-side. */
   private def rewriteEmptySetUnion(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val gsRe = "(?is)\\bGROUP\\s+BY\\s+GROUPING\\s+SETS\\s*\\(".r
     for (m <- gsRe.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.end - 1)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (close > 0) {
         val sets = splitElems(sql, masked, open + 1, close).map(_._1.trim)
         if (sets.length >= 2 && sets.exists(_.replaceAll("\\s", "") == "()")) {
           // enclosing paren block (a derived table / subquery), or the
           // whole statement
-          var depth = 0
-          var bOpen = -1
-          var i = m.start - 1
-          while (i >= 0 && bOpen < 0) {
-            val c = masked.charAt(i)
-            if (c == ')') depth += 1
-            else if (c == '(') { if (depth == 0) bOpen = i else depth -= 1 }
-            i -= 1
-          }
-          val blockStart = bOpen + 1
-          val blockEnd = if (bOpen >= 0) closeParen(masked, bOpen) else masked.length
+          val blockEnd = groupEnd(masked, m.start)
+          val blockStart = if (blockEnd < masked.length) openOf(masked, blockEnd) + 1 else 0
           if (blockEnd > close && masked.substring(close + 1, blockEnd).trim.isEmpty) {
             val head = masked.substring(blockStart, m.start)
             val selM = "(?is)^\\s*SELECT\\b".r.findFirstMatchIn(head)
-            val fromAt = GraftSql.topLevelIndex(head, "FROM")
+            val fromAt = topLevelIndex(head, "FROM")
             if (selM.isDefined && fromAt > selM.get.end) {
-              val items = GraftSql.splitTopLevel(
+              val items = SqlText.splitTop(
                 sql.substring(blockStart + selM.get.end, blockStart + fromAt))
               val aggItem = ("(?is)^\\s*(COUNT|SUM|AVG|MIN|MAX)\\s*" +
                 "\\((?:[^()]|\\([^()]*\\))*\\)\\s*(AS\\s+\\w+\\s*)?$").r
@@ -90,7 +81,7 @@ object GroupingSetsSql {
     * constant 1 (agg.iq:4123, :4180). Single-SELECT statements only
     * (one top-level GROUP BY). */
   private[sql] def rewriteGroupingFns(sql: String): String = {
-    val masked0 = maskLiterals(sql)
+    val masked0 = mask(sql)
     if ("(?is)\\bgrouping(_id)?\\s*\\(".r.findFirstIn(masked0).isEmpty) return sql
     // process each top-level set-operation branch independently — a
     // UNION ALL of grouped selects has one GROUP BY per branch
@@ -111,7 +102,7 @@ object GroupingSetsSql {
     // a grouping call inside a SUBQUERY would be lowered against the
     // wrong universe — leave those statements alone
     for (m <- "(?is)\\(\\s*(SELECT|WITH)\\b".r.findAllMatchIn(masked)) {
-      val close = closeParen(masked, m.start)
+      val close = closeOf(masked, m.start)
       if (close > 0 && "(?is)\\bgrouping(_id)?\\s*\\(".r
           .findFirstIn(masked.substring(m.start, close)).isDefined) return sql
     }
@@ -121,7 +112,7 @@ object GroupingSetsSql {
     }.toSeq
     if (gbs.length != 1) return sql
     val gbElems = {
-      val end = clauseEnd(masked, gbs.head.end)
+      val end = listEnd(masked, gbs.head.end)
       splitElems(sql, masked, gbs.head.end, end)
     }
     // flatten composite tuple elements — rollup(a, (b, c)) grounds b
@@ -140,13 +131,13 @@ object GroupingSetsSql {
     var rest = sql
     var more = true
     while (more) {
-      val m0 = maskLiterals(rest)
+      val m0 = mask(rest)
       "(?is)\\bgrouping(_id)?\\s*\\(".r.findFirstMatchIn(m0) match {
         case None =>
           sb.append(rest); more = false
         case Some(call) =>
           val open = m0.indexOf('(', call.start)
-          val close = closeParen(m0, open)
+          val close = closeOf(m0, open)
           if (close < 0) { sb.append(rest); more = false }
           else {
             val args = splitElems(rest, m0, open + 1, close).map(_._1)
@@ -183,16 +174,16 @@ object GroupingSetsSql {
     * item's alias (longest first, so composite grouping_id arithmetic
     * wins over the single calls inside it). */
   private def havingByAlias(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val hv = "(?is)\\bHAVING\\b".r.findAllMatchIn(masked).filter { m =>
       val pre = masked.substring(0, m.start)
       pre.count(_ == '(') == pre.count(_ == ')')
     }.toSeq.headOption.getOrElse(return sql)
-    val hvEnd = clauseEnd(masked, hv.end)
+    val hvEnd = listEnd(masked, hv.end)
     if (!"(?is)\\bgrouping\\s*\\(".r.findFirstIn(masked.substring(hv.end, hvEnd)).isDefined)
       return sql
     val sel = "(?is)\\bSELECT\\b".r.findFirstMatchIn(masked).getOrElse(return sql)
-    val from = GraftSql.topLevelIndex(masked, "FROM", sel.end)
+    val from = SqlText.topLevelIndex(masked, "FROM", sel.end)
     if (from < 0) return sql
     val items = splitElems(sql, masked, sel.end, from)
     val aliasRe = "(?is)^(.*\\S)\\s+AS\\s+(\\w+)\\s*$".r
@@ -210,7 +201,7 @@ object GroupingSetsSql {
     var maskedHaving = masked.substring(hv.end, hvEnd)
     def identChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
     pairs.foreach { case (e, a) =>
-      val em = maskLiterals(e)
+      val em = mask(e)
       var i = maskedHaving.indexOf(em)
       while (i >= 0) {
         val okBefore = i == 0 ||
@@ -246,7 +237,7 @@ object GroupingSetsSql {
     * aggregate query stays unresolved so the analyzer rejects it, as
     * the reference's validator does (agg.iq:1060). */
   private def rewriteGroupId(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val gidRe = "(?is)\\bgroup_id\\s*\\(\\s*\\)".r
     if (gidRe.findFirstIn(masked).isEmpty) return sql
     // only the statement's own (paren-depth-0) GROUP BY defines the
@@ -268,7 +259,7 @@ object GroupingSetsSql {
           .findFirstIn(masked).isDefined
         return if (isAgg) gidRe.replaceAllIn(sql, "coalesce(min(0), 0)") else sql
     }
-    val end = clauseEnd(masked, gb.end)
+    val end = listEnd(masked, gb.end)
     val elems = splitElems(sql, masked, gb.end, end)
     val tuples = elems.map { case (t, mt) => expand(t, mt) }
       .foldLeft(Seq(Seq.empty[String])) { (acc, sets) =>
@@ -320,21 +311,9 @@ object GroupingSetsSql {
   private def nullOutMissing(branch: String, missing: Seq[String]): String = {
     if (missing.isEmpty) return branch
     val missingNorm = missing.map(norm).toSet
-    val m0 = maskLiterals(branch)
+    val m0 = mask(branch)
     val sel = "(?is)^\\s*SELECT\\s".r.findFirstMatchIn(m0).getOrElse(return branch)
-    var i = sel.end
-    var depth = 0
-    var from = -1
-    while (i < m0.length && from < 0) {
-      val c = m0.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && (c == 'F' || c == 'f') &&
-          m0.regionMatches(true, i, "FROM", 0, 4) &&
-          !m0.charAt(i - 1).isLetterOrDigit &&
-          (i + 4 >= m0.length || !m0.charAt(i + 4).isLetterOrDigit)) from = i
-      i += 1
-    }
+    val from = topLevelIndex(m0, "FROM", sel.end)
     if (from < 0) return branch
     val items = splitElems(branch, m0, sel.end, from)
     val rebuilt = items.map { case (txt, _) =>
@@ -356,10 +335,10 @@ object GroupingSetsSql {
     * to one explicit GROUPING SETS cross product (duplicates KEPT —
     * Spark preserves duplicate sets, matching the reference). */
   private def rewriteMixedEmpty(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     for (m <- "(?is)\\bGROUP\\s+BY\\s".r.findAllMatchIn(masked)) {
       if (!"(?is)^\\s*DISTINCT\\b".r.findFirstIn(masked.substring(m.end)).isDefined) {
-        val end = clauseEnd(masked, m.end)
+        val end = listEnd(masked, m.end)
         val elems = splitElems(sql, masked, m.end, end)
         val hasGs = elems.exists(e =>
           "(?is)^GROUPING\\s+SETS\\s*\\(".r.findFirstIn(e._2).isDefined)
@@ -386,30 +365,18 @@ object GroupingSetsSql {
 
   /** End offset of a grouping-element list starting at `from`: the next
     * top-level clause keyword or unbalanced close paren. */
-  private def clauseEnd(masked: String, from: Int): Int = {
-    var i = from
-    var depth = 0
-    val stop = "(?is)^(HAVING|ORDER|LIMIT|OFFSET|FETCH|WINDOW|UNION|INTERSECT|EXCEPT|QUALIFY)\\b".r
-    while (i < masked.length) {
-      val c = masked.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') { if (depth == 0) return i else depth -= 1 }
-      else if (depth == 0 && c.isLetter &&
-          stop.findFirstIn(masked.substring(i)).isDefined &&
-          !masked.charAt(math.max(i - 1, 0)).isLetterOrDigit) return i
-      i += 1
-    }
-    masked.length
-  }
+  private def listEnd(masked: String, from: Int): Int =
+    clauseEnd(masked, from, "HAVING", "ORDER", "LIMIT", "OFFSET", "FETCH", "WINDOW",
+      "UNION", "INTERSECT", "EXCEPT", "QUALIFY")
 
   /** Splice inner GROUPING SETS elements into the enclosing list. */
   private def flattenNested(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val re = "(?is)\\bGROUPING\\s+SETS\\s*\\(".r
     val outers = re.findAllMatchIn(masked).toSeq
     for (o <- outers) {
       val open = masked.indexOf('(', o.start)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (close > 0) {
         val innerMasked = masked.substring(open + 1, close)
         val inner = re.findFirstMatchIn(innerMasked)
@@ -420,7 +387,7 @@ object GroupingSetsSql {
             "(?is)^\\s*GROUPING\\s+SETS\\s*\\(".r.findFirstMatchIn(mtxt) match {
               case Some(im) =>
                 val iOpen = mtxt.indexOf('(', im.start)
-                val iClose = closeParen(mtxt, iOpen)
+                val iClose = closeOf(mtxt, iOpen)
                 if (iClose > 0) splitElems(txt, mtxt, iOpen + 1, iClose).map(_._1)
                 else Seq(txt)
               case None => Seq(txt)
@@ -440,24 +407,15 @@ object GroupingSetsSql {
   }
 
   /** Top-level comma elements of text[from, to) with their masked twin. */
-  private def splitElems(sql: String, masked: String, from: Int, to: Int): Seq[(String, String)] = {
-    val m = masked.substring(from, to)
-    val s = sql.substring(from, to)
-    val lens = splitTopLevel(m).map(_.length)
-    val starts = lens.scanLeft(0)((a, b) => a + b + 1).init
-    starts.zip(lens).map { case (st, n) => (s.substring(st, st + n).trim, m.substring(st, st + n).trim) }
-  }
+  private def splitElems(sql: String, masked: String, from: Int, to: Int): Seq[(String, String)] =
+    commaRanges(masked, from, to).map { case (a, b) =>
+      (sql.substring(a, b).trim, masked.substring(a, b).trim) }
 
   /** Element text → its column tuple (strips one paren level). */
   private def cols(txt: String): Seq[String] = {
-    val mm = maskLiterals(txt)
-    val inner =
-      if (txt.startsWith("(")) (txt.substring(1, txt.length - 1), mm.substring(1, mm.length - 1))
-      else (txt, mm)
-    val lens = splitTopLevel(inner._2).map(_.length)
-    val starts = lens.scanLeft(0)((a, b) => a + b + 1).init
-    starts.zip(lens).map { case (st, n) => inner._1.substring(st, st + n).trim }
-      .filter(_.nonEmpty)
+    val mm = mask(txt)
+    val (from, to) = if (txt.startsWith("(")) (1, txt.length - 1) else (0, txt.length)
+    SqlText.splitElems(txt, mm, from, to).filter(_.nonEmpty)
   }
 
   /** Grouping element → its list of column tuples (CUBE = all subsets,
@@ -467,11 +425,11 @@ object GroupingSetsSql {
     val gs = "(?is)^GROUPING\\s+SETS\\s*\\(".r.findFirstMatchIn(mtxt)
     if (gs.isDefined) {
       val open = mtxt.indexOf('(', gs.get.start)
-      val close = closeParen(mtxt, open)
+      val close = closeOf(mtxt, open)
       splitElems(txt, mtxt, open + 1, close).map { case (t, _) => cols(t) }
     } else if (cu.isDefined) {
       val open = mtxt.indexOf('(', cu.get.start)
-      val close = closeParen(mtxt, open)
+      val close = closeOf(mtxt, open)
       val cs = splitElems(txt, mtxt, open + 1, close).map(_._1)
       if (cu.get.group(1).equalsIgnoreCase("CUBE"))
         (0 until (1 << cs.length)).map(mask =>
@@ -482,10 +440,10 @@ object GroupingSetsSql {
 
   /** `GROUP BY DISTINCT <elements>` → dedup'd GROUPING SETS list. */
   private def rewriteDistinct(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val m = "(?is)\\bGROUP\\s+BY\\s+DISTINCT\\s".r.findFirstMatchIn(masked)
       .getOrElse(return sql)
-    val end = clauseEnd(masked, m.end)
+    val end = listEnd(masked, m.end)
     val elems = splitElems(sql, masked, m.end, end)
     // cross-product of the per-element set lists, concatenating tuples
     val expanded = elems.map { case (t, mt) => expand(t, mt) }

@@ -35,7 +35,7 @@ object Hoist {
   }
 
   def hoist(sql: String): Hoisted = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val vars = scala.collection.mutable.ArrayBuffer.empty[Variable]
     var i = 0
     while (i < masked.length) {

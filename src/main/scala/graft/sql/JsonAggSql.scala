@@ -1,6 +1,6 @@
 package graft.sql
 
-import GraftSql.{closeParen, maskLiterals}
+import SqlText.{closeOf, mask}
 
 /** SQL/JSON constructor surface (ref: SqlStdOperatorTable JSON_OBJECT
   * :1680, JSON_ARRAYAGG :1724; runtime/JsonFunctions.java; agg.iq:3250-
@@ -69,11 +69,11 @@ object JsonAggSql {
     * the reference's HashMap-ordered rendering. NULL ON NULL is the
     * standard (and reference) default. */
   private[sql] def rewriteObjectAgg(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val re = "(?i)\\bJSON_OBJECTAGG\\s*\\(".r
     for (m <- re.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (close > 0) {
         var innerOrig = sql.substring(open + 1, close)
         var innerMask = masked.substring(open + 1, close)
@@ -111,8 +111,6 @@ object JsonAggSql {
     sql
   }
 
-  private def splitTop(s: String): Seq[String] = GraftSql.splitTopLevel(s)
-
   /** First top-level `:` in the masked item (quotes/parens respected). */
   private def topColon(masked: String): Int = {
     var depth = 0
@@ -128,11 +126,11 @@ object JsonAggSql {
   }
 
   private[sql] def rewriteObject(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val re = "(?i)\\bJSON_OBJECT\\s*\\(".r
     for (m <- re.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (close > 0) {
         var innerOrig = sql.substring(open + 1, close)
         var innerMask = masked.substring(open + 1, close)
@@ -145,7 +143,7 @@ object JsonAggSql {
             innerOrig = innerOrig.substring(0, o.start)
             innerMask = innerMask.substring(0, o.start)
           }
-          val itemsM = splitTop(innerMask)
+          val itemsM = SqlText.splitTop(innerMask)
           var cursor = 0
           val pairs = itemsM.map { im =>
             val io = innerOrig.substring(cursor, cursor + im.length)
@@ -204,11 +202,11 @@ object JsonAggSql {
   }
 
   private[sql] def rewriteArrayAgg(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val re = "(?i)\\bJSON_ARRAYAGG\\s*\\(".r
     for (m <- re.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = closeParen(masked, open)
+      val close = closeOf(masked, open)
       if (close > 0) {
         var io = sql.substring(open + 1, close)
         var im = masked.substring(open + 1, close)

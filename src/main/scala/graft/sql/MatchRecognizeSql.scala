@@ -55,7 +55,7 @@ import graft.plans.MatchRecognize.{Skip, SkipPastLastRow, SkipToNextRow}
   * pre-negating a numeric column).
   */
 object MatchRecognizeSql {
-  import GraftSql.{closeParen, matchWords, topLevelIndex}
+  import SqlText.{anyDepthIndex, closeOf, commaRanges, matchWords, topLevelIndex}
 
   private val SECTIONS = Seq(
     "PARTITION BY", "ORDER BY", "MEASURES", "ONE ROW PER MATCH",
@@ -65,12 +65,13 @@ object MatchRecognizeSql {
   /** If `text` is a SELECT over a MATCH_RECOGNIZE clause (at the top
     * level of the FROM), run it and return the result. */
   def maybeRun(spark: SparkSession, text: String): Option[DataFrame] = {
-    val mrIdx = topLevelIndex(text, "MATCH_RECOGNIZE")
+    val mrIdx = topLevelIndex(SqlText.mask(text), "MATCH_RECOGNIZE")
     if (mrIdx < 0) None else Some(run(spark, text, mrIdx))
   }
 
   private def run(spark: SparkSession, text: String, mrIdx: Int): DataFrame = {
-    val fromIdx = topLevelIndex(text, "FROM")
+    val masked = SqlText.mask(text)
+    val fromIdx = topLevelIndex(masked, "FROM")
     require(fromIdx >= 0 && fromIdx < mrIdx, "MATCH_RECOGNIZE requires FROM <rel>")
     val selectList = {
       val s = text.substring(0, fromIdx).trim
@@ -78,9 +79,9 @@ object MatchRecognizeSql {
       s.substring("SELECT".length).trim
     }
     val source = text.substring(fromIdx + "FROM".length, mrIdx).trim
-    val open = text.indexOf('(', mrIdx + "MATCH_RECOGNIZE".length)
+    val open = masked.indexOf('(', mrIdx + "MATCH_RECOGNIZE".length)
     require(open > 0, "MATCH_RECOGNIZE requires (...)")
-    val close = closeParen(text, open)
+    val close = closeOf(masked, open)
     require(close > 0, "unbalanced MATCH_RECOGNIZE parens")
     val spec = text.substring(open + 1, close)
     // optional alias, then trailing clauses (WHERE / ORDER BY / LIMIT ...)
@@ -97,7 +98,7 @@ object MatchRecognizeSql {
     }
 
     val base0: DataFrame =
-      if (source.startsWith("(")) spark.sql(source.substring(1, closeParen(source, 0)))
+      if (source.startsWith("(")) spark.sql(source.substring(1, closeOf(SqlText.mask(source), 0)))
       else spark.table(source)
 
     val s0 = parseSpec(spec)
@@ -133,34 +134,28 @@ object MatchRecognizeSql {
             else Window.partitionBy(s.partitionBy.map(col): _*).orderBy(s.orderBy.map(col): _*)
     val navCols = mutable.ArrayBuffer.empty[(String, Column)]
     def lowerNav(pred: String): String = {
+      val pm = SqlText.mask(pred)
       val sb = new StringBuilder
       var i = 0
-      var inStr = false
       while (i < pred.length) {
-        val c = pred.charAt(i)
-        if (inStr) { if (c == '\'') inStr = false; sb.append(c); i += 1 }
-        else if (c == '\'') { inStr = true; sb.append(c); i += 1 }
-        else {
-          val isPrev = matchWords(pred, i, Array("PREV")) >= 0
-          val isNext = matchWords(pred, i, Array("NEXT")) >= 0
-          if (isPrev || isNext) {
-            val kwEnd = i + 4
-            var j = kwEnd
-            while (j < pred.length && pred.charAt(j).isWhitespace) j += 1
-            require(j < pred.length && pred.charAt(j) == '(', s"$pred: PREV/NEXT need (...)")
-            val pc = closeParen(pred, j)
-            require(pc > 0, s"unbalanced parens in $pred")
-            val inner = pred.substring(j + 1, pc)
-            // optional trailing ", n" offset at top level of inner
-            val (exprSql, off) = splitNavOffset(inner)
-            val lowered = stripQualifiers(exprSql, symbols)
-            val name = s"__nav${navCols.length}"
-            navCols += name -> (if (isPrev) lag(expr(lowered), off).over(w)
-                                else lead(expr(lowered), off).over(w))
-            sb.append(name)
-            i = pc + 1
-          } else { sb.append(c); i += 1 }
-        }
+        val isPrev = matchWords(pm, i, Array("PREV")) >= 0
+        val isNext = matchWords(pm, i, Array("NEXT")) >= 0
+        if (isPrev || isNext) {
+          var j = i + 4
+          while (j < pm.length && pm.charAt(j).isWhitespace) j += 1
+          require(j < pm.length && pm.charAt(j) == '(', s"$pred: PREV/NEXT need (...)")
+          val pc = closeOf(pm, j)
+          require(pc > 0, s"unbalanced parens in $pred")
+          val inner = pred.substring(j + 1, pc)
+          // optional trailing ", n" offset at top level of inner
+          val (exprSql, off) = splitNavOffset(inner)
+          val lowered = stripQualifiers(exprSql, symbols)
+          val name = s"__nav${navCols.length}"
+          navCols += name -> (if (isPrev) lag(expr(lowered), off).over(w)
+                              else lead(expr(lowered), off).over(w))
+          sb.append(name)
+          i = pc + 1
+        } else { sb.append(pred.charAt(i)); i += 1 }
       }
       sb.toString
     }
@@ -248,11 +243,15 @@ object MatchRecognizeSql {
     // FIRST( X.c [ , n ] ) / LAST( X.c )
     def lowerFirstLast(s: String): String = {
       Seq("FIRST", "LAST").foldLeft(s) { (acc, kw) =>
-        val idx = topLevelIndexAny(acc, kw)
+        val am = SqlText.mask(acc)
+        // the first `kw` written as a call, at any depth
+        var idx = anyDepthIndex(am, kw)
+        while (idx >= 0 && !am.substring(idx + kw.length).trim.startsWith("("))
+          idx = anyDepthIndex(am, kw, idx + kw.length)
         if (idx < 0) acc
         else {
-          val open = acc.indexOf('(', idx + kw.length)
-          val close = closeParen(acc, open)
+          val open = am.indexOf('(', idx + kw.length)
+          val close = closeOf(am, open)
           val inner = acc.substring(open + 1, close).trim
           val (innerExpr, _) = splitNavOffset(inner)
           val (qualifier, bare) = splitQualifier(innerExpr, symbols)
@@ -318,48 +317,11 @@ object MatchRecognizeSql {
     }
 
   /** Split a nav call body `expr [, n]` at the top level. */
-  private def splitNavOffset(inner: String): (String, Int) = {
-    var depth = 0
-    var inStr = false
-    var commaAt = -1
-    var i = 0
-    while (i < inner.length && commaAt < 0) {
-      val c = inner.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => commaAt = i
-        case _ =>
-      }
-      i += 1
+  private def splitNavOffset(inner: String): (String, Int) =
+    commaRanges(SqlText.mask(inner), 0, inner.length) match {
+      case Seq(_) => (inner.trim, 1)
+      case (_, comma) +: _ => (inner.substring(0, comma).trim, inner.substring(comma + 1).trim.toInt)
     }
-    if (commaAt < 0) (inner.trim, 1)
-    else (inner.substring(0, commaAt).trim, inner.substring(commaAt + 1).trim.toInt)
-  }
-
-  /** topLevelIndex for a keyword immediately followed by '(' (function
-    * style), at any depth. */
-  private def topLevelIndexAny(s: String, kw: String): Int = {
-    var i = 0
-    var inStr = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else {
-        val after = matchWords(s, i, Array(kw))
-        if (after >= 0) {
-          var j = after
-          while (j < s.length && s.charAt(j).isWhitespace) j += 1
-          if (j < s.length && s.charAt(j) == '(') return i
-        }
-      }
-      i += 1
-    }
-    -1
-  }
 
   // ---- spec parsing -----------------------------------------------------
 
@@ -377,8 +339,9 @@ object MatchRecognizeSql {
 
   private def parseSpec(spec: String): Spec = {
     // section keyword → (start of keyword, end of keyword)
+    val specM = SqlText.mask(spec)
     val found = SECTIONS.flatMap { kw =>
-      val at = topLevelIndex(spec, kw)
+      val at = topLevelIndex(specM, kw)
       if (at < 0) None else Some((kw, at))
     }.sortBy(_._2)
     def body(kw: String): Option[String] = {
@@ -391,8 +354,8 @@ object MatchRecognizeSql {
       }
     }
 
-    val partitionBy = body("PARTITION BY").map(splitTop(_).map(_.trim)).getOrElse(Seq.empty)
-    val orderBySpec = body("ORDER BY").map(splitTop(_).map { o =>
+    val partitionBy = body("PARTITION BY").map(splitItems).getOrElse(Seq.empty)
+    val orderBySpec = body("ORDER BY").map(splitItems(_).map { o =>
       val t = o.trim
       (t.replaceAll("(?i)\\s+(ASC|DESC)$", "").trim,
         t.toUpperCase.endsWith(" DESC"))
@@ -400,8 +363,8 @@ object MatchRecognizeSql {
     val orderBy = orderBySpec.map(_._1)
     require(orderBy.nonEmpty, "MATCH_RECOGNIZE requires ORDER BY")
 
-    val measures = body("MEASURES").map(splitTop(_).map { m =>
-      val asIdx = topLevelIndex(m, "AS")
+    val measures = body("MEASURES").map(splitItems(_).map { m =>
+      val asIdx = topLevelIndex(SqlText.mask(m), "AS")
       require(asIdx > 0, s"measure needs AS alias: $m")
       (m.substring(0, asIdx).trim, m.substring(asIdx + 2).trim)
     }).getOrElse(Seq.empty)
@@ -420,7 +383,7 @@ object MatchRecognizeSql {
     val pattern = body("PATTERN").map { b =>
       val open = b.indexOf('(')
       require(open >= 0, "PATTERN requires (...)")
-      b.substring(open + 1, closeParen(b, open))
+      b.substring(open + 1, closeOf(SqlText.mask(b), open))
     }.getOrElse(throw new IllegalArgumentException("MATCH_RECOGNIZE requires PATTERN"))
 
     val withinMs = body("WITHIN").map { b =>
@@ -436,19 +399,19 @@ object MatchRecognizeSql {
     }
 
     val subsets: Map[String, Seq[String]] = body("SUBSET").map { b =>
-      splitTop(b).map { one =>
+      splitItems(b).map { one =>
         val eq = one.indexOf('=')
         require(eq > 0, s"SUBSET needs S = (A, B): $one")
         val name = one.substring(0, eq).trim
         val open = one.indexOf('(', eq)
-        val members = one.substring(open + 1, closeParen(one, open))
+        val members = one.substring(open + 1, closeOf(SqlText.mask(one), open))
           .split(",").map(_.trim).toSeq
         name -> members
       }.toMap
     }.getOrElse(Map.empty)
 
-    val defines = body("DEFINE").map(splitTop(_).map { d =>
-      val asIdx = topLevelIndex(d, "AS")
+    val defines = body("DEFINE").map(splitItems(_).map { d =>
+      val asIdx = topLevelIndex(SqlText.mask(d), "AS")
       require(asIdx > 0, s"DEFINE needs sym AS pred: $d")
       (d.substring(0, asIdx).trim, d.substring(asIdx + 2).trim)
     }).getOrElse(Seq.empty)
@@ -457,26 +420,7 @@ object MatchRecognizeSql {
       afterMatch, pattern, withinMs, subsets, defines)
   }
 
-  /** Split on top-level commas (string- and paren-aware). */
-  private def splitTop(s: String): Seq[String] = {
-    val out = mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var inStr = false
-    var last = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else c match {
-        case '\'' => inStr = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(last, i); last = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(last)
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
+  /** The trimmed, non-empty depth-0 comma items of a section body. */
+  private def splitItems(s: String): Seq[String] =
+    SqlText.splitTop(s).map(_.trim).filter(_.nonEmpty)
 }

@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.SparkSession
 
-import GraftSql.{closeParen, maskLiterals, splitTopLevel, topLevelIndex}
+import SqlText.{balanced, closeOf, mask, splitTop, topLevelIndex}
 
 /** SQL measures — `<expr> AS MEASURE <name>` columns (ref: the measure
   * feature of the reference: sql/fun/SqlLibraryOperators.java AGGREGATE,
@@ -51,7 +51,7 @@ object MeasureSql {
     * list declares measures registers them and emits the base view
     * (measures stripped). Identity for everything else. */
   def ddlRewrite(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     if (asMeasureRe.findFirstIn(masked).isEmpty) return sql
     val m = "(?is)^\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?(?:TEMP(?:ORARY)?\\s+)?VIEW\\s+(\\w+)\\s+AS\\b".r
       .findFirstMatchIn(masked).getOrElse(return sql)
@@ -70,7 +70,7 @@ object MeasureSql {
 
   /** Query hook (needs the session for AVG return-type resolution). */
   def maybeRewrite(spark: SparkSession, sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     if ("(?is)^\\s*CREATE\\b".r.findFirstIn(masked).isDefined) return ddlRewrite(sql)
     asMeasureRe.findFirstMatchIn(masked) match {
       case Some(mm) => rewriteInline(spark, sql, masked, mm.start)
@@ -84,7 +84,7 @@ object MeasureSql {
       measureAt: Int): String = {
     // innermost paren block containing the AS MEASURE
     val spans = (0 until masked.length).filter(masked(_) == '(')
-      .map(o => (o, closeParen(masked, o)))
+      .map(o => (o, closeOf(masked, o)))
       .filter { case (o, c) => c > 0 && o < measureAt && c > measureAt }
     val block = spans.sortBy { case (o, c) => c - o }.headOption
 
@@ -143,11 +143,11 @@ object MeasureSql {
 
   /** (prefix, items, suffix) of the select list of `sel`. */
   private def splitList(sel: String): Option[(String, Seq[String], String)] = {
-    val masked = maskLiterals(sel)
+    val masked = mask(sel)
     val selAt = "(?i)\\bSELECT\\b".r.findFirstMatchIn(masked).map(_.start).getOrElse(return None)
     val fromAt = topLevelIndex(masked, "FROM")
     if (fromAt < selAt) return None
-    val items = splitTopLevel(sel.substring(selAt + 6, fromAt))
+    val items = splitTop(sel.substring(selAt + 6, fromAt))
     Some((sel.substring(0, selAt + 6) + " ", items.map(_.trim), " " + sel.substring(fromAt)))
   }
 
@@ -191,7 +191,7 @@ object MeasureSql {
       val args =
         if (hasStar) Seq.empty
         else defs.flatMap { case (_, e) =>
-          tokRe.findAllMatchIn(maskLiterals(e)).toSeq
+          tokRe.findAllMatchIn(mask(e)).toSeq
             // a name directly followed by '(' is a call, not a column
             .filterNot(m => e.drop(m.end).trim.startsWith("("))
             .map(m => e.substring(m.start, m.end))
@@ -219,7 +219,7 @@ object MeasureSql {
           s"$f AS $n"
         case i =>
           i match {
-            case aliasRe(e, n) if balanced(e) => prior :+= (n -> s"($e)")
+            case aliasRe(e, n) if balanced(mask(e)) => prior :+= (n -> s"($e)")
             case _ =>
           }
           i
@@ -243,7 +243,7 @@ object MeasureSql {
     while (m.isDefined) {
       val mm = m.get
       val open = cur.indexOf('(', mm.end - 1)
-      val close = closeParen(cur, open)
+      val close = closeOf(mask(cur), open)
       if (close < 0) return s"($cur)"
       val fn = mm.group(1).toUpperCase
       val arg = cur.substring(open + 1, close).trim
@@ -267,7 +267,7 @@ object MeasureSql {
     val e1 = subst(e, prior)
     val avgRe = "(?is)^\\s*AVG\\s*\\((.*)\\)\\s*$".r
     e1 match {
-      case avgRe(a) if balanced(a) =>
+      case avgRe(a) if balanced(mask(a)) =>
         argType(spark, a, rel) match {
           case Some(t) => s"CAST(AVG($a) AS $t)"
           case None => s"AVG($a)"
@@ -300,7 +300,7 @@ object MeasureSql {
       var fm = filtRe.findFirstMatchIn(out)
       while (fm.isDefined) {
         val open = out.lastIndexOf('(', fm.get.end - 1)
-        val close = closeParen(maskLiterals(out), open)
+        val close = closeOf(mask(out), open)
         if (close < 0) fm = None
         else {
           val filt = out.substring(open + 1, close).trim
@@ -332,7 +332,7 @@ object MeasureSql {
     * measure substitution, so measure expansions (introduced later) are
     * never mistaken for regular aggregates. */
   private def detailContextWhere(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val whereAt = topLevelIndex(masked, "WHERE")
     val groupAt = topLevelIndex(masked, "GROUP")
     if (whereAt < 0 || groupAt < 0 || groupAt < whereAt) return sql
@@ -366,10 +366,10 @@ object MeasureSql {
     // regular aggregate calls in the select list keep the filtered rows
     val selRegion = sb.substring(0, whereAt)
     val callRe = "(?i)\\b(AVG|SUM|MIN|MAX|COUNT|STDDEV|VARIANCE|ANY_VALUE)\\s*\\(".r
-    callRe.findAllMatchIn(maskLiterals(selRegion)).toSeq.sortBy(-_.start)
+    callRe.findAllMatchIn(mask(selRegion)).toSeq.sortBy(-_.start)
       .foreach { m =>
         val open = selRegion.indexOf('(', m.end - 1)
-        val close = closeParen(maskLiterals(selRegion), open)
+        val close = closeOf(mask(selRegion), open)
         if (close > 0) {
           // merge with an existing FILTER clause if one follows
           val after = selRegion.substring(close + 1)
@@ -390,7 +390,7 @@ object MeasureSql {
     val sb = new StringBuilder(f)
     callRe.findAllMatchIn(f).toSeq.sortBy(-_.start).foreach { m =>
       val open = f.indexOf('(', m.end - 1)
-      val close = closeParen(f, open)
+      val close = closeOf(mask(f), open)
       if (close > 0) sb.insert(close + 1, s" FILTER ($filt)")
     }
     sb.toString
@@ -403,10 +403,4 @@ object MeasureSql {
       ("(?i)(?<![.\\w])" + n + "\\b").r.replaceAllIn(s,
         java.util.regex.Matcher.quoteReplacement(s"($f)"))
     }
-
-  private def balanced(s: String): Boolean = {
-    var d = 0
-    s.foreach { c => if (c == '(') d += 1 else if (c == ')') d -= 1; if (d < 0) return false }
-    d == 0
-  }
 }

@@ -1,6 +1,6 @@
 package graft.sql
 
-import GraftSql.maskLiterals
+import SqlText.mask
 
 /** Conformance-dialect default null ordering: the reference sorts NULL
   * as the LARGEST value (Oracle-style — RelFieldCollation.NullDirection
@@ -20,7 +20,7 @@ import GraftSql.maskLiterals
 object OracleNullOrder {
 
   def rewrite(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     // MATCH_RECOGNIZE has its own ORDER BY parser (MatchRecognizeSql);
     // stay out of its statements
     if ("(?i)\\bMATCH_RECOGNIZE\\b".r.findFirstIn(masked).isDefined) return sql
@@ -61,7 +61,7 @@ object OracleNullOrder {
   /** Append the explicit Oracle-default null direction to each
     * top-level comma item that lacks one. */
   private def qualifyItems(items: String, itemsMasked: String): String = {
-    val lens = GraftSql.splitTopLevel(itemsMasked).map(_.length)
+    val lens = SqlText.splitTop(itemsMasked).map(_.length)
     val starts = lens.scanLeft(0)((a, b) => a + b + 1).init
     starts.zip(lens).map { case (st, n) =>
       val item = items.substring(st, st + n)

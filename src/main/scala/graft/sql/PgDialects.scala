@@ -63,7 +63,7 @@ object PostgresDialect {
   private[sql] def rewriteRegexOps(sql: String): String = {
     val operand = "((?:\\w+\\.)?\\w+|'(?:[^']|'')*'|NULL)"
     val re = ("(?i)" + operand + "\\s*(!~\\*|!~|~\\*|~)\\s*" + operand).r
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val sb = new StringBuilder
     var last = 0
     re.findAllMatchIn(masked).foreach { m =>
@@ -89,7 +89,7 @@ object PostgresDialect {
 
   private def renameFns(sql: String): String = {
     var out = sql
-    var m = GraftSql.maskLiterals(sql)
+    var m = SqlText.mask(sql)
     for ((from, to) <- renames) {
       val re = ("(?i)\\b" + from + "\\s*\\(").r
       val sb = new StringBuilder
@@ -112,7 +112,7 @@ object PostgresDialect {
     * has no field for — derived from the fractional SECOND. */
   private def rewriteDatePart(sql: String): String = {
     val quoted = sql.replaceAll("(?i)\\bdate_part\\s*\\(\\s*([A-Za-z_]+)\\s*,", "date_part('$1',")
-    val masked = GraftSql.maskLiterals(quoted)
+    val masked = SqlText.mask(quoted)
     // the unit lives INSIDE a string literal, so it must be matched on the
     // unmasked text (masking blanks literal content); the masked copy still
     // guards against a match that is itself inside a bigger literal
@@ -121,7 +121,7 @@ object PostgresDialect {
       case None => quoted
       case Some(m) =>
         val open = quoted.indexOf('(', m.start)
-        val close = GraftSql.closeParen(masked, open)
+        val close = SqlText.closeOf(masked, open)
         if (close < 0) quoted
         else {
           val arg = quoted.substring(quoted.indexOf(',', open) + 1, close).trim
@@ -138,7 +138,7 @@ object PostgresDialect {
     * ordinary brace-bearing strings (JSON etc.) stay untouched; the
     * ARRAY[...] itself becomes array(...) afterwards. */
   private[sql] def rewriteArrayStringLiteral(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     if ("(?i)\\bARRAY\\s*\\[".r.findFirstIn(masked).isEmpty) return sql
     val braceLit = "'\\{([^{}']*)\\}'".r
     // PG coerces the brace literal to the OTHER side's array type
@@ -160,20 +160,14 @@ object PostgresDialect {
     val re = "(?i)\\bARRAY\\s*\\[".r
     var continue = true
     while (continue) {
-      val mm = GraftSql.maskLiterals(out)
+      val mm = SqlText.mask(out)
       re.findFirstMatchIn(mm) match {
         case None => continue = false
         case Some(m) =>
-          var depth = 1
-          var i = m.end
-          while (i < mm.length && depth > 0) {
-            val c = mm.charAt(i)
-            if (c == '[') depth += 1 else if (c == ']') depth -= 1
-            i += 1
-          }
-          if (depth != 0) continue = false
+          val close = SqlText.closeOf(mm, m.end - 1)
+          if (close < 0) continue = false
           else out = out.substring(0, m.start) + "array(" +
-            out.substring(m.end, i - 1) + ")" + out.substring(i)
+            out.substring(m.end, close) + ")" + out.substring(close + 1)
       }
     }
     out
@@ -228,11 +222,11 @@ object RedshiftDialect {
     * redshift.iq:678), so the patched key must be row-unique, not a
     * constant. */
   private def rewriteRankNoOrder(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\b(rank|dense_rank|row_number)\\s*\\(\\s*\\)\\s+over\\s*\\(".r
     for (m <- re.findAllMatchIn(masked)) {
       val open = m.end - 1
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close >= 0 &&
         !"(?i)\\border\\s+by\\b".r.findFirstIn(masked.substring(open, close)).isDefined) {
         val body = sql.substring(open + 1, close).trim
@@ -251,18 +245,18 @@ object RedshiftDialect {
     * read from an explicit CAST in the argument when present; the babel
     * fixture's money columns are otherwise all scale 2. */
   private def rewriteAggScale(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\b(avg|stddev_samp|stddev_pop|stddev|var_samp|var_pop|variance)\\s*\\(".r
     val sb = new StringBuilder
     var last = 0
     for (m <- re.findAllMatchIn(masked); if m.start >= last) {
       val open = m.end - 1
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close >= 0) {
         // swallow a trailing OVER (...) so the whole window expression is wrapped
         val end = "(?is)^\\s*over\\s*\\(".r.findFirstMatchIn(masked.substring(close + 1)) match {
           case Some(o) =>
-            val c2 = GraftSql.closeParen(masked, close + 1 + o.end - 1)
+            val c2 = SqlText.closeOf(masked, close + 1 + o.end - 1)
             if (c2 >= 0) c2 else close
           case None => close
         }
@@ -286,11 +280,11 @@ object RedshiftDialect {
   /** `greatest(x)` / `least(x)` with one argument is the identity in
     * Redshift; Spark requires two. */
   private def rewriteSingleArgGreatest(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\b(GREATEST|LEAST)\\s*\\(".r
     for (m <- re.findAllMatchIn(masked)) {
       val open = m.end - 1
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close >= 0) {
         val inner = masked.substring(open + 1, close)
         val topCommas = inner.foldLeft((0, 0)) { case ((d, n), c) =>
@@ -309,20 +303,13 @@ object RedshiftDialect {
   /** `regexp_replace(s, re)` deletes matches in Redshift; Spark's needs
     * the empty replacement spelled out. */
   private def rewriteTwoArgRegexpReplace(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\bREGEXP_REPLACE\\s*\\(".r
     for (m <- re.findAllMatchIn(masked)) {
       val open = m.end - 1
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close >= 0) {
-        val inner = masked.substring(open + 1, close)
-        val commas = inner.foldLeft((0, 0)) { case ((depth, n), c) =>
-          if (c == '(') (depth + 1, n)
-          else if (c == ')') (depth - 1, n)
-          else if (c == ',' && depth == 0) (depth, n + 1)
-          else (depth, n)
-        }._2
-        if (commas == 1)
+        if (SqlText.commaRanges(masked, open + 1, close).length == 2)
           return rewriteTwoArgRegexpReplace(
             sql.substring(0, close) + ", ''" + sql.substring(close))
       }

@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import GraftSql.{closeParen, maskLiterals}
+import SqlText.{closeOf, mask}
 
 /** SQL surface for UNION-DISTINCT recursive CTEs: Spark's native
   * recursive CTE (4.1) only accepts UNION ALL
@@ -24,18 +24,16 @@ object RecursiveSql {
 
   def apply(spark: SparkSession, sql: String): Option[DataFrame] =
     try run(spark, sql)
-    catch { case scala.util.control.NonFatal(e) =>
-      if (sys.props.contains("graft.debug")) e.printStackTrace()
-      None }
+    catch { case scala.util.control.NonFatal(_) => None }
 
   private def run(spark: SparkSession, sql: String): Option[DataFrame] = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val head = ("(?is)^\\s*WITH\\s+RECURSIVE\\s+([A-Za-z_]\\w*)\\s*" +
       "\\(([^)]*)\\)\\s+AS\\s*\\(").r.findFirstMatchIn(masked).getOrElse(return None)
     val name = head.group(1)
     val cols = head.group(2).split(",").map(_.trim).toSeq
     val bodyOpen = sql.lastIndexOf('(', head.end - 1)
-    val bodyClose = closeParen(masked, bodyOpen)
+    val bodyClose = closeOf(masked, bodyOpen)
     if (bodyClose < 0) return None
     // single recursive CTE only — a following comma starts another CTE
     val afterBody = masked.substring(bodyClose + 1)

@@ -20,12 +20,12 @@ object SparkDialect {
     * the wide scale. Fires only when the clamp actually bites
     * (intDigits + scale > 19), so ordinary small arrays never change. */
   private[sql] def rewriteDecimalArrayClamp(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     for (m <- "(?i)\\barray\\s*\\(".r.findAllMatchIn(masked)) {
       val open = masked.indexOf('(', m.start)
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close > 0) {
-        val items = GraftSql.splitTopLevel(sql.substring(open + 1, close)).map(_.trim)
+        val items = SqlText.splitTop(sql.substring(open + 1, close)).map(_.trim)
         val castRe = ("(?is)^CAST\\s*\\(\\s*(-?\\d+(?:\\.\\d+)?)\\s+AS\\s+DECIMAL" +
           "\\s*\\(\\s*(\\d+)\\s*(?:,\\s*(\\d+))?\\s*\\)\\s*\\)$").r
         val types: Seq[Option[(Int, Int)]] = items.map {
@@ -71,7 +71,7 @@ object SparkDialect {
     for ((kw, fn) <- Seq("MULTISET" -> "array", "MAP" -> "map", "ARRAY" -> "array")) {
       var continue = true
       while (continue) {
-        val masked = GraftSql.maskLiterals(out)
+        val masked = SqlText.mask(out)
         ("(?i)\\b" + kw + "\\s*\\[").r.findFirstMatchIn(masked) match {
           case None => continue = false
           case Some(m) =>
@@ -101,7 +101,7 @@ object SparkDialect {
   private[sql] def rewriteMultisetOps(sql: String): String = {
     val re = ("(?i)" + operand +
       "\\s+MULTISET\\s+(UNION|EXCEPT|INTERSECT)(\\s+ALL|\\s+DISTINCT)?\\s+" + operand).r
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
@@ -124,7 +124,7 @@ object SparkDialect {
   /** `a SUBMULTISET OF b` → the bag-containment predicate. */
   private[sql] def rewriteSubmultiset(sql: String): String = {
     val re = ("(?i)" + operand + "\\s+SUBMULTISET\\s+OF\\s+" + operand).r
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
@@ -139,7 +139,7 @@ object SparkDialect {
     * false in the reference's runtime. */
   private[sql] def rewriteIsASet(sql: String): String = {
     val re = ("(?i)" + operand + "\\s+IS\\s+A\\s+SET\\b").r
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
@@ -153,7 +153,7 @@ object SparkDialect {
     * collections fail both predicates, as the reference's 3VL does). */
   private[sql] def rewriteIsEmpty(sql: String): String = {
     val re = ("(?i)" + operand + "\\s+IS\\s+(NOT\\s+)?EMPTY\\b").r
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
@@ -166,13 +166,13 @@ object SparkDialect {
   /** `INSERT INTO t (VALUES ...)` — the parenthesized form reads as a
     * column list to Spark; strip the parens. */
   private def rewriteInsertValuesParen(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\bINSERT\\s+INTO\\s+(\\w+)\\s*\\(\\s*VALUES\\b".r
     re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
         val open = masked.indexOf('(', m.start)
-        val close = GraftSql.closeParen(masked, open)
+        val close = SqlText.closeOf(masked, open)
         if (close < 0) sql
         else sql.substring(0, open) + " " + sql.substring(open + 1, close).trim +
           sql.substring(close + 1)

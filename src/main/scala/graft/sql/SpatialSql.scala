@@ -170,7 +170,7 @@ object SpatialSql {
     * is the opposite. Make the reference's choice explicit on every
     * top-level sort key that doesn't already carry a NULLS clause. */
   private def orderByNullsHigh(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val obRe = "(?i)\\border\\s+by\\b".r
     val ob = obRe.findAllMatchIn(masked).find { m =>
       val pre = masked.substring(0, m.start)
@@ -184,7 +184,7 @@ object SpatialSql {
         pre.count(_ == '(') == pre.count(_ == ')')
       }
     }.map(_.start).getOrElse(sql.length)
-    val keys = GraftSql.splitTopLevel(masked.substring(ob.end, end))
+    val keys = SqlText.splitTop(masked.substring(ob.end, end))
     var offset = ob.end
     val sb = new StringBuilder(sql.substring(0, ob.end))
     for ((k, i) <- keys.zipWithIndex) {
@@ -210,27 +210,27 @@ object SpatialSql {
       s.toLowerCase(Locale.ROOT).contains("geo_"))
       s = "SELECT " + s.trim.substring("values".length)
     val re = "(?i)\\(\\s*VALUES\\b".r
-    var m0 = re.findFirstMatchIn(GraftSql.maskLiterals(s))
+    var m0 = re.findFirstMatchIn(SqlText.mask(s))
     var guard = 0
     while (m0.isDefined && guard < 20) {
       guard += 1
       val m = m0.get
       val open = m.start // the '(' that encloses the VALUES subquery
-      val close = GraftSql.closeParen(GraftSql.maskLiterals(s), open)
+      val close = SqlText.closeOf(SqlText.mask(s), open)
       // locate the keyword case-insensitively — a lowercase `values`
       // would otherwise slide the slice and corrupt the whole statement
       val kwAt = s.toLowerCase(Locale.ROOT).indexOf("values", m.start)
       val body = s.substring(kwAt + "values".length, close)
       if (body.toLowerCase(Locale.ROOT).contains("geo_")) {
-        val rows = GraftSql.splitTopLevel(body).map(_.trim)
+        val rows = SqlText.splitTop(body).map(_.trim)
         val selects = rows.map { r =>
-          val inner = if (r.startsWith("(") && GraftSql.closeParen(r, 0) == r.length - 1)
+          val inner = if (r.startsWith("(") && SqlText.closeOf(SqlText.mask(r), 0) == r.length - 1)
             r.substring(1, r.length - 1)
           else r
           s"SELECT $inner"
         }
         s = s.substring(0, open + 1) + selects.mkString(" UNION ALL ") + s.substring(close)
-        m0 = re.findFirstMatchIn(GraftSql.maskLiterals(s))
+        m0 = re.findFirstMatchIn(SqlText.mask(s))
       } else m0 = None // literal-only VALUES are fine as-is
     }
     s
@@ -245,7 +245,7 @@ object SpatialSql {
     "geo_fromgml_srid", "geo_setsrid")
 
   private def stripTopLevelSrid(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val selRe = "(?is)^\\s*select\\s+".r
     val sel = selRe.findFirstMatchIn(masked).getOrElse(return sql)
     // find the top-level FROM (or end of statement)
@@ -266,7 +266,7 @@ object SpatialSql {
       i += 1
     }
     val listMasked = masked.substring(sel.end, fromAt)
-    val items = GraftSql.splitTopLevel(listMasked)
+    val items = SqlText.splitTop(listMasked)
     var offset = sel.end
     var out = sql
     var shift = 0
@@ -277,7 +277,7 @@ object SpatialSql {
       val callRe = ("^(" + sridCarriers.mkString("|") + ")\\s*\\(").r
       callRe.findFirstMatchIn(t).foreach { cm =>
         val callOpen = itemStart + lead + cm.end - 1
-        val callClose = GraftSql.closeParen(GraftSql.maskLiterals(out), callOpen + shift)
+        val callClose = SqlText.closeOf(SqlText.mask(out), callOpen + shift)
         if (callClose > 0) {
           val absStart = itemStart + lead + shift
           out = out.substring(0, absStart) + "geo_astext(" +
@@ -329,20 +329,20 @@ object SpatialSql {
     var changed = true
     while (changed) {
       changed = false
-      val masked = GraftSql.maskLiterals(s)
+      val masked = SqlText.mask(s)
       val re = ("(?i)\\b(" + arityFns.mkString("|") + "|geo_makeline)\\s*\\(").r
       val it = re.findAllMatchIn(masked).toSeq
       for (m <- it if !changed) {
         val open = m.end - 1
-        val close = GraftSql.closeParen(masked, open)
+        val close = SqlText.closeOf(masked, open)
         if (close > 0) {
-          val args = GraftSql.splitTopLevel(masked.substring(open + 1, close))
+          val args = SqlText.splitTop(masked.substring(open + 1, close))
           val fn = m.group(1).toLowerCase(Locale.ROOT)
           if (fn == "geo_makeline" && args.length > 2) {
             // left-fold variadic point lists into nested 2-arg calls
-            val orig = GraftSql.splitTopLevel(s.substring(open + 1, GraftSql.closeParen(s, open)))
+            val orig = SqlText.splitTop(s.substring(open + 1, close))
             val nested = orig.map(_.trim).reduceLeft((a, b) => s"geo_makeline($a, $b)")
-            s = s.substring(0, m.start) + nested + s.substring(GraftSql.closeParen(s, open) + 1)
+            s = s.substring(0, m.start) + nested + s.substring(close + 1)
             changed = true
           } else arityMap.get((fn, args.length)).foreach { repl =>
             s = s.substring(0, m.start) + repl + s.substring(open)
@@ -363,16 +363,17 @@ object SpatialSql {
     val tvfRe = "(?i)(,\\s*lateral\\s+table|cross\\s+apply\\s+table|\\btable)\\s*\\(\\s*(geo_makegrid|geo_makegridpoints|geo_explode)\\s*\\(".r
     var s = sql
     var guard = 0
-    var m0 = tvfRe.findFirstMatchIn(GraftSql.maskLiterals(s))
+    var m0 = tvfRe.findFirstMatchIn(SqlText.mask(s))
     val laterals = scala.collection.mutable.ArrayBuffer.empty[String]
     while (m0.isDefined && guard < 50) {
       guard += 1
       val m = m0.get
       val kind = m.group(1).toLowerCase(Locale.ROOT)
       val fnOpen = m.end - 1
-      val fnClose = GraftSql.closeParen(s, fnOpen)
-      val tableOpen = s.indexOf('(', m.start + m.group(1).length)
-      val tableClose = GraftSql.closeParen(s, tableOpen)
+      val ms = SqlText.mask(s)
+      val fnClose = SqlText.closeOf(ms, fnOpen)
+      val tableOpen = ms.indexOf('(', m.start + m.group(1).length)
+      val tableClose = SqlText.closeOf(ms, tableOpen)
       val call = s.substring(tableOpen + 1, tableClose).trim
       // optional alias after the closing paren: "as p" / "as t(geom, index)"
       val after = s.substring(tableClose + 1)
@@ -392,13 +393,13 @@ object SpatialSql {
         laterals += lv
         s = s.substring(0, m.start) + " " + s.substring(tableClose + 1 + aliasLen)
       }
-      m0 = tvfRe.findFirstMatchIn(GraftSql.maskLiterals(s))
+      m0 = tvfRe.findFirstMatchIn(SqlText.mask(s))
     }
     if (laterals.nonEmpty) {
       // insert the lateral views at the end of the FROM clause: before
       // the first PAREN-DEPTH-0 WHERE / GROUP / ORDER / LIMIT, else at
       // the end (a subquery's own clauses sit at depth > 0)
-      val masked = GraftSql.maskLiterals(s)
+      val masked = SqlText.mask(s)
       val tailRe = "(?i)\\b(where|group\\s+by|order\\s+by|limit|having)\\b".r
       val at = tailRe.findAllMatchIn(masked).find { m =>
         masked.substring(0, m.start).count(_ == '(') == masked.substring(0, m.start).count(_ == ')')
@@ -409,7 +410,7 @@ object SpatialSql {
   }
 
   private def mapNames(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\bST_[A-Za-z0-9]+\\b".r
     val sb = new StringBuilder
     var last = 0

@@ -3,7 +3,7 @@ package graft.sql
 /** SQL-standard predicate/constructor surfaces the reference parses
   * natively but Spark's grammar lacks, lowered textually onto Spark
   * equivalents before parsing. All scanning happens on the masked text
-  * (see [[GraftSql.maskLiterals]]) so string literals and backtick
+  * (see [[SqlText.mask]]) so string literals and backtick
   * identifiers can never trigger a rewrite.
   *
   * Covered (ref: core SqlStdOperatorTable SOME/ALL/UNIQUE operators and
@@ -60,14 +60,14 @@ object SubqueryRewrites {
   private[sql] def rewriteInUnnest(sql: String): String = {
     val re = ("(?is)(\\bTRUE\\b|\\bFALSE\\b|'[^']*'|-?\\d+(?:\\.\\d+)?|[A-Za-z_][\\w.]*)" +
       "\\s+(NOT\\s+)?IN\\s*\\(\\s*SELECT\\s+(\\w+)\\s+FROM\\s+UNNEST\\s*\\(").r
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val m = re.findAllMatchIn(masked).toSeq.headOption.getOrElse(return sql)
     val unnestOpen = masked.lastIndexOf('(', m.end - 1)
-    val unnestClose = GraftSql.closeParen(masked, unnestOpen)
+    val unnestClose = SqlText.closeOf(masked, unnestOpen)
     if (unnestClose < 0) return sql
     // subquery close: optional `AS a(c)` / `a(c)` tail then `)`
     val inOpen = masked.indexOf('(', m.start + m.group(1).length)
-    val inClose = GraftSql.closeParen(masked, inOpen)
+    val inClose = SqlText.closeOf(masked, inOpen)
     if (inClose < 0) return sql
     val tail = masked.substring(unnestClose + 1, inClose)
     if (!"(?is)^\\s*(?:AS\\s+)?(?:\\w+\\s*(?:\\(\\s*\\w+\\s*\\))?)?\\s*$".r.matches(tail))
@@ -75,7 +75,7 @@ object SubqueryRewrites {
     val probe = sql.substring(m.start(1), m.end(1))
     val arr = sql.substring(unnestOpen + 1, unnestClose)
     // multi-collection UNNEST(a, b) zips — not a membership probe
-    if (GraftSql.splitTopLevel(arr).length != 1) return sql
+    if (SqlText.splitTop(arr).length != 1) return sql
     val neg = m.group(2) != null
     val call = s"array_contains(($arr), $probe)"
     rewriteInUnnest(sql.substring(0, m.start) +
@@ -90,11 +90,11 @@ object SubqueryRewrites {
     * Dropping the frame clause gives exactly the whole-partition
     * aggregate. */
   private[sql] def rewriteUnorderedRange(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?i)\\bOVER\\s*\\(".r
     for (m <- re.findAllMatchIn(masked)) {
       val open = m.end - 1
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close >= 0) {
         val innerM = masked.substring(open + 1, close)
         val rangeAt = "(?i)\\bRANGE\\b".r.findFirstMatchIn(innerM).map(_.start).getOrElse(-1)
@@ -116,7 +116,7 @@ object SubqueryRewrites {
   private val argRe = "(?i)\\bARG_(MIN|MAX)\\s*\\(".r
 
   private[sql] def rewriteArgMinMax(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val sb = new StringBuilder
     var last = 0
     argRe.findAllMatchIn(masked).foreach { m =>
@@ -132,7 +132,7 @@ object SubqueryRewrites {
   private val isUnknownRe = "(?i)\\bIS\\s+(NOT\\s+)?UNKNOWN\\b".r
 
   private[sql] def rewriteIsUnknown(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val sb = new StringBuilder
     var last = 0
     isUnknownRe.findAllMatchIn(masked).foreach { m =>
@@ -154,7 +154,7 @@ object SubqueryRewrites {
       "percentile\\w*|array_agg)\\s*\\(").r
 
   private[sql] def rewriteGroupByEmpty(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     if (groupByEmptyRe.findFirstIn(masked).isEmpty &&
         groupByDistinctRe.findFirstIn(masked).isEmpty) return sql
     val hasAgg = aggFnRe.findFirstIn(masked).isDefined
@@ -168,7 +168,7 @@ object SubqueryRewrites {
       }
       sb.append(sql.substring(last)).toString
     }
-    val masked1 = GraftSql.maskLiterals(step1)
+    val masked1 = SqlText.mask(step1)
     val sb = new StringBuilder
     var last = 0
     groupByDistinctRe.findAllMatchIn(masked1).foreach { m =>
@@ -192,7 +192,7 @@ object SubqueryRewrites {
     // key IS the collected expression (or ordinal 1), i.e. value order;
     // an independent sort key has no Spark aggregate equivalent and is
     // left for the parser to reject visibly.
-    val masked0 = GraftSql.maskLiterals(sql)
+    val masked0 = SqlText.mask(sql)
     val step1 = {
       val sb = new StringBuilder
       var last = 0
@@ -215,7 +215,7 @@ object SubqueryRewrites {
       }
       sb.append(sql.substring(last)).toString
     }
-    val masked = GraftSql.maskLiterals(step1)
+    val masked = SqlText.mask(step1)
     val sb = new StringBuilder
     var last = 0
     collectRe.findAllMatchIn(masked).foreach { m =>
@@ -226,7 +226,7 @@ object SubqueryRewrites {
   }
 
   private[sql] def rewriteInValues(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val sb = new StringBuilder
     var last = 0
     inValuesRe.findAllMatchIn(masked).foreach { m =>
@@ -237,17 +237,17 @@ object SubqueryRewrites {
       // VALUES row is single-column; multi-column rows keep the
       // subquery form.
       val open = masked.indexOf('(', m.start)
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       val inlined: Option[String] =
         if (close < 0 || m.start < last) None
         else {
           val bodyFrom = m.end // just past the VALUES keyword
-          val rows = splitTop(sql.substring(bodyFrom, close)).map(_.trim)
-          val maskedRows = splitTop(masked.substring(bodyFrom, close)).map(_.trim)
+          val rows = SqlText.splitTop(sql.substring(bodyFrom, close)).map(_.trim)
+          val maskedRows = SqlText.splitTop(masked.substring(bodyFrom, close)).map(_.trim)
           val single = rows.nonEmpty && rows.zip(maskedRows).forall { case (r, mr) =>
             if (!r.startsWith("(")) true // bare scalar row
-            else GraftSql.closeParen(mr, 0) == mr.length - 1 &&
-              splitTop(mr.substring(1, mr.length - 1)).length == 1
+            else SqlText.closeOf(mr, 0) == mr.length - 1 &&
+              SqlText.splitTop(mr.substring(1, mr.length - 1)).length == 1
           }
           if (single)
             Some("IN (" + rows.map(r => if (r.startsWith("(")) r.substring(1, r.length - 1) else r).mkString(", ") + ")")
@@ -270,42 +270,17 @@ object SubqueryRewrites {
   private val quantRe =
     "(?i)(=|<>|!=|<=|>=|<|>)\\s*(SOME|ANY|ALL)\\s*\\(".r
 
-  /** Start of the primary expression ending just before `before`:
-    * identifier chains, call/paren groups, bracket groups, literals —
-    * the LHS of a quantified comparison may be any of them (some.iq's
-    * `array[1, 2] = any(...)`). Operator-level precedence is NOT walked
-    * (`x + 1 = any(...)` captures `1`); corpus LHSs are primaries. */
-  private def primaryStart(masked: String, before: Int): Int = {
-    var s = before - 1
-    while (s >= 0 && masked.charAt(s).isWhitespace) s -= 1
-    def depthBack(openCh: Char, closeCh: Char): Unit = {
-      var depth = 1
-      s -= 1
-      while (s >= 0 && depth > 0) {
-        val c = masked.charAt(s)
-        if (c == closeCh) depth += 1 else if (c == openCh) depth -= 1
-        s -= 1
-      }
-    }
-    var scanning = true
-    while (scanning && s >= 0) {
-      masked.charAt(s) match {
-        case c if c.isLetterOrDigit || c == '_' || c == '.' || c == '`' || c == '\'' || c == '\u0001' => s -= 1
-        case ')' => depthBack('(', ')')
-        case ']' => depthBack('[', ']')
-        case _ => scanning = false
-      }
-    }
-    s + 1
-  }
-
   private[sql] def rewriteQuantified(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val m = quantRe.findFirstMatchIn(masked).getOrElse(return sql)
     val open = m.end - 1
-    val close = GraftSql.closeParen(masked, open)
+    val close = SqlText.closeOf(masked, open)
     if (close < 0) return sql
-    val lhsStart = primaryStart(masked, m.start(1))
+    // the LHS may be any primary — identifier chain, call, paren or
+    // bracket group, literal (some.iq's `array[1, 2] = any(...)`);
+    // operator precedence is not walked (`x + 1 = any(...)` takes `1`)
+    val lhsStart = SqlText.primaryStart(masked, m.start(1))
+    if (lhsStart < 0) return sql
     val lhs = sql.substring(lhsStart, m.start(1)).trim
     if (lhs.isEmpty ||
         "(?i)^(AND|OR|NOT|WHEN|THEN|ELSE|WHERE|ON|HAVING|SELECT|BY)$".r.matches(lhs))
@@ -318,7 +293,7 @@ object SubqueryRewrites {
     val id = s"uq$open"
     val repl =
       if (!isSubq) {
-        val items = splitTop(body)
+        val items = SqlText.splitTop(body)
         if (items.size < 2) {
           // single collection argument: the reference quantifies over the
           // ELEMENTS of an array/multiset (SqlQuantifyOperator on a
@@ -378,10 +353,10 @@ object SubqueryRewrites {
   private val uniqueRe = "(?i)\\b(NOT\\s+)?UNIQUE\\s*\\(".r
 
   private[sql] def rewriteUnique(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     for (m <- uniqueRe.findAllMatchIn(masked)) {
       val open = m.end - 1
-      val close = GraftSql.closeParen(masked, open)
+      val close = SqlText.closeOf(masked, open)
       if (close >= 0) {
         val bodyMasked = masked.substring(open + 1, close).trim
         if ("(?is)^SELECT\\b.*".r.matches(bodyMasked)) {
@@ -406,10 +381,10 @@ object SubqueryRewrites {
   private def selectArity(bodyMasked: String): Option[Int] = {
     val up = bodyMasked.toUpperCase
     if (!up.startsWith("SELECT")) return None
-    val fromAt = GraftSql.topLevelIndex(bodyMasked, "FROM")
+    val fromAt = SqlText.topLevelIndex(bodyMasked, "FROM")
     val list0 = (if (fromAt < 0) bodyMasked.substring(6) else bodyMasked.substring(6, fromAt)).trim
     val list = "(?i)^(DISTINCT|ALL)\\b".r.replaceFirstIn(list0, "").trim
-    if (list.contains("*")) None else Some(splitTop(list).size)
+    if (list.contains("*")) None else Some(SqlText.splitTop(list).size)
   }
 
   // ---- ARRAY(subquery) / MAP(subquery) ----------------------------------
@@ -417,10 +392,10 @@ object SubqueryRewrites {
   private val arrayMapRe = "(?i)\\b(ARRAY|MAP)\\s*\\(\\s*SELECT\\b".r
 
   private[sql] def rewriteArrayMap(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val m = arrayMapRe.findFirstMatchIn(masked).getOrElse(return sql)
     val open = masked.indexOf('(', m.start)
-    val close = GraftSql.closeParen(masked, open)
+    val close = SqlText.closeOf(masked, open)
     if (close < 0) return sql
     val body = sql.substring(open + 1, close).trim
     val id = s"ua$open"
@@ -435,26 +410,5 @@ object SubqueryRewrites {
         s"(SELECT map_from_entries(collect_list(struct(${id}_k, ${id}_v))) " +
           s"FROM ($body) AS ${id}_m(${id}_k, ${id}_v))"
     rewriteArrayMap(sql.substring(0, m.start) + repl + sql.substring(close + 1))
-  }
-
-  // ---- util -------------------------------------------------------------
-
-  private def splitTop(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var inStr = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false }
-      else if (c == '\'') inStr = true
-      else if (c == '(' || c == '[') depth += 1
-      else if (c == ')' || c == ']') depth -= 1
-      else if (c == ',' && depth == 0) { out += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq
   }
 }

@@ -57,7 +57,7 @@ object TypesSql {
     val mapRe = "(?is)^MAP\\s*<(.*)>$".r
     t match {
       case mapRe(body) =>
-        val parts = splitTop(body, '<', '>', ',', angles = true)
+        val parts = splitTypeList(body)
         if (parts.length == 2)
           return s"MAP<${expandType(parts(0))}, ${expandType(parts(1))}>"
       case _ =>
@@ -65,16 +65,15 @@ object TypesSql {
     Option(registry.get(lc(t))).map(_.ddl).getOrElse(scalar(t))
   }
 
-  /** Depth-0 split; `angles = true` also nests on <> (type-position
-    * text: STRUCT<...> field lists — never comparisons). */
-  private def splitTop(s: String, open: Char, close: Char, sep: Char,
-      angles: Boolean = false): Seq[String] = {
+  /** Depth-0 comma split of TYPE text, nesting on () and <> (STRUCT<...>
+    * field lists — never comparisons, so not SQL text for [[SqlText]]). */
+  private def splitTypeList(s: String): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var depth = 0; var start = 0
     for (i <- s.indices) s.charAt(i) match {
-      case c if c == open || c == '(' || (angles && c == '<') => depth += 1
-      case c if c == close || c == ')' || (angles && c == '>') => depth -= 1
-      case c if c == sep && depth == 0 => out += s.substring(start, i); start = i + 1
+      case '(' | '<' => depth += 1
+      case ')' | '>' => depth -= 1
+      case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
       case _ =>
     }
     out += s.substring(start)
@@ -83,7 +82,7 @@ object TypesSql {
 
   /** `f1 T1 [NOT NULL|NULL], ...` -> STRUCT<f1: T1', ...> */
   private def recordDdl(body: String): String = {
-    val fields = splitTop(body, '(', ')', ',', angles = true).map { f =>
+    val fields = splitTypeList(body).map { f =>
       val cleaned = f.trim.replaceAll("(?i)\\s+NOT\\s+NULL$", "").replaceAll("(?i)\\s+NULL$", "")
       val Array(n, t) = cleaned.split("\\s+", 2)
       s"$n: ${expandType(t)}"
@@ -92,7 +91,7 @@ object TypesSql {
   }
 
   private def fieldNames(body: String): Seq[String] =
-    splitTop(body, '(', ')', ',', angles = true).map(_.trim.split("\\s+", 2)(0))
+    splitTypeList(body).map(_.trim.split("\\s+", 2)(0))
 
   private val createRe = "(?is)^CREATE\\s+TYPE\\s+(\\w+)\\s+AS\\s*(.+?)\\s*;?\\s*$".r
   private val dropRe = "(?is)^DROP\\s+TYPE\\s+(?:IF\\s+EXISTS\\s+)?(\\w+)\\s*;?\\s*$".r
@@ -146,11 +145,11 @@ object TypesSql {
     * to every `AS ROW(...)` type position — the token sequence cannot
     * occur as a value expression. */
   def rewriteCastRow(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val m = "(?is)\\bAS\\s+(ROW)\\s*\\(".r.findFirstMatchIn(masked)
       .getOrElse(return sql)
     val open = masked.indexOf('(', m.start(1))
-    val close = GraftSql.closeParen(masked, open)
+    val close = SqlText.closeOf(masked, open)
     if (close < 0) return sql
     // `CAST(NULL AS ROW(...))` takes Spark's POSITIONAL field names
     // (col1..colN) so it unifies with bare ROW(..) value constructors
@@ -162,7 +161,7 @@ object TypesSql {
     val body = sql.substring(open + 1, close)
     val struct =
       if (nullOperand) {
-        val fields = splitTop(body, '(', ')', ',', angles = true).zipWithIndex.map {
+        val fields = splitTypeList(body).zipWithIndex.map {
           case (f, i) =>
             val cleaned = f.trim.replaceAll("(?i)\\s+NOT\\s+NULL$", "").replaceAll("(?i)\\s+NULL$", "")
             val t = cleaned.split("\\s+", 2)(1)
@@ -187,20 +186,13 @@ object TypesSql {
         if (d.fields.nonEmpty) {
           // constructor: name(args) -> named_struct('f1', a1, ...)
           val re = ("(?i)\\b" + java.util.regex.Pattern.quote(name) + "\\s*\\(").r
-          re.findFirstMatchIn(sql) match {
+          val masked = SqlText.mask(sql)
+          re.findFirstMatchIn(masked) match {
             case Some(m) =>
               val open = m.end - 1
-              var depth = 0; var close = -1; var i = open
-              while (i < sql.length && close < 0) {
-                sql.charAt(i) match {
-                  case '(' => depth += 1
-                  case ')' => depth -= 1; if (depth == 0) close = i
-                  case _ =>
-                }
-                i += 1
-              }
+              val close = SqlText.closeOf(masked, open)
               if (close > 0) {
-                val args = splitTop(sql.substring(open + 1, close), '(', ')', ',')
+                val args = SqlText.splitTop(sql.substring(open + 1, close)).map(_.trim).filter(_.nonEmpty)
                 if (args.length == d.fields.length) {
                   val ns = d.fields.zip(args)
                     .map { case (f, a) => s"'$f', $a" }.mkString("named_struct(", ", ", ")")

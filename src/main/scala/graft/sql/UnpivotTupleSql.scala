@@ -1,6 +1,6 @@
 package graft.sql
 
-import GraftSql.{closeParen, maskLiterals, splitElemsOf}
+import SqlText.{closeOf, mask, splitElems}
 
 /** UNPIVOT with TUPLE labels (pivot.iq:394 —
   * `FOR (job, deptno) IN ((c10_ss, c10_c) AS ('CLERK', 10), ...)`):
@@ -17,7 +17,7 @@ import GraftSql.{closeParen, maskLiterals, splitElemsOf}
 object UnpivotTupleSql {
 
   def rewrite(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     // iterate: a native (single-label) UNPIVOT earlier in the statement
     // must not hide a later tuple-label one
     for (um <- "(?is)\\bUNPIVOT\\s*(INCLUDE\\s+NULLS|EXCLUDE\\s+NULLS)?\\s*\\(".r
@@ -31,7 +31,7 @@ object UnpivotTupleSql {
   private def rewriteOne(sql: String, masked: String,
       um: scala.util.matching.Regex.Match): Option[String] = {
     val open = masked.indexOf('(', um.end - 1)
-    val close = closeParen(masked, open)
+    val close = closeOf(masked, open)
     if (close < 0) return None
     val bodyM = masked.substring(open + 1, close)
     if ("(?is)\\bAS\\s*\\(".r.findFirstIn(bodyM).isEmpty) return None // native form
@@ -41,31 +41,31 @@ object UnpivotTupleSql {
 
     // body: (<measures>) FOR (<fors>) IN (<entries>)
     val fm = "(?is)^\\s*\\(".r.findFirstMatchIn(bodyM).getOrElse(return None)
-    val mClose = closeParen(bodyM, fm.end - 1)
+    val mClose = closeOf(bodyM, fm.end - 1)
     if (mClose < 0) return None
-    val measures = splitElemsOf(body, bodyM, fm.end, mClose)
+    val measures = splitElems(body, bodyM, fm.end, mClose)
     val forM = "(?is)^\\s*FOR\\s*\\(".r.findFirstMatchIn(bodyM.substring(mClose + 1))
       .getOrElse(return None)
     val fOpen = mClose + 1 + forM.end - 1
-    val fClose = closeParen(bodyM, fOpen)
+    val fClose = closeOf(bodyM, fOpen)
     if (fClose < 0) return None
-    val fors = splitElemsOf(body, bodyM, fOpen + 1, fClose)
+    val fors = splitElems(body, bodyM, fOpen + 1, fClose)
     val inM = "(?is)^\\s*IN\\s*\\(".r.findFirstMatchIn(bodyM.substring(fClose + 1))
       .getOrElse(return None)
     val iOpen = fClose + 1 + inM.end - 1
-    val iClose = closeParen(bodyM, iOpen)
+    val iClose = closeOf(bodyM, iOpen)
     if (iClose < 0) return None
-    val entries = splitElemsOf(body, bodyM, iOpen + 1, iClose).map { e =>
-      val em = maskLiterals(e)
+    val entries = splitElems(body, bodyM, iOpen + 1, iClose).map { e =>
+      val em = mask(e)
       val cm = "(?is)^\\s*\\(".r.findFirstMatchIn(em).getOrElse(return None)
-      val cClose = closeParen(em, cm.end - 1)
-      val cols = splitElemsOf(e, em, cm.end, cClose)
+      val cClose = closeOf(em, cm.end - 1)
+      val cols = splitElems(e, em, cm.end, cClose)
       val am = "(?is)^\\s*AS\\s*\\(".r.findFirstMatchIn(em.substring(cClose + 1))
       val vals = am match {
         case Some(a) =>
           val vOpen = cClose + 1 + a.end - 1
-          val vClose = closeParen(em, vOpen)
-          splitElemsOf(e, em, vOpen + 1, vClose)
+          val vClose = closeOf(em, vOpen)
+          splitElems(e, em, vOpen + 1, vClose)
         case None =>
           // missing AS: the default label is the measure-column names
           // upper-joined by '_', replicated into every FOR column

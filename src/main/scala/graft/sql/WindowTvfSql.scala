@@ -73,25 +73,6 @@ object WindowTvfSql {
     re.findFirstMatchIn(text.trim).map(_.group(1).replaceAll("[`\"]", ""))
   }
 
-  /** Split an argument region on depth-0 commas. */
-  private def splitArgs(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
   private def parseArg(a: String): Arg = {
     val named = "(?is)^(\\w+)\\s*=>\\s*(.+)$".r
     a.trim match {
@@ -101,14 +82,14 @@ object WindowTvfSql {
   }
 
   def rewrite(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = SqlText.mask(sql)
     val re = "(?is)\\bTABLE\\s*\\(\\s*(TUMBLE|HOP|SESSION)\\s*\\(".r
     re.findFirstMatchIn(masked) match {
       case None => sql
       case Some(m) =>
         val fn = m.group(1).toUpperCase
         val innerOpen = m.end - 1 // the TVF's '('
-        val innerClose = GraftSql.closeParen(masked, innerOpen)
+        val innerClose = SqlText.closeOf(masked, innerOpen)
         if (innerClose < 0) return sql
         val outerClose = {
           // the TABLE(...) close follows the TVF close
@@ -118,7 +99,7 @@ object WindowTvfSql {
           j
         }
         val argsText = sql.substring(innerOpen + 1, innerClose)
-        val lowered = lowerCall(fn, splitArgs(argsText).map(parseArg))
+        val lowered = lowerCall(fn, SqlText.splitTop(argsText).map(_.trim).filter(_.nonEmpty).map(parseArg))
         rewrite(sql.substring(0, m.start) + lowered + sql.substring(outerClose + 1))
     }
   }

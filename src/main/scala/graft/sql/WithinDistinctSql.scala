@@ -1,6 +1,6 @@
 package graft.sql
 
-import GraftSql.{closeParen, maskLiterals}
+import SqlText.{closeOf, mask, topLevelIndex}
 
 /** `agg(e) WITHIN DISTINCT (keys)` (SqlInternalOperators WITHIN
   * DISTINCT — CALCITE-4483; within-distinct.iq): the aggregate runs
@@ -25,7 +25,7 @@ object WithinDistinctSql {
   private val err = "more than one distinct value in agg UNIQUE_VALUE"
 
   def rewrite(sql: String): String = {
-    if ("(?is)\\bWITHIN\\s+DISTINCT\\b".r.findFirstIn(maskLiterals(sql)).isEmpty) return sql
+    if ("(?is)\\bWITHIN\\s+DISTINCT\\b".r.findFirstIn(mask(sql)).isEmpty) return sql
     twoLevel(sql).getOrElse(foldRewrite(sql))
   }
 
@@ -47,31 +47,24 @@ object WithinDistinctSql {
     * every other composition falls back to the fold lowering
     * (correctness surface, SCALE.md). */
   private def twoLevel(sql: String): Option[String] = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     // statement shape: top-level SELECT ... FROM ... [WHERE ...]
     // GROUP BY ... [ORDER BY ...][;]  — no HAVING/QUALIFY/set-ops
     val selM = "(?is)^\\s*SELECT\\s".r.findFirstMatchIn(masked).getOrElse(return None)
-    def topLevelKw(kw: String, from: Int): Option[Int] = {
-      val re = ("(?is)\\b" + kw + "\\b").r
-      re.findAllMatchIn(masked).find { m =>
-        m.start >= from && {
-          val pre = masked.substring(from, m.start)
-          pre.count(_ == '(') == pre.count(_ == ')')
-        }
-      }.map(_.start)
-    }
     if (Seq("HAVING", "QUALIFY", "UNION", "INTERSECT", "EXCEPT", "WINDOW")
-        .exists(k => topLevelKw(k, selM.end).isDefined)) return None
-    val fromAt = topLevelKw("FROM", selM.end).getOrElse(return None)
-    val groupAt = topLevelKw("GROUP\\s+BY", fromAt).getOrElse(return None)
-    val whereAt = topLevelKw("WHERE", fromAt)
-    val orderAt = topLevelKw("ORDER\\s+BY", groupAt)
+        .exists(topLevelIndex(masked, _, selM.end) >= 0)) return None
+    val fromAt = topLevelIndex(masked, "FROM", selM.end)
+    if (fromAt < 0) return None
+    val groupAt = topLevelIndex(masked, "GROUP BY", fromAt)
+    if (groupAt < 0) return None
+    val whereAt = Some(topLevelIndex(masked, "WHERE", fromAt)).filter(_ >= 0)
+    val orderAt = Some(topLevelIndex(masked, "ORDER BY", groupAt)).filter(_ >= 0)
     val stmtEnd = sql.replaceAll("[;\\s]+$", "").length
     val rel = sql.substring(fromAt + 4, whereAt.getOrElse(groupAt)).trim
     val whereTxt = whereAt.map(w => " " + sql.substring(w, groupAt).trim).getOrElse("")
     val gkeysEnd = orderAt.getOrElse(stmtEnd)
     val gm = "(?is)GROUP\\s+BY\\s*".r.findFirstMatchIn(masked.substring(groupAt)).get
-    val gkeyList = GraftSql.splitTopLevel(
+    val gkeyList = SqlText.splitTop(
       sql.substring(groupAt + gm.end, gkeysEnd)).map(_.trim)
     if (gkeyList.isEmpty ||
       !gkeyList.forall(k => "^[A-Za-z_]\\w*$".r.matches(k) || "^`[^`]*`$".r.matches(k)))
@@ -84,12 +77,12 @@ object WithinDistinctSql {
     for (m <- "(?is)\\bWITHIN\\s+DISTINCT\\s*\\(".r.findAllMatchIn(masked)) {
       if (m.start > fromAt) return None // WITHIN DISTINCT outside the select list
       val kOpen = masked.indexOf('(', m.start)
-      val kClose = closeParen(masked, kOpen)
+      val kClose = closeOf(masked, kOpen)
       if (kClose < 0) return None
       // trailing FILTER → fold path only
       if ("(?is)^\\s*FILTER\\s*\\(".r.findFirstIn(masked.substring(kClose + 1)).isDefined)
         return None
-      val keys = GraftSql.splitTopLevel(sql.substring(kOpen + 1, kClose)).map(_.trim)
+      val keys = SqlText.splitTop(sql.substring(kOpen + 1, kClose)).map(_.trim)
       var p = m.start - 1
       while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
       if (p < 0 || masked.charAt(p) != ')') return None
@@ -137,7 +130,7 @@ object WithinDistinctSql {
     // replacements above); otherwise use the fold path
     val leftoverAgg = ("(?i)\\b(sum|count|avg|min|max|collect_list|collect_set|first|last|" +
       "stddev|variance|var_pop|var_samp|listagg|string_agg|array_agg|bool_and|bool_or)\\s*\\(([^)]*)\\)").r
-      .findAllMatchIn(maskLiterals(items)).exists { m =>
+      .findAllMatchIn(mask(items)).exists { m =>
         val inner = m.group(2)
         !(inner == "*" || inner.contains("__wv") ||
           "(?i)^\\s*CAST\\(".r.findFirstIn(inner).isDefined && inner.contains("__wv"))
@@ -164,20 +157,20 @@ object WithinDistinctSql {
   }
 
   private def foldRewrite(sql: String): String = {
-    val masked = maskLiterals(sql)
+    val masked = mask(sql)
     val m = "(?is)\\bWITHIN\\s+DISTINCT\\s*\\(".r.findFirstMatchIn(masked)
       .getOrElse(return sql)
     val kOpen = masked.indexOf('(', m.start)
-    val kClose0 = closeParen(masked, kOpen)
+    val kClose0 = closeOf(masked, kOpen)
     if (kClose0 < 0) return sql
-    val keys = GraftSql.splitTopLevel(sql.substring(kOpen + 1, kClose0)).map(_.trim)
+    val keys = SqlText.splitTop(sql.substring(kOpen + 1, kClose0)).map(_.trim)
     // a trailing FILTER (WHERE ...) restricts the rows feeding the
     // distinct pair collection — it rides on every collect_list
     var kClose = kClose0
     var filterTxt = ""
     val fm = "(?is)^\\s*FILTER\\s*\\(".r.findFirstMatchIn(masked.substring(kClose0 + 1))
     fm.foreach { f =>
-      val fc = closeParen(masked, kClose0 + 1 + f.end - 1)
+      val fc = closeOf(masked, kClose0 + 1 + f.end - 1)
       if (fc > 0) {
         filterTxt = " " + sql.substring(kClose0 + 1 + f.start, fc + 1).trim
         kClose = fc

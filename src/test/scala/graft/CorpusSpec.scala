@@ -553,7 +553,7 @@ class CorpusSpec extends IqHarness {
     * a JSON document literal like '{"foo":"bar"}' (misc.iq:2399) must
     * keep its double quotes. */
   private def quotedIdsToBackticks(sql: String): String = {
-    val masked = GraftSql.maskLiterals(sql)
+    val masked = graft.sql.SqlText.mask(sql)
     val sb = new StringBuilder(sql)
     "\"([^\"]+)\"".r.findAllMatchIn(masked).toSeq.sortBy(-_.start).foreach { m =>
       sb.replace(m.start, m.end, "`" + sql.substring(m.start + 1, m.end - 1) + "`")

@@ -271,6 +271,28 @@ class GraftSqlSpec extends SparkSpec {
     assert(GraftSql.rewrite(qualifyTick) == qualifyTick)
   }
 
+  test("quoted and bracketed text keeps its structure") {
+    // (a) a comma inside ARRAY[...] does not split a FILTER'd window call
+    val a = GraftSql.sql(spark,
+      "SELECT collect_list(ARRAY[a, b]) FILTER (WHERE a > 0) OVER () AS l " +
+        "FROM VALUES (1, 2), (0, 3) AS t(a, b)").collect()
+    assert(a.length == 2)
+    a.foreach(r => assert(r.getSeq[Seq[Int]](0) == Seq(Seq(1, 2)), r))
+    // (b) a paren inside a literal does not end a window TVF argument
+    def tumble(lit: String) = GraftSql.rewriteWindowTvf(
+      s"SELECT * FROM TABLE(TUMBLE((SELECT * FROM ev WHERE s <> $lit), " +
+        "DESCRIPTOR(ts), INTERVAL '1' HOUR))")
+    val control = tumble("'x'")
+    assert(tumble("'('") == control.replace("'x'", "'('"))
+    assert(control.contains("'3600000 milliseconds'"), control)
+    // (c) a paren inside a backtick identifier does not end a call
+    def jsonValue(col: String) = GraftSql.sql(spark,
+      s"""SELECT JSON_VALUE($col, '$$.a') AS v FROM VALUES ('{"a":"7"}') AS t($col)""")
+      .collect().map(_.getString(0)).toSeq
+    assert(jsonValue("dx") == Seq("7"))
+    assert(jsonValue("`d)x`") == Seq("7"))
+  }
+
   test("BigQuery SAFE_ arithmetic family lowers to TRY_ builtins") {
     val r = GraftSql.sql(spark, """
       SELECT SAFE_DIVIDE(1, 0) AS d, SAFE_ADD(9223372036854775807, 1) AS a,

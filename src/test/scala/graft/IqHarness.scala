@@ -307,7 +307,7 @@ trait IqHarness extends SparkSpec {
         try (got0, got0.collect())
         catch {
           case ex: Throwable if graft.sql.Decorrelate.applicable(ex) =>
-            val df = graft.sql.Decorrelate(spark, GraftSql.rewriteProbe(cleaned))
+            val df = graft.sql.Decorrelate(spark, GraftSql.rewrite(cleaned))
               .getOrElse(throw ex)
             (df, df.collect())
         }

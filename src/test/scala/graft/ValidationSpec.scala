@@ -65,6 +65,14 @@ class ValidationSpec extends SparkSpec {
     assert(errs(0).column.exists(c => errs(1).column.exists(_ > c)), errs)
   }
 
+  test("a comma inside a quoted select item does not split the item") {
+    spark.sql("CREATE OR REPLACE TEMP VIEW v AS SELECT 1 AS `a,b`")
+    val errs = GraftSql.validate(spark, "SELECT `a,b`, nosuch FROM v")
+    assert(errs.length == 1, errs)
+    assert(errs.head.message.startsWith("Column 'nosuch' not found"), errs.head)
+    assert(errs.head.column.contains(14), errs.head)
+  }
+
   test("select-side and where-side errors are both reported") {
     init()
     val errs = GraftSql.validate(spark,

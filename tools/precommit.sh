@@ -1,6 +1,8 @@
 #!/usr/bin/env bash
 # Pre-commit gate: no snapshot ships without one session builder and
-# one optimizer-rule install point in src/main, a green compile, the
+# one optimizer-rule install point in src/main, one SQL text scanner
+# (no scanner helper defined in graft/sql outside SqlText.scala), a
+# green compile, the scanner's quoting/nesting checks, the
 # spine parity spec's rule-list checks, the tile-fold job checks (one
 # job stores a fold's generation; a join-tile append runs no job on
 # the DML thread beyond its write), and a ten-query oracle smoke.
@@ -31,6 +33,14 @@ if [ -n "$assigns" ]; then
   echo "$assigns"; exit 1
 fi
 
+echo "[precommit] one SQL text scanner: scanner helpers live in sql/SqlText.scala only..."
+scanners="$(grep -rnE 'def (splitTop[A-Za-z0-9_]*|closeParen|closeBracket|openParen[A-Za-z0-9_]*|primaryStart|depthBack|maskedReplace|topLevelIndex[A-Za-z0-9_]*)\b' \
+  src/main/scala/graft/sql | grep -v '^src/main/scala/graft/sql/SqlText\.scala:' || true)"
+if [ -n "$scanners" ]; then
+  echo "SQL scanner helper defined outside SqlText; use the shared mask-side helper:"
+  echo "$scanners"; exit 1
+fi
+
 echo "[precommit] sbt compile + Test/compile..."
 sbt -batch compile Test/compile
 
@@ -39,6 +49,10 @@ sbt -batch "testOnly graft.ExtensionsSpec -- -z (a) -z (b)"
 
 echo "[precommit] tile folds: one job per stored generation, no DML-thread schema job..."
 sbt -batch "testOnly graft.DmlLatticeSpec -- -z \"one materialization per fold\" -z \"no DML-thread job for the other leaves\""
+
+echo "[precommit] one scanner: quoted and bracketed text keeps its structure..."
+sbt -batch "testOnly graft.GraftSqlSpec -- -z \"quoted and bracketed text keeps its structure\"" \
+  "testOnly graft.ValidationSpec -- -z \"a comma inside a quoted select item\""
 
 echo "[precommit] smoke verify: $SMOKE @ $SF"
 rm -rf "$OUT"
