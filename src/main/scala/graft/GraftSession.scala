@@ -14,22 +14,24 @@ import graft.plans._
   *
   * Every path into the engine reaches [[install]]: [[local]], the table
   * loader `T.apply`, `GraftSql.sql`, `StreamSql.sql`, MV registration
-  * and adoption, constraint and statistics declarations, the asof node,
-  * and the `spark.sql.extensions=graft.GraftExtensions` hook. So a
+  * and adoption, constraint and statistics declarations, and the
+  * `spark.sql.extensions=graft.GraftExtensions` hook. So a
   * session plans with the same rules in the same order whichever path
   * touched it first (ref: the single `setup(session)` injection point
   * of Pathling's `SqlStrategy`).
   */
 object GraftSession {
 
-  /** The graft rules, in the order Spark's "User Provided Optimizers"
-    * batch runs them. The asof lowering comes first, so every other
-    * rule sees plain joins; the semi-join rewrite precedes eager
-    * aggregation, a strictly better plan for the same
-    * multiplicity-insensitive shape. The order is not cosmetic:
-    * reversing the list changes q164's plan. */
-  def rules(spark: SparkSession): Seq[Rule[LogicalPlan]] = Seq(
-    LowerAsofJoin(spark), MaterializedViews.MvRewrite, FkJoinElimination,
+  /** The 7 graft rules, in the order Spark's "User Provided Optimizers"
+    * batch runs them. The semi-join rewrite precedes eager aggregation,
+    * a strictly better plan for the same multiplicity-insensitive
+    * shape. The order is not cosmetic: reversing the list changes
+    * q164's plan. Each rule changes at least one declared path's plan
+    * and no path's rows (`RuleAblationSpec`). ASOF JOIN has no rule:
+    * `AsofJoin.leftAsof` (DataFrame) and `AsofSql` (SQL text) lower it
+    * to built-in operators before the optimizer runs. */
+  val rules: Seq[Rule[LogicalPlan]] = Seq(
+    MaterializedViews.MvRewrite, FkJoinElimination,
     UniqueKeyAggregateRemove, SemiJoinRewrite, EagerAggregation,
     AggregateUnionTranspose, OrJoinToUnion)
 
@@ -42,10 +44,9 @@ object GraftSession {
     * any other user rule is kept ahead of the graft rules. */
   def install(spark: SparkSession): Unit = installed.synchronized {
     if (!installed.containsKey(spark)) {
-      val ours = rules(spark)
-      val names = ours.map(_.ruleName).toSet
+      val names = rules.map(_.ruleName).toSet
       spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(r => names(r.ruleName)) ++ ours
+        spark.experimental.extraOptimizations.filterNot(r => names(r.ruleName)) ++ rules
       GraftFunctions.registerAll(spark)
       installed.put(spark, true)
     }

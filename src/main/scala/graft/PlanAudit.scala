@@ -58,7 +58,7 @@ object PlanAudit extends AdaptiveSparkPlanHelper {
     val spark = GraftSession.local("graft-plan-audit")
     new File(outDir).mkdirs()
     val pw = new PrintWriter(new File(outDir, "plan_audit.tsv"))
-    val rules = GraftSession.rules(spark).map(_.ruleName)
+    val rules = GraftSession.rules.map(_.ruleName)
     pw.println(("query" +: columns.map(_._1) ++:
       rules.map(_.split("[.$]").last) :+ "err").mkString("\t"))
     val names = SparkEntry.queries.keys.toSeq.sorted

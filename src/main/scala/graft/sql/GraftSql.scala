@@ -1323,7 +1323,7 @@ object GraftSql {
           // SQL:2016 FORMAT-clause models (IsoFormat): case-variant word
           // tokens, literal partial years, RR round-year, Calendar-rule
           // W/WW — semantics Java patterns can't express
-          val f = s"'${fmt.replace("''", "\\'")}'"
+          val f = s"'${quoteEscaped(fmt)}'"
           val lowered = ty.toUpperCase match {
             case "TIMESTAMP" => s"fmt_to_timestamp(($expr), $f)"
             case "DATE" => s"fmt_to_date(($expr), $f)"
@@ -1402,9 +1402,9 @@ object GraftSql {
     val (doc, rest) = docAndRest(sql, masked, open, close).getOrElse(return sql)
     // path is a leading quoted string
     if (!rest.startsWith("'")) return sql
-    var pe = 1
-    while (pe < rest.length && rest.charAt(pe) != '\'') pe += 1
-    val path = rest.substring(0, pe + 1)
+    val pe = literalEnd(rest, 0)
+    if (pe < 0) return sql
+    val path = "'" + quoteEscaped(rest.substring(1, pe)) + "'"
     val behaviors = rest.substring(pe + 1).trim
 
     def parse(b: String): (String, String) = {
@@ -1432,6 +1432,11 @@ object GraftSql {
          ELSE $v END"""
     rewriteJsonValue(sql.substring(0, at) + lowered + sql.substring(close + 1))
   }
+
+  /** A literal body whose doubled `''` is a quote, for Spark's lexer,
+    * which reads `''` as two adjacent literals: the quote goes in as the
+    * `\u0027` escape, which also keeps later passes' masks in step. */
+  private def quoteEscaped(body: String): String = body.replace("''", "\\u0027")
 
   /** The trimmed first argument of the call whose parens are at
     * (open, close), and the trimmed rest after its depth-0 comma. */
@@ -1501,8 +1506,8 @@ object GraftSql {
     if (close < 0) return sql
     val (doc, rest) = docAndRest(sql, masked, open, close).getOrElse(return sql)
     if (!rest.startsWith("'")) return sql
-    var pe = 1
-    while (pe < rest.length && rest.charAt(pe) != '\'') pe += 1
+    val pe = literalEnd(rest, 0)
+    if (pe < 0) return sql
     val path = rest.substring(1, pe).trim
       .replaceAll("(?i)^(strict|lax)\\s+", "")
     val onError = "(?i)\\b(TRUE|FALSE|UNKNOWN|ERROR)\\s+ON\\s+ERROR\\b".r
@@ -1516,7 +1521,7 @@ object GraftSql {
     val lowered =
       s"""CASE WHEN ($doc) IS NULL THEN CAST(NULL AS BOOLEAN)
          WHEN get_json_object(($doc), '$$') IS NULL THEN $onError
-         ELSE get_json_object(($doc), '$path') IS NOT NULL END"""
+         ELSE get_json_object(($doc), '${quoteEscaped(path)}') IS NOT NULL END"""
     rewriteJsonExists(sql.substring(0, at) + lowered + sql.substring(close + 1))
   }
 

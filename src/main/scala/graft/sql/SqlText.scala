@@ -76,6 +76,19 @@ object SqlText {
     i
   }
 
+  /** Index of the quote closing the `'...'` literal whose opening quote
+    * is at `open` (original text), reading a doubled `''` as one quote
+    * inside it, the SQL-standard escape; -1 if it does not close. */
+  def literalEnd(s: String, open: Int): Int = {
+    var i = open + 1
+    while (i < s.length) {
+      if (s.charAt(i) != '\'') i += 1
+      else if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 2
+      else return i
+    }
+    -1
+  }
+
   def isWordChar(c: Char): Boolean = c.isLetterOrDigit || c == '_'
 
   private def opens(c: Char) = c == '(' || c == '['

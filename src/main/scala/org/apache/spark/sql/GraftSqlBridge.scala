@@ -16,12 +16,9 @@ object GraftSqlBridge {
     column(new catalyst.expressions.XxHash64(cols.map(expression), seed))
 
   /** DataFrame over a raw LogicalPlan (Dataset.ofRows is private[sql]);
-    * needed by planner rules that lower custom logical nodes. */
+    * the SQL front end and the MV tiles re-wrap plans they patched. */
   def ofRows(spark: SparkSession, plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  def logicalPlan(df: DataFrame): catalyst.plans.logical.LogicalPlan =
-    df.asInstanceOf[classic.Dataset[Row]].logicalPlan
 
   /** Drop every Spark local property of the calling thread
     * (SparkContext.setLocalProperties is private[spark]). */

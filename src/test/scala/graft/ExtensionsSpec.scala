@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 import graft.catalog.{Constraints, Statistics}
-import graft.plans.{AsofJoinPlan, LowerAsofJoin, MaterializedViews}
+import graft.plans.MaterializedViews
 
 /** Spine parity: one ordered rule list, installed one way. Every engine
   * entry point leaves a session with exactly [[GraftSession.rules]], and
@@ -27,14 +26,14 @@ class ExtensionsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private def ruleNames(s: SparkSession) =
     s.experimental.extraOptimizations.map(_.ruleName)
 
-  test("(a) the rule list holds the 8 graft rules, each once") {
-    val names = GraftSession.rules(spark).map(_.ruleName)
-    assert(names.size == 8 && names.distinct == names, names)
+  test("(a) the rule list holds the 7 graft rules, each once") {
+    val names = GraftSession.rules.map(_.ruleName)
+    assert(names.size == 7 && names.distinct == names, names)
   }
 
   test("(b) every engine entry point leaves the installed rule list as it is") {
     GraftSession.install(spark)
-    val want = GraftSession.rules(spark)
+    val want = GraftSession.rules
     assert(spark.experimental.extraOptimizations == want)
 
     import spark.implicits._
@@ -50,9 +49,6 @@ class ExtensionsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       Constraints.declareUniqueKey(spark, fact, Seq("id"))
       Statistics.declare(spark, fact, 2L, Map("tag" -> 2L))
       graft.sql.GraftSql.sql(spark, "SELECT 1 AS one").collect()
-      val left = Seq((1L, 5L)).toDF("k", "t")
-      val right = Seq((1L, 4L, "x")).toDF("k", "rt", "v")
-      AsofJoinPlan.asof(spark, left, right, "k", "t", "rt", Seq("v")).collect()
     } finally MaterializedViews.drop(spark, "spine_t")
     assert(spark.experimental.extraOptimizations == want,
       s"${ruleNames(spark)} != ${want.map(_.ruleName)}")
@@ -80,44 +76,19 @@ class ExtensionsSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("(c) a session built through GraftExtensions ends with the same rule list") {
     extSession.range(1).queryExecution.analyzed // builds the analyzer: the hook runs
-    assert(extSession.experimental.extraOptimizations == GraftSession.rules(extSession),
+    assert(extSession.experimental.extraOptimizations == GraftSession.rules,
       ruleNames(extSession))
   }
 
   test("(c) a session built through GraftExtensions plans every declared path alike") {
-    // Expression ids, object hashes and generated-name counters differ
-    // between any two builds: mask them. Lists that Catalyst orders by
-    // hash (distinct-aggregate Expand projections, eager partials) follow
-    // the ids, so each plan line compares as a multiset of its tokens.
     def plan(s: SparkSession, name: String): String =
-      SparkEntry.queries(name)(s, sfDir).queryExecution.optimizedPlan.toString
-        .replaceAll("#\\d+L?", "#").replaceAll("@[0-9a-f]+", "@")
-        .replaceAll("_common_expr_\\d+", "_common_expr_")
-    def tokens(plan: String) = plan.linesIterator.map(_.split("\\b").sorted.toSeq).toSeq
+      SparkSpec.maskedPlan(SparkEntry.queries(name)(s, sfDir).queryExecution.optimizedPlan)
     val diffs = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       plan(spark, name) // register-once side effects land before either plan
       val (embedded, ext) = (plan(spark, name), plan(extSession, name))
-      if (tokens(embedded) == tokens(ext)) None
+      if (SparkSpec.planTokens(embedded) == SparkSpec.planTokens(ext)) None
       else Some(s"$name:\n--- embedded\n$embedded\n--- extensions\n$ext")
     }
     assert(diffs.isEmpty, s"${diffs.size} paths plan differently:\n${diffs.mkString("\n")}")
-  }
-
-  test("the injected asof rule lowers an AsofJoinPlan node end to end") {
-    val lower = GraftSession.rules(spark).collectFirst { case r: LowerAsofJoin => r }.get
-
-    val left = T(spark, sfDir, "events").filter(col("event_id") < 50)
-      .select(col("user_id"), col("ts"), col("event_id"))
-    val right = T(spark, sfDir, "events").filter(col("event_id") >= 50)
-      .select(col("user_id"), col("ts").as("rts"), col("value"))
-    val node = AsofJoinPlan(
-      GraftSqlBridge.logicalPlan(left), GraftSqlBridge.logicalPlan(right),
-      "user_id", "ts", "rts", Seq("value"))
-    val lowered = lower(node)
-    assert(!lowered.isInstanceOf[AsofJoinPlan],
-      "rule must replace the custom node")
-    // and the lowered plan computes the asof semantics
-    val out = GraftSqlBridge.ofRows(spark, lowered)
-    assert(out.columns.contains("value") && out.count() > 0)
   }
 }

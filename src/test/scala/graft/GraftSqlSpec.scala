@@ -119,6 +119,16 @@ class GraftSqlSpec extends SparkSpec {
     assert(e.getMessage != null)
   }
 
+  test("JSON_VALUE and JSON_EXISTS read a doubled quote as part of the path") {
+    // `$.a` and `$.a'b` name different members of the one document
+    import spark.implicits._
+    Seq("""{"a": "1", "a'b": "2"}""").toDF("d").createOrReplaceTempView("json_quote")
+    val r = GraftSql.sql(spark, """SELECT JSON_VALUE(d, '$.a''b') AS v,
+      JSON_EXISTS(d, '$.a''b') AS hit, JSON_EXISTS(d, '$.a''c') AS miss FROM json_quote""")
+      .collect()(0)
+    assert((r.getString(0), r.getBoolean(1), r.getBoolean(2)) == (("2", true, false)))
+  }
+
   test("DDL: CREATE/DROP SEQUENCE route to the catalog, table DDL passes through") {
     GraftSql.sql(spark, "CREATE SEQUENCE sq_ddl START WITH 10 INCREMENT BY 2")
     try {
@@ -186,6 +196,10 @@ class GraftSqlSpec extends SparkSpec {
     assert(sv.getString(0) == "01-05-2017")
     // plain CAST is untouched
     assert(GraftSql.sql(spark, "SELECT CAST('5' AS INT) AS v").collect()(0).getInt(0) == 5)
+    // a doubled quote in the model leaves the rest of the statement to later passes
+    val after = GraftSql.rewrite(
+      "SELECT CAST(d AS VARCHAR FORMAT 'YYYY''') AS a, JSON_VALUE(j, '$.a') AS b FROM t")
+    assert(!after.contains("JSON_VALUE"), after)
   }
 
   test("OFFSET/FETCH FIRST and FROM DUAL lower to LIMIT/OFFSET and FROM-less selects") {

@@ -3,9 +3,11 @@
 # one optimizer-rule install point in src/main, one SQL text scanner
 # (no scanner helper defined in graft/sql outside SqlText.scala), a
 # green compile, the scanner's quoting/nesting checks, the
-# spine parity spec's rule-list checks, the tile-fold job checks (one
-# job stores a fold's generation; a join-tile append runs no job on
-# the DML thread beyond its write), and a ten-query oracle smoke.
+# spine parity spec's rule-list checks, the rule ablation (each graft
+# rule changes at least one path's plan and no path's rows), the
+# tile-fold job checks (one job stores a fold's generation; a
+# join-tile append runs no job on the DML thread beyond its write), and
+# a ten-query oracle smoke.
 # Round 8 zeroed its artifacts by committing a non-compiling tree — this
 # script makes that impossible to repeat.
 #
@@ -34,7 +36,7 @@ if [ -n "$assigns" ]; then
 fi
 
 echo "[precommit] one SQL text scanner: scanner helpers live in sql/SqlText.scala only..."
-scanners="$(grep -rnE 'def (splitTop[A-Za-z0-9_]*|closeParen|closeBracket|openParen[A-Za-z0-9_]*|primaryStart|depthBack|maskedReplace|topLevelIndex[A-Za-z0-9_]*)\b' \
+scanners="$(grep -rnE 'def (splitTop[A-Za-z0-9_]*|closeParen|closeBracket|openParen[A-Za-z0-9_]*|primaryStart|depthBack|maskedReplace|literalEnd|topLevelIndex[A-Za-z0-9_]*)\b' \
   src/main/scala/graft/sql | grep -v '^src/main/scala/graft/sql/SqlText\.scala:' || true)"
 if [ -n "$scanners" ]; then
   echo "SQL scanner helper defined outside SqlText; use the shared mask-side helper:"
@@ -46,6 +48,9 @@ sbt -batch compile Test/compile
 
 echo "[precommit] spine parity: rule list (a) and entry points (b)..."
 sbt -batch "testOnly graft.ExtensionsSpec -- -z (a) -z (b)"
+
+echo "[precommit] rule ablation: every graft rule changes a plan, and no rows..."
+sbt -batch "testOnly graft.RuleAblationSpec -- -z \"every graft rule changes at least one path\" -z \"rows are equal\""
 
 echo "[precommit] tile folds: one job per stored generation, no DML-thread schema job..."
 sbt -batch "testOnly graft.DmlLatticeSpec -- -z \"one materialization per fold\" -z \"no DML-thread job for the other leaves\""
