@@ -1,6 +1,6 @@
 package graft.sql
 
-import SqlText.{closeOf, commaRanges, mask, openOf, origGroup, primaryStart, replaceMasked, splitElems, splitTop}
+import SqlText.{Splice, closeOf, commaRanges, groupEnd, mask, openOf, primaryStart, replaceMasked, spliceEach, splitElems, splitTop}
 
 /** Collection-literal and subscript surface of the reference dialect
   * (Parser.jj: ARRAY/MAP constructors-by-enumeration, the `expr[index]`
@@ -18,86 +18,70 @@ object CollectionSql {
     * in functions/Multiset.scala). A parenthesized TUPLE element
     * (`ARRAY[(1, 'a'), (2, 'b')]` — the reference's implicit row
     * constructor) becomes `struct(1, 'a')`. */
-  def rewriteArrayMap(sql: String): String = {
-    val re = "(?i)\\b(ARRAY|MAP|MULTISET)\\s*\\[".r
-    var cur = sql
-    var m = re.findFirstMatchIn(mask(cur))
-    while (m.isDefined) {
-      val mm = m.get
-      val masked = mask(cur)
-      val open = masked.indexOf('[', mm.start)
-      val close = closeOf(masked, open)
-      if (close < 0) return cur
-      // a MULTISET is an array with bag semantics downstream (its ALL
-      // ops lower via functions/Multiset.scala); displays match the
-      // reference's [a, b] rendering
-      val fn = mm.group(1).toLowerCase(java.util.Locale.ROOT) match {
-        case "multiset" => "array"
-        case other => other
-      }
-      val inner = commaRanges(masked, open + 1, close).map { case (a, b) =>
-        val orig = cur.substring(a, b)
-        val tm = masked.substring(a, b).trim // structure tests can't see literals
-        if (tm.startsWith("(") && tm.endsWith(")") &&
-            commaRanges(tm, 1, tm.length - 1).length > 1)
-          "struct" + orig.trim
-        else orig
-      }.mkString(",")
-      // the reference DISPLAYS a multiset with duplicate elements
-      // grouped adjacent, in first-occurrence order (misc.iq:2227:
-      // multiset[1,null,2,1] prints [1, 1, null, 2]); for a
-      // duplicate-free bag the regrouping is the identity, so it is
-      // applied to every MULTISET literal — EXCEPT inside a VALUES
-      // inline-table row, where Spark cannot fold the lambda
-      // (unnest.iq:400) and a literal row has its written order anyway
-      val inValuesRow = {
-        // enclosing-paren chain reaching a `VALUES (` row constructor
-        var depth = 0
-        var i = mm.start - 1
-        var hit = false
-        while (i >= 0 && !hit) {
-          val c = masked.charAt(i)
-          if (c == ')') depth += 1
-          else if (c == '(') {
-            if (depth == 0) {
-              if ("(?is).*\\bVALUES\\s*$".r.matches(masked.substring(0, i))) hit = true
-            } else depth -= 1
-          }
-          i -= 1
+  private val collectionLiteralRe = "(?i)\\b(ARRAY|MAP|MULTISET)\\s*\\[".r
+  private val valuesTailRe = "(?is).*\\bVALUES\\s*$".r
+  private val valuesRe = "(?is)\\bVALUES\\b".r
+  private val selectFromWhereRe = "(?is)\\b(SELECT|FROM|WHERE)\\b".r
+  private val bagOpAfterRe =
+    "(?is)^\\s*(MULTISET\\s+(UNION|EXCEPT|INTERSECT)|SUBMULTISET|IS\\s+(NOT\\s+)?(A\\s+SET|EMPTY))\\b".r
+  private val bagOpBeforeRe =
+    "(?is).*\\b(MULTISET\\s+(UNION|EXCEPT|INTERSECT)(\\s+ALL|\\s+DISTINCT)?|SUBMULTISET\\s+OF)\\s*$".r
+
+  def rewriteArrayMap(sql: String): String =
+    spliceEach(sql, collectionLiteralRe) { site =>
+      val (masked, cur) = (site.m, site.sql)
+      val open = site.end - 1
+      val close = site.close
+      if (close < 0) None
+      else {
+        val kind = site.group(1).toLowerCase(java.util.Locale.ROOT)
+        val inner = commaRanges(masked, open + 1, close).map { case (a, b) =>
+          val orig = cur.substring(a, b)
+          val tm = masked.substring(a, b).trim // structure tests can't see literals
+          if (tm.startsWith("(") && tm.endsWith(")") &&
+              commaRanges(tm, 1, tm.length - 1).length > 1)
+            "struct" + orig.trim
+          else orig
+        }.mkString(",")
+        // the reference DISPLAYS a multiset with duplicate elements
+        // grouped adjacent, in first-occurrence order (misc.iq:2227:
+        // multiset[1,null,2,1] prints [1, 1, null, 2]); for a
+        // duplicate-free bag the regrouping is the identity, so it is
+        // applied to every MULTISET literal — EXCEPT inside a VALUES
+        // inline-table row, where Spark cannot fold the lambda
+        // (unnest.iq:400) and a literal row has its written order
+        // anyway, and except where the literal feeds an infix bag
+        // operator or predicate, which keeps the plain array shape those
+        // lowerings match on (the regroup is a DISPLAY device; bag ops
+        // are order-free)
+        def inValuesRow = {
+          // an enclosing group that is a `VALUES (` row constructor
+          val enclosing = Iterator.iterate(groupEnd(masked, site.start))(c => groupEnd(masked, c + 1))
+            .takeWhile(_ < masked.length).map(openOf(masked, _))
+          enclosing.exists(o => o >= 0 && valuesTailRe.matches(masked.substring(0, o))) ||
+            // bare-scalar rows: `VALUES multiset[...], ...` with only list
+            // content (no intervening SELECT) between VALUES and the literal
+            valuesTailRe.matches(masked.substring(0, site.start)) ||
+            valuesRe.findAllMatchIn(masked.substring(0, site.start)).toSeq.lastOption.exists { vm =>
+              val between = masked.substring(vm.end, site.start)
+              between.count(_ == '(') == between.count(_ == ')') &&
+                selectFromWhereRe.findFirstIn(between).isEmpty
+            }
         }
-        // bare-scalar rows: `VALUES multiset[...], ...` with only list
-        // content (no intervening SELECT) between VALUES and the literal
-        hit || "(?is).*\\bVALUES\\s*$".r.matches(masked.substring(0, mm.start)) || {
-          val v = "(?is)\\bVALUES\\b".r.findAllMatchIn(masked.substring(0, mm.start))
-            .toSeq.lastOption
-          v.exists { vm =>
-            val between = masked.substring(vm.end, mm.start)
-            between.count(_ == '(') == between.count(_ == ')') &&
-              "(?is)\\b(SELECT|FROM|WHERE)\\b".r.findFirstIn(between).isEmpty
-          }
-        }
+        def inBagOp =
+          bagOpAfterRe.findFirstIn(masked.substring(close + 1)).isDefined ||
+            bagOpBeforeRe.matches(masked.substring(0, site.start))
+        // a MULTISET is an array with bag semantics downstream (its ALL
+        // ops lower via functions/Multiset.scala); displays match the
+        // reference's [a, b] rendering
+        val body =
+          if (kind == "multiset" && !inValuesRow && !inBagOp)
+            s"flatten(transform(array_distinct(array($inner)), __mv -> " +
+              s"filter(array($inner), __mx -> __mx <=> __mv)))"
+          else (if (kind == "multiset") "array" else kind) + "(" + inner + ")"
+        Some(Splice(site.start, close + 1, body))
       }
-      // a literal feeding an infix bag operator / predicate keeps the
-      // plain array shape those lowerings match on (the regroup is a
-      // DISPLAY device; bag ops are order-free)
-      val inBagOp = {
-        val after = masked.substring(close + 1)
-        val before = masked.substring(0, mm.start)
-        "(?is)^\\s*(MULTISET\\s+(UNION|EXCEPT|INTERSECT)|SUBMULTISET|IS\\s+(NOT\\s+)?(A\\s+SET|EMPTY))\\b".r
-          .findFirstIn(after).isDefined ||
-        "(?is).*\\b(MULTISET\\s+(UNION|EXCEPT|INTERSECT)(\\s+ALL|\\s+DISTINCT)?|SUBMULTISET\\s+OF)\\s*$".r
-          .matches(before)
-      }
-      val body =
-        if (mm.group(1).equalsIgnoreCase("multiset") && !inValuesRow && !inBagOp)
-          s"flatten(transform(array_distinct(array($inner)), __mv -> " +
-            s"filter(array($inner), __mx -> __mx <=> __mv)))"
-        else fn + "(" + inner + ")"
-      cur = cur.substring(0, mm.start) + body + cur.substring(close + 1)
-      m = re.findFirstMatchIn(mask(cur))
     }
-    cur
-  }
 
   /** `UNNEST(collection) [WITH ORDINALITY] [AS alias [(cols)]]`
     * (SqlUnnestOperator; unnest.iq) lowered onto Spark's generators:
@@ -120,13 +104,15 @@ object CollectionSql {
     * explode/inline/map): operands that defeat it (MULTISET literals,
     * maps inside a zip) are left unchanged for the caller's skip lists.
     */
-  def rewriteUnnest(sql: String): String = {
-    val masked = mask(sql)
-    val re = "(?i)\\bUNNEST\\s*\\(".r
-    for (m <- re.findAllMatchIn(masked)) {
-      val open = masked.indexOf('(', m.start)
-      val close = closeOf(masked, open)
-      if (close > 0) {
+  private val unnestRe = "(?i)\\bUNNEST\\s*\\(".r
+
+  def rewriteUnnest(sql: String): String =
+    spliceEach(sql, unnestRe) { site =>
+      val (masked, sql, m) = (site.m, site.sql, site.hit)
+      val open = site.end - 1
+      val close = site.close
+      if (close < 0) None
+      else {
         val arg = sql.substring(open + 1, close).trim
         val argM = masked.substring(open + 1, close).trim
         // suffix: [WITH ORDINALITY] [AS alias [(c1, c2, ...)]]
@@ -271,20 +257,11 @@ object CollectionSql {
             } else
               Some(s"(SELECT ${named(Seq("col", "pos + 1"), cols)} FROM (SELECT posexplode($arg)) ${g}i)$aliasSuffix")
         }
-        replacement match {
-          case Some(rep) =>
-            val start =
-              if (isLateral) { // eat the comma and optional LATERAL keyword
-                val upToComma = sql.substring(0, commaAt)
-                return rewriteUnnest(upToComma + " " + rep + sql.substring(end))
-              } else m.start
-            return rewriteUnnest(sql.substring(0, start) + rep + sql.substring(end))
-          case None => () // next match
-        }
+        // the lateral form also eats the comma and optional LATERAL keyword
+        replacement.map(rep =>
+          if (isLateral) Splice(commaAt, end, " " + rep) else Splice(m.start, end, rep))
       }
     }
-    sql
-  }
 
   /** The postfix subscript `primary[index]` → `item(primary, index)` —
     * the reference's ITEM operator (1-based for arrays and row ordinals,
@@ -293,34 +270,27 @@ object CollectionSql {
     * bracket is a subscript. The primary is found by scanning backward
     * over identifier chains, call/paren groups, and prior subscripts —
     * the same walk the BigQuery dialect's SAFE_ subscripts use. */
-  def rewriteItem(sql: String): String = {
-    val masked = mask(sql)
-    var i = 0
-    while (i < masked.length) {
-      if (masked.charAt(i) == '[') {
-        // predecessor primary may be separated by whitespace (the
-        // reference's grammar allows `expr [ index ]`; variant.iq:202
-        // continues the subscript on the next line)
-        var p = i - 1
-        while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
-        val pc = if (p >= 0) masked.charAt(p) else ' '
-        if (pc.isLetterOrDigit || pc == '_' || pc == ')' || pc == ']' || pc == '`') {
-          val exprStart = primaryStart(masked, i)
-          val target = sql.substring(exprStart, i).trim
-          val kw = target.toUpperCase(java.util.Locale.ROOT)
-          val close = closeOf(masked, i)
-          if (target.nonEmpty && close > 0 &&
-              kw != "MULTISET" && kw != "ARRAY" && kw != "MAP") {
-            val idx = sql.substring(i + 1, close)
-            return rewriteItem(sql.substring(0, exprStart) +
-              s"item($target, $idx)" + sql.substring(close + 1))
-          }
-        }
+  private val subscriptRe = "\\[".r
+
+  def rewriteItem(sql: String): String =
+    spliceEach(sql, subscriptRe) { site =>
+      val (masked, sql, i) = (site.m, site.sql, site.start)
+      // predecessor primary may be separated by whitespace (the
+      // reference's grammar allows `expr [ index ]`; variant.iq:202
+      // continues the subscript on the next line)
+      var p = i - 1
+      while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
+      val pc = if (p >= 0) masked.charAt(p) else ' '
+      if (!(pc.isLetterOrDigit || pc == '_' || pc == ')' || pc == ']' || pc == '`')) None
+      else {
+        val exprStart = primaryStart(masked, i)
+        val target = sql.substring(exprStart, i).trim
+        val kw = target.toUpperCase(java.util.Locale.ROOT)
+        val close = site.close
+        if (target.isEmpty || close < 0 || kw == "MULTISET" || kw == "ARRAY" || kw == "MAP") None
+        else Some(Splice(exprStart, close + 1, s"item($target, ${sql.substring(i + 1, close)})"))
       }
-      i += 1
     }
-    sql
-  }
 
   private val dtUnits =
     Set("YEAR", "QUARTER", "MONTH", "WEEK", "DAY", "HOUR", "MINUTE",
@@ -330,75 +300,56 @@ object CollectionSql {
     * interval qualifier) → the type-preserving floor_to/ceil_to
     * expressions (functions/FloorCeilTo.scala). Numeric FLOOR/CEIL (no
     * TO) pass through to Spark's own. */
-  def rewriteFloorCeil(sql: String): String = {
-    val re = "(?i)\\b(FLOOR|CEIL|CEILING)\\s*\\(".r
-    val masked = mask(sql)
-    for (m <- re.findAllMatchIn(masked)) {
-      val open = masked.indexOf('(', m.start)
-      val close = closeOf(masked, open)
-      if (close > 0) {
-        val innerM = masked.substring(open + 1, close)
-        val toRe = "(?is)\\s+TO\\s+([A-Za-z]+)\\s*$".r
-        toRe.findFirstMatchIn(innerM) match {
-          case Some(tm) if dtUnits(tm.group(1).toUpperCase(java.util.Locale.ROOT)) =>
-            val fn = if (m.group(1).equalsIgnoreCase("FLOOR")) "floor_to" else "ceil_to"
-            val expr = sql.substring(open + 1, open + 1 + tm.start)
-            val unit = tm.group(1).toUpperCase(java.util.Locale.ROOT)
-            return rewriteFloorCeil(sql.substring(0, m.start) +
-              s"$fn($expr, '$unit')" + sql.substring(close + 1))
-          case _ => ()
+  private val floorCeilRe = "(?i)\\b(FLOOR|CEIL|CEILING)\\s*\\(".r
+  private val toUnitRe = "(?is)\\s+TO\\s+([A-Za-z]+)\\s*$".r
+
+  def rewriteFloorCeil(sql: String): String =
+    spliceEach(sql, floorCeilRe) { site =>
+      val close = site.close
+      val innerM = if (close < 0) "" else site.m.substring(site.end, close)
+      toUnitRe.findFirstMatchIn(innerM)
+        .filter(tm => dtUnits(tm.group(1).toUpperCase(java.util.Locale.ROOT)))
+        .map { tm =>
+          val fn = if (site.group(1).equalsIgnoreCase("FLOOR")) "floor_to" else "ceil_to"
+          val expr = site.sql.substring(site.end, site.end + tm.start)
+          val unit = tm.group(1).toUpperCase(java.util.Locale.ROOT)
+          Splice(site.start, close + 1, s"$fn($expr, '$unit')")
         }
-      }
     }
-    sql
-  }
 
   /** Composite `COUNT(a, b, ...)` (SqlCountAggFunction accepts N args:
     * count of rows where EVERY argument is non-null; agg.iq:186) →
     * `COUNT(CASE WHEN a IS NOT NULL AND ... THEN 1 END)`. DISTINCT
     * multi-arg COUNT is Spark-native and passes through. */
-  def rewriteCompositeCount(sql: String): String = {
-    val re = "(?i)\\bCOUNT\\s*\\(".r
-    val masked = mask(sql)
-    for (m <- re.findAllMatchIn(masked)) {
-      val open = masked.indexOf('(', m.start)
-      val close = closeOf(masked, open)
-      if (close > 0) {
-        val innerOrig = sql.substring(open + 1, close)
-        val args = splitTop(masked.substring(open + 1, close))
-        if (args.length > 1 &&
-            !"(?is)^\\s*DISTINCT\\b".r.findFirstIn(innerOrig).isDefined &&
-            !"(?is)^\\s*ALL\\b".r.findFirstIn(innerOrig).isDefined) {
-          val origArgs = splitTop(innerOrig).map(_.trim)
-          val cond = origArgs.map(a => s"($a) IS NOT NULL").mkString(" AND ")
-          return rewriteCompositeCount(sql.substring(0, m.start) +
-            s"COUNT(CASE WHEN $cond THEN 1 END)" + sql.substring(close + 1))
-        }
+  private val countRe = "(?i)\\bCOUNT\\s*\\(".r
+  private val distinctOrAllRe = "(?is)^\\s*(DISTINCT|ALL)\\b".r
+
+  def rewriteCompositeCount(sql: String): String =
+    spliceEach(sql, countRe) { site =>
+      val close = site.close
+      val innerOrig = if (close < 0) "" else site.sql.substring(site.end, close)
+      if (close < 0 || splitTop(site.m.substring(site.end, close)).length < 2 ||
+          distinctOrAllRe.findFirstIn(innerOrig).isDefined) None
+      else {
+        val cond = splitTop(innerOrig).map(a => s"(${a.trim}) IS NOT NULL").mkString(" AND ")
+        Some(Splice(site.start, close + 1, s"COUNT(CASE WHEN $cond THEN 1 END)"))
       }
     }
-    sql
-  }
 
   /** Aggregate spellings: `EVERY(p)` → bool_and (SqlStdOperatorTable
     * EVERY), and multi-argument `GROUPING(a, b, ...)` → Spark's packed
     * `grouping_id(a, b, ...)` (same bit order — first argument most
     * significant; SqlGroupingFunction accepts N args). */
+  private val listaggRe = "(?i)\\bLISTAGG\\s*\\(".r
+  private val groupingRe = "(?i)\\bGROUPING\\s*\\(".r
+
   def rewriteAggSpellings(sql: String): String = {
-    val s0 = {
-      // single-argument LISTAGG defaults its separator to ',' in the
-      // reference (SqlListaggAggFunction); Spark's defaults to ''
-      val masked = mask(sql)
-      val re = "(?i)\\bLISTAGG\\s*\\(".r
-      re.findAllMatchIn(masked).collectFirst {
-        case m if {
-          val open = masked.indexOf('(', m.start)
-          val close = closeOf(masked, open)
-          close > 0 && splitTop(masked.substring(open + 1, close)).length == 1
-        } =>
-          val open = masked.indexOf('(', m.start)
-          val close = closeOf(masked, open)
-          rewriteAggSpellings(sql.substring(0, close) + ", ','" + sql.substring(close))
-      }.getOrElse(sql)
+    // single-argument LISTAGG defaults its separator to ',' in the
+    // reference (SqlListaggAggFunction); Spark's defaults to ''
+    val s0 = spliceEach(sql, listaggRe) { site =>
+      val close = site.close
+      if (close < 0 || splitTop(site.m.substring(site.end, close)).length != 1) None
+      else Some(Splice(close, close, ", ','"))
     }
     // (aggregate ANY_VALUE→MAX moved to CalciteTyping.rewrite: it is a
     // conformance-dialect quirk of the reference's enumerable engine —
@@ -406,16 +357,11 @@ object CollectionSql {
     // non-orderable types (MAP, VARIANT) and `IGNORE NULLS`, both of
     // which Spark's own any_value supports)
     val s1 = replaceMasked(s0, "(?i)\\bEVERY\\s*\\(".r)((_, _) => "bool_and(")
-    val re = "(?i)\\bGROUPING\\s*\\(".r
-    val masked = mask(s1)
-    for (m <- re.findAllMatchIn(masked)) {
-      val open = masked.indexOf('(', m.start)
-      val close = closeOf(masked, open)
-      if (close > 0 && splitTop(masked.substring(open + 1, close)).length > 1)
-        return rewriteAggSpellings(s1.substring(0, m.start) + "grouping_id(" +
-          s1.substring(open + 1, close) + ")" + s1.substring(close + 1))
+    spliceEach(s1, groupingRe) { site =>
+      val close = site.close
+      if (close < 0 || splitTop(site.m.substring(site.end, close)).length < 2) None
+      else Some(Splice(site.start, close + 1, s"grouping_id(${site.sql.substring(site.end, close)})"))
     }
-    s1
   }
 
   /** The MULTISET bag aggregates (SqlStdOperatorTable FUSION :1178,
@@ -425,34 +371,30 @@ object CollectionSql {
     * multiset_intersect_all expression over the collected groups.
     * `SOME(pred)` as an AGGREGATE (not a quantifier — only when no
     * comparison operator precedes) is bool_or. */
+  private val bagAggRe = "(?i)\\b(FUSION|INTERSECTION)\\s*\\(".r
+
   def rewriteBagAggs(sql: String): String = {
-    val masked = mask(sql)
-    "(?i)\\b(FUSION|INTERSECTION)\\s*\\(".r.findFirstMatchIn(masked) match {
-      case Some(m) =>
-        val open = masked.indexOf('(', m.start)
-        val close = closeOf(masked, open)
-        if (close < 0) return sql
-        val x = sql.substring(open + 1, close)
+    val s1 = spliceEach(sql, bagAggRe) { site =>
+      val close = site.close
+      if (close < 0) None
+      else {
+        val x = site.sql.substring(site.end, close)
         val rep =
-          if (m.group(1).equalsIgnoreCase("FUSION")) s"flatten(collect_list($x))"
+          if (site.group(1).equalsIgnoreCase("FUSION")) s"flatten(collect_list($x))"
           else {
             val cl = s"collect_list($x)"
             s"aggregate(slice($cl, 2, size($cl)), element_at($cl, 1), " +
               s"(__ba, __be) -> multiset_intersect_all(__ba, __be))"
           }
-        rewriteBagAggs(sql.substring(0, m.start) + rep + sql.substring(close + 1))
-      case None =>
-        val sb = new StringBuilder
-        var last = 0
-        for (m <- "(?i)\\bSOME\\s*\\(".r.findAllMatchIn(masked)) {
-          var p = m.start - 1
-          while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
-          val quantified = p >= 0 && "=<>!".contains(masked.charAt(p))
-          sb.append(sql.substring(last, m.start))
-          sb.append(if (quantified) sql.substring(m.start, m.end) else "bool_or(")
-          last = m.end
-        }
-        sb.append(sql.substring(last)).toString
+        Some(Splice(site.start, close + 1, rep))
+      }
+    }
+    val masked = mask(s1)
+    replaceMasked(s1, "(?i)\\bSOME\\s*\\(".r) { (m, o) =>
+      var p = m.start - 1
+      while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
+      val quantified = p >= 0 && "=<>!".contains(masked.charAt(p))
+      if (quantified) o.substring(m.start, m.end) else "bool_or("
     }
   }
 
@@ -460,27 +402,20 @@ object CollectionSql {
     * reference derives one; Spark requires an explicit alias on lateral
     * subqueries): append a generated alias. Aliased laterals pass
     * through. */
-  def rewriteLateralAlias(sql: String): String = {
-    val masked = mask(sql)
-    val re = "(?i)\\bLATERAL\\s*\\(".r
-    for (m <- re.findAllMatchIn(masked)) {
-      val open = masked.indexOf('(', m.start)
-      val close = closeOf(masked, open)
-      if (close > 0) {
-        val after = masked.substring(close + 1)
-        val tok = "(?is)^\\s*(AS\\s+)?(`[^`]*`|[A-Za-z_]\\w*)".r.findFirstMatchIn(after)
-        val aliased = tok.exists { t =>
-          t.group(1) != null ||
-            !"(?i)^(WHERE|GROUP|HAVING|ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT|JOIN|INNER|LEFT|RIGHT|FULL|CROSS|ON|QUALIFY|FETCH|LATERAL|NATURAL|USING|WINDOW|WITH)$".r
-              .matches(t.group(2).stripPrefix("`").stripSuffix("`"))
-        }
-        if (!aliased)
-          return rewriteLateralAlias(sql.substring(0, close + 1) +
-            s" __lat$open" + sql.substring(close + 1))
+  private val lateralOpenRe = "(?i)\\bLATERAL\\s*\\(".r
+  private val aliasTokenRe = "(?is)^\\s*(AS\\s+)?(`[^`]*`|[A-Za-z_]\\w*)".r
+  private val clauseWordRe =
+    "(?i)^(WHERE|GROUP|HAVING|ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT|JOIN|INNER|LEFT|RIGHT|FULL|CROSS|ON|QUALIFY|FETCH|LATERAL|NATURAL|USING|WINDOW|WITH)$".r
+
+  def rewriteLateralAlias(sql: String): String =
+    spliceEach(sql, lateralOpenRe) { site =>
+      val close = site.close
+      val aliased = close >= 0 && aliasTokenRe.findFirstMatchIn(site.m.substring(close + 1)).exists { t =>
+        t.group(1) != null || !clauseWordRe.matches(t.group(2).stripPrefix("`").stripSuffix("`"))
       }
+      if (close < 0 || aliased) None
+      else Some(Splice(close + 1, close + 1, s" __lat${site.end - 1}"))
     }
-    sql
-  }
 
   /** The SQL-standard row-period predicate `(a, b) OVERLAPS (c, d)`
     * (SqlOverlapsOperator; misc.iq:2346 — CALCITE-1167 normalizes each
@@ -488,28 +423,26 @@ object CollectionSql {
     * truth table: common point shared EXCEPT a pure endpoint touch —
     * `(s1 > s2 AND s1 < e2) OR (s2 > s1 AND s2 < e1) OR s1 = s2`
     * over least/greatest-normalized bounds. */
-  def rewriteOverlaps(sql: String): String = {
-    val masked = mask(sql)
-    val re = "(?i)\\)\\s*OVERLAPS\\s*\\(".r
-    for (m <- re.findAllMatchIn(masked)) {
-      // left operand: the paren group CLOSING at m.start
-      val lClose = m.start
+  private val overlapsRe = "(?i)\\)\\s*OVERLAPS\\s*\\(".r
+
+  def rewriteOverlaps(sql: String): String =
+    spliceEach(sql, overlapsRe) { site =>
+      val (masked, sql) = (site.m, site.sql)
+      // left operand: the paren group CLOSING where the head starts
+      val lClose = site.start
       val lOpen = openOf(masked, lClose)
-      val rOpen = masked.lastIndexOf('(', m.end - 1)
-      val rClose = closeOf(masked, rOpen)
-      if (lOpen >= 0 && rClose > 0) {
-        val lo = splitElems(sql, masked, lOpen + 1, lClose)
-        val ro = splitElems(sql, masked, rOpen + 1, rClose)
-        if (lo.length == 2 && ro.length == 2) {
-          val (s1, e1) = (s"least(${lo(0)}, ${lo(1)})", s"greatest(${lo(0)}, ${lo(1)})")
-          val (s2, e2) = (s"least(${ro(0)}, ${ro(1)})", s"greatest(${ro(0)}, ${ro(1)})")
-          val rep = s"(($s1 > $s2 AND $s1 < $e2) OR ($s2 > $s1 AND $s2 < $e1) OR $s1 = $s2)"
-          return rewriteOverlaps(sql.substring(0, lOpen) + rep + sql.substring(rClose + 1))
-        }
+      val rOpen = site.end - 1
+      val rClose = site.close
+      val lo = if (lOpen < 0 || rClose < 0) Nil else splitElems(sql, masked, lOpen + 1, lClose)
+      val ro = if (lOpen < 0 || rClose < 0) Nil else splitElems(sql, masked, rOpen + 1, rClose)
+      if (lo.length != 2 || ro.length != 2) None
+      else {
+        val (s1, e1) = (s"least(${lo(0)}, ${lo(1)})", s"greatest(${lo(0)}, ${lo(1)})")
+        val (s2, e2) = (s"least(${ro(0)}, ${ro(1)})", s"greatest(${ro(0)}, ${ro(1)})")
+        Some(Splice(lOpen, rClose + 1,
+          s"(($s1 > $s2 AND $s1 < $e2) OR ($s2 > $s1 AND $s2 < $e1) OR $s1 = $s2)"))
       }
     }
-    sql
-  }
 
   /** Niladic `PI` (the reference parses parameterless builtins without
     * parentheses — SqlStdOperatorTable.PI, misc.iq:2081) → `pi()`.

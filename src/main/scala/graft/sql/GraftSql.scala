@@ -12,7 +12,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rule: `'...'` literals and `` `...` `` identifiers are masked, so
   * nothing inside them can fire a rewrite or split a list, and `(` and
   * `[` both nest when a scan looks for a matching close, a depth-0
-  * comma or keyword, or the start of a primary. Rewrites include:
+  * comma or keyword, or the start of a primary. The text passes are one
+  * named list, [[passes]], that `rewrite` folds in order; a pass that
+  * must re-scan after each splice walks its sites with
+  * [[SqlText.spliceEach]] and only builds the replacement.
+  * `FrontEndGoldenSpec` pins the list: every text of its committed
+  * corpus must rewrite to its recorded output, and every pass must
+  * change at least one of them, so a changed golden output is a test
+  * change. Rewrites include:
   *  - `QUALIFY <pred>` (qualify.iq) → wrap the query in a subselect and
   *    filter: `SELECT * FROM (q) __q WHERE pred` (ORDER BY/LIMIT stay
   *    outside, per QUALIFY evaluation order).
@@ -279,20 +286,19 @@ object GraftSql {
 
   /** Remove `-- ...` and `/* ... */` comments (string-aware — a dash-dash
     * inside a literal or a backtick-quoted identifier is content, not a
-    * comment; bracketed comments NEST, as Spark's lexer allows). Each
-    * comment collapses to one space so token boundaries survive. */
+    * comment, and a literal ends where [[SqlText.literalEnd]] says;
+    * bracketed comments NEST, as Spark's lexer allows). Each comment
+    * collapses to one space so token boundaries survive. */
   private[graft] def stripComments(s: String): String = {
     val sb = new StringBuilder
-    var inStr = false
-    var inTick = false
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (inStr) { if (c == '\'') inStr = false; sb.append(c); i += 1 }
-      else if (inTick) { if (c == '`') inTick = false; sb.append(c); i += 1 }
-      else if (c == '\'') { inStr = true; sb.append(c); i += 1 }
-      else if (c == '`') { inTick = true; sb.append(c); i += 1 }
-      else if (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '-') {
+      if (c == '\'' || c == '`') {
+        val end = if (c == '`') s.indexOf('`', i + 1) else literalEnd(s, i)
+        val next = if (end < 0) s.length else end + 1
+        sb.append(s.substring(i, next)); i = next
+      } else if (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '-') {
         while (i < s.length && s.charAt(i) != '\n') i += 1
         sb.append(' ')
       } else if (c == '/' && i + 1 < s.length && s.charAt(i + 1) == '*') {
@@ -347,29 +353,60 @@ object GraftSql {
     if (oracleNullDefault) OracleNullOrder.rewrite(sql) else sql
   }
 
+  /** The text passes of the front end, in the order [[rewrite0]] folds
+    * them, each under its name. */
+  private[graft] val passes: Seq[(String, String => String)] = Seq(
+    "TypesSql.expand" -> TypesSql.expand,
+    "TypesSql.rewriteCastRow" -> TypesSql.rewriteCastRow,
+    "MeasureSql.ddlRewrite" -> MeasureSql.ddlRewrite,
+    "AsofSql.rewrite" -> AsofSql.rewrite,
+    "WithinDistinctSql.rewrite" -> WithinDistinctSql.rewrite,
+    "GroupingSetsSql.rewrite" -> GroupingSetsSql.rewrite,
+    "ExcludeFrameSql.rewrite" -> ExcludeFrameSql.rewrite,
+    "SubqueryRewrites.apply" -> SubqueryRewrites.apply,
+    "rewriteProjectionIn" -> rewriteProjectionIn,
+    "rewriteUnorderedWindow" -> rewriteUnorderedWindow,
+    "rewriteDistinctOrderByAlias" -> rewriteDistinctOrderByAlias,
+    "rewriteDistinctOn" -> rewriteDistinctOn,
+    "rewriteSelectBy" -> rewriteSelectBy,
+    "UnpivotTupleSql.rewrite" -> UnpivotTupleSql.rewrite,
+    "rewriteExclude" -> rewriteExclude,
+    "rewriteRowCompare" -> rewriteRowCompare,
+    "rewriteRowNullCheck" -> rewriteRowNullCheck,
+    "rewriteTupleInList" -> rewriteTupleInList,
+    "rewriteRowCtor" -> rewriteRowCtor,
+    "rewriteTop" -> rewriteTop,
+    "rewriteMysqlLimit" -> rewriteMysqlLimit,
+    "rewriteWindowTvf" -> rewriteWindowTvf,
+    "rewriteExtend" -> rewriteExtend,
+    "rewriteDual" -> rewriteDual,
+    "rewriteFetch" -> rewriteFetch,
+    "rewriteCastFormat" -> rewriteCastFormat,
+    "rewriteStarReplace" -> rewriteStarReplace,
+    "JsonAggSql.apply" -> JsonAggSql.apply,
+    "rewriteJsonValue" -> rewriteJsonValue,
+    "rewriteJsonExists" -> rewriteJsonExists,
+    "rewriteSafeCast" -> rewriteSafeCast,
+    "rewriteSimilarTo" -> rewriteSimilarTo,
+    "rewriteQualify" -> rewriteQualify,
+    "rewriteWindowFilter" -> rewriteWindowFilter,
+    "rewriteUuid" -> rewriteUuid,
+    "rewriteBareTypes" -> rewriteBareTypes,
+    "rewriteDecimalLit" -> rewriteDecimalLit,
+    "rewriteNullifFold" -> rewriteNullifFold,
+    "rewriteUnsignedArith" -> rewriteUnsignedArith,
+    "rewriteUnsignedCast" -> rewriteUnsignedCast,
+    "rewriteVariantOps" -> rewriteVariantOps,
+    "CollectionSql.apply" -> CollectionSql.apply,
+    "rewriteTablesample" -> rewriteTablesample,
+    "rewriteIntervalExpr" -> rewriteIntervalExpr,
+    "rewriteLateralValues" -> rewriteLateralValues,
+    "rewriteValuesAlias" -> rewriteValuesAlias,
+    "rewritePivotAlias" -> rewritePivotAlias,
+    "rewriteUnpivotLabel" -> rewriteUnpivotLabel)
+
   private[graft] def rewrite0(sql: String): String =
-    Seq[String => String](
-      TypesSql.expand, TypesSql.rewriteCastRow,
-      MeasureSql.ddlRewrite, AsofSql.rewrite, WithinDistinctSql.rewrite,
-      GroupingSetsSql.rewrite, ExcludeFrameSql.rewrite,
-      SubqueryRewrites.apply, rewriteProjectionIn, rewriteUnorderedWindow,
-      rewriteDistinctOrderByAlias,
-      rewriteDistinctOn, rewriteSelectBy, UnpivotTupleSql.rewrite,
-      rewriteExclude,
-      rewriteRowCompare, rewriteRowNullCheck, rewriteTupleInList,
-      rewriteRowCtor, rewriteTop,
-      rewriteMysqlLimit,
-      rewriteWindowTvf, rewriteExtend, rewriteDual, rewriteFetch,
-      rewriteCastFormat, rewriteStarReplace, JsonAggSql.apply, rewriteJsonValue,
-      rewriteJsonExists,
-      rewriteSafeCast, rewriteSimilarTo, rewriteQualify, rewriteWindowFilter,
-      rewriteUuid,
-      rewriteBareTypes, rewriteDecimalLit, rewriteNullifFold,
-      rewriteUnsignedArith, rewriteUnsignedCast, rewriteVariantOps, CollectionSql.apply,
-      rewriteTablesample, rewriteIntervalExpr, rewriteLateralValues,
-      rewriteValuesAlias,
-      rewritePivotAlias, rewriteUnpivotLabel
-    ).foldLeft(sql)((s, f) => f(s))
+    passes.foldLeft(sql) { case (s, (_, pass)) => pass(s) }
 
   /** `SELECT DISTINCT ... GROUP BY ... ORDER BY <aggregate>`: Spark's
     * analyzer rejects ordering a DISTINCT by an expression that is not
@@ -426,29 +463,26 @@ object GraftSql {
     * order, and the default RANGE frame spans the whole peer group
     * (= the whole partition under a constant key), matching
     * `nth_value(...) over ()`. */
-  private[graft] def rewriteUnorderedWindow(sql: String): String = {
-    val masked = mask(sql)
-    val re = ("(?is)\\b(row_number|rank|dense_rank|ntile|nth_value|" +
-      "cume_dist|percent_rank)\\s*\\(").r
-    for (m <- re.findAllMatchIn(masked)) {
-      val argOpen = masked.indexOf('(', m.start)
-      val argClose = closeOf(masked, argOpen)
-      if (argClose > 0) {
-        val om = "(?is)^\\s*OVER\\s*\\(".r.findFirstMatchIn(masked.substring(argClose + 1))
-        om.foreach { o =>
-          val oOpen = argClose + 1 + o.end - 1
-          val oClose = closeOf(masked, oOpen)
-          if (oClose > 0 &&
-              "(?is)\\bORDER\\s+BY\\b".r.findFirstIn(masked.substring(oOpen, oClose)).isEmpty) {
-            val sep = if (sql.substring(oOpen + 1, oClose).trim.isEmpty) "" else " "
-            return rewriteUnorderedWindow(
-              sql.substring(0, oClose) + sep + "ORDER BY 'x'" + sql.substring(oClose))
-          }
+  private val rankCallRe = ("(?is)\\b(row_number|rank|dense_rank|ntile|nth_value|" +
+    "cume_dist|percent_rank)\\s*\\(").r
+  private val overOpenRe = "(?is)^\\s*OVER\\s*\\(".r
+  private val orderByRe = "(?is)\\bORDER\\s+BY\\b".r
+
+  private[graft] def rewriteUnorderedWindow(sql: String): String =
+    spliceEach(sql, rankCallRe) { site =>
+      val m = site.m
+      val argClose = site.close
+      if (argClose < 0) None
+      else overOpenRe.findFirstMatchIn(m.substring(argClose + 1)).flatMap { o =>
+        val oOpen = argClose + o.end
+        val oClose = closeOf(m, oOpen)
+        if (oClose < 0 || orderByRe.findFirstIn(m.substring(oOpen, oClose)).isDefined) None
+        else {
+          val sep = if (site.sql.substring(oOpen + 1, oClose).trim.isEmpty) "" else " "
+          Some(Splice(oClose, oClose, sep + "ORDER BY 'x'"))
         }
       }
     }
-    sql
-  }
 
   /** `expr [NOT] IN (SELECT ...)` in the SELECT LIST (sub-query.iq:104):
     * Spark plans the projected IN as an ExistenceJoin, which returns
@@ -458,45 +492,43 @@ object GraftSql {
     * TRUE on a match; NULL when the probe is NULL and the subquery is
     * non-empty, or when the subquery contains a NULL; else FALSE.
     * WHERE-clause forms keep Spark's native (correct) semi-join path. */
-  private[graft] def rewriteProjectionIn(sql: String): String = {
-    val masked = mask(sql)
-    val selM = "(?is)^\\s*SELECT\\s".r.findFirstMatchIn(masked).getOrElse(return sql)
-    val fromAt = topLevelIndex(masked, "FROM", selM.end)
-    if (fromAt < 0) return sql
-    for (m <- "(?is)\\b(NOT\\s+)?IN\\s*\\(".r.findAllMatchIn(masked.substring(0, fromAt))
-           if m.start > selM.end) {
-      val open = masked.indexOf('(', m.end - 1)
-      val close = closeOf(masked, open)
-      if (close > 0 && close < fromAt &&
-          "(?is)^\\s*(SELECT|WITH)\\b".r.findFirstIn(masked.substring(open + 1, close)).isDefined) {
-        // LHS: a single identifier/qualified identifier or literal
-        val lhsM = "(?is)([A-Za-z_][\\w.]*|\\d+(?:\\.\\d+)?)\\s*$".r
-          .findFirstMatchIn(masked.substring(0, m.start))
-        lhsM.foreach { lm =>
-          val lhs = sql.substring(lm.start(1), lm.end(1))
-          // a COMPOUND LHS (`a + 1 IN (...)`) would splice the CASE
-          // after the operator and break the statement — bail to the
-          // native ExistenceJoin path when the captured primary is
-          // preceded by an operator/non-boundary token
-          val beforeLhs = masked.substring(0, lm.start(1))
-            .reverse.dropWhile(_.isWhitespace).headOption
-          val compound = beforeLhs.exists(c => "+-*/%^|&=<>!:".contains(c))
-          if (!lhs.equalsIgnoreCase("not") && !compound) {
-            val sub = sql.substring(open + 1, close)
-            val inner =
-              s"CASE WHEN (SELECT count(*) FROM ($sub) __in3(__v) WHERE __v = $lhs) > 0 THEN TRUE " +
-                s"WHEN $lhs IS NULL AND (SELECT count(*) FROM ($sub) __in3t) > 0 THEN CAST(NULL AS BOOLEAN) " +
-                s"WHEN (SELECT count(*) FROM ($sub) __in3n(__v) WHERE __v IS NULL) > 0 THEN CAST(NULL AS BOOLEAN) " +
-                s"ELSE FALSE END"
-            val rep = if (m.group(1) != null) s"(NOT $inner)" else s"($inner)"
-            return rewriteProjectionIn(
-              sql.substring(0, lm.start(1)) + rep + sql.substring(close + 1))
-          }
+  private val selectHeadRe = "(?is)^\\s*SELECT\\s".r
+  private val inOpenRe = "(?is)\\b(NOT\\s+)?IN\\s*\\(".r
+  private val subqueryHeadRe = "(?is)^\\s*(SELECT|WITH)\\b".r
+  private val inLhsRe = "(?is)([A-Za-z_][\\w.]*|\\d+(?:\\.\\d+)?)\\s*$".r
+
+  private[graft] def rewriteProjectionIn(sql: String): String =
+    spliceEach(sql, inOpenRe) { site =>
+      val (masked, sql) = (site.m, site.sql)
+      val fromAt = selectHeadRe.findFirstMatchIn(masked).filter(_.end < site.start)
+        .map(s => topLevelIndex(masked, "FROM", s.end)).getOrElse(-1)
+      val open = site.end - 1
+      val close = site.close
+      if (fromAt < 0 || site.end > fromAt || close < 0 || close >= fromAt ||
+          subqueryHeadRe.findFirstIn(masked.substring(open + 1, close)).isEmpty) None
+      // LHS: a single identifier/qualified identifier or literal
+      else inLhsRe.findFirstMatchIn(masked.substring(0, site.start)).flatMap { lm =>
+        val lhs = sql.substring(lm.start(1), lm.end(1))
+        // a COMPOUND LHS (`a + 1 IN (...)`) would splice the CASE
+        // after the operator and break the statement — bail to the
+        // native ExistenceJoin path when the captured primary is
+        // preceded by an operator/non-boundary token
+        val beforeLhs = masked.substring(0, lm.start(1))
+          .reverse.dropWhile(_.isWhitespace).headOption
+        val compound = beforeLhs.exists(c => "+-*/%^|&=<>!:".contains(c))
+        if (lhs.equalsIgnoreCase("not") || compound) None
+        else {
+          val sub = sql.substring(open + 1, close)
+          val inner =
+            s"CASE WHEN (SELECT count(*) FROM ($sub) __in3(__v) WHERE __v = $lhs) > 0 THEN TRUE " +
+              s"WHEN $lhs IS NULL AND (SELECT count(*) FROM ($sub) __in3t) > 0 THEN CAST(NULL AS BOOLEAN) " +
+              s"WHEN (SELECT count(*) FROM ($sub) __in3n(__v) WHERE __v IS NULL) > 0 THEN CAST(NULL AS BOOLEAN) " +
+              s"ELSE FALSE END"
+          val rep = if (site.group(1) != null) s"(NOT $inner)" else s"($inner)"
+          Some(Splice(lm.start(1), close + 1, rep))
         }
       }
     }
-    sql
-  }
 
   /** `(a, b) [NOT] IN ((x1, y1), ...)` over a LITERAL tuple list
     * (sub-query.iq:4325): Spark's struct-typed IN requires exact field
@@ -506,56 +538,56 @@ object GraftSql {
     * comparisons coerce individually and whose 3VL composition is
     * identical (FALSE AND UNKNOWN = FALSE; OR yields UNKNOWN only with
     * no TRUE). Subquery RHS passes through untouched. */
-  private[graft] def rewriteTupleInList(sql: String): String = {
-    val masked = mask(sql)
-    for (m <- "(?is)\\)\\s*(NOT\\s+)?IN\\s*\\(".r.findAllMatchIn(masked)) {
-      val rOpen = masked.indexOf('(', m.end - 1)
-      val rClose = closeOf(masked, rOpen)
-      val firstIn = masked.substring(rOpen + 1, if (rClose > 0) rClose else masked.length).trim
-      if (rClose > 0 && firstIn.startsWith("(")) {
-        // LHS tuple: the ')' at m.start closes it
-        val lOpen = openOf(masked, m.start)
-        // must be a bare tuple, not a function call or subquery: a
-        // preceding identifier makes it a call UNLESS it's a keyword
-        val isCall = lOpen > 0 && {
-          val before = masked.substring(0, lOpen)
-          val word = "(?is)([A-Za-z_]\\w*)\\s*$".r.findFirstMatchIn(before).map(_.group(1).toUpperCase)
-          val kw = Set("WHERE", "AND", "OR", "NOT", "ON", "WHEN", "THEN",
-            "ELSE", "CASE", "SELECT", "HAVING", "BY", "ALL", "ANY", "SOME",
-            "IN", "IS", "LIKE", "BETWEEN", "JOIN", "FROM", "AS", "END")
-          word.map(!kw.contains(_)).getOrElse(
-            "(?is)[`\\)\\d]\\s*$".r.findFirstIn(before).isDefined)
-        }
-        if (lOpen >= 0 && !isCall) {
-          val lhs = splitElems(sql, masked, lOpen + 1, m.start)
-          val rhsTuples = splitElems(sql, masked, rOpen + 1, rClose)
-          val allTuples = rhsTuples.forall(_.trim.startsWith("("))
-          // a row SUBQUERY on either side is not a tuple — splitting it
-          // on commas would corrupt it
-          val subqRe = "(?is)^\\(?\\s*(SELECT|WITH|VALUES)\\b".r
-          val anySubq =
-            subqRe.findFirstIn(masked.substring(lOpen + 1, m.start).trim).isDefined ||
-              rhsTuples.exists(t => subqRe.findFirstIn(t.trim).isDefined)
-          if (lhs.length >= 2 && allTuples && !anySubq) {
-            val tuples = rhsTuples.map { t =>
-              val tm = mask(t)
-              splitElems(t, tm, tm.indexOf('(') + 1, closeOf(tm, tm.indexOf('(')))
-            }
-            if (tuples.forall(_.length == lhs.length)) {
-              val ors = tuples.map(vals =>
-                lhs.zip(vals).map { case (l, v) => s"($l) = ($v)" }
-                  .mkString("(", " AND ", ")"))
-                .mkString("(", " OR ", ")")
-              val not = if (m.group(1) != null) "NOT " else ""
-              return rewriteTupleInList(
-                sql.substring(0, lOpen) + not + ors + sql.substring(rClose + 1))
-            }
+  private val tupleInRe = "(?is)\\)\\s*(NOT\\s+)?IN\\s*\\(".r
+  private val callWordRe = "(?is)([A-Za-z_]\\w*)\\s*$".r
+  private val tupleKeywords = Set("WHERE", "AND", "OR", "NOT", "ON", "WHEN", "THEN",
+    "ELSE", "CASE", "SELECT", "HAVING", "BY", "ALL", "ANY", "SOME",
+    "IN", "IS", "LIKE", "BETWEEN", "JOIN", "FROM", "AS", "END")
+  private val rowSubqueryRe = "(?is)^\\(?\\s*(SELECT|WITH|VALUES)\\b".r
+
+  private[graft] def rewriteTupleInList(sql: String): String =
+    spliceEach(sql, tupleInRe) { site =>
+      val (masked, sql) = (site.m, site.sql)
+      val rOpen = site.end - 1
+      val rClose = site.close
+      // LHS tuple: the ')' the head starts with closes it
+      val lOpen = openOf(masked, site.start)
+      // must be a bare tuple, not a function call or subquery: a
+      // preceding identifier makes it a call UNLESS it's a keyword
+      def isCall = lOpen > 0 && {
+        val before = masked.substring(0, lOpen)
+        callWordRe.findFirstMatchIn(before).map(_.group(1).toUpperCase)
+          .map(!tupleKeywords.contains(_))
+          .getOrElse("(?is)[`\\)\\d]\\s*$".r.findFirstIn(before).isDefined)
+      }
+      if (rClose < 0 || !masked.substring(rOpen + 1, rClose).trim.startsWith("(") ||
+          lOpen < 0 || isCall) None
+      else {
+        val lhs = splitElems(sql, masked, lOpen + 1, site.start)
+        val rhsTuples = splitElems(sql, masked, rOpen + 1, rClose)
+        // a row SUBQUERY on either side is not a tuple — splitting it
+        // on commas would corrupt it
+        val anySubq =
+          rowSubqueryRe.findFirstIn(masked.substring(lOpen + 1, site.start).trim).isDefined ||
+            rhsTuples.exists(t => rowSubqueryRe.findFirstIn(t.trim).isDefined)
+        if (lhs.length < 2 || !rhsTuples.forall(_.trim.startsWith("(")) || anySubq) None
+        else {
+          val tuples = rhsTuples.map { t =>
+            val tm = mask(t)
+            splitElems(t, tm, tm.indexOf('(') + 1, closeOf(tm, tm.indexOf('(')))
+          }
+          if (!tuples.forall(_.length == lhs.length)) None
+          else {
+            val ors = tuples.map(vals =>
+              lhs.zip(vals).map { case (l, v) => s"($l) = ($v)" }
+                .mkString("(", " AND ", ")"))
+              .mkString("(", " OR ", ")")
+            val not = if (site.group(1) != null) "NOT " else ""
+            Some(Splice(lOpen, rClose + 1, not + ors))
           }
         }
       }
     }
-    sql
-  }
 
   /** Single-field row comparison `ROW(a) <op> ROW(b)` (misc.iq:165) —
     * unwrap to the scalar comparison so Spark's implicit coercions apply
@@ -740,45 +772,34 @@ object GraftSql {
     * explicit bounds check, erroring (like the reference) instead of
     * wrapping. Bare UNSIGNED is INTEGER UNSIGNED. Innermost-first so
     * nested unsigned casts lower cleanly. */
-  private def rewriteUnsignedCast(sql: String): String = {
-    val carriers = Map(
-      "TINYINT" -> ("SMALLINT", "255"), "SMALLINT" -> ("INT", "65535"),
-      "INT" -> ("BIGINT", "4294967295"), "INTEGER" -> ("BIGINT", "4294967295"),
-      "" -> ("BIGINT", "4294967295"),
-      "BIGINT" -> ("DECIMAL(20,0)", "18446744073709551615"))
-    val typeRe = "(?is)^AS\\s+((?:TINYINT|SMALLINT|INTEGER|INT|BIGINT)?)\\s*UNSIGNED\\s*$".r
-    var cur = sql
-    var changed = true
-    while (changed) {
-      changed = false
-      val masked = mask(cur)
-      var i = if (masked.toUpperCase.contains("UNSIGNED"))
-        masked.toUpperCase.indexOf("CAST") else -1
-      while (i >= 0 && !changed) {
-        val open = masked.indexOf('(', i + 4)
-        val onlyWs = open > 0 && masked.substring(i + 4, open).forall(_.isWhitespace)
-        val close = if (onlyWs) closeOf(masked, open) else -1
-        if (close > 0) {
-          val innerM = masked.substring(open + 1, close)
-          val asAt = lastTopLevelIndex(innerM, "AS")
-          if (asAt >= 0) typeRe.findFirstMatchIn(innerM.substring(asAt)).foreach { m =>
-            val e = cur.substring(open + 1, open + 1 + asAt).trim
-            val (c, max) = carriers(m.group(1).toUpperCase)
-            // literal fast path: foldable at rewrite time, so the cast
-            // stays usable in inline-table VALUES (unsigned.iq:21)
-            val rep =
-              if (e.matches("\\d+") && BigInt(e) <= BigInt(max)) s"CAST($e AS $c)"
-              else s"IF(CAST(($e) AS $c) IS NULL OR CAST(($e) AS $c) BETWEEN 0 AND $max, CAST(($e) AS $c), " +
-                s"CAST(raise_error(CONCAT('Value is out of range : ', CAST(($e) AS STRING))) AS $c))"
-            cur = cur.substring(0, i) + rep + cur.substring(close + 1)
-            changed = true
-          }
-        }
-        if (!changed) i = masked.toUpperCase.indexOf("CAST", i + 4)
+  private val castOpenRe = "(?is)\\bCAST\\s*\\(".r
+  private val unsignedCarriers = Map(
+    "TINYINT" -> ("SMALLINT", "255"), "SMALLINT" -> ("INT", "65535"),
+    "INT" -> ("BIGINT", "4294967295"), "INTEGER" -> ("BIGINT", "4294967295"),
+    "" -> ("BIGINT", "4294967295"),
+    "BIGINT" -> ("DECIMAL(20,0)", "18446744073709551615"))
+  private val unsignedTypeRe = "(?is)^AS\\s+((?:TINYINT|SMALLINT|INTEGER|INT|BIGINT)?)\\s*UNSIGNED\\s*$".r
+
+  private def rewriteUnsignedCast(sql: String): String =
+    if (!mask(sql).toUpperCase.contains("UNSIGNED")) sql
+    else spliceEach(sql, castOpenRe) { site =>
+      val open = site.end - 1
+      val close = site.close
+      val innerM = if (close < 0) "" else site.m.substring(open + 1, close)
+      val asAt = lastTopLevelIndex(innerM, "AS")
+      if (asAt < 0) None
+      else unsignedTypeRe.findFirstMatchIn(innerM.substring(asAt)).map { m =>
+        val e = site.sql.substring(open + 1, open + 1 + asAt).trim
+        val (c, max) = unsignedCarriers(m.group(1).toUpperCase)
+        // literal fast path: foldable at rewrite time, so the cast
+        // stays usable in inline-table VALUES (unsigned.iq:21)
+        val rep =
+          if (e.matches("\\d+") && BigInt(e) <= BigInt(max)) s"CAST($e AS $c)"
+          else s"IF(CAST(($e) AS $c) IS NULL OR CAST(($e) AS $c) BETWEEN 0 AND $max, CAST(($e) AS $c), " +
+            s"CAST(raise_error(CONCAT('Value is out of range : ', CAST(($e) AS STRING))) AS $c))"
+        Splice(site.start, close + 1, rep)
       }
     }
-    cur
-  }
 
   /** VARIANT operations Spark's analyzer rejects (variant.iq):
     *  - equality: the reference delegates to the contained values,
@@ -825,32 +846,21 @@ object GraftSql {
     variantMapCast(s2b)
   }
 
-  private def variantMapCast(s2b: String): String = {
-    {
-      var cur = s2b
-      var changed = true
-      while (changed) {
-        changed = false
-        val masked = mask(cur)
-        val re = "(?is)\\bCAST\\s*\\(".r
-        for (m <- re.findAllMatchIn(masked) if !changed) {
-          val open = masked.indexOf('(', m.start)
-          val close = closeOf(masked, open)
-          if (close > 0) {
-            val innerM = masked.substring(open + 1, close)
-            if ("(?is)^\\s*MAP\\s*[\\[(].*\\bAS\\s+VARIANT\\s*$".r.matches(innerM)) {
-              val asAt = "(?is)\\bAS\\s+VARIANT\\s*$".r.findFirstMatchIn(innerM).get.start
-              val operand = cur.substring(open + 1, open + 1 + asAt).trim
-              cur = cur.substring(0, m.start) + s"parse_json(to_json($operand))" +
-                cur.substring(close + 1)
-              changed = true
-            }
-          }
-        }
+  private val mapVariantRe = "(?is)^\\s*MAP\\s*[\\[(].*\\bAS\\s+VARIANT\\s*$".r
+  private val asVariantRe = "(?is)\\bAS\\s+VARIANT\\s*$".r
+
+  private def variantMapCast(sql: String): String =
+    spliceEach(sql, castOpenRe) { site =>
+      val open = site.end - 1
+      val close = site.close
+      val innerM = if (close < 0) "" else site.m.substring(open + 1, close)
+      if (!mapVariantRe.matches(innerM)) None
+      else {
+        val asAt = asVariantRe.findFirstMatchIn(innerM).get.start
+        val operand = site.sql.substring(open + 1, open + 1 + asAt).trim
+        Some(Splice(site.start, close + 1, s"parse_json(to_json($operand))"))
       }
-      cur
     }
-  }
 
   /** UUID literals and casts (SqlLibraryOperators UUID; misc.iq:70-140).
     * The engine's UUID is a 36-char canonical-form value: lower it onto
@@ -882,6 +892,8 @@ object GraftSql {
     replaceMasked(s4, "(?is)\\bAS\\s+UUID\\b".r)((_, _) => "AS STRING")
   }
 
+  private val timestampPrecRe = "(?is)\\bAS\\s+TIMESTAMP\\s*\\(\\s*(\\d)\\s*\\)\\s*$".r
+
   /** Length-free character/binary types in expressions (the reference's
     * default VARCHAR/VARBINARY have unbounded precision —
     * SqlTypeName.VARCHAR; recursive_queries.iq:223 `CAST(x AS VARCHAR)`):
@@ -891,37 +903,21 @@ object GraftSql {
     // precision (TIMESTAMP(0) drops fractions — big-query.iq:2927,
     // cast-with-format.iq:29); Spark timestamps are fixed micros, so the
     // precision lowers onto date_trunc around a plain cast
-    val sPrec = {
-      var cur = sql
-      var go = true
-      while (go) {
-        go = false
-        val masked = mask(cur)
-        val re = "(?is)\\bCAST\\s*\\(".r
-        for (m <- re.findAllMatchIn(masked) if !go) {
-          val open = masked.indexOf('(', m.start)
-          val close = closeOf(masked, open)
-          if (close > 0) {
-            val innerM = masked.substring(open + 1, close)
-            val pm = "(?is)\\bAS\\s+TIMESTAMP\\s*\\(\\s*(\\d)\\s*\\)\\s*$".r.findFirstMatchIn(innerM)
-            pm.foreach { p =>
-              val unit = p.group(1).toInt match {
-                case 0 => Some("SECOND")
-                case 1 | 2 | 3 => Some("MILLISECOND")
-                case 4 | 5 => Some("MICROSECOND")
-                case _ => None
-              }
-              val e = cur.substring(open + 1, open + 1 + p.start)
-              val castStr = s"CAST($e AS TIMESTAMP)"
-              cur = cur.substring(0, m.start) +
-                unit.map(u => s"date_trunc('$u', $castStr)").getOrElse(castStr) +
-                cur.substring(close + 1)
-              go = true
-            }
-          }
+    val sPrec = spliceEach(sql, castOpenRe) { site =>
+      val open = site.end - 1
+      val close = site.close
+      val innerM = if (close < 0) "" else site.m.substring(open + 1, close)
+      timestampPrecRe.findFirstMatchIn(innerM).map { p =>
+        val unit = p.group(1).toInt match {
+          case 0 => Some("SECOND")
+          case 1 | 2 | 3 => Some("MILLISECOND")
+          case 4 | 5 => Some("MICROSECOND")
+          case _ => None
         }
+        val castStr = s"CAST(${site.sql.substring(open + 1, open + 1 + p.start)} AS TIMESTAMP)"
+        Splice(site.start, close + 1,
+          unit.map(u => s"date_trunc('$u', $castStr)").getOrElse(castStr))
       }
-      cur
     }
     val s0 = replaceMasked(sPrec, "(?i)\\bTIMESTAMP\\s*\\(\\s*\\d+\\s*\\)".r)((_, _) => "TIMESTAMP")
     val s1 = replaceMasked(s0, "(?i)\\bVARCHAR\\b(?!\\s*\\()".r)((_, _) => "STRING")
@@ -999,47 +995,48 @@ object GraftSql {
     * to `LATERAL VIEW inline(array(struct(row1), struct(row2), ...))`
     * — a pure generator expression over the outer row, no correlated
     * subquery machinery, one pass, scale-free. */
-  private def rewriteLateralValues(sql: String): String = {
-    val re = "(?is)(\\bCROSS\\s+JOIN\\s+|,\\s*)?\\bLATERAL\\s*\\(\\s*VALUES\\b".r
-    val masked = mask(sql)
-    val m = re.findAllMatchIn(masked).toSeq.headOption.getOrElse(return sql)
-    // only FROM-item positions lower to LATERAL VIEW: `LEFT/INNER JOIN
-    // LATERAL (VALUES ...) ON ...` would leave its ON clause dangling,
-    // so anything not preceded by FROM, a comma, or CROSS JOIN passes
-    // through untouched (and fails loudly downstream if unsupported)
-    if (m.group(1) == null) {
-      val pre = masked.substring(0, m.start).trim.toUpperCase(java.util.Locale.ROOT)
-      val fromAt = pre.endsWith("FROM") &&
-        (pre.length == 4 || !pre(pre.length - 5).isLetterOrDigit && pre(pre.length - 5) != '_')
-      if (!fromAt) return sql
+  private val lateralValuesRe = "(?is)(\\bCROSS\\s+JOIN\\s+|,\\s*)?\\bLATERAL\\s*\\(\\s*VALUES\\b".r
+  private val valuesAliasColsRe = "(?is)^\\s*(?:AS\\s+)?([A-Za-z_]\\w*)\\s*\\(([^)]*)\\)".r
+
+  private def rewriteLateralValues(sql: String): String =
+    spliceEach(sql, lateralValuesRe) { site =>
+      val (masked, sql) = (site.m, site.sql)
+      // only FROM-item positions lower to LATERAL VIEW: `LEFT/INNER JOIN
+      // LATERAL (VALUES ...) ON ...` would leave its ON clause dangling,
+      // so anything not preceded by FROM, a comma, or CROSS JOIN passes
+      // through untouched (and fails loudly downstream if unsupported)
+      val fromItem = site.group(1) != null || {
+        val pre = masked.substring(0, site.start).trim.toUpperCase(java.util.Locale.ROOT)
+        pre.endsWith("FROM") &&
+          (pre.length == 4 || !pre(pre.length - 5).isLetterOrDigit && pre(pre.length - 5) != '_')
+      }
+      val open = masked.indexOf('(', site.start)
+      val close = closeOf(masked, open)
+      if (!fromItem || close < 0) None
+      else {
+        val valuesAt = masked.toUpperCase(java.util.Locale.ROOT).indexOf("VALUES", open)
+        val rows = splitTop(sql.substring(valuesAt + 6, close)).map(_.trim)
+        // every row must be a parenthesized tuple, and the alias reads
+        // AS t (c1, ..., cn)
+        val tail = valuesAliasColsRe.findFirstMatchIn(masked.substring(close + 1))
+        if (rows.isEmpty || !rows.forall(r => r.startsWith("(") && r.endsWith(")")) || tail.isEmpty) None
+        else {
+          val t = tail.get
+          val cols = sql.substring(close + 1 + t.start(2), close + 1 + t.end(2))
+          // field names must agree across the array's structs — alias
+          // every field to its output column name
+          val colNames = cols.split(",").map(_.trim)
+          val items = rows.map(r => splitTop(r.substring(1, r.length - 1)))
+          if (items.exists(_.length != colNames.length)) None
+          else {
+            val structs = items.map(_.zip(colNames).map { case (v, c) => s"($v) AS $c" }
+              .mkString("struct(", ", ", ")")).mkString(", ")
+            Some(Splice(site.start, close + 1 + t.end,
+              s" LATERAL VIEW inline(array($structs)) ${t.group(1)} AS $cols "))
+          }
+        }
+      }
     }
-    val open = masked.indexOf('(', m.start)
-    val close = closeOf(masked, open)
-    if (close < 0) return sql
-    val valuesAt = masked.toUpperCase(java.util.Locale.ROOT).indexOf("VALUES", open)
-    val rowsTxt = sql.substring(valuesAt + 6, close)
-    val rows = splitTop(rowsTxt).map(_.trim)
-    // every row must be a parenthesized tuple
-    if (rows.isEmpty || !rows.forall(r => r.startsWith("(") && r.endsWith(")")))
-      return sql
-    // AS t (c1, ..., cn)
-    val tail = "(?is)^\\s*(?:AS\\s+)?([A-Za-z_]\\w*)\\s*\\(([^)]*)\\)".r
-      .findFirstMatchIn(masked.substring(close + 1)).getOrElse(return sql)
-    val alias = tail.group(1)
-    val cols = sql.substring(close + 1 + tail.start(2), close + 1 + tail.end(2))
-    // field names must agree across the array's structs — alias every
-    // field to its output column name
-    val colNames = cols.split(",").map(_.trim)
-    val structs = rows.map { r =>
-      val items = splitTop(r.substring(1, r.length - 1))
-      if (items.length != colNames.length) return sql
-      items.zip(colNames).map { case (v, c) => s"($v) AS $c" }
-        .mkString("struct(", ", ", ")")
-    }.mkString(", ")
-    val lowered = s" LATERAL VIEW inline(array($structs)) $alias AS $cols "
-    rewriteLateralValues(sql.substring(0, m.start) + lowered +
-      sql.substring(close + 1 + tail.end))
-  }
 
   /** `(VALUES 'a', 'b') AS f` — single-column VALUES rows take the
     * table alias as the column name in the reference (SqlValidatorImpl
@@ -1058,28 +1055,25 @@ object GraftSql {
     * negation (not the all-fields-non-null form). Spark's struct IS NULL
     * only tests the struct reference, so lower to the field conjunction
     * before the constructor rewrite turns ROW into struct. */
+  private val rowOpenRe = "(?is)\\bROW\\s*\\(".r
+  private val rowArgsRe = "(?is)^ROW\\s*\\((.*)\\)$".r
+  private val isNullTailRe = "(?is)^\\s*IS\\s+(NOT\\s+)?NULL".r
+
   private def rewriteRowNullCheck(sql: String): String = {
     def fieldsNull(args: String): String =
       splitTop(args).map(_.trim).map { f =>
-        "(?is)^ROW\\s*\\((.*)\\)$".r.findFirstMatchIn(f) match {
+        rowArgsRe.findFirstMatchIn(f) match {
           case Some(inner) => fieldsNull(inner.group(1))
           case None => s"$f IS NULL"
         }
       }.mkString("(", " AND ", ")")
-    val re = "(?is)\\bROW\\s*\\(".r
-    val masked = mask(sql)
-    val hit = re.findAllMatchIn(masked).flatMap { m =>
-      val close = closeOf(masked, masked.indexOf('(', m.start))
+    spliceEach(sql, rowOpenRe) { site =>
+      val close = site.close
       if (close < 0) None
-      else "(?is)^\\s*IS\\s+(NOT\\s+)?NULL".r.findFirstMatchIn(masked.substring(close + 1))
-        .map(t => (m.start, close, t.group(1) != null, close + 1 + t.end))
-    }.toSeq.headOption
-    hit match {
-      case None => sql
-      case Some((start, close, isNot, end)) =>
-        val conj = fieldsNull(sql.substring(masked.indexOf('(', start) + 1, close))
-        val repl = if (isNot) s"(NOT $conj)" else conj
-        rewriteRowNullCheck(sql.substring(0, start) + repl + sql.substring(end))
+      else isNullTailRe.findFirstMatchIn(site.m.substring(close + 1)).map { t =>
+        val conj = fieldsNull(site.sql.substring(site.end, close))
+        Splice(site.start, close + 1 + t.end, if (t.group(1) != null) s"(NOT $conj)" else conj)
+      }
     }
   }
 
@@ -1277,27 +1271,23 @@ object GraftSql {
     * appending `CAST(NULL AS TYPE) AS c` for each declared column.
     * Static parquet always "lacks" the declared column, matching the
     * dynamic-table case the clause exists for. */
-  private[sql] def rewriteExtend(sql: String): String = {
-    val re = "(?is)\\bFROM\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+EXTEND\\s*\\(".r
-    val masked = mask(sql)
-    re.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) =>
-        val open = m.end - 1
-        val close = closeOf(masked, open)
-        if (close < 0) return sql
-        val decls = splitTop(sql.substring(open + 1, close)).map(_.trim).map { d =>
+  private val extendRe = "(?is)\\bFROM\\s+([A-Za-z_][A-Za-z0-9_]*)\\s+EXTEND\\s*\\(".r
+
+  private[sql] def rewriteExtend(sql: String): String =
+    spliceEach(sql, extendRe) { site =>
+      val close = site.close
+      if (close < 0) None
+      else {
+        val decls = splitTop(site.sql.substring(site.end, close)).map(_.trim).map { d =>
           val parts = d.split("\\s+", 2)
           require(parts.length == 2, s"EXTEND: malformed column declaration '$d'")
           s"CAST(NULL AS ${parts(1)}) AS ${parts(0)}"
         }
-        val table = m.group(1)
-        val replaced = sql.substring(0, m.start) +
-          s"FROM (SELECT *, ${decls.mkString(", ")} FROM $table) $table" +
-          sql.substring(close + 1)
-        rewriteExtend(replaced)
+        val table = site.group(1)
+        Some(Splice(site.start, close + 1,
+          s"FROM (SELECT *, ${decls.mkString(", ")} FROM $table) $table"))
+      }
     }
-  }
 
   /** SQL:2016 `CAST(expr AS type FORMAT 'model')` (cast-with-format.iq;
     * parsed by SqlCastFunction, evaluated via util/format/FormatModels
@@ -1306,39 +1296,27 @@ object GraftSql {
     * or date_format (temporal → character). The .iq's TZH/TZM/FF9
     * cases are feature-gated off in the reference itself
     * (fixed.calcite6375) and stay unsupported here. */
-  private def rewriteCastFormat(sql: String): String = {
-    val kw = "CAST"
-    val masked = mask(sql)
-    var at = anyDepthIndex(masked, kw)
-    while (at >= 0) {
-      val open = masked.indexOf('(', at + kw.length)
-      if (open < 0 || masked.substring(at + kw.length, open).trim.nonEmpty)
-        return sql
-      val close = closeOf(masked, open)
-      if (close < 0) return sql
-      val inner = sql.substring(open + 1, close)
-      val re = "(?is)^(.*\\S)\\s+AS\\s+(\\w+)\\s+FORMAT\\s*'((?:[^']|'')*)'\\s*$".r
-      inner match {
-        case re(expr, ty, fmt) =>
+  private val castFormatRe = "(?is)^(.*\\S)\\s+AS\\s+(\\w+)\\s+FORMAT\\s*'((?:[^']|'')*)'\\s*$".r
+
+  private def rewriteCastFormat(sql: String): String =
+    spliceEach(sql, castOpenRe) { site =>
+      val close = site.close
+      if (close < 0) None
+      else site.sql.substring(site.end, close) match {
+        case castFormatRe(expr, ty, fmt) =>
           // SQL:2016 FORMAT-clause models (IsoFormat): case-variant word
           // tokens, literal partial years, RR round-year, Calendar-rule
           // W/WW — semantics Java patterns can't express
           val f = s"'${quoteEscaped(fmt)}'"
-          val lowered = ty.toUpperCase match {
-            case "TIMESTAMP" => s"fmt_to_timestamp(($expr), $f)"
-            case "DATE" => s"fmt_to_date(($expr), $f)"
-            case "VARCHAR" | "CHAR" | "STRING" => s"fmt_to_char(($expr), $f)"
-            case _ => return sql // unsupported target: leave for the parser
-          }
-          return rewriteCastFormat(
-            sql.substring(0, at) + lowered + sql.substring(close + 1))
-        case _ =>
-          // plain CAST — look for the next one
-          at = anyDepthIndex(masked, kw, at + kw.length)
+          (ty.toUpperCase match {
+            case "TIMESTAMP" => Some(s"fmt_to_timestamp(($expr), $f)")
+            case "DATE" => Some(s"fmt_to_date(($expr), $f)")
+            case "VARCHAR" | "CHAR" | "STRING" => Some(s"fmt_to_char(($expr), $f)")
+            case _ => None // unsupported target: leave for the parser
+          }).map(Splice(site.start, close + 1, _))
+        case _ => None // plain CAST
       }
     }
-    sql
-  }
 
   /** BigQuery `SELECT [t.]* REPLACE (expr AS col, ...)` (babel corpus
     * big-query.iq; Spark parses `* EXCEPT` natively but not REPLACE) →
@@ -1347,41 +1325,34 @@ object GraftSql {
     * parity would need the resolved schema at rewrite time; name-based
     * consumers (including the driver compare, which sorts columns) see
     * identical results. */
-  private def rewriteStarReplace(sql: String): String = {
-    val re = "(?is)\\*\\s+REPLACE\\s*\\(".r
-    val masked = mask(sql)
-    re.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) =>
-        val open = m.end - 1
-        val close = closeOf(masked, open)
-        if (close < 0) return sql
-        val items0 = splitTop(sql.substring(open + 1, close))
-        // a QUALIFIED star's REPLACE targets must carry the same
-        // qualifier (e.* REPLACE(x AS d.deptno) is "unknown column" —
-        // select.iq:330); matching qualifiers strip to the simple name
-        val starQual = "(?is)([A-Za-z_]\\w*)\\s*\\.\\s*$".r
-          .findFirstMatchIn(sql.substring(0, m.start)).map(_.group(1))
-        val qualAs = "(?is)\\s+AS\\s+([A-Za-z_]\\w*)\\s*\\.\\s*([A-Za-z_]\\w*)\\s*$".r
-        for (it <- items0; qm <- qualAs.findFirstMatchIn(it))
-          if (!starQual.exists(_.equalsIgnoreCase(qm.group(1))))
-            throw new IllegalArgumentException(
-              s"SELECT * REPLACE list contains unknown column(s): ${qm.group(2).toUpperCase(java.util.Locale.ROOT)}")
-        val asAt = "(?is)\\s+AS\\s+(?:[A-Za-z_]\\w*\\s*\\.\\s*)?([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
-        val names = items0.map { it =>
-          asAt.findFirstMatchIn(it).map(_.group(1)).getOrElse(
-            return sql) // malformed — leave for Spark's parser to report
-        }
-        val items = items0.map(it =>
-          asAt.replaceFirstIn(it, " AS " + asAt.findFirstMatchIn(it).get.group(1)))
-        val star = sql.substring(m.start, m.start + 1) // the '*'
-        val head = sql.substring(0, m.start)
-        val rewritten = head + star +
-          s" EXCEPT (${names.mkString(", ")}), ${items.map(_.trim).mkString(", ")}" +
-          sql.substring(close + 1)
-        rewriteStarReplace(rewritten)
+  private val starReplaceRe = "(?is)\\*\\s+REPLACE\\s*\\(".r
+  private val starQualRe = "(?is)([A-Za-z_]\\w*)\\s*\\.\\s*$".r
+  private val qualAsRe = "(?is)\\s+AS\\s+([A-Za-z_]\\w*)\\s*\\.\\s*([A-Za-z_]\\w*)\\s*$".r
+  private val replaceAsRe = "(?is)\\s+AS\\s+(?:[A-Za-z_]\\w*\\s*\\.\\s*)?([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
+
+  private def rewriteStarReplace(sql: String): String =
+    spliceEach(sql, starReplaceRe) { site =>
+      val sql = site.sql
+      val close = site.close
+      val items0 = if (close < 0) Nil else splitTop(sql.substring(site.end, close))
+      // a QUALIFIED star's REPLACE targets must carry the same
+      // qualifier (e.* REPLACE(x AS d.deptno) is "unknown column" —
+      // select.iq:330); matching qualifiers strip to the simple name
+      val starQual = starQualRe.findFirstMatchIn(sql.substring(0, site.start)).map(_.group(1))
+      for (it <- items0; qm <- qualAsRe.findFirstMatchIn(it))
+        if (!starQual.exists(_.equalsIgnoreCase(qm.group(1))))
+          throw new IllegalArgumentException(
+            s"SELECT * REPLACE list contains unknown column(s): ${qm.group(2).toUpperCase(java.util.Locale.ROOT)}")
+      val names = items0.map(it => replaceAsRe.findFirstMatchIn(it).map(_.group(1)))
+      // malformed — leave for Spark's parser to report
+      if (close < 0 || names.exists(_.isEmpty)) None
+      else {
+        val items = items0.zip(names.flatten).map { case (it, n) =>
+          replaceAsRe.replaceFirstIn(it, " AS " + n).trim }
+        Some(Splice(site.start, close + 1,
+          s"* EXCEPT (${names.flatten.mkString(", ")}), ${items.mkString(", ")}"))
+      }
     }
-  }
 
   /** Lower SQL/JSON `JSON_VALUE(doc, 'path' [behavior ON EMPTY]
     * [behavior ON ERROR])` (behavior = NULL | ERROR | DEFAULT <expr>;
@@ -1389,62 +1360,55 @@ object GraftSql {
     * a CASE over get_json_object that distinguishes a malformed
     * document (ON ERROR) from a valid document whose path selects
     * nothing (ON EMPTY) — same lowering as functions/JsonValue.scala. */
-  private def rewriteJsonValue(sql: String): String = {
-    val kw = "JSON_VALUE"
-    val masked = mask(sql)
-    val at = anyDepthIndex(masked, kw)
-    if (at < 0) return sql
-    val open = masked.indexOf('(', at + kw.length)
-    if (open < 0) return sql
-    val close = closeOf(masked, open)
-    if (close < 0) return sql
-    // first top-level comma separates doc from path+behaviors
-    val (doc, rest) = docAndRest(sql, masked, open, close).getOrElse(return sql)
-    // path is a leading quoted string
-    if (!rest.startsWith("'")) return sql
-    val pe = literalEnd(rest, 0)
-    if (pe < 0) return sql
-    val path = "'" + quoteEscaped(rest.substring(1, pe)) + "'"
-    val behaviors = rest.substring(pe + 1).trim
+  private val jsonValueRe = "(?i)\\bJSON_VALUE\\s*\\(".r
+  private val jsonBehaviorRe = "(?i)\\b(NULL|ERROR|DEFAULT\\s+.+?)\\s+ON\\s+(EMPTY|ERROR)\\b".r
 
-    def parse(b: String): (String, String) = {
-      // returns (onEmpty, onError) SQL fragments
-      var onEmpty = "CAST(NULL AS STRING)"
-      var onError = "CAST(NULL AS STRING)"
-      val re = ("(?i)\\b(NULL|ERROR|DEFAULT\\s+.+?)\\s+ON\\s+(EMPTY|ERROR)\\b").r
-      re.findAllMatchIn(b).foreach { m =>
-        val beh = m.group(1).trim
-        val frag =
-          if (beh.equalsIgnoreCase("NULL")) "CAST(NULL AS STRING)"
-          else if (beh.equalsIgnoreCase("ERROR"))
-            s"raise_error('JSON_VALUE strict: ON ${m.group(2).toUpperCase} for path ${path.replace("'", "")}')"
-          else s"CAST((${beh.substring("DEFAULT".length).trim}) AS STRING)"
-        if (m.group(2).equalsIgnoreCase("EMPTY")) onEmpty = frag else onError = frag
-      }
-      (onEmpty, onError)
-    }
-    val (onEmpty, onError) = parse(behaviors)
-    val v = s"get_json_object(($doc), $path)"
-    val lowered =
-      s"""CASE WHEN ($doc) IS NULL THEN CAST(NULL AS STRING)
+  private def rewriteJsonValue(sql: String): String =
+    spliceEach(sql, jsonValueRe) { site =>
+      for {
+        // first top-level comma separates doc from path+behaviors, and
+        // the path is a leading quoted string
+        (doc, rest) <- jsonArgs(site)
+        pe = literalEnd(rest, 0) if pe >= 0
+      } yield {
+        val path = "'" + quoteEscaped(rest.substring(1, pe)) + "'"
+        var onEmpty = "CAST(NULL AS STRING)"
+        var onError = "CAST(NULL AS STRING)"
+        jsonBehaviorRe.findAllMatchIn(rest.substring(pe + 1).trim).foreach { m =>
+          val beh = m.group(1).trim
+          val frag =
+            if (beh.equalsIgnoreCase("NULL")) "CAST(NULL AS STRING)"
+            else if (beh.equalsIgnoreCase("ERROR"))
+              s"raise_error('JSON_VALUE strict: ON ${m.group(2).toUpperCase} for path ${path.replace("'", "")}')"
+            else s"CAST((${beh.substring("DEFAULT".length).trim}) AS STRING)"
+          if (m.group(2).equalsIgnoreCase("EMPTY")) onEmpty = frag else onError = frag
+        }
+        val v = s"get_json_object(($doc), $path)"
+        Splice(site.start, site.close + 1,
+          s"""CASE WHEN ($doc) IS NULL THEN CAST(NULL AS STRING)
          WHEN get_json_object(($doc), '$$') IS NULL THEN $onError
          WHEN $v IS NULL THEN $onEmpty
-         ELSE $v END"""
-    rewriteJsonValue(sql.substring(0, at) + lowered + sql.substring(close + 1))
-  }
+         ELSE $v END""")
+      }
+    }
 
   /** A literal body whose doubled `''` is a quote, for Spark's lexer,
     * which reads `''` as two adjacent literals: the quote goes in as the
     * `\u0027` escape, which also keeps later passes' masks in step. */
   private def quoteEscaped(body: String): String = body.replace("''", "\\u0027")
 
-  /** The trimmed first argument of the call whose parens are at
-    * (open, close), and the trimmed rest after its depth-0 comma. */
-  private def docAndRest(sql: String, masked: String, open: Int, close: Int): Option[(String, String)] =
-    commaRanges(masked, open + 1, close) match {
-      case Seq(_) => None
-      case (a, b) +: _ => Some((sql.substring(a, b).trim, sql.substring(b + 1, close).trim))
+  /** The trimmed first argument of a JSON call and the trimmed rest
+    * after its depth-0 comma, when the rest starts with a literal. */
+  private def jsonArgs(site: Site): Option[(String, String)] = {
+    val close = site.close
+    if (close < 0) None
+    else commaRanges(site.m, site.end, close) match {
+      case (a, b) +: _ +: _ =>
+        val rest = site.sql.substring(b + 1, close).trim
+        if (rest.startsWith("'")) Some((site.sql.substring(a, b).trim, rest)) else None
+      case _ => None
     }
+  }
 
   /** `ROW(t1.*, t2.*).<name><N>` — the reference uniquifies duplicate
     * row-field names with a numeric suffix (SqlValidatorUtil.uniquify:
@@ -1495,35 +1459,30 @@ object GraftSql {
     * standard), else path-hit test. The strict/lax mode prefix is
     * dropped for Spark's path syntax (both modes agree on existence for
     * the simple member paths Spark's JSONPath accepts). */
-  private def rewriteJsonExists(sql: String): String = {
-    val kw = "JSON_EXISTS"
-    val masked = mask(sql)
-    val at = anyDepthIndex(masked, kw)
-    if (at < 0) return sql
-    val open = masked.indexOf('(', at + kw.length)
-    if (open < 0) return sql
-    val close = closeOf(masked, open)
-    if (close < 0) return sql
-    val (doc, rest) = docAndRest(sql, masked, open, close).getOrElse(return sql)
-    if (!rest.startsWith("'")) return sql
-    val pe = literalEnd(rest, 0)
-    if (pe < 0) return sql
-    val path = rest.substring(1, pe).trim
-      .replaceAll("(?i)^(strict|lax)\\s+", "")
-    val onError = "(?i)\\b(TRUE|FALSE|UNKNOWN|ERROR)\\s+ON\\s+ERROR\\b".r
-      .findFirstMatchIn(rest.substring(pe + 1)) match {
-      case Some(m) if m.group(1).equalsIgnoreCase("TRUE") => "true"
-      case Some(m) if m.group(1).equalsIgnoreCase("UNKNOWN") => "CAST(NULL AS BOOLEAN)"
-      case Some(m) if m.group(1).equalsIgnoreCase("ERROR") =>
-        s"CAST(raise_error('JSON_EXISTS: malformed document') AS BOOLEAN)"
-      case _ => "false"
-    }
-    val lowered =
-      s"""CASE WHEN ($doc) IS NULL THEN CAST(NULL AS BOOLEAN)
+  private val jsonExistsRe = "(?i)\\bJSON_EXISTS\\s*\\(".r
+  private val jsonOnErrorRe = "(?i)\\b(TRUE|FALSE|UNKNOWN|ERROR)\\s+ON\\s+ERROR\\b".r
+
+  private def rewriteJsonExists(sql: String): String =
+    spliceEach(sql, jsonExistsRe) { site =>
+      for {
+        (doc, rest) <- jsonArgs(site)
+        pe = literalEnd(rest, 0) if pe >= 0
+      } yield {
+        val path = rest.substring(1, pe).trim
+          .replaceAll("(?i)^(strict|lax)\\s+", "")
+        val onError = jsonOnErrorRe.findFirstMatchIn(rest.substring(pe + 1)) match {
+          case Some(m) if m.group(1).equalsIgnoreCase("TRUE") => "true"
+          case Some(m) if m.group(1).equalsIgnoreCase("UNKNOWN") => "CAST(NULL AS BOOLEAN)"
+          case Some(m) if m.group(1).equalsIgnoreCase("ERROR") =>
+            s"CAST(raise_error('JSON_EXISTS: malformed document') AS BOOLEAN)"
+          case _ => "false"
+        }
+        Splice(site.start, site.close + 1,
+          s"""CASE WHEN ($doc) IS NULL THEN CAST(NULL AS BOOLEAN)
          WHEN get_json_object(($doc), '$$') IS NULL THEN $onError
-         ELSE get_json_object(($doc), '${quoteEscaped(path)}') IS NOT NULL END"""
-    rewriteJsonExists(sql.substring(0, at) + lowered + sql.substring(close + 1))
-  }
+         ELSE get_json_object(($doc), '${quoteEscaped(path)}') IS NOT NULL END""")
+      }
+    }
 
   /** BigQuery SAFE_CAST (SqlLibraryOperators.java:2725) → TRY_CAST
     * (identical NULL-on-error semantics). The SAFE_ arithmetic family
@@ -1565,40 +1524,37 @@ object GraftSql {
     "array_agg", "listagg", "string_agg", "regr_sxx", "regr_syy",
     "regr_count", "regr_avgx", "regr_avgy")
 
-  private[graft] def rewriteWindowFilter(sql: String): String = {
-    val masked = mask(sql)
-    for (m <- "(?is)\\bFILTER\\s*\\(\\s*WHERE\\b".r.findAllMatchIn(masked)) {
-      val fOpen = masked.indexOf('(', m.start)
+  private val filterWhereRe = "(?is)\\bFILTER\\s*\\(\\s*WHERE\\b".r
+  private val overHeadRe = "(?is)^\\s*OVER\\b".r
+  private val fnNameTailRe = "(?is)[A-Za-z_]\\w*\\s*$".r
+  private val distinctArgRe = "(?is)^(DISTINCT|ALL)\\s+(.*)$".r
+
+  private[graft] def rewriteWindowFilter(sql: String): String =
+    spliceEach(sql, filterWhereRe) { site =>
+      val (masked, sql) = (site.m, site.sql)
+      val fOpen = masked.indexOf('(', site.start)
       val fClose = closeOf(masked, fOpen)
-      if (fClose > 0 &&
-          "(?is)^\\s*OVER\\b".r.findFirstIn(masked.substring(fClose + 1)).isDefined) {
-        var p = m.start - 1
-        while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
-        if (p >= 0 && masked.charAt(p) == ')') {
-          val aOpen = openOf(masked, p)
-          val fnOk = aOpen > 0 &&
-            "(?is)[A-Za-z_]\\w*\\s*$".r.findFirstIn(masked.substring(0, aOpen))
-              .exists(f => windowFilterAggs.contains(f.trim.toLowerCase))
-          if (fnOk) {
-            val pred = sql.substring(fOpen + 1, fClose).trim
-              .replaceFirst("(?is)^WHERE\\s+", "")
-            val args = splitElems(sql, masked, aOpen + 1, p)
-            val newArgs =
-              if (args.length == 1 && args.head == "*") s"CASE WHEN $pred THEN 1 END"
-              else args.zipWithIndex.map { case (a, ix) =>
-                val dm = "(?is)^(DISTINCT|ALL)\\s+(.*)$".r.findFirstMatchIn(a)
-                  .filter(_ => ix == 0)
-                dm.map(d => s"${d.group(1)} CASE WHEN $pred THEN ${d.group(2)} END")
-                  .getOrElse(s"CASE WHEN $pred THEN $a END")
-              }.mkString(", ")
-            return rewriteWindowFilter(
-              sql.substring(0, aOpen + 1) + newArgs + ")" + sql.substring(fClose + 1))
-          }
-        }
+      var p = site.start - 1
+      while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
+      val aOpen = if (p >= 0 && masked.charAt(p) == ')') openOf(masked, p) else -1
+      val fnOk = aOpen > 0 &&
+        fnNameTailRe.findFirstIn(masked.substring(0, aOpen))
+          .exists(f => windowFilterAggs.contains(f.trim.toLowerCase))
+      if (fClose < 0 || overHeadRe.findFirstIn(masked.substring(fClose + 1)).isEmpty || !fnOk) None
+      else {
+        val pred = sql.substring(fOpen + 1, fClose).trim
+          .replaceFirst("(?is)^WHERE\\s+", "")
+        val args = splitElems(sql, masked, aOpen + 1, p)
+        val newArgs =
+          if (args.length == 1 && args.head == "*") s"CASE WHEN $pred THEN 1 END"
+          else args.zipWithIndex.map { case (a, ix) =>
+            val dm = distinctArgRe.findFirstMatchIn(a).filter(_ => ix == 0)
+            dm.map(d => s"${d.group(1)} CASE WHEN $pred THEN ${d.group(2)} END")
+              .getOrElse(s"CASE WHEN $pred THEN $a END")
+          }.mkString(", ")
+        Some(Splice(aOpen + 1, fClose + 1, newArgs + ")"))
       }
     }
-    sql
-  }
 
   /** Lower QUALIFY (recursing into subqueries/CTEs first): everything up
     * to QUALIFY becomes a subquery, the predicate a WHERE on it; trailing

@@ -1,6 +1,6 @@
 package graft.sql
 
-import SqlText.{clauseEnd, closeOf, commaRanges, groupEnd, mask, openOf, topLevelIndex}
+import SqlText.{Splice, clauseEnd, closeOf, commaRanges, groupEnd, mask, openOf, spliceEach, topLevelIndex, topLevelMatches}
 
 /** Grouping-set surfaces beyond Spark's grammar (reference:
   * SqlGroupedWindowFunction / the validator's grouping-set expansion in
@@ -32,45 +32,40 @@ object GroupingSetsSql {
     * items — otherwise column shapes differ per set) and no HAVING /
     * ORDER tail follows; the branches share one scan and Catalyst
     * merges their partial aggregates map-side. */
-  private def rewriteEmptySetUnion(sql: String): String = {
-    val masked = mask(sql)
-    val gsRe = "(?is)\\bGROUP\\s+BY\\s+GROUPING\\s+SETS\\s*\\(".r
-    for (m <- gsRe.findAllMatchIn(masked)) {
-      val open = masked.indexOf('(', m.end - 1)
-      val close = closeOf(masked, open)
-      if (close > 0) {
-        val sets = splitElems(sql, masked, open + 1, close).map(_._1.trim)
-        if (sets.length >= 2 && sets.exists(_.replaceAll("\\s", "") == "()")) {
-          // enclosing paren block (a derived table / subquery), or the
-          // whole statement
-          val blockEnd = groupEnd(masked, m.start)
-          val blockStart = if (blockEnd < masked.length) openOf(masked, blockEnd) + 1 else 0
-          if (blockEnd > close && masked.substring(close + 1, blockEnd).trim.isEmpty) {
-            val head = masked.substring(blockStart, m.start)
-            val selM = "(?is)^\\s*SELECT\\b".r.findFirstMatchIn(head)
-            val fromAt = topLevelIndex(head, "FROM")
-            if (selM.isDefined && fromAt > selM.get.end) {
-              val items = SqlText.splitTop(
-                sql.substring(blockStart + selM.get.end, blockStart + fromAt))
-              val aggItem = ("(?is)^\\s*(COUNT|SUM|AVG|MIN|MAX)\\s*" +
-                "\\((?:[^()]|\\([^()]*\\))*\\)\\s*(AS\\s+\\w+\\s*)?$").r
-              if (items.nonEmpty && items.forall(it => aggItem.matches(it))) {
-                val prefix = sql.substring(blockStart, m.start)
-                val branches = sets.map { s =>
-                  if (s.replaceAll("\\s", "") == "()") prefix
-                  else prefix + "GROUP BY " +
-                    s.trim.stripPrefix("(").stripSuffix(")")
-                }
-                return rewriteEmptySetUnion(sql.substring(0, blockStart) +
-                  branches.mkString(" UNION ALL ") + sql.substring(blockEnd))
-              }
+  private val groupingSetsRe = "(?is)\\bGROUP\\s+BY\\s+GROUPING\\s+SETS\\s*\\(".r
+  private val selectWordRe = "(?is)^\\s*SELECT\\b".r
+  private val aggItemRe = ("(?is)^\\s*(COUNT|SUM|AVG|MIN|MAX)\\s*" +
+    "\\((?:[^()]|\\([^()]*\\))*\\)\\s*(AS\\s+\\w+\\s*)?$").r
+
+  private def rewriteEmptySetUnion(sql: String): String =
+    spliceEach(sql, groupingSetsRe) { site =>
+      val (masked, sql) = (site.m, site.sql)
+      val close = site.close
+      val sets = if (close < 0) Nil else splitElems(sql, masked, site.end, close).map(_._1.trim)
+      // enclosing paren block (a derived table / subquery), or the
+      // whole statement
+      val blockEnd = groupEnd(masked, site.start)
+      val blockStart = if (blockEnd < masked.length) openOf(masked, blockEnd) + 1 else 0
+      if (sets.length < 2 || !sets.exists(_.replaceAll("\\s", "") == "()") ||
+          blockEnd <= close || masked.substring(close + 1, blockEnd).trim.nonEmpty) None
+      else {
+        val head = masked.substring(blockStart, site.start)
+        val fromAt = topLevelIndex(head, "FROM")
+        selectWordRe.findFirstMatchIn(head).filter(fromAt > _.end).flatMap { selM =>
+          val items = SqlText.splitTop(
+            sql.substring(blockStart + selM.end, blockStart + fromAt))
+          if (items.isEmpty || !items.forall(it => aggItemRe.matches(it))) None
+          else {
+            val prefix = sql.substring(blockStart, site.start)
+            val branches = sets.map { s =>
+              if (s.replaceAll("\\s", "") == "()") prefix
+              else prefix + "GROUP BY " + s.trim.stripPrefix("(").stripSuffix(")")
             }
+            Some(Splice(blockStart, blockEnd, branches.mkString(" UNION ALL ")))
           }
         }
       }
     }
-    sql
-  }
 
   /** GROUPING_ID(args...) → weighted sum of single-column GROUPING()
     * calls (identical semantics in both engines: Σ grouping(ci)·2^(n-1-i))
@@ -87,10 +82,7 @@ object GroupingSetsSql {
     // UNION ALL of grouped selects has one GROUP BY per branch
     // (agg.iq's manual GROUP_ID-equivalence unions)
     val setOp = "(?is)\\b(UNION\\s+ALL|UNION|INTERSECT|EXCEPT)\\b".r
-    val topOps = setOp.findAllMatchIn(masked0).filter { m =>
-      val pre = masked0.substring(0, m.start)
-      pre.count(_ == '(') == pre.count(_ == ')')
-    }.toSeq
+    val topOps = topLevelMatches(masked0, setOp).toSeq
     if (topOps.nonEmpty) {
       val bounds = (0 +: topOps.map(_.end)).zip(topOps.map(_.start) :+ sql.length)
       val parts = bounds.map { case (a, b) => sql.substring(a, b) }
@@ -106,10 +98,7 @@ object GroupingSetsSql {
       if (close > 0 && "(?is)\\bgrouping(_id)?\\s*\\(".r
           .findFirstIn(masked.substring(m.start, close)).isDefined) return sql
     }
-    val gbs = "(?is)\\bGROUP\\s+BY\\s".r.findAllMatchIn(masked).filter { m =>
-      val pre = masked.substring(0, m.start)
-      pre.count(_ == '(') == pre.count(_ == ')')
-    }.toSeq
+    val gbs = topLevelMatches(masked, groupByRe).toSeq
     if (gbs.length != 1) return sql
     val gbElems = {
       val end = listEnd(masked, gbs.head.end)
@@ -175,10 +164,7 @@ object GroupingSetsSql {
     * wins over the single calls inside it). */
   private def havingByAlias(sql: String): String = {
     val masked = mask(sql)
-    val hv = "(?is)\\bHAVING\\b".r.findAllMatchIn(masked).filter { m =>
-      val pre = masked.substring(0, m.start)
-      pre.count(_ == '(') == pre.count(_ == ')')
-    }.toSeq.headOption.getOrElse(return sql)
+    val hv = topLevelMatches(masked, "(?is)\\bHAVING\\b".r).nextOption().getOrElse(return sql)
     val hvEnd = listEnd(masked, hv.end)
     if (!"(?is)\\bgrouping\\s*\\(".r.findFirstIn(masked.substring(hv.end, hvEnd)).isDefined)
       return sql
@@ -242,10 +228,7 @@ object GroupingSetsSql {
     if (gidRe.findFirstIn(masked).isEmpty) return sql
     // only the statement's own (paren-depth-0) GROUP BY defines the
     // grouping sets GROUP_ID numbers; a subquery's clause must not bind
-    val topGbs = "(?is)\\bGROUP\\s+BY\\s".r.findAllMatchIn(masked).filter { m =>
-      val pre = masked.substring(0, m.start)
-      pre.count(_ == '(') == pre.count(_ == ')')
-    }.toSeq
+    val topGbs = topLevelMatches(masked, groupByRe).toSeq
     if (topGbs.length > 1) return sql
     val gb = topGbs.headOption match {
       case Some(m) => m
@@ -275,10 +258,7 @@ object GroupingSetsSql {
     val maxMult = byKey.values.map(_._2).max
     if (maxMult == 1) return gidRe.replaceAllIn(sql, "coalesce(min(0), 0)")
     // trailing top-level ORDER BY moves outside the UNION ALL
-    val ob = "(?is)\\bORDER\\s+BY\\s".r.findAllMatchIn(masked)
-      .filter(m => masked.substring(0, m.start).count(_ == '(') ==
-        masked.substring(0, m.start).count(_ == ')'))
-      .toSeq.lastOption
+    val ob = topLevelMatches(masked, "(?is)\\bORDER\\s+BY\\s".r).toSeq.lastOption
     val (body, orderTxt) = ob match {
       case Some(o) => (sql.substring(0, o.start), " " + sql.substring(o.start).trim)
       case None => (sql, "")
@@ -334,34 +314,32 @@ object GroupingSetsSql {
     * the reference but not in Spark's grammar. Normalize the whole list
     * to one explicit GROUPING SETS cross product (duplicates KEPT —
     * Spark preserves duplicate sets, matching the reference). */
-  private def rewriteMixedEmpty(sql: String): String = {
-    val masked = mask(sql)
-    for (m <- "(?is)\\bGROUP\\s+BY\\s".r.findAllMatchIn(masked)) {
-      if (!"(?is)^\\s*DISTINCT\\b".r.findFirstIn(masked.substring(m.end)).isDefined) {
-        val end = listEnd(masked, m.end)
-        val elems = splitElems(sql, masked, m.end, end)
-        val hasGs = elems.exists(e =>
-          "(?is)^GROUPING\\s+SETS\\s*\\(".r.findFirstIn(e._2).isDefined)
-        val hasEmpty = elems.exists(_._1.replaceAll("\\s", "") == "()")
-        val nGs = elems.count(e =>
-          "(?is)^GROUPING\\s+SETS\\s*\\(".r.findFirstIn(e._2).isDefined)
-        if (elems.length >= 2 && hasGs && (hasEmpty || nGs >= 2)) {
-          val expanded = elems
-            .filter(_._1.replaceAll("\\s", "") != "()")
-            .map { case (t, mt) => expand(t, mt) }
-          val crossed = expanded.foldLeft(Seq(Seq.empty[String])) { (acc, sets) =>
-            for (a <- acc; b <- sets) yield a ++ b
-          }
-          val setsTxt = crossed
-            .map(t => if (t.isEmpty) "()" else t.mkString("(", ", ", ")"))
-            .mkString(", ")
-          return rewriteMixedEmpty(sql.substring(0, m.start) +
-            "GROUP BY GROUPING SETS (" + setsTxt + ") " + sql.substring(end))
+  private val groupByRe = "(?is)\\bGROUP\\s+BY\\s".r
+  private val distinctHeadRe = "(?is)^\\s*DISTINCT\\b".r
+  private val groupingSetsHeadRe = "(?is)^GROUPING\\s+SETS\\s*\\(".r
+
+  private def rewriteMixedEmpty(sql: String): String =
+    spliceEach(sql, groupByRe) { site =>
+      val masked = site.m
+      val end = listEnd(masked, site.end)
+      val elems = splitElems(site.sql, masked, site.end, end)
+      val nGs = elems.count(e => groupingSetsHeadRe.findFirstIn(e._2).isDefined)
+      val hasEmpty = elems.exists(_._1.replaceAll("\\s", "") == "()")
+      if (distinctHeadRe.findFirstIn(masked.substring(site.end)).isDefined ||
+          elems.length < 2 || nGs == 0 || !(hasEmpty || nGs >= 2)) None
+      else {
+        val expanded = elems
+          .filter(_._1.replaceAll("\\s", "") != "()")
+          .map { case (t, mt) => expand(t, mt) }
+        val crossed = expanded.foldLeft(Seq(Seq.empty[String])) { (acc, sets) =>
+          for (a <- acc; b <- sets) yield a ++ b
         }
+        val setsTxt = crossed
+          .map(t => if (t.isEmpty) "()" else t.mkString("(", ", ", ")"))
+          .mkString(", ")
+        Some(Splice(site.start, end, "GROUP BY GROUPING SETS (" + setsTxt + ") "))
       }
     }
-    sql
-  }
 
   /** End offset of a grouping-element list starting at `from`: the next
     * top-level clause keyword or unbalanced close paren. */
@@ -369,42 +347,32 @@ object GroupingSetsSql {
     clauseEnd(masked, from, "HAVING", "ORDER", "LIMIT", "OFFSET", "FETCH", "WINDOW",
       "UNION", "INTERSECT", "EXCEPT", "QUALIFY")
 
-  /** Splice inner GROUPING SETS elements into the enclosing list. */
-  private def flattenNested(sql: String): String = {
-    val masked = mask(sql)
-    val re = "(?is)\\bGROUPING\\s+SETS\\s*\\(".r
-    val outers = re.findAllMatchIn(masked).toSeq
-    for (o <- outers) {
-      val open = masked.indexOf('(', o.start)
-      val close = closeOf(masked, open)
-      if (close > 0) {
-        val innerMasked = masked.substring(open + 1, close)
-        val inner = re.findFirstMatchIn(innerMasked)
-        if (inner.isDefined) {
-          // splice each top-level `grouping sets (...)` element
-          val elems = splitElems(sql, masked, open + 1, close)
-          val spliced = elems.flatMap { case (txt, mtxt) =>
-            "(?is)^\\s*GROUPING\\s+SETS\\s*\\(".r.findFirstMatchIn(mtxt) match {
-              case Some(im) =>
-                val iOpen = mtxt.indexOf('(', im.start)
-                val iClose = closeOf(mtxt, iOpen)
-                if (iClose > 0) splitElems(txt, mtxt, iOpen + 1, iClose).map(_._1)
-                else Seq(txt)
-              case None => Seq(txt)
-            }
+  private val nestedSetsRe = "(?is)\\bGROUPING\\s+SETS\\s*\\(".r
+
+  /** Splice inner GROUPING SETS elements into the enclosing list. A
+    * GROUPING SETS nested inside a tuple ELEMENT is only detected, never
+    * spliced (splicing is top-level), and is left for the parser to
+    * report. */
+  private def flattenNested(sql: String): String =
+    spliceEach(sql, nestedSetsRe) { site =>
+      val (masked, sql) = (site.m, site.sql)
+      val close = site.close
+      if (close < 0 || nestedSetsRe.findFirstIn(masked.substring(site.end, close)).isEmpty) None
+      else {
+        // splice each top-level `grouping sets (...)` element
+        val spliced = splitElems(sql, masked, site.end, close).flatMap { case (txt, mtxt) =>
+          groupingSetsHeadRe.findFirstMatchIn(mtxt) match {
+            case Some(im) =>
+              val iOpen = mtxt.indexOf('(', im.start)
+              val iClose = closeOf(mtxt, iOpen)
+              if (iClose > 0) splitElems(txt, mtxt, iOpen + 1, iClose).map(_._1)
+              else Seq(txt)
+            case None => Seq(txt)
           }
-          val next =
-            sql.substring(0, open + 1) + spliced.mkString(", ") + sql.substring(close)
-          // a GROUPING SETS nested inside a tuple ELEMENT is only
-          // detected, never spliced (splicing is top-level) — recursing
-          // on identical text would loop to StackOverflow; stop and let
-          // the parser report it
-          return if (next == sql) sql else flattenNested(next)
         }
+        Some(Splice(site.end, close, spliced.mkString(", ")))
       }
     }
-    sql
-  }
 
   /** Top-level comma elements of text[from, to) with their masked twin. */
   private def splitElems(sql: String, masked: String, from: Int, to: Int): Seq[(String, String)] =

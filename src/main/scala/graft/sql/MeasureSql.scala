@@ -236,29 +236,22 @@ object MeasureSql {
     * evaluates over the one-row group — avg/sum/min/max(x) → x,
     * count(*) → 1, count(x) → null indicator, count(distinct x) → same
     * (a single row has one distinct value or none). */
-  private def rowForm(e: String): String = {
-    val callRe = "(?i)\\b(AVG|SUM|MIN|MAX|COUNT)\\s*\\(".r
-    var cur = e
-    var m = callRe.findFirstMatchIn(cur)
-    while (m.isDefined) {
-      val mm = m.get
-      val open = cur.indexOf('(', mm.end - 1)
-      val close = closeOf(mask(cur), open)
-      if (close < 0) return s"($cur)"
-      val fn = mm.group(1).toUpperCase
-      val arg = cur.substring(open + 1, close).trim
-      val rep =
-        if (fn != "COUNT") s"(${arg})"
-        else if (arg == "*") "1"
-        else {
-          val a = "(?is)^DISTINCT\\s+(.*)$".r.findFirstMatchIn(arg).map(_.group(1)).getOrElse(arg)
-          s"IF(($a) IS NULL, 0, 1)"
-        }
-      cur = cur.substring(0, mm.start) + rep + cur.substring(close + 1)
-      m = callRe.findFirstMatchIn(cur)
-    }
-    s"($cur)"
-  }
+  private val aggCallRe = "(?i)\\b(AVG|SUM|MIN|MAX|COUNT)\\s*\\(".r
+  private val distinctArgRe = "(?is)^DISTINCT\\s+(.*)$".r
+
+  private def rowForm(e: String): String =
+    "(" + SqlText.spliceEach(e, aggCallRe) { site =>
+      val close = site.close
+      if (close < 0) None
+      else {
+        val arg = site.sql.substring(site.end, close).trim
+        val rep =
+          if (!site.group(1).equalsIgnoreCase("COUNT")) s"($arg)"
+          else if (arg == "*") "1"
+          else s"IF((${distinctArgRe.findFirstMatchIn(arg).map(_.group(1)).getOrElse(arg)}) IS NULL, 0, 1)"
+        Some(SqlText.Splice(site.start, close + 1, rep))
+      }
+    } + ")"
 
   /** Aggregate-context expansion, with the reference's AVG return-type
     * derivation (cast back to the argument type). */

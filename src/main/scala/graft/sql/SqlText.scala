@@ -1,5 +1,6 @@
 package graft.sql
 
+import scala.annotation.tailrec
 import scala.util.matching.Regex
 
 /** The one lexical rule of the SQL front end — the part the reference's
@@ -9,28 +10,42 @@ import scala.util.matching.Regex
   *
   *  - Quoting: the contents of a `'...'` string literal and of a
   *    `` `...` `` quoted identifier become U+0001; the quote characters
-  *    stay, so positions map 1:1 onto the original text and a doubled
-  *    `''` inside a literal reads as two adjacent literals.
+  *    stay, so positions map 1:1 onto the original text. Inside a
+  *    `'...'` literal a backslash escapes the next character (Spark's
+  *    lexer reads `\'` as a quote inside the literal), and a doubled
+  *    `''` reads as two adjacent literals.
   *  - Nesting: `(` and `[` open a group and `)` and `]` close one, on a
   *    single depth counter; depth 0 is the top level of the scanned text.
   *
-  * Regexes FIND on the mask and splice from the original text
-  * ([[replaceMasked]], [[origGroup]]). The scanning helpers take masked
-  * text (`m`) unless their doc says otherwise; on balanced text their
-  * answers do not depend on which kind of bracket a group uses. Comment
-  * stripping and the dialect re-quoters scan other grammars and keep
-  * their own loops. */
+  * Regexes FIND on the mask and splice from the original text. A rewrite
+  * that replaces every match independently uses [[replaceMasked]]; one
+  * whose replacement must see the text the previous splice produced
+  * (nested calls lower inside-out, a later site depends on an earlier
+  * one) uses [[spliceEach]], the one site driver: it decides which
+  * matches are visited, where a splice lands and when the text is
+  * re-scanned, and the pass only builds its replacement. The scanning
+  * helpers take masked text (`m`) unless their doc says otherwise; on
+  * balanced text their answers do not depend on which kind of bracket a
+  * group uses. Comment stripping and the dialect re-quoters scan other
+  * grammars and keep their own loops. */
 object SqlText {
 
   /** Same-length copy of `s` with every char inside a `'...'` literal or
-    * a `` `...` `` identifier replaced by U+0001 (quotes preserved). */
+    * a `` `...` `` identifier replaced by U+0001 (quotes preserved; a
+    * `\` inside a `'...'` literal masks itself and the char after it). */
   def mask(s: String): String = {
     val a = s.toCharArray
     var quote = '\u0000'
     var i = 0
     while (i < a.length) {
       val c = a(i)
-      if (quote != '\u0000') { if (c == quote) quote = '\u0000' else a(i) = '\u0001' }
+      if (quote != '\u0000') {
+        if (c == quote) quote = '\u0000'
+        else {
+          a(i) = '\u0001'
+          if (c == '\\' && quote == '\'' && i + 1 < a.length) { i += 1; a(i) = '\u0001' }
+        }
+      }
       else if (c == '\'' || c == '`') quote = c
       i += 1
     }
@@ -48,6 +63,40 @@ object SqlText {
       last = m.end
     }
     sb.append(sql.substring(last)).toString
+  }
+
+  /** One match of a [[spliceEach]] head on the current text: `sql` is
+    * that text and `m` its mask, and the match's positions are valid in
+    * both. */
+  final class Site(val sql: String, val m: String, val hit: Regex.Match) {
+    def start: Int = hit.start
+    def end: Int = hit.end
+    /** Group `i` of the head, read from the original text. */
+    def group(i: Int): String = origGroup(hit, sql, i)
+    /** The close of the group the head's last char opens, or -1. */
+    def close: Int = closeOf(m, hit.end - 1)
+  }
+
+  /** A splice a pass asks for: replace sql[start, end) with `text`. */
+  final case class Splice(start: Int, end: Int, text: String)
+
+  /** The one site driver. Finds `head` on the mask of `sql` and hands
+    * each match, in text order, to `splice`; applies the first splice
+    * that changes the text, then re-scans the new text from its start.
+    * Stops when no match yields a splice. A pass whose replacement keeps
+    * its own head must make the replacement stop matching, or the scan
+    * does not end. */
+  @tailrec def spliceEach(sql: String, head: Regex)(splice: Site => Option[Splice]): String =
+    firstSplice(sql, head, splice) match {
+      case Some(next) => spliceEach(next, head)(splice)
+      case None => sql
+    }
+
+  private def firstSplice(sql: String, head: Regex, splice: Site => Option[Splice]): Option[String] = {
+    val m = mask(sql)
+    head.findAllMatchIn(m).flatMap(hit => splice(new Site(sql, m, hit)))
+      .map(sp => sql.substring(0, sp.start) + sp.text + sql.substring(sp.end))
+      .find(_ != sql)
   }
 
   /** Group `i` of a masked match, read from the ORIGINAL text. */
@@ -77,12 +126,15 @@ object SqlText {
   }
 
   /** Index of the quote closing the `'...'` literal whose opening quote
-    * is at `open` (original text), reading a doubled `''` as one quote
-    * inside it, the SQL-standard escape; -1 if it does not close. */
+    * is at `open` (ORIGINAL text), or -1 if it does not close. A `\`
+    * escapes the char after it, and a doubled `''` reads as one quote
+    * inside the literal, the SQL-standard escape. */
   def literalEnd(s: String, open: Int): Int = {
     var i = open + 1
     while (i < s.length) {
-      if (s.charAt(i) != '\'') i += 1
+      val c = s.charAt(i)
+      if (c == '\\') i += 2
+      else if (c != '\'') i += 1
       else if (i + 1 < s.length && s.charAt(i + 1) == '\'') i += 2
       else return i
     }
@@ -195,6 +247,20 @@ object SqlText {
     var at = topLevelIndex(m, kw)
     while (at >= 0) { last = at; at = topLevelIndex(m, kw, at + kw.length) }
     last
+  }
+
+  /** The matches of `re` on `m` that start at depth 0. */
+  def topLevelMatches(m: String, re: Regex): Iterator[Regex.Match] = {
+    var depth = 0
+    var i = 0
+    re.findAllMatchIn(m).filter { hit =>
+      while (i < hit.start) {
+        val c = m.charAt(i)
+        if (opens(c)) depth += 1 else if (closes(c)) depth -= 1
+        i += 1
+      }
+      depth == 0
+    }
   }
 
   private def find(m: String, kw: String, from: Int, anyDepth: Boolean): Int = {

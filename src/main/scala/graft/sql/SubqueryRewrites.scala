@@ -57,30 +57,29 @@ object SubqueryRewrites {
     * plain expression, so outer references need no decorrelation, and
     * at scale no join is planned at all). Simple probes only (literal /
     * column ref); compound probes keep the subquery path. */
-  private[sql] def rewriteInUnnest(sql: String): String = {
-    val re = ("(?is)(\\bTRUE\\b|\\bFALSE\\b|'[^']*'|-?\\d+(?:\\.\\d+)?|[A-Za-z_][\\w.]*)" +
-      "\\s+(NOT\\s+)?IN\\s*\\(\\s*SELECT\\s+(\\w+)\\s+FROM\\s+UNNEST\\s*\\(").r
-    val masked = SqlText.mask(sql)
-    val m = re.findAllMatchIn(masked).toSeq.headOption.getOrElse(return sql)
-    val unnestOpen = masked.lastIndexOf('(', m.end - 1)
-    val unnestClose = SqlText.closeOf(masked, unnestOpen)
-    if (unnestClose < 0) return sql
-    // subquery close: optional `AS a(c)` / `a(c)` tail then `)`
-    val inOpen = masked.indexOf('(', m.start + m.group(1).length)
-    val inClose = SqlText.closeOf(masked, inOpen)
-    if (inClose < 0) return sql
-    val tail = masked.substring(unnestClose + 1, inClose)
-    if (!"(?is)^\\s*(?:AS\\s+)?(?:\\w+\\s*(?:\\(\\s*\\w+\\s*\\))?)?\\s*$".r.matches(tail))
-      return sql
-    val probe = sql.substring(m.start(1), m.end(1))
-    val arr = sql.substring(unnestOpen + 1, unnestClose)
-    // multi-collection UNNEST(a, b) zips — not a membership probe
-    if (SqlText.splitTop(arr).length != 1) return sql
-    val neg = m.group(2) != null
-    val call = s"array_contains(($arr), $probe)"
-    rewriteInUnnest(sql.substring(0, m.start) +
-      (if (neg) s"(NOT $call)" else call) + sql.substring(inClose + 1))
-  }
+  private val inUnnestRe = ("(?is)(\\bTRUE\\b|\\bFALSE\\b|'[^']*'|-?\\d+(?:\\.\\d+)?|[A-Za-z_][\\w.]*)" +
+    "\\s+(NOT\\s+)?IN\\s*\\(\\s*SELECT\\s+(\\w+)\\s+FROM\\s+UNNEST\\s*\\(").r
+  private val unnestTailRe = "(?is)^\\s*(?:AS\\s+)?(?:\\w+\\s*(?:\\(\\s*\\w+\\s*\\))?)?\\s*$".r
+
+  private[sql] def rewriteInUnnest(sql: String): String =
+    SqlText.spliceEach(sql, inUnnestRe) { site =>
+      val (masked, sql) = (site.m, site.sql)
+      val unnestOpen = site.end - 1
+      val unnestClose = site.close
+      // subquery close: optional `AS a(c)` / `a(c)` tail then `)`
+      val inOpen = masked.indexOf('(', site.start + site.group(1).length)
+      val inClose = SqlText.closeOf(masked, inOpen)
+      val arr = if (unnestClose < 0) "" else sql.substring(unnestOpen + 1, unnestClose)
+      // multi-collection UNNEST(a, b) zips — not a membership probe
+      if (unnestClose < 0 || inClose < 0 ||
+          !unnestTailRe.matches(masked.substring(unnestClose + 1, inClose)) ||
+          SqlText.splitTop(arr).length != 1) None
+      else {
+        val call = s"array_contains(($arr), ${site.group(1)})"
+        Some(SqlText.Splice(site.start, inClose + 1,
+          if (site.group(2) != null) s"(NOT $call)" else call))
+      }
+    }
 
   // ---- RANGE frame without ORDER BY -------------------------------------
 
@@ -89,25 +88,17 @@ object SubqueryRewrites {
     * reference accepts; Spark demands an ORDER BY for RANGE frames.
     * Dropping the frame clause gives exactly the whole-partition
     * aggregate. */
-  private[sql] def rewriteUnorderedRange(sql: String): String = {
-    val masked = SqlText.mask(sql)
-    val re = "(?i)\\bOVER\\s*\\(".r
-    for (m <- re.findAllMatchIn(masked)) {
-      val open = m.end - 1
-      val close = SqlText.closeOf(masked, open)
-      if (close >= 0) {
-        val innerM = masked.substring(open + 1, close)
-        val rangeAt = "(?i)\\bRANGE\\b".r.findFirstMatchIn(innerM).map(_.start).getOrElse(-1)
-        val hasOrder = "(?i)\\bORDER\\s+BY\\b".r.findFirstIn(innerM).isDefined
-        if (rangeAt >= 0 && !hasOrder) {
-          val inner = sql.substring(open + 1, close)
-          return rewriteUnorderedRange(sql.substring(0, open + 1) +
-            inner.substring(0, rangeAt).trim + sql.substring(close))
-        }
-      }
+  private val overOpenRe = "(?i)\\bOVER\\s*\\(".r
+  private val rangeRe = "(?i)\\bRANGE\\b".r
+  private val orderByRe = "(?i)\\bORDER\\s+BY\\b".r
+
+  private[sql] def rewriteUnorderedRange(sql: String): String =
+    SqlText.spliceEach(sql, overOpenRe) { site =>
+      val close = site.close
+      val innerM = if (close < 0) "" else site.m.substring(site.end, close)
+      rangeRe.findFirstMatchIn(innerM).filter(_ => orderByRe.findFirstIn(innerM).isEmpty)
+        .map(r => SqlText.Splice(site.end, close, site.sql.substring(site.end, site.end + r.start).trim))
     }
-    sql
-  }
 
   // ---- ARG_MIN / ARG_MAX ------------------------------------------------
 
@@ -270,57 +261,57 @@ object SubqueryRewrites {
   private val quantRe =
     "(?i)(=|<>|!=|<=|>=|<|>)\\s*(SOME|ANY|ALL)\\s*\\(".r
 
-  private[sql] def rewriteQuantified(sql: String): String = {
-    val masked = SqlText.mask(sql)
-    val m = quantRe.findFirstMatchIn(masked).getOrElse(return sql)
-    val open = m.end - 1
-    val close = SqlText.closeOf(masked, open)
-    if (close < 0) return sql
-    // the LHS may be any primary — identifier chain, call, paren or
-    // bracket group, literal (some.iq's `array[1, 2] = any(...)`);
-    // operator precedence is not walked (`x + 1 = any(...)` takes `1`)
-    val lhsStart = SqlText.primaryStart(masked, m.start(1))
-    if (lhsStart < 0) return sql
-    val lhs = sql.substring(lhsStart, m.start(1)).trim
-    if (lhs.isEmpty ||
-        "(?i)^(AND|OR|NOT|WHEN|THEN|ELSE|WHERE|ON|HAVING|SELECT|BY)$".r.matches(lhs))
-      return sql
-    val op = if (m.group(1) == "!=") "<>" else m.group(1)
-    val all = m.group(2).equalsIgnoreCase("ALL")
-    val body = sql.substring(open + 1, close).trim
-    val bodyMasked = masked.substring(open + 1, close).trim
-    val isSubq = "(?is)^(SELECT|WITH)\\b.*".r.matches(bodyMasked)
-    val id = s"uq$open"
-    val repl =
-      if (!isSubq) {
-        val items = SqlText.splitTop(body)
-        if (items.size < 2) {
-          // single collection argument: the reference quantifies over the
-          // ELEMENTS of an array/multiset (SqlQuantifyOperator on a
-          // collection operand; some.iq:985-1060). Spark's higher-order
-          // exists/forall carry exactly the needed three-valued logic
-          // (empty → FALSE/TRUE, no-match-with-nulls → NULL), stay
-          // codegen'd, and never materialize a join.
-          if ("(?is)^(ARRAY\\s*[\\[(]|MULTISET\\s*\\[).*".r.matches(bodyMasked)) {
-            val fn = if (all) "forall" else "exists"
-            s"($fn(${body}, __qv -> ($lhs $op __qv)))"
-          } else return sql // single scalar arg: likely a real function
-        } else {
-          val parts = items.map(it => s"($lhs $op (${it.trim}))")
-          if (all) parts.mkString("(", " AND ", ")") else parts.mkString("(", " OR ", ")")
-        }
-      } else if (!all) someSubq(lhs, op, body, id)
-      else op match { // x op ALL q  ⟺  NOT (x inv(op) SOME q)
-        case "<>" => s"($lhs NOT IN ($body))"
-        case "=" => s"(NOT ${someSubq(lhs, "<>", body, id)})"
-        case ">" => s"(NOT ${someSubq(lhs, "<=", body, id)})"
-        case ">=" => s"(NOT ${someSubq(lhs, "<", body, id)})"
-        case "<" => s"(NOT ${someSubq(lhs, ">=", body, id)})"
-        case "<=" => s"(NOT ${someSubq(lhs, ">", body, id)})"
-        case _ => return sql
+  private val lhsKeywordRe = "(?i)^(AND|OR|NOT|WHEN|THEN|ELSE|WHERE|ON|HAVING|SELECT|BY)$".r
+  private val subqueryRe = "(?is)^(SELECT|WITH)\\b.*".r
+  private val collectionRe = "(?is)^(ARRAY\\s*[\\[(]|MULTISET\\s*\\[).*".r
+
+  private[sql] def rewriteQuantified(sql: String): String =
+    SqlText.spliceEach(sql, quantRe) { site =>
+      val (masked, sql) = (site.m, site.sql)
+      val open = site.end - 1
+      val close = site.close
+      // the LHS may be any primary — identifier chain, call, paren or
+      // bracket group, literal (some.iq's `array[1, 2] = any(...)`);
+      // operator precedence is not walked (`x + 1 = any(...)` takes `1`)
+      val lhsStart = SqlText.primaryStart(masked, site.hit.start(1))
+      val lhs = if (lhsStart < 0) "" else sql.substring(lhsStart, site.hit.start(1)).trim
+      if (close < 0 || lhs.isEmpty || lhsKeywordRe.matches(lhs)) None
+      else {
+        val op = if (site.group(1) == "!=") "<>" else site.group(1)
+        val all = site.group(2).equalsIgnoreCase("ALL")
+        val body = sql.substring(open + 1, close).trim
+        val bodyMasked = masked.substring(open + 1, close).trim
+        val id = s"uq$open"
+        val repl: Option[String] =
+          if (!subqueryRe.matches(bodyMasked)) {
+            val items = SqlText.splitTop(body)
+            if (items.size >= 2) {
+              val parts = items.map(it => s"($lhs $op (${it.trim}))")
+              Some(if (all) parts.mkString("(", " AND ", ")") else parts.mkString("(", " OR ", ")"))
+            }
+            // single collection argument: the reference quantifies over
+            // the ELEMENTS of an array/multiset (SqlQuantifyOperator on a
+            // collection operand; some.iq:985-1060). Spark's higher-order
+            // exists/forall carry exactly the needed three-valued logic
+            // (empty → FALSE/TRUE, no-match-with-nulls → NULL), stay
+            // codegen'd, and never materialize a join. A single scalar
+            // argument is likely a real function call.
+            else if (collectionRe.matches(bodyMasked))
+              Some(s"(${if (all) "forall" else "exists"}(${body}, __qv -> ($lhs $op __qv)))")
+            else None
+          } else if (!all) Some(someSubq(lhs, op, body, id))
+          else op match { // x op ALL q  ⟺  NOT (x inv(op) SOME q)
+            case "<>" => Some(s"($lhs NOT IN ($body))")
+            case "=" => Some(s"(NOT ${someSubq(lhs, "<>", body, id)})")
+            case ">" => Some(s"(NOT ${someSubq(lhs, "<=", body, id)})")
+            case ">=" => Some(s"(NOT ${someSubq(lhs, "<", body, id)})")
+            case "<" => Some(s"(NOT ${someSubq(lhs, ">=", body, id)})")
+            case "<=" => Some(s"(NOT ${someSubq(lhs, ">", body, id)})")
+            case _ => None
+          }
+        repl.map(SqlText.Splice(lhsStart, close + 1, _))
       }
-    rewriteQuantified(sql.substring(0, lhsStart) + repl + sql.substring(close + 1))
-  }
+    }
 
   /** `lhs op SOME (q)` with exact 3VL. `= SOME` IS `IN`; the ordered ops
     * reduce to one comparison against MIN/MAX of q plus null/emptiness
@@ -352,29 +343,22 @@ object SubqueryRewrites {
 
   private val uniqueRe = "(?i)\\b(NOT\\s+)?UNIQUE\\s*\\(".r
 
-  private[sql] def rewriteUnique(sql: String): String = {
-    val masked = SqlText.mask(sql)
-    for (m <- uniqueRe.findAllMatchIn(masked)) {
-      val open = m.end - 1
-      val close = SqlText.closeOf(masked, open)
-      if (close >= 0) {
-        val bodyMasked = masked.substring(open + 1, close).trim
-        if ("(?is)^SELECT\\b.*".r.matches(bodyMasked)) {
-          selectArity(bodyMasked).foreach { n =>
-            val body = sql.substring(open + 1, close).trim
-            val id = s"uu$open"
-            val cols = (1 to n).map(k => s"${id}_c$k")
-            val ex = s"EXISTS (SELECT 1 FROM ($body) AS ${id}(${cols.mkString(", ")}) " +
-              s"WHERE ${cols.map(_ + " IS NOT NULL").mkString(" AND ")} " +
-              s"GROUP BY ${cols.mkString(", ")} HAVING COUNT(*) > 1)"
-            val repl = if (m.group(1) != null) s"($ex)" else s"(NOT $ex)"
-            return rewriteUnique(sql.substring(0, m.start) + repl + sql.substring(close + 1))
-          }
-        }
+  private[sql] def rewriteUnique(sql: String): String =
+    SqlText.spliceEach(sql, uniqueRe) { site =>
+      val open = site.end - 1
+      val close = site.close
+      val bodyMasked = if (close < 0) "" else site.m.substring(open + 1, close).trim
+      if (!"(?is)^SELECT\\b.*".r.matches(bodyMasked)) None
+      else selectArity(bodyMasked).map { n =>
+        val body = site.sql.substring(open + 1, close).trim
+        val id = s"uu$open"
+        val cols = (1 to n).map(k => s"${id}_c$k")
+        val ex = s"EXISTS (SELECT 1 FROM ($body) AS ${id}(${cols.mkString(", ")}) " +
+          s"WHERE ${cols.map(_ + " IS NOT NULL").mkString(" AND ")} " +
+          s"GROUP BY ${cols.mkString(", ")} HAVING COUNT(*) > 1)"
+        SqlText.Splice(site.start, close + 1, if (site.group(1) != null) s"($ex)" else s"(NOT $ex)")
       }
     }
-    sql
-  }
 
   /** Number of top-level select-list items of a masked subquery, or None
     * when it can't be counted safely (SELECT *, set ops, WITH). */
@@ -391,24 +375,25 @@ object SubqueryRewrites {
 
   private val arrayMapRe = "(?i)\\b(ARRAY|MAP)\\s*\\(\\s*SELECT\\b".r
 
-  private[sql] def rewriteArrayMap(sql: String): String = {
-    val masked = SqlText.mask(sql)
-    val m = arrayMapRe.findFirstMatchIn(masked).getOrElse(return sql)
-    val open = masked.indexOf('(', m.start)
-    val close = SqlText.closeOf(masked, open)
-    if (close < 0) return sql
-    val body = sql.substring(open + 1, close).trim
-    val id = s"ua$open"
-    val repl =
-      if (m.group(1).equalsIgnoreCase("ARRAY"))
-        // collect_list silently DROPS null elements; the standard ARRAY
-        // constructor keeps them (some.iq:915 builds [TRUE, NULL]) — so
-        // collect non-null struct envelopes and unwrap after
-        s"(SELECT transform(collect_list(struct(${id}_v)), ${id}_s -> ${id}_s.${id}_v) " +
-          s"FROM ($body) AS ${id}_a(${id}_v))"
-      else
-        s"(SELECT map_from_entries(collect_list(struct(${id}_k, ${id}_v))) " +
-          s"FROM ($body) AS ${id}_m(${id}_k, ${id}_v))"
-    rewriteArrayMap(sql.substring(0, m.start) + repl + sql.substring(close + 1))
-  }
+  private[sql] def rewriteArrayMap(sql: String): String =
+    SqlText.spliceEach(sql, arrayMapRe) { site =>
+      val open = site.m.indexOf('(', site.start)
+      val close = SqlText.closeOf(site.m, open)
+      if (close < 0) None
+      else {
+        val body = site.sql.substring(open + 1, close).trim
+        val id = s"ua$open"
+        val repl =
+          if (site.group(1).equalsIgnoreCase("ARRAY"))
+            // collect_list silently DROPS null elements; the standard
+            // ARRAY constructor keeps them (some.iq:915 builds [TRUE,
+            // NULL]) — so collect non-null struct envelopes and unwrap
+            s"(SELECT transform(collect_list(struct(${id}_v)), ${id}_s -> ${id}_s.${id}_v) " +
+              s"FROM ($body) AS ${id}_a(${id}_v))"
+          else
+            s"(SELECT map_from_entries(collect_list(struct(${id}_k, ${id}_v))) " +
+              s"FROM ($body) AS ${id}_m(${id}_k, ${id}_v))"
+        Some(SqlText.Splice(site.start, close + 1, repl))
+      }
+    }
 }

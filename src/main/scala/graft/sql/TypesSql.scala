@@ -1,6 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
 /** `CREATE/DROP TYPE` — user-defined structured types (ref: server
   * module sql/ddl/SqlCreateType.java; type.iq):
@@ -99,25 +100,28 @@ object TypesSql {
   /** `MAP<k, v>` type spellings run through [[expandType]] so UDT names
     * and `ROW(...)` records inside resolve before the generic ROW→struct
     * value rewrite can touch them. */
-  private def expandMapTypes(sql0: String): String = {
-    val re = "(?i)\\bMAP\\s*<".r
-    re.findFirstMatchIn(sql0) match {
-      case None => sql0
-      case Some(m) =>
-        var depth = 0; var close = -1; var i = m.end - 1
-        while (i < sql0.length && close < 0) {
-          sql0.charAt(i) match {
-            case '<' => depth += 1
-            case '>' => depth -= 1; if (depth == 0) close = i
-            case _ =>
-          }
-          i += 1
+  private val mapTypeRe = "(?i)\\bMAP\\s*<".r
+
+  private def expandMapTypes(sql: String): String = {
+    val out = new StringBuilder
+    var last = 0
+    for (m <- mapTypeRe.findAllMatchIn(sql) if m.start >= last) {
+      // the `>` closing the type: `<>` nest in type text
+      var depth = 0; var close = -1; var i = m.end - 1
+      while (i < sql.length && close < 0) {
+        sql.charAt(i) match {
+          case '<' => depth += 1
+          case '>' => depth -= 1; if (depth == 0) close = i
+          case _ =>
         }
-        if (close < 0) sql0
-        else sql0.substring(0, m.start) +
-          expandType(sql0.substring(m.start, close + 1)) +
-          expandMapTypes(sql0.substring(close + 1))
+        i += 1
+      }
+      if (close >= 0) {
+        out.append(sql.substring(last, m.start)).append(expandType(sql.substring(m.start, close + 1)))
+        last = close + 1
+      }
     }
+    out.append(sql.substring(last)).toString
   }
 
   /** Some(df) if the statement is TYPE DDL; None otherwise. */
@@ -135,82 +139,61 @@ object TypesSql {
     case _ => None
   }
 
-  /** Rewrite registered type names inside a statement:
-    * constructor calls first (innermost resolve on later passes), then
-    * bare names in type position. No-op when no type is registered. */
   /** `CAST(x AS ROW(a T, b T))` (SQL-standard row type in a cast
     * position — unnest.iq:635, cast.iq:2049): Spark spells the same
     * type `STRUCT<a: T, ...>`. Fields translate through [[expandType]]
     * (nested ROW recurses, CHAR(n)→STRING, NOT NULL dropped). Applies
     * to every `AS ROW(...)` type position — the token sequence cannot
     * occur as a value expression. */
-  def rewriteCastRow(sql: String): String = {
-    val masked = SqlText.mask(sql)
-    val m = "(?is)\\bAS\\s+(ROW)\\s*\\(".r.findFirstMatchIn(masked)
-      .getOrElse(return sql)
-    val open = masked.indexOf('(', m.start(1))
-    val close = SqlText.closeOf(masked, open)
-    if (close < 0) return sql
-    // `CAST(NULL AS ROW(...))` takes Spark's POSITIONAL field names
-    // (col1..colN) so it unifies with bare ROW(..) value constructors
-    // inside one ARRAY[..] literal (unnest.iq:633 — Spark requires
-    // array elements to agree on struct field NAMES, the reference
-    // only on types); a cast of a real row value keeps declared names.
-    val nullOperand = "(?is)CAST\\s*\\(\\s*NULL\\s+AS\\s*$".r
-      .findFirstIn(masked.substring(0, m.start(1))).isDefined
-    val body = sql.substring(open + 1, close)
-    val struct =
-      if (nullOperand) {
-        val fields = splitTypeList(body).zipWithIndex.map {
-          case (f, i) =>
-            val cleaned = f.trim.replaceAll("(?i)\\s+NOT\\s+NULL$", "").replaceAll("(?i)\\s+NULL$", "")
-            val t = cleaned.split("\\s+", 2)(1)
-            s"col${i + 1}: ${expandType(t)}"
-        }
-        s"STRUCT<${fields.mkString(", ")}>"
-      } else expandType(sql.substring(m.start(1), close + 1))
-    sql.substring(0, m.start(1)) + struct + rewriteCastRow(sql.substring(close + 1))
-  }
+  private val asRowRe = "(?is)\\bAS\\s+(ROW)\\s*\\(".r
+  private val castNullAsRe = "(?is)CAST\\s*\\(\\s*NULL\\s+AS\\s*$".r
 
-  def expand(sql0: String): String = {
-    if (registry.isEmpty) return sql0
-    var sql = expandMapTypes(sql0)
-    var changed = true
-    while (changed) {
-      changed = false
-      val it = registry.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        val name = e.getKey
-        val d = e.getValue
-        if (d.fields.nonEmpty) {
-          // constructor: name(args) -> named_struct('f1', a1, ...)
-          val re = ("(?i)\\b" + java.util.regex.Pattern.quote(name) + "\\s*\\(").r
-          val masked = SqlText.mask(sql)
-          re.findFirstMatchIn(masked) match {
-            case Some(m) =>
-              val open = m.end - 1
-              val close = SqlText.closeOf(masked, open)
-              if (close > 0) {
-                val args = SqlText.splitTop(sql.substring(open + 1, close)).map(_.trim).filter(_.nonEmpty)
-                if (args.length == d.fields.length) {
-                  val ns = d.fields.zip(args)
-                    .map { case (f, a) => s"'$f', $a" }.mkString("named_struct(", ", ", ")")
-                  sql = sql.substring(0, m.start) + ns + sql.substring(close + 1)
-                  changed = true
-                }
-              }
-            case None =>
-          }
-        }
-        // bare name in type position (not followed by '(')
-        val bare = ("(?i)\\b" + java.util.regex.Pattern.quote(name) + "\\b(?!\\s*\\()").r
-        if (bare.findFirstIn(sql).isDefined) {
-          sql = bare.replaceAllIn(sql, java.util.regex.Matcher.quoteReplacement(d.ddl))
-          changed = true
-        }
+  def rewriteCastRow(sql: String): String =
+    SqlText.spliceEach(sql, asRowRe) { site =>
+      val close = site.close
+      if (close < 0) None
+      else {
+        val rowAt = site.hit.start(1)
+        // `CAST(NULL AS ROW(...))` takes Spark's POSITIONAL field names
+        // (col1..colN) so it unifies with bare ROW(..) value constructors
+        // inside one ARRAY[..] literal (unnest.iq:633 — Spark requires
+        // array elements to agree on struct field NAMES, the reference
+        // only on types); a cast of a real row value keeps declared names.
+        val struct =
+          if (castNullAsRe.findFirstIn(site.m.substring(0, rowAt)).isDefined) {
+            val fields = splitTypeList(site.sql.substring(site.end, close)).zipWithIndex.map {
+              case (f, i) =>
+                val cleaned = f.trim.replaceAll("(?i)\\s+NOT\\s+NULL$", "").replaceAll("(?i)\\s+NULL$", "")
+                val t = cleaned.split("\\s+", 2)(1)
+                s"col${i + 1}: ${expandType(t)}"
+            }
+            s"STRUCT<${fields.mkString(", ")}>"
+          } else expandType(site.sql.substring(rowAt, close + 1))
+        Some(SqlText.Splice(rowAt, close + 1, struct))
       }
     }
-    sql
-  }
+
+  /** Rewrite registered type names inside a statement, one type at a
+    * time: its constructor calls (a constructor argument may be another
+    * constructor call), then its bare name in type position. No-op when
+    * no type is registered. */
+  def expand(sql0: String): String =
+    if (registry.isEmpty) sql0
+    else registry.asScala.toSeq.foldLeft(expandMapTypes(sql0)) { case (sql, (name, d)) =>
+      val quoted = java.util.regex.Pattern.quote(name)
+      // constructor: name(args) -> named_struct('f1', a1, ...)
+      val ctors =
+        if (d.fields.isEmpty) sql
+        else SqlText.spliceEach(sql, ("(?i)\\b" + quoted + "\\s*\\(").r) { site =>
+          val close = site.close
+          val args =
+            if (close < 0) Nil
+            else SqlText.splitTop(site.sql.substring(site.end, close)).map(_.trim).filter(_.nonEmpty)
+          if (args.length != d.fields.length) None
+          else Some(SqlText.Splice(site.start, close + 1, d.fields.zip(args)
+            .map { case (f, a) => s"'$f', $a" }.mkString("named_struct(", ", ", ")")))
+        }
+      // bare name in type position (not followed by '(')
+      SqlText.replaceMasked(ctors, ("(?i)\\b" + quoted + "\\b(?!\\s*\\()").r)((_, _) => d.ddl)
+    }
 }

@@ -81,28 +81,21 @@ object WindowTvfSql {
     }
   }
 
-  def rewrite(sql: String): String = {
-    val masked = SqlText.mask(sql)
-    val re = "(?is)\\bTABLE\\s*\\(\\s*(TUMBLE|HOP|SESSION)\\s*\\(".r
-    re.findFirstMatchIn(masked) match {
-      case None => sql
-      case Some(m) =>
-        val fn = m.group(1).toUpperCase
-        val innerOpen = m.end - 1 // the TVF's '('
-        val innerClose = SqlText.closeOf(masked, innerOpen)
-        if (innerClose < 0) return sql
-        val outerClose = {
-          // the TABLE(...) close follows the TVF close
-          var j = innerClose + 1
-          while (j < masked.length && masked.charAt(j).isWhitespace) j += 1
-          if (j >= masked.length || masked.charAt(j) != ')') return sql
-          j
-        }
-        val argsText = sql.substring(innerOpen + 1, innerClose)
-        val lowered = lowerCall(fn, SqlText.splitTop(argsText).map(_.trim).filter(_.nonEmpty).map(parseArg))
-        rewrite(sql.substring(0, m.start) + lowered + sql.substring(outerClose + 1))
+  private val tvfRe = "(?is)\\bTABLE\\s*\\(\\s*(TUMBLE|HOP|SESSION)\\s*\\(".r
+
+  def rewrite(sql: String): String =
+    SqlText.spliceEach(sql, tvfRe) { site =>
+      val innerClose = site.close // the TVF's ')'
+      // the TABLE(...) close follows the TVF close
+      var j = innerClose + 1
+      while (innerClose >= 0 && j < site.m.length && site.m.charAt(j).isWhitespace) j += 1
+      if (innerClose < 0 || j >= site.m.length || site.m.charAt(j) != ')') None
+      else {
+        val args = SqlText.splitTop(site.sql.substring(site.end, innerClose)).map(_.trim).filter(_.nonEmpty)
+        Some(SqlText.Splice(site.start, j + 1,
+          lowerCall(site.group(1).toUpperCase, args.map(parseArg))))
+      }
     }
-  }
 
   private def lowerCall(fn: String, args: Seq[Arg]): String = {
     def isData(t: String) = t.matches("(?is)^TABLE\\s+.+") || t.startsWith("(")

@@ -1,6 +1,6 @@
 package graft.sql
 
-import SqlText.{closeOf, mask, topLevelIndex}
+import SqlText.{closeOf, mask, openOf, topLevelIndex}
 
 /** `agg(e) WITHIN DISTINCT (keys)` (SqlInternalOperators WITHIN
   * DISTINCT — CALCITE-4483; within-distinct.iq): the aggregate runs
@@ -24,10 +24,15 @@ object WithinDistinctSql {
 
   private val err = "more than one distinct value in agg UNIQUE_VALUE"
 
-  def rewrite(sql: String): String = {
-    if ("(?is)\\bWITHIN\\s+DISTINCT\\b".r.findFirstIn(mask(sql)).isEmpty) return sql
-    twoLevel(sql).getOrElse(foldRewrite(sql))
-  }
+  private val withinRe = "(?is)\\bWITHIN\\s+DISTINCT\\s*\\(".r
+  private val fnNameRe = "(?i)(\\w+)\\s*$".r
+
+  /** The two-level restatement when the statement allows it, else the
+    * fold lowering of each call (a fold leaves an aggregate call in the
+    * select list, which rules the two-level form out). */
+  def rewrite(sql: String): String =
+    if (withinRe.findFirstIn(mask(sql)).isEmpty) sql
+    else twoLevel(sql).getOrElse(SqlText.spliceEach(sql, withinRe)(foldSite))
 
   /** Scalable two-level restatement — the plan a 100 TB group needs:
     *
@@ -74,7 +79,7 @@ object WithinDistinctSql {
     // every WITHIN DISTINCT occurrence in the select list
     final case class Occ(fnStart: Int, close: Int, fn: String, arg: String, keys: Seq[String])
     val occs = scala.collection.mutable.ListBuffer.empty[Occ]
-    for (m <- "(?is)\\bWITHIN\\s+DISTINCT\\s*\\(".r.findAllMatchIn(masked)) {
+    for (m <- withinRe.findAllMatchIn(masked)) {
       if (m.start > fromAt) return None // WITHIN DISTINCT outside the select list
       val kOpen = masked.indexOf('(', m.start)
       val kClose = closeOf(masked, kOpen)
@@ -86,14 +91,9 @@ object WithinDistinctSql {
       var p = m.start - 1
       while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
       if (p < 0 || masked.charAt(p) != ')') return None
-      var depth = 1
-      var i = p - 1
-      while (i >= 0 && depth > 0) {
-        val c = masked.charAt(i)
-        if (c == ')') depth += 1 else if (c == '(') depth -= 1
-        if (depth > 0) i -= 1
-      }
-      val fnM = "(?i)(\\w+)\\s*$".r.findFirstMatchIn(masked.substring(0, i)).getOrElse(return None)
+      val i = openOf(masked, p)
+      if (i < 0) return None
+      val fnM = fnNameRe.findFirstMatchIn(masked.substring(0, i)).getOrElse(return None)
       val fn = fnM.group(1).toUpperCase(java.util.Locale.ROOT)
       if (!Set("SUM", "COUNT", "AVG", "MIN", "MAX").contains(fn)) return None
       val arg = sql.substring(i + 1, p).trim
@@ -156,13 +156,12 @@ object WithinDistinctSql {
     Some(s"SELECT ${items.trim} FROM $inner GROUP BY ${gkeyList.mkString(", ")}$orderTail")
   }
 
-  private def foldRewrite(sql: String): String = {
-    val masked = mask(sql)
-    val m = "(?is)\\bWITHIN\\s+DISTINCT\\s*\\(".r.findFirstMatchIn(masked)
-      .getOrElse(return sql)
-    val kOpen = masked.indexOf('(', m.start)
-    val kClose0 = closeOf(masked, kOpen)
-    if (kClose0 < 0) return sql
+  /** The fold lowering of the WITHIN DISTINCT call at `site`. */
+  private def foldSite(site: SqlText.Site): Option[SqlText.Splice] = {
+    val (masked, sql) = (site.m, site.sql)
+    val kOpen = site.end - 1
+    val kClose0 = site.close
+    if (kClose0 < 0) return None
     val keys = SqlText.splitTop(sql.substring(kOpen + 1, kClose0)).map(_.trim)
     // a trailing FILTER (WHERE ...) restricts the rows feeding the
     // distinct pair collection — it rides on every collect_list
@@ -177,19 +176,12 @@ object WithinDistinctSql {
       }
     }
     // the aggregate call directly before WITHIN
-    var p = m.start - 1
+    var p = site.start - 1
     while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
-    if (p < 0 || masked.charAt(p) != ')') return sql
-    var depth = 1
-    var i = p - 1
-    while (i >= 0 && depth > 0) {
-      val c = masked.charAt(i)
-      if (c == ')') depth += 1 else if (c == '(') depth -= 1
-      if (depth > 0) i -= 1
-    }
-    val aOpen = i
-    val fnM = "(?i)(\\w+)\\s*$".r.findFirstMatchIn(masked.substring(0, aOpen))
-      .getOrElse(return sql)
+    if (p < 0 || masked.charAt(p) != ')') return None
+    val aOpen = openOf(masked, p)
+    if (aOpen < 0) return None
+    val fnM = fnNameRe.findFirstMatchIn(masked.substring(0, aOpen)).getOrElse(return None)
     val fn = fnM.group(1).toUpperCase(java.util.Locale.ROOT)
     val fnStart = fnM.start(1)
     val arg0 = sql.substring(aOpen + 1, p).trim
@@ -239,10 +231,6 @@ object WithinDistinctSql {
         Some(sql.substring(fnStart, p + 1) + filterTxt)
       case _ => None
     }
-    replacement match {
-      case Some(rep) =>
-        rewrite(sql.substring(0, fnStart) + rep + sql.substring(kClose + 1))
-      case None => sql
-    }
+    replacement.map(SqlText.Splice(fnStart, kClose + 1, _))
   }
 }

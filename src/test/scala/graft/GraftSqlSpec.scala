@@ -307,6 +307,20 @@ class GraftSqlSpec extends SparkSpec {
     assert(jsonValue("`d)x`") == Seq("7"))
   }
 
+  test("a backslash-escaped quote stays inside its literal for the mask") {
+    def safeCast(lit: String) =
+      GraftSql.rewrite(s"SELECT $lit AS a, SAFE_CAST(x AS INT) AS b FROM t")
+    assert(safeCast("'ok'") == "SELECT 'ok' AS a, TRY_CAST(x AS INT) AS b FROM t")
+    assert(safeCast("'it\\'s'") == "SELECT 'it\\'s' AS a, TRY_CAST(x AS INT) AS b FROM t")
+  }
+
+  test("comment stripping keeps a backslash-escaped quote inside its literal") {
+    val q = "SELECT 'it\\'s -- not a comment' AS a, 1 AS b"
+    assert(GraftSql.stripComments(q) == q)
+    assert(GraftSql.stripComments("SELECT 'it\\'s' AS a -- gone\n, 1 AS b") ==
+      "SELECT 'it\\'s' AS a  \n, 1 AS b")
+  }
+
   test("BigQuery SAFE_ arithmetic family lowers to TRY_ builtins") {
     val r = GraftSql.sql(spark, """
       SELECT SAFE_DIVIDE(1, 0) AS d, SAFE_ADD(9223372036854775807, 1) AS a,

@@ -1,8 +1,11 @@
 #!/usr/bin/env bash
 # Pre-commit gate: no snapshot ships without one session builder and
 # one optimizer-rule install point in src/main, one SQL text scanner
-# (no scanner helper defined in graft/sql outside SqlText.scala), a
-# green compile, the scanner's quoting/nesting checks, the
+# (no scanner helper defined in graft/sql outside SqlText.scala) and one
+# site driver (no hand-written fixpoint loop in the modules the front
+# end's passes live in), a green compile, the front end's golden corpus
+# (every pass fires on it and its outputs hold), the scanner's
+# quoting/nesting checks, the
 # spine parity spec's rule-list checks, the rule ablation (each graft
 # rule changes at least one path's plan and no path's rows), the
 # tile-fold job checks (one job stores a fold's generation; a
@@ -43,6 +46,14 @@ if [ -n "$scanners" ]; then
   echo "$scanners"; exit 1
 fi
 
+echo "[precommit] one site driver: no fixpoint loop in the front end's pass modules..."
+fixpoints="$(grep -nE 'while \((changed|go)\)' \
+  src/main/scala/graft/sql/{GraftSql,SqlText,MeasureSql,WithinDistinctSql,GroupingSetsSql,WindowTvfSql,TypesSql,SubqueryRewrites,JsonAggSql,CollectionSql}.scala || true)"
+if [ -n "$fixpoints" ]; then
+  echo "hand-written splice fixpoint loop; walk the sites with SqlText.spliceEach:"
+  echo "$fixpoints"; exit 1
+fi
+
 echo "[precommit] sbt compile + Test/compile..."
 sbt -batch compile Test/compile
 
@@ -54,6 +65,9 @@ sbt -batch "testOnly graft.RuleAblationSpec -- -z \"every graft rule changes at 
 
 echo "[precommit] tile folds: one job per stored generation, no DML-thread schema job..."
 sbt -batch "testOnly graft.DmlLatticeSpec -- -z \"one materialization per fold\" -z \"no DML-thread job for the other leaves\""
+
+echo "[precommit] front-end golden corpus: outputs hold and every pass fires..."
+sbt -batch "testOnly graft.FrontEndGoldenSpec"
 
 echo "[precommit] one scanner: quoted and bracketed text keeps its structure..."
 sbt -batch "testOnly graft.GraftSqlSpec -- -z \"quoted and bracketed text keeps its structure\"" \
