@@ -20,6 +20,27 @@ object Lattice {
   final case class TileSuggestion(
       dims: Seq[String], estRows: Long, compression: Double)
 
+  /** One sketch pass over `df`: the row count, each column's HLL
+    * distinct count, and (with `withPairs`) each column PAIR's, pairs in
+    * `dims.combinations(2)` order. */
+  private final case class Sketch(rows: Long, card: Map[String, Long],
+      pairs: Seq[(Seq[String], Long)]) {
+    private val byPair = pairs.map { case (pr, n) => pr.toSet -> n }.toMap
+    def pair(cols: Iterable[String]): Long = byPair(cols.toSet)
+  }
+
+  private def sketch(df: DataFrame, dims: Seq[String],
+      withPairs: Boolean = true): Sketch = {
+    val pairs = if (withPairs) dims.combinations(2).toSeq else Nil
+    val aggs = dims.map(c => approx_count_distinct(col(c)).as(c)) ++
+      pairs.zipWithIndex.map { case (Seq(a, b), i) =>
+        approx_count_distinct(struct(col(a), col(b))).as(s"__p$i") }
+    val row = df.agg(count(lit(1)).as("__n"), aggs: _*).collect()(0)
+    Sketch(row.getLong(0),
+      dims.zipWithIndex.map { case (c, i) => c -> row.getLong(i + 1) }.toMap,
+      pairs.zipWithIndex.map { case (pr, i) => pr -> row.getLong(1 + dims.size + i) })
+  }
+
   def suggestTiles(df: DataFrame, dims: Seq[String],
       budgetRows: Long, maxTiles: Int = 3): Seq[TileSuggestion] = {
     require(dims.nonEmpty && dims.size <= 12, "1..12 dimensions")
@@ -33,15 +54,8 @@ object Lattice {
     // in truth fit the budget. At 100 TB correlated hierarchies are the
     // norm, so the pair-aware bound is the difference between a usable
     // advisor and one that refuses every calendar tile.
-    val pairs = dims.combinations(2).map(_.toSeq).toSeq
-    val aggs = dims.map(c => approx_count_distinct(col(c)).as(c)) ++
-      pairs.zipWithIndex.map { case (Seq(a, b), i) =>
-        approx_count_distinct(struct(col(a), col(b))).as(s"__p$i") }
-    val row = df.agg(count(lit(1)).as("__n"), aggs: _*).collect()(0)
-    val n = row.getLong(0)
-    val card = dims.zipWithIndex.map { case (c, i) => c -> row.getLong(i + 1) }.toMap
-    val card2 = pairs.zipWithIndex.map { case (pr, i) =>
-      pr.toSet -> row.getLong(1 + dims.size + i) }.toMap
+    val sk = sketch(df, dims)
+    val (n, card) = (sk.rows, sk.card)
     val subsets = (1 to dims.size).flatMap(k => dims.combinations(k))
     val sized = subsets.map { ds =>
       val prod = ds.foldLeft(1.0)((acc, d) => acc * card(d).max(1))
@@ -50,7 +64,7 @@ object Lattice {
       // absorbs the correlation the independence product double-counts)
       val viaPair = ds.combinations(2).map { pr =>
         val rest = ds.filterNot(pr.contains)
-        rest.foldLeft(card2(pr.toSet).max(1).toDouble)(
+        rest.foldLeft(sk.pair(pr).max(1).toDouble)(
           (acc, c) => acc * card(c).max(1))
       }.minOption.getOrElse(prod)
       val est = math.min(n.toDouble, math.min(prod, viaPair)).toLong
@@ -80,17 +94,10 @@ object Lattice {
   def functionalDependencies(df: DataFrame, dims: Seq[String],
       slack: Double = 1.1): DataFrame = {
     require(dims.size >= 2 && dims.size <= 12, "2..12 dimensions")
-    val pairs = dims.combinations(2).map(_.toSeq).toSeq
-    val aggs = dims.map(c => approx_count_distinct(col(c)).as(c)) ++
-      pairs.zipWithIndex.map { case (Seq(a, b), i) =>
-        approx_count_distinct(struct(col(a), col(b))).as(s"__p$i") }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val card = dims.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }.toMap
-    val card2 = pairs.zipWithIndex.map { case (pr, i) =>
-      pr.toSet -> row.getLong(dims.size + i) }.toMap
+    val sk = sketch(df, dims)
     val rows = for {
       a <- dims; b <- dims if a != b
-    } yield (a, b, card2(Set(a, b)).toDouble <= slack * card(a).max(1))
+    } yield (a, b, sk.pair(Seq(a, b)).toDouble <= slack * sk.card(a).max(1))
     val session = df.sparkSession
     import session.implicits._
     rows.toDF("determinant", "dependent", "fd")
@@ -109,20 +116,10 @@ object Lattice {
   def uniqueKeyCandidates(df: DataFrame, dims: Seq[String],
       slack: Double = 1.1): DataFrame = {
     require(dims.nonEmpty && dims.size <= 12, "1..12 dimensions")
-    val pairs = dims.combinations(2).map(_.toSeq).toSeq
-    val aggs = dims.map(c => approx_count_distinct(col(c)).as(c)) ++
-      pairs.zipWithIndex.map { case (Seq(a, b), i) =>
-        approx_count_distinct(struct(col(a), col(b))).as(s"__p$i") }
-    val row = df.agg(count(lit(1)).as("__n"), aggs: _*).collect()(0)
-    val n = row.getLong(0)
-    val rows =
-      dims.zipWithIndex.map { case (c, i) =>
-        val est = row.getLong(i + 1)
-        (c, est, est.toDouble * slack >= n)
-      } ++ pairs.zipWithIndex.map { case (pr, i) =>
-        val est = row.getLong(1 + dims.size + i)
-        (pr.mkString(","), est, est.toDouble * slack >= n)
-      }
+    val sk = sketch(df, dims)
+    val rows = (dims.map(c => (c, sk.card(c))) ++
+      sk.pairs.map { case (pr, est) => (pr.mkString(","), est) })
+      .map { case (cols, est) => (cols, est, est.toDouble * slack >= sk.rows) }
     val session = df.sparkSession
     import session.implicits._
     rows.toDF("columns", "est_distinct", "unique_key")
@@ -148,11 +145,8 @@ object Lattice {
       slack: Double = 1.1): DataFrame = {
     require(candidates.nonEmpty, "1+ (factCol, dimKey) candidates")
     val dim = graft.T.normalizeTimestamps(spark.read.parquet(dimPath))
-    val keys = candidates.map(_._2).distinct
-    val aggs = keys.map(c => approx_count_distinct(col(c)).as(c))
-    val row = dim.agg(count(lit(1)).as("__n"), aggs: _*).collect()(0)
-    val n = row.getLong(0)
-    val est = keys.zipWithIndex.map { case (c, i) => c -> row.getLong(i + 1) }.toMap
+    val sk = sketch(dim, candidates.map(_._2).distinct, withPairs = false)
+    val (n, est) = (sk.rows, sk.card)
     // the same pass feeds the NDV statistics registry, so the
     // eager-aggregation gate (AggPushdown) arms alongside the
     // constraints — one profile, three kinds of metadata
@@ -182,22 +176,13 @@ object Lattice {
       dims: Seq[String], slack: Double = 1.1): DataFrame = {
     require(dims.nonEmpty && dims.size <= 12, "1..12 columns")
     val t = graft.T.normalizeTimestamps(spark.read.parquet(path))
-    val pairs = dims.combinations(2).map(_.toSeq).toSeq
-    val aggs = dims.map(c => approx_count_distinct(col(c)).as(c)) ++
-      pairs.zipWithIndex.map { case (Seq(a, b), i) =>
-        approx_count_distinct(struct(col(a), col(b))).as(s"__p$i") }
-    val row = t.agg(count(lit(1)).as("__n"), aggs: _*).collect()(0)
-    val n = row.getLong(0)
+    val sk = sketch(t, dims)
     // single-column NDVs also feed the statistics registry (the
     // eager-aggregation gate) — same pass, third metadata kind
-    Statistics.declare(spark, path, n,
-      dims.zipWithIndex.map { case (c, i) => c -> row.getLong(i + 1) }.toMap)
-    val cands: Seq[(Seq[String], Long)] =
-      dims.zipWithIndex.map { case (c, i) => (Seq(c), row.getLong(i + 1)) } ++
-        pairs.zipWithIndex.map { case (pr, i) =>
-          (pr, row.getLong(1 + dims.size + i)) }
+    Statistics.declare(spark, path, sk.rows, sk.card)
+    val cands = dims.map(c => (Seq(c), sk.card(c))) ++ sk.pairs
     val rows = cands.map { case (cols, est) =>
-      val sketchUnique = est.toDouble * slack >= n
+      val sketchUnique = est.toDouble * slack >= sk.rows
       val declared = sketchUnique &&
         Constraints.verifyAndDeclareUniqueKey(spark, path, cols)
       (cols.mkString(","), sketchUnique, declared)

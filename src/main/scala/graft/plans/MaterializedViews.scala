@@ -2,9 +2,9 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, Cast, Divide, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual, Literal, NamedExpression, PredicateHelper}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical
@@ -47,6 +47,17 @@ import org.apache.spark.sql.functions._
   * (keys × partials, typically 10⁴-10⁶ rows) absorbs every subsequent
   * rollup query — the fact table is scanned once, not per query.
   *
+  * One tile definition: [[TileDef]] holds a tile's keys and its ORDERED
+  * partial columns, each a [[Partial]] of one [[Kind]] (its stored name,
+  * the aggregate that builds it from source rows, the merge that folds
+  * two generations). Registration, delta folds, compaction, adoption,
+  * the union residual slice and the rollup (`MvRewrite.rollupAgg`) all
+  * read that one list, and CREATE MATERIALIZED VIEW builds it from the
+  * analyzed aggregate (`MvRewrite.rollupTile`). The stored layout
+  * (partial names, types and order) and the [[TileMeta]] row are an
+  * ON-DISK format: a lattice directory one build persisted adopts under
+  * the next, so neither changes without a migration.
+  *
   * Scope guard: the substitution target stored per MV is the
   * cache-resolved plan (an InMemoryRelation leaf), so rewritten plans
   * contain no file-source relation and the rule cannot re-fire on its
@@ -62,23 +73,110 @@ object MaterializedViews {
   private final case class Signature(
       leaves: Seq[Set[String]], joinPairs: Set[(String, String)])
 
-  /** One tile: its definition (signature, partial lists, defining filter,
-    * derived measures), its partials frame and its maintenance state.
-    * [[store]] takes this record with `mvDf` still the unmaterialized
-    * partial aggregate and registers it with `mvDf` replaced by the
-    * cached, lineage-cut checkpoint. */
+  /** One kind of stored partial: its name prefix, the aggregate that
+    * builds it from its input column, and the merge that folds two
+    * generations of it at the stored type. Every kind is a commutative
+    * monoid, so a merge of any split of the rows equals the build over
+    * all of them. */
+  private final case class Kind(prefix: String, build: Column => Column,
+      merge: (Column, DataType) => Column)
+  private object Kind {
+    // a decimal SUM re-widens on every merge (sum(decimal(p,s)) →
+    // p+10): the cast back keeps the stored type, or each fold or
+    // compaction would silently mutate the durable layout and a later
+    // positional Union (generations, union compensation) would splice
+    // mismatched types mid-optimizer
+    val Sum = Kind("__mv_sum_", sum(_), (c, t) => sum(c).cast(t))
+    // per-column non-null count: COUNT(x) sums these, and AVG(x) rolls
+    // up as Σsum/Σcount even when x has NULLs
+    val NonNull = Kind("__mv_cntn_", count(_), (c, _) => sum(c))
+    val Min = Kind("__mv_min_", min(_), (c, _) => min(c))
+    val Max = Kind("__mv_max_", max(_), (c, _) => max(c))
+    // HLL sketches (ref: profile/ProfilerImpl.java:577-659 — lattice
+    // tiles carry HLL for distinct-count rollups): Datasketches binaries,
+    // mergeable across groups, so an APPROX_COUNT_DISTINCT rollup never
+    // rescans the fact
+    val Hll = Kind("__mv_hll_", hll_sketch_agg(_), (c, _) => hll_union_agg(c))
+    // the group's row count (a count of a literal): COUNT(*) and the
+    // join path's re-weighting
+    val Rows = Kind("__mv_cnt", count(_), (c, _) => sum(c))
+  }
+
+  /** One stored partial column: `kind` over the source column `of`, or
+    * over the derived measure named `of` when `measure` holds its
+    * defining Column (the row count reads no column). */
+  private final case class Partial(kind: Kind, of: String,
+      measure: Option[Column] = None) {
+    val name: String = kind.prefix + of
+    def build: Column =
+      kind.build(if (kind == Kind.Rows) lit(1) else measure.getOrElse(col(of))).as(name)
+    def merge(stored: StructType): Column =
+      kind.merge(col(name), stored(name).dataType).as(name)
+  }
+
+  /** A tile's definition — the reference lattice's Tile
+    * (materialize/Lattice.java: dimensions plus measures): the grouping
+    * keys and the ORDERED partial columns. The order is the stored
+    * layout: generations and union-compensation branches union
+    * POSITIONALLY, so every partials frame of a tile (registration,
+    * delta, compaction, adoption, residual slice) is built from this one
+    * list, and the rollup reads partial names from it. */
+  private final case class TileDef(keys: Seq[String], partials: Seq[Partial]) {
+    private val names = partials.map(p => (p.kind, p.of, p.measure.isDefined) -> p.name).toMap
+    def isKey(c: String): Boolean = keys.contains(c)
+    /** The stored `kind` partial over source column `of`, or over the
+      * derived measure named `of`. */
+    def partial(kind: Kind, of: String, derived: Boolean = false): Option[String] =
+      names.get((kind, of, derived))
+    /** The plain source columns a `kind` partial is carried for. */
+    def over(kind: Kind): Seq[String] =
+      partials.collect { case p if p.kind == kind && p.measure.isEmpty => p.of }
+    /** Derived measures (name, defining Column), in declaration order. */
+    def measures: Seq[(String, Column)] =
+      partials.collect { case Partial(Kind.Sum, n, Some(c)) => n -> c }
+    /** Identity up to the measures' Columns (which compare by their
+      * canonical SQL, `MvDef.sumDefs`). */
+    def layout: (Seq[String], Seq[(String, Boolean)]) =
+      (keys, partials.map(p => p.name -> p.measure.isDefined))
+    /** The partials of `src`'s rows at the tile's keys. */
+    def aggregate(src: DataFrame): DataFrame = {
+      val cols = partials.map(_.build)
+      src.groupBy(keys.map(col): _*).agg(cols.head, cols.tail: _*)
+    }
+    /** Fold generations of partials into one, at the `stored` types. */
+    def fold(gens: Seq[DataFrame], stored: StructType): DataFrame = {
+      val cols = partials.map(_.merge(stored))
+      gens.reduce(_ unionByName _).groupBy(keys.map(col): _*).agg(cols.head, cols.tail: _*)
+    }
+  }
+  private object TileDef {
+    /** The layout of a declaration: sums (and derived measures) with
+      * their non-null counts, count-only columns (a COUNT(x) over a
+      * non-summable column such as a string), MIN, MAX, HLL sketches,
+      * then the row count. */
+    def declare(keys: Seq[String], sums: Seq[String], mins: Seq[String],
+        maxs: Seq[String], approxes: Seq[String],
+        measures: Seq[(String, Column)], counts: Seq[String]): TileDef =
+      TileDef(keys,
+        sums.map(Partial(Kind.Sum, _)) ++
+          measures.map { case (n, c) => Partial(Kind.Sum, n, Some(c)) } ++
+          measures.map { case (n, c) => Partial(Kind.NonNull, n, Some(c)) } ++
+          (sums ++ counts).map(Partial(Kind.NonNull, _)) ++
+          mins.map(Partial(Kind.Min, _)) ++
+          maxs.map(Partial(Kind.Max, _)) ++
+          approxes.map(Partial(Kind.Hll, _)) :+
+          Partial(Kind.Rows, ""))
+  }
+
+  /** One tile: its definition (signature, keys and partials, defining
+    * filter, derived measures), its partials frame and its maintenance
+    * state. [[store]] takes this record with `mvDf` still the
+    * unmaterialized partial aggregate and registers it with `mvDf`
+    * replaced by the cached, lineage-cut checkpoint. */
   private final case class MvDef(
       name: String,
       signature: Signature,
-      keysSeq: Seq[String],
-      sumsSeq: Seq[String],
-      minsSeq: Seq[String],
-      maxsSeq: Seq[String],
-      approxSeq: Seq[String],
-      // count-only partial columns (__mv_cntn without a sum side): a
-      // COUNT(x) over a non-summable column (e.g. a string) rolls up
-      // from these without register ever computing SUM over it
-      cntnsSeq: Seq[String],
+      tile: TileDef,
       mvDf: DataFrame,
       // the MV's own defining filter, as literal-folded conjuncts; a
       // query substitutes only when its predicate IMPLIES this one —
@@ -89,10 +187,8 @@ object MaterializedViews {
       baseDf: DataFrame,
       // derived measures (the reference lattice's measure EXPRESSIONS,
       // e.g. revenue = price * (1 - discount)): canonical folded SQL of
-      // the defining expression → partial name, plus the re-applicable
-      // unresolved Columns for delta refreshes
+      // the defining expression → partial name
       sumDefs: Map[String, String] = Map.empty,
-      sumExprCols: Seq[(String, org.apache.spark.sql.Column)] = Nil,
       // pending stream-appended delta generations (cached partial-agg
       // frames whose targets are unioned into `target`); compaction
       // merges them back into one generation
@@ -115,12 +211,6 @@ object MaterializedViews {
       // new gen appends at this index so adopted-but-uncompacted gens
       // on disk are never overwritten
       durableGens: Int = 0) {
-    val keys: Set[String] = keysSeq.toSet
-    val sums: Set[String] = sumsSeq.toSet
-    val mins: Set[String] = minsSeq.toSet
-    val maxs: Set[String] = maxsSeq.toSet
-    val approxes: Set[String] = approxSeq.toSet
-    val cntns: Set[String] = cntnsSeq.toSet
     // every cached partials frame: the base generation, then the gens
     def frames: Seq[DataFrame] = mvDf +: gens
     // the substitution target: the cache-resolved plan of the partials
@@ -139,7 +229,7 @@ object MaterializedViews {
     // folds deltas in at the SAME type — otherwise unionByName's set-op
     // widening would silently degrade an exact decimal partial to
     // double
-    val srcTypes: Map[String, org.apache.spark.sql.types.DataType] =
+    val srcTypes: Map[String, DataType] =
       baseDf.queryExecution.analyzed.output.map(a => a.name -> a.dataType).toMap
     // the file scans of the defining source: the leaves' relations
     def fileRelations: Seq[HadoopFsRelation] =
@@ -194,9 +284,42 @@ object MaterializedViews {
       keys: Seq[String], sums: Seq[String],
       mins: Seq[String] = Nil, maxs: Seq[String] = Nil,
       approxDistincts: Seq[String] = Nil,
-      sumExprs: Seq[(String, org.apache.spark.sql.Column)] = Nil,
+      sumExprs: Seq[(String, Column)] = Nil,
       counts: Seq[String] = Nil): DataFrame =
-    maintLock.synchronized {
+    registerTile(spark, name, source,
+      TileDef.declare(keys, sums, mins, maxs, approxDistincts, sumExprs, counts))
+
+  private def registerTile(spark: SparkSession, name: String, source: DataFrame,
+      tile: TileDef): DataFrame = maintLock.synchronized {
+    val d = defineTile(spark, name, source, tile)
+    // a re-registration under an existing name CARRIES the prior durable
+    // home forward (ADVICE r13): silently detaching it would leave a
+    // stale old-definition tile on disk that a later session re-adopts
+    val prior = Option(registry.get(name))
+    val carried = prior.flatMap(_.durableDir)
+    // a fresh registration recomputes partials from the CURRENT files —
+    // any queued deferred fold would re-add rows those files already
+    // carry; cancel it
+    bumpEpoch(name)
+    val out = store(spark, d.copy(durableDir = carried),
+      replacedAll = prior.toSeq.flatMap(_.frames))
+    // conf-driven lattice home: tiles registered through a session with
+    // spark.graft.lattice.dir set persist durably without explicit
+    // persistTile calls (the reference stores EVERY materialization).
+    // Without the conf, a carried durable home is re-persisted with the
+    // NEW definition so the disk never trails the registry.
+    confLatticeDir(spark) match {
+      case Some(dir) => persistTile(spark, name, dir): Unit
+      case None => carried.foreach(_ => writeDurable(spark, registry.get(name)))
+    }
+    out
+  }
+
+  /** The one tile-record constructor (registration and adoption): the
+    * signature, defining filter, unfiltered base, measure SQL and
+    * unmaterialized partials of `tile` over `source`. */
+  private def defineTile(spark: SparkSession, name: String, source: DataFrame,
+      tile: TileDef): MvDef = {
     val (signature, srcFilters) = signatureOf(source.queryExecution.analyzed)
       .getOrElse(throw new IllegalArgumentException(
         "MV source must be projects/filters over inner equi-joins of file scans"))
@@ -222,37 +345,8 @@ object MaterializedViews {
         source.queryExecution.analyzed.transformUp {
           case f: logical.Filter => f.child
         })
-
-    // derived measures: canonicalize each defining expression against
-    // the source (analyzed + literal-folded SQL) so a query-side
-    // aggregate argument can be matched by name-based expression
-    // equality (the reference lattice's measure expressions)
-    val sumDefs = sumDefsOf(source, sumExprs)
-    val cols = partialAggCols(sums, mins, maxs, approxDistincts, sumExprs, counts)
-    val mv = source.groupBy(keys.map(col): _*).agg(cols.head, cols.tail: _*)
-    // a re-registration under an existing name CARRIES the prior durable
-    // home forward (ADVICE r13): silently detaching it would leave a
-    // stale old-definition tile on disk that a later session re-adopts
-    val prior = Option(registry.get(name))
-    val carried = prior.flatMap(_.durableDir)
-    // a fresh registration recomputes partials from the CURRENT files —
-    // any queued deferred fold would re-add rows those files already
-    // carry; cancel it
-    bumpEpoch(name)
-    val out = store(spark, MvDef(name, signature, keys, sums, mins, maxs,
-        approxDistincts, counts, mv, filterConjuncts, baseDf, sumDefs = sumDefs,
-        sumExprCols = sumExprs, durableDir = carried),
-      replacedAll = prior.toSeq.flatMap(_.frames))
-    // conf-driven lattice home: tiles registered through a session with
-    // spark.graft.lattice.dir set persist durably without explicit
-    // persistTile calls (the reference stores EVERY materialization).
-    // Without the conf, a carried durable home is re-persisted with the
-    // NEW definition so the disk never trails the registry.
-    confLatticeDir(spark) match {
-      case Some(dir) => persistTile(spark, name, dir): Unit
-      case None => carried.foreach(_ => writeDurable(spark, registry.get(name)))
-    }
-    out
+    MvDef(name, signature, tile, tile.aggregate(source), filterConjuncts, baseDf,
+      sumDefs = sumDefsOf(source, tile.measures))
   }
 
   /** Register-once (the lattice usage pattern: a defining query runs on
@@ -265,35 +359,44 @@ object MaterializedViews {
       keys: Seq[String], sums: Seq[String],
       mins: Seq[String] = Nil, maxs: Seq[String] = Nil,
       approxDistincts: Seq[String] = Nil,
-      sumExprs: Seq[(String, org.apache.spark.sql.Column)] = Nil,
+      sumExprs: Seq[(String, Column)] = Nil,
       counts: Seq[String] = Nil): DataFrame =
-    maintLock.synchronized {
-      // identity = the FULL definition: scan/join signature, the
-      // defining filter conjuncts (a differently-filtered slice of the
-      // same table is a different MV), every partial list, and the
-      // derived-measure expressions by canonical SQL
-      val parsed = signatureOf(source.queryExecution.analyzed)
-      val qFilters = parsed.toSeq.flatMap(_._2).map(e => foldLiterals(e).sql).toSet
-      Option(registry.get(name)) match {
-        case Some(d) if parsed.map(_._1).contains(d.signature) &&
-            d.filterConjuncts.map(_.sql).toSet == qFilters &&
-            d.keysSeq == keys && d.sumsSeq == sums && d.minsSeq == mins &&
-            d.maxsSeq == maxs && d.approxSeq == approxDistincts &&
-            d.cntnsSeq == counts && d.sumDefs == sumDefsOf(source, sumExprs) =>
-          // the registry is JVM-global but extraOptimizations are
-          // per-session: a SECOND session hitting this fast path must
-          // still get the rewrite rule installed (ADVICE r12)
-          graft.GraftSession.install(spark)
-          // a conf'd lattice home must hold on EVERY registration path:
-          // a tile that predates the conf (registered homeless, then
-          // re-requested through a configured session) gains its home
-          if (d.durableDir.isEmpty)
-            confLatticeDir(spark).foreach(dir => persistTile(spark, name, dir): Unit)
-          d.mvDf
-        case _ => register(spark, name, source, keys, sums, mins, maxs,
-          approxDistincts, sumExprs, counts)
-      }
+    registerTileOnce(spark, name, source,
+      TileDef.declare(keys, sums, mins, maxs, approxDistincts, sumExprs, counts))
+
+  private def registerTileOnce(spark: SparkSession, name: String, source: DataFrame,
+      tile: TileDef): DataFrame = maintLock.synchronized {
+    // identity = the FULL definition: scan/join signature, the defining
+    // filter conjuncts (a differently-filtered slice of the same table
+    // is a different MV), the keys and partial layout, and the derived
+    // measures by canonical SQL
+    val parsed = signatureOf(source.queryExecution.analyzed)
+    val qFilters = parsed.toSeq.flatMap(_._2).map(e => foldLiterals(e).sql).toSet
+    Option(registry.get(name)) match {
+      case Some(d) if parsed.map(_._1).contains(d.signature) &&
+          d.filterConjuncts.map(_.sql).toSet == qFilters &&
+          d.tile.layout == tile.layout && d.sumDefs == sumDefsOf(source, tile.measures) =>
+        // the registry is JVM-global but extraOptimizations are
+        // per-session: a SECOND session hitting this fast path must
+        // still get the rewrite rule installed (ADVICE r12)
+        graft.GraftSession.install(spark)
+        // a conf'd lattice home must hold on EVERY registration path:
+        // a tile that predates the conf (registered homeless, then
+        // re-requested through a configured session) gains its home
+        if (d.durableDir.isEmpty)
+          confLatticeDir(spark).foreach(dir => persistTile(spark, name, dir): Unit)
+        d.mvDf
+      case _ => registerTile(spark, name, source, tile)
     }
+  }
+
+  /** Register-once the tile a rollup-shaped `df` defines over its
+    * aggregate's child (the CREATE MATERIALIZED VIEW path); no-op for
+    * any shape without a tile form (MvRewrite.rollupTile). */
+  private[graft] def registerRollup(spark: SparkSession, name: String, df: DataFrame): Unit =
+    Some(df.queryExecution.analyzed).collect { case agg: Aggregate => agg }
+      .foreach(agg => MvRewrite.rollupTile(agg).foreach(tile => registerTileOnce(spark, name,
+        org.apache.spark.sql.GraftSqlBridge.ofRows(spark, agg.child), tile): Unit))
 
   /** Fold foldable subtrees (e.g. the implicit CAST a comparison wraps
     * around a string literal) to bare literals, so analyzed-plan filters
@@ -309,39 +412,14 @@ object MaterializedViews {
     * re-parseable (Spark 4 renders the ColumnNode wrapper), while the
     * analyzed expression's .sql is plain name-based SQL that expr()
     * round-trips — so the durable metadata stores this form too. */
-  private def measureSql(df: DataFrame, name: String,
-      c: org.apache.spark.sql.Column): String =
+  private def measureSql(df: DataFrame, name: String, c: Column): String =
     foldLiterals(df.select(c.as(name)).queryExecution.analyzed
       .asInstanceOf[Project].projectList.head.asInstanceOf[Alias].child).sql
 
   /** Canonical measure SQL → partial name, per derived measure. */
   private def sumDefsOf(source: DataFrame,
-      sumExprs: Seq[(String, org.apache.spark.sql.Column)]): Map[String, String] =
+      sumExprs: Seq[(String, Column)]): Map[String, String] =
     sumExprs.map { case (n, c) => measureSql(source, n, c) -> n }.toMap
-
-  /** The partial-aggregate columns an MV carries per group. The HLL
-    * sketch partials (ref: profile/ProfilerImpl.java:577-659 — lattice
-    * tiles carry HLL for distinct-count rollups) are Datasketches
-    * binaries: mergeable across groups via hll_union_agg, so an
-    * APPROX_COUNT_DISTINCT rollup never rescans the fact. */
-  private def partialAggCols(sums: Seq[String], mins: Seq[String],
-      maxs: Seq[String], approxes: Seq[String] = Nil,
-      sumExprs: Seq[(String, org.apache.spark.sql.Column)] = Nil,
-      counts: Seq[String] = Nil)
-      : Seq[org.apache.spark.sql.Column] =
-    sums.map(c => sum(col(c)).as(s"__mv_sum_$c")) ++
-      sumExprs.map { case (n, c) => sum(c).as(s"__mv_sum_$n") } ++
-      sumExprs.map { case (n, c) => count(c).as(s"__mv_cntn_$n") } ++
-      // per-column non-null count, so AVG(x) rolls up as
-      // SUM(sum_x)/SUM(cntn_x) even when x has NULLs
-      sums.map(c => count(col(c)).as(s"__mv_cntn_$c")) ++
-      // count-ONLY columns (non-summable types, e.g. COUNT(string_col)):
-      // just the non-null count partial, never a SUM over the column
-      counts.map(c => count(col(c)).as(s"__mv_cntn_$c")) ++
-      mins.map(c => min(col(c)).as(s"__mv_min_$c")) ++
-      maxs.map(c => max(col(c)).as(s"__mv_max_$c")) ++
-      approxes.map(c => hll_sketch_agg(col(c)).as(s"__mv_hll_$c")) :+
-      count(lit(1)).as("__mv_cnt")
 
   /** Persist the tile's partials (`d.mvDf`, no pending generations),
     * splice the tile into the registry, keep the rewrite rule
@@ -422,15 +500,12 @@ object MaterializedViews {
       extra: Option[DataFrame], deltaInFiles: Boolean,
       asFold: Boolean = false,
       snapshotEntries: Option[Seq[String]] = None): DataFrame = {
-    val mergeCols = mergePartialCols(d)
     // store() checkpoints every generation (lineage-cut, see there), so
     // the merged frame needs no extra snapshot here: the old partials it
     // unions are already LogicalRDD leaves no recache can rebuild, and
     // the durable overwrite below can never invalidate what the new
     // generation reads
-    val merged = (Seq(d.mvDf) ++ d.gens ++ extra).reduce(_ unionByName _)
-      .groupBy(d.keysSeq.map(col): _*)
-      .agg(mergeCols.head, mergeCols.tail: _*)
+    val merged = d.tile.fold(Seq(d.mvDf) ++ d.gens ++ extra, d.mvDf.schema)
     // one generation again: the cached gens merge here, and the next
     // durable write (below, or the queued fold's) is a full swap that
     // removes the gen dirs on disk
@@ -534,48 +609,7 @@ object MaterializedViews {
       }
       df.filter(org.apache.spark.sql.GraftSqlBridge.column(bound))
     }
-    val cols = partialAggCols(d.sumsSeq, d.minsSeq, d.maxsSeq, d.approxSeq,
-      d.sumExprCols, d.cntnsSeq)
-    deltaKept.groupBy(d.keysSeq.map(col): _*).agg(cols.head, cols.tail: _*)
-  }
-
-  /** Merge columns folding two generations of partials: every partial is
-    * a commutative monoid (SUM/counts by SUM, MIN/MAX by themselves, HLL
-    * sketches by union). */
-  private def mergePartialCols(d: MvDef): Seq[org.apache.spark.sql.Column] =
-    mergePartialColsFor(d.sumsSeq, d.sumExprCols.map(_._1), d.cntnsSeq,
-      d.minsSeq, d.maxsSeq, d.approxSeq, n => d.mvDf.schema(n).dataType)
-
-  /** Layout-parametric variant: adoptOne merges on-disk gen increments
-    * before any MvDef exists for the tile. `typeOf` is the tile's STORED
-    * partial layout: a decimal SUM partial re-widens on every merge
-    * (sum(decimal(p,s)) → p+10), so without the cast-back each
-    * fold/compaction would silently mutate the durable layout and a
-    * later positional Union (generations, union compensation) would
-    * splice mismatched types mid-optimizer. */
-  private def mergePartialColsFor(sums: Seq[String], sumExprNames: Seq[String],
-      cntns: Seq[String], mins: Seq[String], maxs: Seq[String],
-      approxes: Seq[String],
-      typeOf: String => org.apache.spark.sql.types.DataType)
-      : Seq[org.apache.spark.sql.Column] = {
-    // column ORDER must mirror partialAggCols exactly: the substitution
-    // target unions generations POSITIONALLY (appendIncremental,
-    // unionTarget), so a compacted generation (this layout) and a fresh
-    // delta (partialAggCols layout) must agree column-for-column — with
-    // both sums and derived measures present the cntn blocks would
-    // otherwise cross (same LongType on both sides: silently wrong)
-    val sumNames = sums ++ sumExprNames
-    sumNames.map { c =>
-      val n = s"__mv_sum_$c"
-      sum(col(n)).cast(typeOf(n)).as(n)
-    } ++
-      sumExprNames.map(c => sum(col(s"__mv_cntn_$c")).as(s"__mv_cntn_$c")) ++
-      sums.map(c => sum(col(s"__mv_cntn_$c")).as(s"__mv_cntn_$c")) ++
-      cntns.map(c => sum(col(s"__mv_cntn_$c")).as(s"__mv_cntn_$c")) ++
-      mins.map(c => min(col(s"__mv_min_$c")).as(s"__mv_min_$c")) ++
-      maxs.map(c => max(col(s"__mv_max_$c")).as(s"__mv_max_$c")) ++
-      approxes.map(c => hll_union_agg(col(s"__mv_hll_$c")).as(s"__mv_hll_$c")) :+
-      sum(col("__mv_cnt")).as("__mv_cnt")
+    d.tile.aggregate(deltaKept)
   }
 
   // ---- deferred join-tile append folds ---------------------------------
@@ -1108,16 +1142,22 @@ object MaterializedViews {
     val entries = entriesOverride.getOrElse(
       leafEntries(spark, d.signature.leaves))
     val srcFields = d.baseDf.queryExecution.analyzed.output
+    // the declaration's lists, read back off the layout (tileOf(meta) is
+    // the inverse): the non-null counts of the sums come first, then the
+    // count-only columns
+    val t = d.tile
+    val sums = t.over(Kind.Sum)
     TileMeta(
-      name = d.name, keys = d.keysSeq, sums = d.sumsSeq, cntns = d.cntnsSeq,
-      mins = d.minsSeq, maxs = d.maxsSeq, approxes = d.approxSeq,
+      name = d.name, keys = t.keys, sums = sums,
+      cntns = t.over(Kind.NonNull).drop(sums.size),
+      mins = t.over(Kind.Min), maxs = t.over(Kind.Max), approxes = t.over(Kind.Hll),
       leaves = d.signature.leaves.map(_.toSeq.sorted.mkString("\u0001")),
       joinPairs = d.signature.joinPairs.toSeq.sorted
         .map { case (a, b) => s"${a}\u0001${b}" },
       filterSqls = d.filterConjuncts.map(_.sql),
       sumDefKeys = sumDefSeq.map(_._1), sumDefNames = sumDefSeq.map(_._2),
-      sumExprNames = d.sumExprCols.map(_._1),
-      sumExprSqls = d.sumExprCols.map { case (n, c) => measureSql(d.baseDf, n, c) },
+      sumExprNames = t.measures.map(_._1),
+      sumExprSqls = t.measures.map { case (n, c) => measureSql(d.baseDf, n, c) },
       unionSafe = d.unionSafe,
       fingerprint = fingerprintOf(entries),
       srcCols = srcFields.map(_.name),
@@ -1131,6 +1171,12 @@ object MaterializedViews {
       leafEntries = entries,
       gens = gens)
   }
+
+  /** The tile definition a metadata row records (tileMetaOf's inverse):
+    * derived measures re-parse from their canonical SQL. */
+  private def tileOf(meta: TileMeta): TileDef =
+    TileDef.declare(meta.keys, meta.sums, meta.mins, meta.maxs, meta.approxes,
+      meta.sumExprNames.zip(meta.sumExprSqls.map(expr)), meta.cntns)
 
   /** Stage-and-rename the metadata row (ADVICE r14): an in-place
     * overwrite would let a concurrent cross-process adopter read a
@@ -1306,7 +1352,7 @@ object MaterializedViews {
       val base0 = rebuildJoin(spark, leaves,
         meta.joinPairs.map { s => val Array(a, b) = s.split('\u0001'); (a, b) })
       val srcTypes = meta.srcCols.zip(
-        meta.srcTypeJsons.map(org.apache.spark.sql.types.DataType.fromJson))
+        meta.srcTypeJsons.map(DataType.fromJson))
       val have = base0.schema.fields.map(f => f.name -> f.dataType).toMap
       val missing = srcTypes.collect { case (n, _) if !have.contains(n) => n }
       require(missing.isEmpty,
@@ -1315,21 +1361,14 @@ object MaterializedViews {
         if (have(n) == t) col(n) else col(n).cast(t).as(n)
       }.toIndexedSeq: _*)
       val source = meta.filterSqls.foldLeft(base)((df, s) => df.filter(expr(s)))
-      val (sig, srcFilters) = signatureOf(source.queryExecution.analyzed)
-        .getOrElse(throw new IllegalStateException(
-          s"rebuilt source for ${meta.name} is not signable"))
-      val filterConjuncts = srcFilters.map(foldLiterals)
-      val sumExprCols = meta.sumExprNames.zip(meta.sumExprSqls.map(expr))
+      val rebuilt = defineTile(spark, meta.name, source, tileOf(meta))
 
       // verify the rebuilt source reproduces the stored partial layout
       // exactly (names + types): a drift here would corrupt the first
       // post-adopt fold — discard instead (the tile can never adopt)
-      def shape(st: org.apache.spark.sql.types.StructType) =
+      def shape(st: StructType) =
         st.fields.map(f => (f.name, f.dataType)).toSeq
-      val expectCols = partialAggCols(meta.sums, meta.mins, meta.maxs,
-        meta.approxes, sumExprCols, meta.cntns)
-      val expected = source.groupBy(meta.keys.map(col): _*)
-        .agg(expectCols.head, expectCols.tail: _*).schema
+      val expected = rebuilt.mvDf.schema
       val data = spark.read.parquet(s"$tileDir/data")
       if (shape(expected) != shape(data.schema)) {
         System.err.println(s"[graft] durable tile ${meta.name}: rebuilt " +
@@ -1374,14 +1413,7 @@ object MaterializedViews {
         }
       }
       val mv =
-        if (genFrames.isEmpty) data
-        else {
-          val merge = mergePartialColsFor(meta.sums, meta.sumExprNames,
-            meta.cntns, meta.mins, meta.maxs, meta.approxes,
-            n => data.schema(n).dataType)
-          (data +: genFrames).reduce(_ unionByName _)
-            .groupBy(meta.keys.map(col): _*).agg(merge.head, merge.tail: _*)
-        }
+        if (genFrames.isEmpty) data else rebuilt.tile.fold(data +: genFrames, data.schema)
 
       // re-declare the constraints persisted with the tile, so a
       // zero-API restarted driver regains fact-only FK subsumption
@@ -1400,10 +1432,7 @@ object MaterializedViews {
       try {
         // durableGens: on-disk gen dirs must not be overwritten by the
         // next append
-        store(spark, MvDef(meta.name, sig, meta.keys, meta.sums, meta.mins,
-            meta.maxs, meta.approxes, meta.cntns, mv, filterConjuncts, base,
-            sumDefs = meta.sumDefKeys.zip(meta.sumDefNames).toMap,
-            sumExprCols = sumExprCols, unionSafe = meta.unionSafe,
+        store(spark, rebuilt.copy(mvDf = mv, unionSafe = meta.unionSafe,
             durableDir = Some(tileDir), durableGens = meta.gens.toInt),
           replacedAll = Nil): Unit
       } catch {
@@ -1783,7 +1812,7 @@ object MaterializedViews {
       // through, covering dim-to-dim snowflake bridges)
       def condOk(e: Expression): Boolean = StarShape.equiPairs(e).exists(_.forall {
         case (a, b) => Seq(a, b).forall(at => dimOut.contains(at) ||
-          (starOut.contains(at) && mv.keys.contains(at.name)))
+          (starOut.contains(at) && mv.tile.isKey(at.name)))
       })
       if (!dims.forall { case (_, cond) => condOk(cond) }) return None
       // filters collected along the way must split cleanly: star-side
@@ -1899,8 +1928,8 @@ object MaterializedViews {
           // planted literals (typed null / grouping-id). Key references
           // rebind by name (rebindToTile).
           def keyExpr(e: Expression): Option[Expression] =
-            if (derivedFrom(e)(a => mv.keys.contains(a.name)))
-              Some(rebindToTile(mv, e)(a => mv.keys.contains(a.name)))
+            if (derivedFrom(e)(a => mv.tile.isKey(a.name)))
+              Some(rebindToTile(mv, e)(a => mv.tile.isKey(a.name)))
             else None
           // exprId lookup FIRST: a grouping alias that merely shares a
           // tile key's NAME (e.g. date_trunc(..).as("o_orderdate"))
@@ -1909,7 +1938,7 @@ object MaterializedViews {
           def entryOf(e: Expression): Option[Expression] = e match {
             case a: AttributeReference if exprDefs.contains(a.exprId) =>
               keyExpr(exprDefs(a.exprId))
-            case a: AttributeReference if mv.keys.contains(a.name) => keyExpr(a)
+            case a: AttributeReference if mv.tile.isKey(a.name) => keyExpr(a)
             case l: Literal => Some(l)
             case _ => None
           }
@@ -2035,7 +2064,7 @@ object MaterializedViews {
       if (!implied) return None
       val mvCanon = mv.filterConjuncts.map(canonSql).toSet
       val comp = conjs.filterNot(q => mvCanon.contains(canonSql(q)))
-      if (comp.forall(_.references.forall(a => mv.keys.contains(a.name)))) Some(comp)
+      if (comp.forall(_.references.forall(a => mv.tile.isKey(a.name)))) Some(comp)
       else None
     }
 
@@ -2055,7 +2084,7 @@ object MaterializedViews {
       * to its attributes. */
     private def targetWithFilters(mv: MvDef, filters: Seq[Expression]): LogicalPlan =
       filters.foldLeft(mv.target) { (t, cond) =>
-        logical.Filter(rebindToTile(mv, cond)(a => mv.keys.contains(a.name)), t)
+        logical.Filter(rebindToTile(mv, cond)(a => mv.tile.isKey(a.name)), t)
       }
 
     /** `e` with every attribute `rebinds` admits re-pointed, by name, at
@@ -2150,12 +2179,8 @@ object MaterializedViews {
       val bound = normalizeNtz(residual).transform {
         case a: AttributeReference => baseOut(a.name)
       }
-      val cols = partialAggCols(mv.sumsSeq, mv.minsSeq, mv.maxsSeq, mv.approxSeq,
-        mv.sumExprCols, mv.cntnsSeq)
-      val resid = base
-        .filter(org.apache.spark.sql.GraftSqlBridge.column(bound))
-        .groupBy(mv.keysSeq.map(col): _*)
-        .agg(cols.head, cols.tail: _*)
+      val resid = mv.tile.aggregate(
+        base.filter(org.apache.spark.sql.GraftSqlBridge.column(bound)))
       // splice the OPTIMIZED residual: this rule runs in the final
       // user-provided batch, after logical column pruning — an analyzed
       // splice would keep the loader's all-column normalization Project
@@ -2235,7 +2260,7 @@ object MaterializedViews {
           (ae.aggregateFunction match {
             case Count(Seq(a: AttributeReference)) if dimOut.contains(a) =>
               Some(Count(a).toAggregateExpression(isDistinct = true))
-            case Count(Seq(a: AttributeReference)) if mv.keys.contains(a.name) =>
+            case Count(Seq(a: AttributeReference)) if mv.tile.isKey(a.name) =>
               Some(Count(tout(a.name)).toAggregateExpression(isDistinct = true))
             case _ => None
           }).map(named(al))
@@ -2258,7 +2283,7 @@ object MaterializedViews {
       * weighted product would re-type the result). */
     private def rollupAgg(mv: MvDef, tout: String => Expression,
         dimOut: AttributeSet)(fn: AggregateFunction): Option[Expression] = {
-      def cntAttr: Expression = tout("__mv_cnt")
+      def cntAttr: Expression = tout(Kind.Rows.prefix)
       def weighted(a: AttributeReference): Option[Expression] = a.dataType match {
         case org.apache.spark.sql.types.DoubleType | org.apache.spark.sql.types.FloatType =>
           Some(org.apache.spark.sql.catalyst.expressions.Multiply(
@@ -2286,6 +2311,19 @@ object MaterializedViews {
         if (mv.sumDefs.isEmpty || e.isInstanceOf[AttributeReference] ||
             e.references.exists(dimOut.contains)) None
         else mv.sumDefs.get(foldLiterals(e).sql)
+      // the carried `kind` partial of an aggregate argument — a source
+      // column, or a derived measure — as the expression that reads it
+      final class Carried(kind: Kind) {
+        def unapply(e: Expression): Option[Expression] = (e match {
+          case a: AttributeReference => mv.tile.partial(kind, a.name)
+          case _ => derivedOf(e).flatMap(mv.tile.partial(kind, _, derived = true))
+        }).map(tout)
+      }
+      val SumOf = new Carried(Kind.Sum)
+      val CountOf = new Carried(Kind.NonNull)
+      val MinOf = new Carried(Kind.Min)
+      val MaxOf = new Carried(Kind.Max)
+      val SketchOf = new Carried(Kind.Hll)
 
       fn match {
         // MIN/MAX over a DIM column (join compensation): the value set
@@ -2308,53 +2346,34 @@ object MaterializedViews {
             Cast(Divide(Cast(s, DoubleType), Cast(dimCount(a), DoubleType)),
               fn.dataType)
           }
-        case Sum(a: AttributeReference, _) if mv.sums.contains(a.name) =>
-          val inner = Sum(tout(s"__mv_sum_${a.name}")).toAggregateExpression()
+        // a carried SUM partial, of a column or of a DERIVED MEASURE (the
+        // reference lattice's measure expressions, materialize/
+        // Lattice.java Measure.args — e.g. revenue = price * (1 -
+        // discount)): the aggregate's ARGUMENT matches a registered
+        // defining expression by canonical folded SQL, so SUM/COUNT/AVG
+        // roll up from its partials exactly as a plain column's would
+        case Sum(SumOf(s), _) =>
+          val inner = Sum(s).toAggregateExpression()
           Some(if (inner.dataType == fn.dataType) inner else Cast(inner, fn.dataType))
-        case Min(a: AttributeReference) if mv.mins.contains(a.name) =>
-          Some(Min(tout(s"__mv_min_${a.name}")).toAggregateExpression())
-        case Max(a: AttributeReference) if mv.maxs.contains(a.name) =>
-          Some(Max(tout(s"__mv_max_${a.name}")).toAggregateExpression())
+        case Min(MinOf(m)) => Some(Min(m).toAggregateExpression())
+        case Max(MaxOf(m)) => Some(Max(m).toAggregateExpression())
         // MIN/MAX of a GROUPING-KEY column: the MV carries every key
         // combination as a row, so min/max re-aggregate over the key
         // column directly — no partial needed
-        case Min(a: AttributeReference) if mv.keys.contains(a.name) =>
+        case Min(a: AttributeReference) if mv.tile.isKey(a.name) =>
           Some(Min(tout(a.name)).toAggregateExpression())
-        case Max(a: AttributeReference) if mv.keys.contains(a.name) =>
+        case Max(a: AttributeReference) if mv.tile.isKey(a.name) =>
           Some(Max(tout(a.name)).toAggregateExpression())
         case Count(Seq(Literal(_, _))) =>
-          Some(Sum(tout("__mv_cnt")).toAggregateExpression())
+          Some(Sum(cntAttr).toAggregateExpression())
         // COUNT(x): the per-column non-null partial counts (carried for
         // the AVG rollup, or registered count-only for non-summable
         // types) sum to exactly COUNT(x)
-        case Count(Seq(a: AttributeReference))
-            if mv.sums.contains(a.name) || mv.cntns.contains(a.name) =>
-          Some(Sum(tout(s"__mv_cntn_${a.name}")).toAggregateExpression())
-        case avg: Average => avg.child match {
-          // AVG(x) = SUM(partial sums) / SUM(partial non-null counts)
-          case a: AttributeReference if mv.sums.contains(a.name) =>
-            val s = Sum(tout(s"__mv_sum_${a.name}")).toAggregateExpression()
-            val c = Sum(tout(s"__mv_cntn_${a.name}")).toAggregateExpression()
-            Some(Cast(Divide(Cast(s, DoubleType), Cast(c, DoubleType)), fn.dataType))
-          case e if derivedOf(e).isDefined =>
-            val n = derivedOf(e).get
-            val s = Sum(tout(s"__mv_sum_$n")).toAggregateExpression()
-            val c = Sum(tout(s"__mv_cntn_$n")).toAggregateExpression()
-            Some(Cast(Divide(Cast(s, DoubleType), Cast(c, DoubleType)), fn.dataType))
-          case _ => None
-        }
-        // DERIVED MEASURES (the reference lattice's measure expressions,
-        // materialize/Lattice.java Measure.args — e.g. revenue =
-        // price * (1 - discount)): the aggregate's ARGUMENT matches a
-        // registered defining expression by canonical folded SQL, so
-        // SUM/COUNT roll up from the carried partials exactly as a
-        // plain column would
-        case Sum(e, _) if derivedOf(e).isDefined =>
-          val inner = Sum(tout(s"__mv_sum_${derivedOf(e).get}"))
-            .toAggregateExpression()
-          Some(if (inner.dataType == fn.dataType) inner else Cast(inner, fn.dataType))
-        case Count(Seq(e)) if derivedOf(e).isDefined =>
-          Some(Sum(tout(s"__mv_cntn_${derivedOf(e).get}")).toAggregateExpression())
+        case Count(Seq(CountOf(c))) => Some(Sum(c).toAggregateExpression())
+        // AVG(x) = SUM(partial sums) / SUM(partial non-null counts)
+        case Average(x @ SumOf(s), _) => CountOf.unapply(x).map(c => Cast(Divide(
+          Cast(Sum(s).toAggregateExpression(), DoubleType),
+          Cast(Sum(c).toAggregateExpression(), DoubleType)), fn.dataType))
         // APPROX_COUNT_DISTINCT(x) rolls up from the carried HLL sketch
         // partials: union the per-group sketches, then estimate — the
         // reference's lattice-tile HLL column stats
@@ -2366,13 +2385,50 @@ object MaterializedViews {
         // standard error) may only answer requests whose tolerance is
         // looser — a tighter-than-sketch relativeSD must run unrewritten.
         case hpp: HyperLogLogPlusPlus if hpp.relativeSD >= 0.0165 => hpp.child match {
-          case a: AttributeReference if mv.approxes.contains(a.name) =>
+          case SketchOf(h) =>
             Some(org.apache.spark.sql.catalyst.expressions.HllSketchEstimate(
-              HllUnionAgg(tout(s"__mv_hll_${a.name}"), Literal(true))
-                .toAggregateExpression()))
+              HllUnionAgg(h, Literal(true)).toAggregateExpression()))
           case _ => None
         }
         case _ => None
+      }
+    }
+
+    /** The tile a rollup-shaped aggregate defines — rollupAgg's
+      * inverse, for CREATE MATERIALIZED VIEW: bare-attribute grouping
+      * keys, and SUM/MIN/MAX/COUNT/AVG over bare columns, each mapped to
+      * the partial rollupAgg answers it from. COUNT(x) and AVG(x) read a
+      * non-null count: a NUMERIC column rides the sums, any other
+      * carries a count-only partial (a SUM over a string is an ANSI
+      * error). None for any other shape. */
+    private[MaterializedViews] def rollupTile(agg: Aggregate): Option[TileDef] = {
+      val keys = agg.groupingExpressions.collect { case a: AttributeReference => a.name }
+      def needs(ne: NamedExpression): Option[Seq[(Kind, String)]] = ne match {
+        case a: AttributeReference if keys.contains(a.name) => Some(Nil)
+        case Alias(a: AttributeReference, _) if keys.contains(a.name) => Some(Nil)
+        case Alias(ae: AggregateExpression, _) if !ae.isDistinct && ae.filter.isEmpty =>
+          ae.aggregateFunction match {
+            case Sum(a: AttributeReference, _) => Some(Seq(Kind.Sum -> a.name))
+            case Min(a: AttributeReference) => Some(Seq(Kind.Min -> a.name))
+            case Max(a: AttributeReference) => Some(Seq(Kind.Max -> a.name))
+            case Count(Seq(Literal(_, _))) => Some(Nil)
+            case Count(Seq(a: AttributeReference)) => Some(Seq((if (a.dataType
+              .isInstanceOf[org.apache.spark.sql.types.NumericType]) Kind.Sum
+              else Kind.NonNull) -> a.name))
+            case avg: Average => avg.child match {
+              case a: AttributeReference => Some(Seq(Kind.Sum -> a.name))
+              case _ => None
+            }
+            case _ => None
+          }
+        case _ => None
+      }
+      if (keys.isEmpty || keys.size != agg.groupingExpressions.size) None
+      else StarShape.sequence(agg.aggregateExpressions.map(needs)).map { ns =>
+        def of(k: Kind) = ns.flatten.collect { case (`k`, c) => c }.distinct
+        val sums = of(Kind.Sum)
+        TileDef.declare(keys, sums, of(Kind.Min), of(Kind.Max), Nil, Nil,
+          of(Kind.NonNull).filterNot(sums.contains))
       }
     }
 
@@ -2394,23 +2450,23 @@ object MaterializedViews {
       // merge computes (the lattice time-hierarchy rollup:
       // GROUP BY year(d) answered from a day-keyed tile)
       def keyDerived(e: Expression): Boolean =
-        derivedFrom(e)(a => dimOut.contains(a) || mv.keys.contains(a.name))
+        derivedFrom(e)(a => dimOut.contains(a) || mv.tile.isKey(a.name))
       def rebindKeys(e: Expression): Expression =
-        rebindToTile(mv, e)(a => !dimOut.contains(a) && mv.keys.contains(a.name))
+        rebindToTile(mv, e)(a => !dimOut.contains(a) && mv.tile.isKey(a.name))
       for {
         // grouping keys must be bare attributes covered by the MV keys,
         // attributes of the compensated dimension (kept as-is), or
         // key-derived expressions (rebound)
         g <- StarShape.sequence(groupings.map {
           case a: AttributeReference if dimOut.contains(a) => Some(a)
-          case a: AttributeReference if mv.keys.contains(a.name) =>
+          case a: AttributeReference if mv.tile.isKey(a.name) =>
             Some(mv.targetOut(a.name))
           case e if keyDerived(e) => Some(rebindKeys(e))
           case _ => None
         })
         a <- StarShape.sequence(aggExprs.map {
           case a: AttributeReference if dimOut.contains(a) => Some(a)
-          case a: AttributeReference if mv.keys.contains(a.name) =>
+          case a: AttributeReference if mv.tile.isKey(a.name) =>
             Some(Alias(mv.targetOut(a.name), a.name)(exprId = a.exprId))
           // grouping-expression pass-through (the SELECT-list copy of a
           // key-derived grouping like year(d)): rebind its key references

@@ -12,6 +12,24 @@ import SqlText.{Splice, closeOf, commaRanges, groupEnd, mask, openOf, primarySta
   * them) and splice replacement text from the original. */
 object CollectionSql {
 
+  private val withOrdinalityRe = "(?is)^\\s*WITH\\s+ORDINALITY".r
+  private val unnestAliasRe = "(?is)^\\s*AS\\s+(`[^`]*`|[A-Za-z_]\\w*)\\s*(\\()?".r
+  private val leadingIdentRe = "(?is)^\\s*(`[^`]*`|[A-Za-z_]\\w*)".r
+  private val withWhereGroupRe = "(?i)^(WITH|WHERE|GROUP|HAVING|ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT|JOIN|INNER|LEFT|RIGHT|FULL|CROSS|ON|AS|QUALIFY|FETCH|LATERAL|NATURAL|USING|WINDOW)$".r
+  private val structRe = "(?is)STRUCT\\s*\\(".r
+  private val mapRe = "(?is).*\\bMAP\\s*[\\[(].*".r
+  private val everyRe = "(?i)\\bEVERY\\s*\\(".r
+  private val someRe = "(?i)\\bSOME\\s*\\(".r
+  private val piRe = "(?i)(?<![\\w.`])PI(?![\\w(.`])".r
+  private val trailingWordRe = "(?i)(\\w+)\\s*$".r
+  private val rowsFloatOffsetRe = "(?i)\\b(ROWS\\s+BETWEEN\\s+|ROWS\\s+)(\\d+)\\.0*\\s+(PRECEDING|FOLLOWING)".r
+  private val andFloatOffsetRe = "(?i)\\b(AND\\s+)(\\d+)\\.0*\\s+(PRECEDING|FOLLOWING)".r
+  private val sqlTsiUnitRe = "(?i)\\b(TIMESTAMPADD|TIMESTAMPDIFF)\\s*\\(\\s*SQL_TSI_(\\w+)".r
+  private val mapArgRe = "(?is)^MAP\\s*\\(.*".r
+  private val structArrayArgRe = "(?is)^ARRAY\\s*\\(\\s*STRUCT\\s*\\(.*".r
+  private val subqueryArgRe = "(?is)^\\(?\\s*(SELECT|WITH)\\b.*".r
+  private val multisetArgRe = "(?is)^MULTISET\\b.*".r
+
   /** `ARRAY[e, ...]` / `MAP[k, v, ...]` constructors-by-enumeration →
     * Spark's `array(...)` / `map(...)`. Nested literals lower inside-out
     * across iterations; `MULTISET[...]` stays (its ALL-ops surface lives
@@ -117,11 +135,10 @@ object CollectionSql {
         val argM = masked.substring(open + 1, close).trim
         // suffix: [WITH ORDINALITY] [AS alias [(c1, c2, ...)]]
         val after = masked.substring(close + 1)
-        val ordM = "(?is)^\\s*WITH\\s+ORDINALITY".r.findFirstMatchIn(after)
+        val ordM = withOrdinalityRe.findFirstMatchIn(after)
         val ord = ordM.isDefined
         val afterOrd = ordM.map(_.end).getOrElse(0)
-        val aliasM = "(?is)^\\s*AS\\s+(`[^`]*`|[A-Za-z_]\\w*)\\s*(\\()?".r
-          .findFirstMatchIn(after.substring(afterOrd))
+        val aliasM = unnestAliasRe.findFirstMatchIn(after.substring(afterOrd))
         var end = close + 1 + afterOrd
         var alias = ""
         var cols: Seq[String] = Nil
@@ -138,11 +155,10 @@ object CollectionSql {
         }
         // bare alias with no AS (winagg.iq `unnest(map[...]) k`)
         if (alias.isEmpty) {
-          val bare = ("(?is)^\\s*(`[^`]*`|[A-Za-z_]\\w*)").r
-            .findFirstMatchIn(after.substring(afterOrd))
+          val bare = leadingIdentRe.findFirstMatchIn(after.substring(afterOrd))
           bare.foreach { bm =>
             val w = after.substring(afterOrd).substring(bm.start(1), bm.end(1))
-            if (!"(?i)^(WITH|WHERE|GROUP|HAVING|ORDER|LIMIT|OFFSET|UNION|INTERSECT|EXCEPT|JOIN|INNER|LEFT|RIGHT|FULL|CROSS|ON|AS|QUALIFY|FETCH|LATERAL|NATURAL|USING|WINDOW)$".r.matches(w)) {
+            if (!withWhereGroupRe.matches(w)) {
               alias = w
               end = close + 1 + afterOrd + bm.end(1)
             }
@@ -157,10 +173,10 @@ object CollectionSql {
         }
         val args = splitTop(argM)
         def kindOf(a: String): String =
-          if ("(?is)^MAP\\s*\\(.*".r.matches(a)) "map"
-          else if ("(?is)^ARRAY\\s*\\(\\s*STRUCT\\s*\\(.*".r.matches(a)) "struct"
-          else if ("(?is)^\\(?\\s*(SELECT|WITH)\\b.*".r.matches(a)) "subq"
-          else if ("(?is)^MULTISET\\b.*".r.matches(a)) "multiset"
+          if (mapArgRe.matches(a)) "map"
+          else if (structArrayArgRe.matches(a)) "struct"
+          else if (subqueryArgRe.matches(a)) "subq"
+          else if (multisetArgRe.matches(a)) "multiset"
           else "scalar"
         val kind = if (args.length > 1) "zip" else kindOf(argM)
         val g = s"__ug${m.start}"
@@ -185,7 +201,7 @@ object CollectionSql {
               val origArgs = args.indices.map(i =>
                 arg.substring(starts(i), starts(i) + lens(i)).trim)
               def structArity(maskedArg: String): Int = {
-                val sm = "(?is)STRUCT\\s*\\(".r.findFirstMatchIn(maskedArg).get
+                val sm = structRe.findFirstMatchIn(maskedArg).get
                 val sOpen = maskedArg.indexOf('(', sm.end - 1)
                 val sClose = closeOf(maskedArg, sOpen)
                 splitTop(maskedArg.substring(sOpen + 1, sClose)).length
@@ -228,7 +244,7 @@ object CollectionSql {
             // flatten each row's collection; ordinality resets per row.
             // the record may hold a map (unnest.iq:415) — its explode
             // yields two value columns; detect by the operand's text
-            val isMapRec = "(?is).*\\bMAP\\s*[\\[(].*".r.matches(argM)
+            val isMapRec = mapRe.matches(argM)
             val sub = if (argM.startsWith("(")) arg else s"($arg)"
             val src = s"FROM $sub AS ${g}s(${g}c)"
             (ord, isMapRec) match {
@@ -356,7 +372,7 @@ object CollectionSql {
     // in the PRODUCT pipeline the substitution broke any_value over
     // non-orderable types (MAP, VARIANT) and `IGNORE NULLS`, both of
     // which Spark's own any_value supports)
-    val s1 = replaceMasked(s0, "(?i)\\bEVERY\\s*\\(".r)((_, _) => "bool_and(")
+    val s1 = replaceMasked(s0, everyRe)((_, _) => "bool_and(")
     spliceEach(s1, groupingRe) { site =>
       val close = site.close
       if (close < 0 || splitTop(site.m.substring(site.end, close)).length < 2) None
@@ -390,7 +406,7 @@ object CollectionSql {
       }
     }
     val masked = mask(s1)
-    replaceMasked(s1, "(?i)\\bSOME\\s*\\(".r) { (m, o) =>
+    replaceMasked(s1, someRe) { (m, o) =>
       var p = m.start - 1
       while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
       val quantified = p >= 0 && "=<>!".contains(masked.charAt(p))
@@ -452,8 +468,8 @@ object CollectionSql {
     val masked = mask(sql)
     val sb = new StringBuilder
     var last = 0
-    for (m <- "(?i)(?<![\\w.`])PI(?![\\w(.`])".r.findAllMatchIn(masked)) {
-      val prevWord = "(?i)(\\w+)\\s*$".r.findFirstMatchIn(masked.substring(0, m.start)).map(_.group(1))
+    for (m <- piRe.findAllMatchIn(masked)) {
+      val prevWord = trailingWordRe.findFirstMatchIn(masked.substring(0, m.start)).map(_.group(1))
       sb.append(sql.substring(last, m.start))
       sb.append(if (prevWord.exists(_.equalsIgnoreCase("AS"))) sql.substring(m.start, m.end) else "pi()")
       last = m.end
@@ -466,11 +482,9 @@ object CollectionSql {
     * numeric): Spark requires integer bounds, so the zero fraction
     * drops. */
   def rewriteRowsFrameDecimal(sql: String): String = {
-    val s1 = replaceMasked(sql,
-      "(?i)\\b(ROWS\\s+BETWEEN\\s+|ROWS\\s+)(\\d+)\\.0*\\s+(PRECEDING|FOLLOWING)".r)((m, o) =>
+    val s1 = replaceMasked(sql, rowsFloatOffsetRe)((m, o) =>
       s"${o.substring(m.start(1), m.end(1))}${m.group(2)} ${m.group(3)}")
-    replaceMasked(s1,
-      "(?i)\\b(AND\\s+)(\\d+)\\.0*\\s+(PRECEDING|FOLLOWING)".r)((m, o) =>
+    replaceMasked(s1, andFloatOffsetRe)((m, o) =>
       s"${m.group(1)}${m.group(2)} ${m.group(3)}")
   }
 
@@ -479,8 +493,7 @@ object CollectionSql {
     * timestampadd/diff take the bare unit names). FRAC_SECOND is the
     * reference's microsecond. */
   def rewriteTsiUnits(sql: String): String =
-    replaceMasked(sql,
-      "(?i)\\b(TIMESTAMPADD|TIMESTAMPDIFF)\\s*\\(\\s*SQL_TSI_(\\w+)".r)((m, _) => {
+    replaceMasked(sql, sqlTsiUnitRe)((m, _) => {
       val unit = m.group(2).toUpperCase(java.util.Locale.ROOT) match {
         case "FRAC_SECOND" => "MICROSECOND"
         case u => u

@@ -3,7 +3,7 @@ package graft.sql
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
-import SqlText.{clauseEnd, closeOf, mask, openOf}
+import SqlText.{clauseEnd, closeOf, commaRanges, mask, openOf, topLevelIndex}
 
 /** Manual-Correlate fallback (SURVEY §7.3 #2): executes correlated
   * subquery shapes Spark's decorrelator rejects — correlation through
@@ -73,6 +73,16 @@ object Decorrelate {
     "PIVOT", "UNPIVOT", "MATCH_RECOGNIZE", "FROM", "BY", "SET", "IN",
     "EXISTS", "BETWEEN", "LIKE", "IS", "CASE", "DISTINCT", "ALL", "ANY",
     "SOME", "OVER", "PARTITION", "ROWS", "RANGE", "WITH", "RECURSIVE")
+
+  private val groupByRe = "(?is)\\bGROUP\\s+BY\\s".r
+  /** Clauses that end a GROUP BY key list. */
+  private val groupByStops = Seq("HAVING", "ORDER", "LIMIT", "UNION", "INTERSECT", "EXCEPT")
+  private val fromRe = "(?i)\\bFROM\\s".r
+  /** Clauses and join words that end a comma-separated FROM list. */
+  private val fromStops = Seq("WHERE", "GROUP", "ORDER", "HAVING", "LIMIT", "OFFSET",
+    "FETCH", "UNION", "INTERSECT", "EXCEPT", "QUALIFY", "WINDOW", "JOIN", "LEFT",
+    "RIGHT", "FULL", "INNER", "CROSS", "NATURAL", "ON", "USING")
+  private val fromItemRe = "^\\s*([\\w.]+)(?:\\s+(?:(?i:AS)\\s+)?(\\w+))?".r
 
   /** @param cols trailing column-alias list (`(Id, Name)`) for derived
     *              tables bound as `(VALUES ...) AS a(Id, Name)` — must
@@ -173,21 +183,9 @@ object Decorrelate {
           splice(m.start, m.end, litv)
       }
       if (bareInGroupBy) {
-        for (g <- "(?is)\\bGROUP\\s+BY\\s".r.findAllMatchIn(bodyMask).toList.reverse) {
+        for (g <- groupByRe.findAllMatchIn(bodyMask).toList.reverse) {
           // clause extent: next clause keyword / unbalanced ')' / end
-          var j = g.end
-          var depth = 0
-          var end = -1
-          while (j < bodyMask.length && end < 0) {
-            val ch = bodyMask.charAt(j)
-            if (ch == '(') depth += 1
-            else if (ch == ')') { if (depth == 0) end = j else depth -= 1 }
-            else if (depth == 0 && !bodyMask.charAt(j - 1).isLetterOrDigit &&
-              "(?is)^(HAVING|ORDER|LIMIT|UNION|INTERSECT|EXCEPT)\\b".r
-                .findFirstIn(bodyMask.substring(j)).isDefined) end = j
-            j += 1
-          }
-          if (end < 0) end = bodyMask.length
+          val end = clauseEnd(bodyMask, g.end, groupByStops: _*)
           for ((((_, c)), i) <- refs.zipWithIndex) {
             val litv = literal(row, i, keyTypes(i))
             val bare = ("(?<![\\w.])" + c + "\\b").r
@@ -371,24 +369,9 @@ object Decorrelate {
 
   /** WITH-clause prefix end: offset of the top-level SELECT that starts
     * the main query (0 when the statement has no CTE list). */
-  private def ctePrefixEnd(masked: String): Int = {
-    if (!masked.trim.toUpperCase.startsWith("WITH")) return 0
-    var depth = 0
-    val up = masked.toUpperCase
-    val i = up.indexOf("WITH")
-    var j = i + 4
-    while (j < masked.length) {
-      val ch = masked.charAt(j)
-      if (ch == '(') depth += 1
-      else if (ch == ')') depth -= 1
-      else if (depth == 0 && up.startsWith("SELECT", j) &&
-        (j == 0 || !masked.charAt(j - 1).isLetterOrDigit) &&
-        (j + 6 >= masked.length || !masked.charAt(j + 6).isLetterOrDigit))
-        return j
-      j += 1
-    }
-    0
-  }
+  private def ctePrefixEnd(masked: String): Int =
+    if (!masked.trim.toUpperCase.startsWith("WITH")) 0
+    else topLevelIndex(masked, "SELECT", masked.toUpperCase.indexOf("WITH") + 4) max 0
 
   /** alias (lowercased) → binding (offset + FROM-clause reference text:
     * a table/CTE name, or a parenthesized derived table). */
@@ -452,33 +435,17 @@ object Decorrelate {
     * table/alias substrings come straight from `masked`. */
   private def commaFromItems(masked: String): List[(Int, String, String)] = {
     val out = scala.collection.mutable.ListBuffer.empty[(Int, String, String)]
-    val clauseKw = ("(?is)^(WHERE|GROUP|ORDER|HAVING|LIMIT|OFFSET|FETCH|UNION|" +
-      "INTERSECT|EXCEPT|QUALIFY|WINDOW|JOIN|LEFT|RIGHT|FULL|INNER|CROSS|NATURAL|ON|USING)\\b").r
-    for (m <- "(?i)\\bFROM\\s".r.findAllMatchIn(masked)) {
-      var j = m.end
-      var depth = 0
-      var end = -1
-      val commas = scala.collection.mutable.ListBuffer.empty[Int]
-      while (j < masked.length && end < 0) {
-        val ch = masked.charAt(j)
-        if (ch == '(') depth += 1
-        else if (ch == ')') { if (depth == 0) end = j else depth -= 1 }
-        else if (depth == 0 && ch == ',') commas += j
-        // identifier-aware boundary: '_' is a word char, so `big_union`
-        // must not match the UNION clause keyword (ADVICE r8)
-        else if (depth == 0 && { val p = masked.charAt(j - 1)
-            !p.isLetterOrDigit && p != '_' } &&
-          clauseKw.findFirstIn(masked.substring(j)).isDefined) end = j
-        j += 1
-      }
-      for (c <- commas) {
-        val itemM = "^\\s*([\\w.]+)(?:\\s+(?:(?i:AS)\\s+)?(\\w+))?".r
-          .findFirstMatchIn(masked.substring(c + 1))
+    for (m <- fromRe.findAllMatchIn(masked)) {
+      // identifier-aware boundary: '_' is a word char, so `big_union`
+      // must not match the UNION clause keyword (ADVICE r8)
+      val end = clauseEnd(masked, m.end, fromStops: _*)
+      for ((c, _) <- commaRanges(masked, m.end, end).tail) {
+        val itemM = fromItemRe.findFirstMatchIn(masked.substring(c))
         itemM.foreach { im =>
           val table = im.group(1)
           val alias = Option(im.group(2)).filterNot(a => keywords(a.toUpperCase))
           if (!keywords(table.toUpperCase))
-            out += ((c + 1 + im.start(1), table,
+            out += ((c + im.start(1), table,
               alias.getOrElse(table.split('.').last)))
         }
       }

@@ -1,6 +1,6 @@
 package graft.sql
 
-import SqlText.{closeOf, mask, splitTop}
+import SqlText.{closeOf, mask, splitTop, topLevelIndex, topLevelMatches}
 
 /** SQL:2016 window frame EXCLUSION (`ROWS ... EXCLUDE CURRENT ROW /
   * GROUP / TIES / NO OTHERS` — winagg.iq:1054, Postgres-verified in the
@@ -36,6 +36,20 @@ import SqlText.{closeOf, mask, splitTop}
 object ExcludeFrameSql {
 
   private val exRe = "(?is)\\bEXCLUDE\\s+(CURRENT\\s+ROW|GROUP|TIES|NO\\s+OTHERS)".r
+  private val selectRe = "(?is)^\\s*SELECT\\s".r
+  private val clauseRe = "(?is)\\b(WHERE|GROUP\\s+BY|HAVING|QUALIFY|WINDOW)\\b".r
+  private val orderByRe = "(?is)\\bORDER\\s+BY\\s".r
+  private val overRe = "(?is)\\bOVER\\s*\\(".r
+  private val trailingIdentRe = "(?is)([A-Za-z_]\\w*)\\s*$".r
+  private val partitionByRe = "(?is)\\bPARTITION\\s+BY\\s+(.*?)(?=\\bORDER\\b|\\bROWS\\b|\\bRANGE\\b|$)".r
+  private val windowOrderRe = "(?is)\\bORDER\\s+BY\\s+(.*?)(?=\\bROWS\\b|\\bRANGE\\b|$)".r
+  private val rowsFrameRe = "(?is)\\bROWS\\s+(.*?)(?=\\bEXCLUDE\\b|$)".r
+  private val betweenAndRe = "(?i)^BETWEEN (.*?) AND (.*)$".r
+  private val precedingFollowingRe = "(?i)^(\\d+) (PRECEDING|FOLLOWING)$".r
+  private val asRe = "(?is)\\s+as\\s+([A-Za-z_`]\\w*|`[^`]*`)\\s*$".r
+  private val bareIdentRe = "^[A-Za-z_]\\w*$".r
+  private val quotedIdentRe = "^`[^`]*`$".r
+  private val rangeRe = "(?is)\\bRANGE\\b".r
 
   def rewrite(sql: String): String = {
     val masked0 = mask(sql)
@@ -61,35 +75,16 @@ object ExcludeFrameSql {
     * construct gap rather than a wrong answer). */
   private def lower(sql: String): Option[String] = {
     val masked = mask(sql)
-    val selM = "(?is)^\\s*SELECT\\s".r.findFirstMatchIn(masked).getOrElse(return None)
-    // top-level FROM
-    var i = selM.end
-    var depth = 0
-    var fromAt = -1
-    while (i < masked.length && fromAt < 0) {
-      val c = masked.charAt(i)
-      if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && masked.regionMatches(true, i, "FROM", 0, 4) &&
-          !masked.charAt(i - 1).isLetterOrDigit &&
-          (i + 4 >= masked.length || !masked.charAt(i + 4).isLetterOrDigit)) fromAt = i
-      i += 1
-    }
+    val selM = selectRe.findFirstMatchIn(masked).getOrElse(return None)
+    val fromAt = topLevelIndex(masked, "FROM", selM.end)
     if (fromAt < 0) return None
     // relation: up to top-level ORDER BY / end; no WHERE/GROUP/HAVING
     val tail = masked.substring(fromAt)
-    if ("(?is)\\b(WHERE|GROUP\\s+BY|HAVING|QUALIFY|WINDOW)\\b".r
-        .findAllMatchIn(tail).exists { m =>
-          val pre = tail.substring(0, m.start)
-          pre.count(_ == '(') == pre.count(_ == ')') }) return None
-    val obM = "(?is)\\bORDER\\s+BY\\s".r.findAllMatchIn(masked).filter { m =>
-      m.start > fromAt && {
-        val pre = masked.substring(fromAt, m.start)
-        pre.count(_ == '(') == pre.count(_ == ')') }
-    }.toSeq.lastOption
-    val relEnd = obM.map(_.start).getOrElse(sql.length)
+    if (topLevelMatches(tail, clauseRe).nonEmpty) return None
+    val obAt = topLevelMatches(tail, orderByRe).toSeq.lastOption.map(fromAt + _.start)
+    val relEnd = obAt.getOrElse(sql.length)
     val rel = sql.substring(fromAt + 4, relEnd).trim
-    val orderTail = obM.map(m => " " + sql.substring(m.start).trim).getOrElse("")
+    val orderTail = obAt.map(at => " " + sql.substring(at).trim).getOrElse("")
 
     // select items
     val items = {
@@ -106,7 +101,7 @@ object ExcludeFrameSql {
       val calls = scala.collection.mutable.ArrayBuffer.empty[OverCall]
       var pos = 0
       while (pos < itemMasked.length) {
-        val om = "(?is)\\bOVER\\s*\\(".r.findFirstMatchIn(itemMasked.substring(pos)) match {
+        val om = overRe.findFirstMatchIn(itemMasked.substring(pos)) match {
           case None => pos = itemMasked.length
             return Some(calls.toSeq)
           case Some(m) => m
@@ -120,7 +115,7 @@ object ExcludeFrameSql {
         if (p < 0 || itemMasked.charAt(p) != ')') return None
         val j = SqlText.openOf(itemMasked, p)
         if (j < 0) return None
-        val fnM = "(?is)([A-Za-z_]\\w*)\\s*$".r.findFirstMatchIn(itemMasked.substring(0, j))
+        val fnM = trailingIdentRe.findFirstMatchIn(itemMasked.substring(0, j))
           .getOrElse(return None)
         val fn = fnM.group(1)
         if (!Set("sum", "count", "avg", "min", "max", "stddev", "stddev_pop",
@@ -133,22 +128,20 @@ object ExcludeFrameSql {
         if (!isSimple(arg) && arg != "*") return None
         val spec = itemSql.substring(oOpen + 1, oClose)
         val specM = itemMasked.substring(oOpen + 1, oClose)
-        val partM = "(?is)\\bPARTITION\\s+BY\\s+(.*?)(?=\\bORDER\\b|\\bROWS\\b|\\bRANGE\\b|$)".r
-          .findFirstMatchIn(specM)
+        val partM = partitionByRe.findFirstMatchIn(specM)
         val part = partM.map(m2 => splitTop(spec.substring(m2.start(1), m2.end(1)))
           .map(_.trim)).getOrElse(Nil)
-        val ordM = "(?is)\\bORDER\\s+BY\\s+(.*?)(?=\\bROWS\\b|\\bRANGE\\b|$)".r
-          .findFirstMatchIn(specM)
+        val ordM = windowOrderRe.findFirstMatchIn(specM)
         val order = ordM.map(m2 => splitTop(spec.substring(m2.start(1), m2.end(1)))
           .map(_.trim
             .replaceAll("(?is)\\s+NULLS\\s+(FIRST|LAST)$", "")
             .replaceAll("(?is)\\s+(ASC|DESC)$", "")))
           .getOrElse(Nil)
-        if ("(?is)\\bRANGE\\b".r.findFirstIn(specM).isDefined) return None
+        if (rangeRe.findFirstIn(specM).isDefined) return None
         // frame bounds (ROWS only); None = unbounded
         var lo: Option[Int] = Some(0)
         var hi: Option[Int] = Some(0)
-        val fr = "(?is)\\bROWS\\s+(.*?)(?=\\bEXCLUDE\\b|$)".r.findFirstMatchIn(specM)
+        val fr = rowsFrameRe.findFirstMatchIn(specM)
         fr match {
           case None =>
             // default frame is RANGE (peer-extended) — only explicit
@@ -156,12 +149,12 @@ object ExcludeFrameSql {
             return None
           case Some(f) =>
             val t = f.group(1).trim.toUpperCase.replaceAll("\\s+", " ")
-            val btw = "(?i)^BETWEEN (.*?) AND (.*)$".r.findFirstMatchIn(t)
+            val btw = betweenAndRe.findFirstMatchIn(t)
             def bound(b: String, isLower: Boolean): Option[Option[Int]] = b.trim match {
               case "UNBOUNDED PRECEDING" | "UNBOUNDED FOLLOWING" => Some(None)
               case "CURRENT ROW" => Some(Some(0))
               case s =>
-                "(?i)^(\\d+) (PRECEDING|FOLLOWING)$".r.findFirstMatchIn(s).map { m2 =>
+                precedingFollowingRe.findFirstMatchIn(s).map { m2 =>
                   val n = m2.group(1).toInt
                   Some(if (m2.group(2).equalsIgnoreCase("PRECEDING")) -n else n)
                 }
@@ -308,7 +301,7 @@ object ExcludeFrameSql {
     val newItems = parsed.map { case (s, _, callsOpt) =>
       val calls = callsOpt.get
       if (calls.isEmpty) {
-        val asM = "(?is)\\s+as\\s+([A-Za-z_`]\\w*|`[^`]*`)\\s*$".r.findFirstMatchIn(s)
+        val asM = asRe.findFirstMatchIn(s)
         val expr = asM.map(a => s.substring(0, a.start)).getOrElse(s)
         if (!isSimple(expr.trim)) return None // would be ambiguous in the join
         val q = qualify(expr, "o")
@@ -358,7 +351,7 @@ object ExcludeFrameSql {
         val calls = callsOpt.get
         if (calls.isEmpty) {
           // same plain-item shape the shared groupBy was built from
-          val asM = "(?is)\\s+as\\s+([A-Za-z_`]\\w*|`[^`]*`)\\s*$".r.findFirstMatchIn(s)
+          val asM = asRe.findFirstMatchIn(s)
           val expr = asM.map(a => s.substring(0, a.start)).getOrElse(s)
           qualify(expr, "o") + asM.map(a => s.substring(a.start)).getOrElse("")
         } else {
@@ -418,5 +411,5 @@ object ExcludeFrameSql {
   /** A bare or backquoted single identifier — the only expressions the
     * self-join lowering can safely alias-prefix. */
   private def isSimple(e: String): Boolean =
-    "^[A-Za-z_]\\w*$".r.matches(e.trim) || "^`[^`]*`$".r.matches(e.trim)
+    bareIdentRe.matches(e.trim) || quotedIdentRe.matches(e.trim)
 }

@@ -28,6 +28,68 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    → our similar_to expression; NOT SIMILAR TO likewise.
   */
 object GraftSql {
+
+  private val selectFromRe = "(?is)select\\s+from\\b".r
+  private val createSequenceRe = "(?is)^CREATE\\s+SEQUENCE\\s+(\\w+)(?:\\s+START\\s+WITH\\s+(-?\\d+))?(?:\\s+INCREMENT\\s+BY\\s+(-?\\d+))?\\s*;?$".r
+  private val dropSequenceRe = "(?is)^DROP\\s+SEQUENCE\\s+(\\w+)\\s*;?$".r
+  private val selectDistinctRe = "(?is)^\\s*SELECT\\s+DISTINCT\\s".r
+  private val itemAliasRe = "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_]\\w*|`[^`]*`)\\s*$".r
+  private val ascDescNullsRe = "(?is)^(.*?)(\\s+(?:ASC|DESC))?(\\s+NULLS\\s+(?:FIRST|LAST))?\\s*$".r
+  private val bareIdentRe = "^[A-Za-z_]\\w*$".r
+  private val rowCompareRe = "(?is)\\bROW\\s*\\(([^(),]*)\\)\\s*(=|<>|!=|<=|>=|<|>)\\s*ROW\\s*\\(([^(),]*)\\)".r
+  private val leadingAliasRe = "(?is)^\\s*AS\\s+(\\w+)".r
+  private val asLiteralRe = "(?is)\\bAS\\s+('[^']*')".r
+  private val unsTypeRe = "(?is)\\bAS\\s+((?:TINYINT|SMALLINT|INTEGER|INT|BIGINT)?)\\s*UNSIGNED\\s*$".r
+  private val keywordEndRe = "(?is).*\\b(select|where|and|or|when|then|else|on|having|by|values)$".r
+  private val castUuidAsVarbinaryRe = "(?is)\\bCAST\\s*\\(\\s*UUID\\s*('[^']*')\\s+AS\\s+VARBINARY\\s*\\)".r
+  private val castHexAsUuidRe = "(?is)\\bCAST\\s*\\(\\s*[xX]('[^']*')\\s+AS\\s+UUID\\s*\\)".r
+  private val uuidRe = "(?is)\\bUUID\\s*('[^']*')".r
+  private val castLiteralAsUuidRe = "(?is)\\bCAST\\s*\\(\\s*('[^']*')\\s+AS\\s+UUID\\s*\\)".r
+  private val asUuidRe = "(?is)\\bAS\\s+UUID\\b".r
+  private val timestampRe = "(?i)\\bTIMESTAMP\\s*\\(\\s*\\d+\\s*\\)".r
+  private val varcharRe = "(?i)\\bVARCHAR\\b(?!\\s*\\()".r
+  private val varbinaryRe = "(?i)\\bVARBINARY\\b(?!\\s*\\()".r
+  private val asArrayMultisetRe = "(?i)\\bAS\\s+(\\w+)\\s+(ARRAY|MULTISET)\\s*\\)".r
+  private val arrayMultisetRe = "(?i)\\b(\\w+)\\s+(ARRAY|MULTISET)\\b(?=\\s*[,>])".r
+  private val decimalRe = "(?is)\\bDECIMAL\\s*('[^']*')".r
+  private val nullifRe = "(?is)\\bNULLIF\\s*\\(\\s*('[^']*'|-?[\\d.]+)\\s*,\\s*('[^']*'|-?[\\d.]+)\\s*\\)".r
+  private val tablesampleRe = "(?is)\\bTABLESAMPLE\\s+(?:SYSTEM|BERNOULLI)\\s*\\(\\s*([\\d.]+)\\s*\\)(\\s*REPEATABLE\\s*\\(\\s*(\\d+)\\s*\\))?".r
+  private val intervalWeekQuarterRe = "(?is)\\bINTERVAL\\s+('[^']*')\\s+(WEEK|QUARTER)S?\\b".r
+  private val intervalUnitRe = "(?is)\\bINTERVAL\\s+(\\w+|\\((?:[^()]|\\([^()]*\\))*\\))\\s+(YEAR|MONTH|WEEK|DAY|HOUR|MINUTE|SECOND)S?\\b".r
+  private val valuesAsRe = "(?is)(\\(\\s*VALUES\\s+[^()]+?\\))\\s+AS\\s+(\\w+)(?!\\s*\\()".r
+  private val byRe = "(?is)^(.*?)(?:\\s+AS\\s+(\\w+))?(\\s+(?:ASC|DESC))?(\\s+NULLS\\s+(?:FIRST|LAST))?\\s*$".r
+  private val columnAliasRe = "(?is)^([\\w.`]+)(?:\\s+AS\\s+(\\w+))?$".r
+  private val selectDistinctOnRe = "(?is)^(\\s*SELECT\\s+)DISTINCT\\s+ON\\s*\\(".r
+  private val columnRefRe = "(?is)^[\\w.`]+$".r
+  private val trailingAliasRe = "(?is)^(.*?)\\s+AS\\s+(\\w+)\\s*$".r
+  private val excludeRe = "(?is)\\*\\s+EXCLUDE\\s*\\(([^)]*)\\)".r
+  private val selectTopRe = "(?is)^(\\s*SELECT)\\s+TOP\\s+(\\d+)\\s".r
+  private val offsetFetchRe = "(?is)\\bOFFSET\\s+(.+?)\\s+(?:ROWS?\\s+)?FETCH\\s+(?:FIRST|NEXT)\\s+(.+?)\\s+ROWS?\\s+ONLY".r
+  private val fetchOnlyRe = "(?is)\\bFETCH\\s+(?:FIRST|NEXT)\\s+(.+?)\\s+ROWS?\\s+ONLY".r
+  private val offsetRowsRe = "(?is)\\bOFFSET\\s+(.+?)\\s+ROWS\\b".r
+  private val queryWordRe = "(?is)\\b(SELECT|FROM|WHERE|ORDER|GROUP)\\b".r
+  private val hugeLimitRe = "(?is)\\b(LIMIT|OFFSET)\\s+(\\d{10,})\\b".r
+  private val limitCommaRe = "(?is)\\bLIMIT\\s+(\\d+)\\s*,\\s*(\\d+|ALL)\\b".r
+  private val fromDualRe = "(?is)\\bFROM\\s+DUAL\\b".r
+  private val qualifiedStarRe = "(?is)^([A-Za-z_]\\w*)\\s*\\.\\s*\\*$".r
+  private val safeCastRe = "(?i)\\bSAFE_CAST\\s*\\(".r
+  private val nextValueRe =
+    ("(?is)(NEXT|CURRENT)\\s+VALUE\\s+FOR\\s+([\\w" + "\\u0001" + "`.]+)\\s+AS\\s+(\\w+)\\s*(,)?").r
+  private val selectDistinctWordRe = "(?is)^\\s*SELECT\\s+DISTINCT\\b".r
+  private val operandTailRe = "(?is)[`\\)\\d]\\s*$".r
+  private val castNullRe = "(?is)^\\(?\\s*CAST\\s*\\(\\s*NULL\\b.*".r
+  private val selectFromDualRe = "(?is)^\\s*SELECT\\s+\\*\\s+FROM\\s+DUAL\\s*$".r
+  private val variantShape =
+    "(?is)(CAST\\s*\\((?:[^()]|\\([^()]*\\))*AS\\s+VARIANT\\s*\\)|VARIANTNULL\\s*\\(\\s*\\))"
+  private val variantEqRe = (variantShape + "\\s*=\\s*" + variantShape).r
+  private val variantItemRe = ("(?is)\\(\\s*" + variantShape + "\\s*\\)\\s*\\[(\\d+)\\]").r
+  private val variantFieldRe =
+    ("(?is)" + variantShape + "\\s*\\.\\s*(`[^`]*`|[A-Za-z_]\\w*)").r
+  private val rowStarFieldRe = ("(?is)\\bROW\\s*\\(([^()]*\\.\\s*\\*[^()]*)\\)" +
+    "\\s*\\.\\s*([A-Za-z_]\\w*?)(\\d+)\\b").r
+  private val similarToRe = ("(?i)([A-Za-z_][A-Za-z0-9_\\.]*)\\s+(NOT\\s+)?SIMILAR\\s+TO\\s+" +
+    "('(?:[^']|'')*')").r
+
   import SqlText._
 
   def sql(spark: SparkSession, rawText: String): DataFrame = {
@@ -52,9 +114,7 @@ object GraftSql {
       // SqlStdOperatorTable NEXT_VALUE :2555, sequence.iq.
       // the name may be backtick-quoted — the mask hides its characters,
       // so match any mask/word run and splice the original back out
-      val nextVal =
-        ("(?is)(NEXT|CURRENT)\\s+VALUE\\s+FOR\\s+([\\w" + "\\u0001" + "`.]+)\\s+AS\\s+(\\w+)\\s*(,)?").r
-      nextVal.findFirstMatchIn(mask(text)) match {
+      nextValueRe.findFirstMatchIn(mask(text)) match {
         case Some(m) =>
           val kind = text.substring(m.start(1), m.end(1)).toUpperCase(java.util.Locale.ROOT)
           // quoted/qualified spellings (`s`.`my_seq`) resolve by the
@@ -80,7 +140,7 @@ object GraftSql {
               before + text.substring(m.end)
             }
           // the sequence may have been the ONLY select item
-          val bare = "(?is)select\\s+from\\b".r.findFirstIn(stripped0).isDefined
+          val bare = selectFromRe.findFirstIn(stripped0).isDefined
           val stripped =
             if (bare) stripped0.replaceFirst("(?is)select\\s+from\\b", "SELECT 1 AS __seq_ph FROM")
             else stripped0
@@ -129,7 +189,7 @@ object GraftSql {
     * schema — skipped when names are ambiguous or the shapes differ. */
   private def starReplaceOrder(spark: SparkSession, text: String, df: DataFrame): DataFrame = {
     val masked = mask(text)
-    val m = "(?is)\\*\\s+REPLACE\\s*\\(".r.findFirstMatchIn(masked).getOrElse(return df)
+    val m = starReplaceRe.findFirstMatchIn(masked).getOrElse(return df)
     val open = m.end - 1
     val close = closeOf(masked, open)
     if (close < 0) return df
@@ -321,16 +381,13 @@ object GraftSql {
     * TABLE/VIEW, INSERT, DROP, ...) flows through spark.sql unchanged —
     * Spark's executor IS the DDL engine. */
   private def ddl(spark: SparkSession, text: String): Option[DataFrame] = {
-    val createSeq =
-      "(?is)^CREATE\\s+SEQUENCE\\s+(\\w+)(?:\\s+START\\s+WITH\\s+(-?\\d+))?(?:\\s+INCREMENT\\s+BY\\s+(-?\\d+))?\\s*;?$".r
-    val dropSeq = "(?is)^DROP\\s+SEQUENCE\\s+(\\w+)\\s*;?$".r
     text match {
-      case createSeq(name, start, step) =>
+      case createSequenceRe(name, start, step) =>
         graft.functions.Sequences.create(name,
           Option(start).map(_.toLong).getOrElse(1L),
           Option(step).map(_.toLong).getOrElse(1L))
         Some(spark.emptyDataFrame)
-      case dropSeq(name) =>
+      case dropSequenceRe(name) =>
         graft.functions.Sequences.drop(name)
         Some(spark.emptyDataFrame)
       case _ => MaterializedViewSql.maybeRun(spark, text)
@@ -416,14 +473,14 @@ object GraftSql {
     * by the alias is equivalent. Substitute it. */
   private[graft] def rewriteDistinctOrderByAlias(sql: String): String = {
     val masked = mask(sql)
-    if ("(?is)^\\s*SELECT\\s+DISTINCT\\b".r.findFirstIn(masked).isEmpty) return sql
+    if (selectDistinctWordRe.findFirstIn(masked).isEmpty) return sql
     def norm(s: String) = s.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", "")
     // select items: DISTINCT .. top-level FROM
-    val selM = "(?is)^\\s*SELECT\\s+DISTINCT\\s".r.findFirstMatchIn(masked).getOrElse(return sql)
+    val selM = selectDistinctRe.findFirstMatchIn(masked).getOrElse(return sql)
     val fromAt = topLevelIndex(masked, "FROM", selM.end)
     if (fromAt < 0) return sql
     val aliasOf = splitElems(sql, masked, selM.end, fromAt).flatMap { item =>
-      "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_]\\w*|`[^`]*`)\\s*$".r.findFirstMatchIn(item.trim)
+      itemAliasRe.findFirstMatchIn(item.trim)
         .map(mm => norm(mm.group(1)) -> mm.group(2))
     }.toMap
     if (aliasOf.isEmpty) return sql
@@ -438,13 +495,12 @@ object GraftSql {
     var changed = false
     val newItems = splitElems(sql, masked, byEnd, obEnd).map { item =>
       val t = item.trim
-      val sm = "(?is)^(.*?)(\\s+(?:ASC|DESC))?(\\s+NULLS\\s+(?:FIRST|LAST))?\\s*$".r
-        .findFirstMatchIn(t).get
+      val sm = ascDescNullsRe.findFirstMatchIn(t).get
       // bare identifiers stay: they resolve against OUTPUT columns
       // (possibly an alias of a different expression), so substituting
       // them could silently change the sort key; the Spark-rejected
       // shape is the non-identifier one (ORDER BY count(*))
-      val isBareIdent = "^[A-Za-z_]\\w*$".r.matches(sm.group(1).trim)
+      val isBareIdent = bareIdentRe.matches(sm.group(1).trim)
       aliasOf.get(norm(sm.group(1))).filter(_ => !isBareIdent) match {
         case Some(alias) =>
           changed = true
@@ -558,7 +614,7 @@ object GraftSql {
         val before = masked.substring(0, lOpen)
         callWordRe.findFirstMatchIn(before).map(_.group(1).toUpperCase)
           .map(!tupleKeywords.contains(_))
-          .getOrElse("(?is)[`\\)\\d]\\s*$".r.findFirstIn(before).isDefined)
+          .getOrElse(operandTailRe.findFirstIn(before).isDefined)
       }
       if (rClose < 0 || !masked.substring(rOpen + 1, rClose).trim.startsWith("(") ||
           lOpen < 0 || isCall) None
@@ -594,8 +650,7 @@ object GraftSql {
     * (struct comparison requires identical field types). Runs before the
     * general ROW→struct rewrite. */
   private def rewriteRowCompare(sql: String): String =
-    replaceMasked(sql,
-      "(?is)\\bROW\\s*\\(([^(),]*)\\)\\s*(=|<>|!=|<=|>=|<|>)\\s*ROW\\s*\\(([^(),]*)\\)".r)((m, o) =>
+    replaceMasked(sql, rowCompareRe)((m, o) =>
       s"(${origGroup(m, o, 1)}) ${m.group(2)} (${origGroup(m, o, 3)})")
 
   /** `FROM <rel> PIVOT (...) AS e [WHERE ...]` (pivot.iq:78) — Spark's
@@ -609,8 +664,7 @@ object GraftSql {
     if (open < 0) return sql
     val close = closeOf(masked, open)
     if (close < 0) return sql
-    val aliasRe = "(?is)^\\s*AS\\s+(\\w+)".r
-    val am = aliasRe.findFirstMatchIn(masked.substring(close + 1)).getOrElse(return sql)
+    val am = leadingAliasRe.findFirstMatchIn(masked.substring(close + 1)).getOrElse(return sql)
     // the relation being pivoted starts after the last top-level FROM
     // before the PIVOT keyword
     var fromAt = -1
@@ -633,7 +687,7 @@ object GraftSql {
     val masked0 = mask(sql)
     val up = anyDepthIndex(masked0, "UNPIVOT")
     if (up < 0) return sql
-    replaceMasked(sql, "(?is)\\bAS\\s+('[^']*')".r)((m, o) =>
+    replaceMasked(sql, asLiteralRe)((m, o) =>
       "AS `" + origGroup(m, o, 1).stripPrefix("'").stripSuffix("'") + "`")
   }
 
@@ -675,11 +729,9 @@ object GraftSql {
     val maxOf = Map("TINYINT" -> BigInt(255), "SMALLINT" -> BigInt(65535),
       "INT" -> BigInt("4294967295"), "INTEGER" -> BigInt("4294967295"),
       "" -> BigInt("4294967295"), "BIGINT" -> BigInt("18446744073709551615"))
-    val castRe = "(?is)\\bCAST\\s*\\(".r
-    val unsTypeRe = "(?is)\\bAS\\s+((?:TINYINT|SMALLINT|INTEGER|INT|BIGINT)?)\\s*UNSIGNED\\s*$".r
     val sb = new StringBuilder
     var last = 0
-    for (m <- castRe.findAllMatchIn(masked) if m.start >= last) {
+    for (m <- castOpenRe.findAllMatchIn(masked) if m.start >= last) {
       val open = masked.indexOf('(', m.start)
       val close = closeOf(masked, open)
       if (close > 0) {
@@ -693,8 +745,7 @@ object GraftSql {
           val unary = preTrimmed.endsWith("-") && {
             val beforeMinus = preTrimmed.dropRight(1).trim
             beforeMinus.isEmpty || "([,=<>+*/-".contains(beforeMinus.last) ||
-              "(?is).*\\b(select|where|and|or|when|then|else|on|having|by|values)$".r
-                .matches(beforeMinus)
+              keywordEndRe.matches(beforeMinus)
           }
           // binary +,-,* after the cast with a simple right operand
           var j = close + 1
@@ -814,14 +865,11 @@ object GraftSql {
   private def rewriteVariantOps(sql: String): String = {
     val masked = mask(sql)
     if (!masked.toUpperCase.contains("VARIANT")) return sql
-    val vshape = "(?is)(CAST\\s*\\((?:[^()]|\\([^()]*\\))*AS\\s+VARIANT\\s*\\)|VARIANTNULL\\s*\\(\\s*\\))"
-    val eqRe = (vshape + "\\s*=\\s*" + vshape).r
-    val s1 = replaceMasked(sql, eqRe)((m, o) => {
+    val s1 = replaceMasked(sql, variantEqRe)((m, o) => {
       val (a, b) = (origGroup(m, o, 1), origGroup(m, o, 2))
       s"(schema_of_variant($a) = schema_of_variant($b) AND to_json($a) = to_json($b))"
     })
-    val s2 = replaceMasked(s1,
-      ("(?is)\\(\\s*" + vshape + "\\s*\\)\\s*\\[(\\d+)\\]").r)((m, o) => {
+    val s2 = replaceMasked(s1, variantItemRe)((m, o) => {
       val idx = m.group(2).toInt - 1
       s"try_variant_get(${origGroup(m, o, 1)}, '$$[$idx]')"
     })
@@ -830,8 +878,7 @@ object GraftSql {
     // identifier uppercases, as the reference's lexer does — that is
     // WHY variant.iq:189's unquoted `.a` finds nothing. Runs BEFORE the
     // map-cast lowering below so the CAST shape is still visible.
-    val s2b = replaceMasked(s2,
-      ("(?is)" + vshape + "\\s*\\.\\s*(`[^`]*`|[A-Za-z_]\\w*)").r)((m, o) => {
+    val s2b = replaceMasked(s2, variantFieldRe)((m, o) => {
       val v = origGroup(m, o, 1)
       val f0 = origGroup(m, o, 2)
       val f = if (f0.startsWith("`")) f0.stripPrefix("`").stripSuffix("`")
@@ -873,23 +920,21 @@ object GraftSql {
       val h = hex.toLowerCase
       s"${h.substring(0, 8)}-${h.substring(8, 12)}-${h.substring(12, 16)}-${h.substring(16, 20)}-${h.substring(20)}"
     }
-    val s1 = replaceMasked(sql,
-      "(?is)\\bCAST\\s*\\(\\s*UUID\\s*('[^']*')\\s+AS\\s+VARBINARY\\s*\\)".r)((m, o) =>
+    val s1 = replaceMasked(sql, castUuidAsVarbinaryRe)((m, o) =>
       s"unhex('${origGroup(m, o, 1).stripPrefix("'").stripSuffix("'").replace("-", "")}')")
-    val s2 = replaceMasked(s1,
-      "(?is)\\bCAST\\s*\\(\\s*[xX]('[^']*')\\s+AS\\s+UUID\\s*\\)".r)((m, o) =>
+    val s2 = replaceMasked(s1, castHexAsUuidRe)((m, o) =>
       s"'${fmt(origGroup(m, o, 1).stripPrefix("'").stripSuffix("'"))}'")
-    val s3 = replaceMasked(s2, "(?is)\\bUUID\\s*('[^']*')".r)((m, o) =>
+    val s3 = replaceMasked(s2, uuidRe)((m, o) =>
       origGroup(m, o, 1).toLowerCase)
     // a string-literal cast VALIDATES the canonical 8-4-4-4-12 form —
     // the reference rejects bare 32-hex text (misc.iq:90)
-    val s4 = replaceMasked(s3, "(?is)\\bCAST\\s*\\(\\s*('[^']*')\\s+AS\\s+UUID\\s*\\)".r)((m, o) => {
+    val s4 = replaceMasked(s3, castLiteralAsUuidRe)((m, o) => {
       val lit = origGroup(m, o, 1).stripPrefix("'").stripSuffix("'")
       if (!lit.matches("(?i)[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"))
         throw new IllegalArgumentException(s"Invalid UUID string: $lit")
       s"'${lit.toLowerCase(java.util.Locale.ROOT)}'"
     })
-    replaceMasked(s4, "(?is)\\bAS\\s+UUID\\b".r)((_, _) => "AS STRING")
+    replaceMasked(s4, asUuidRe)((_, _) => "AS STRING")
   }
 
   private val timestampPrecRe = "(?is)\\bAS\\s+TIMESTAMP\\s*\\(\\s*(\\d)\\s*\\)\\s*$".r
@@ -919,32 +964,32 @@ object GraftSql {
           unit.map(u => s"date_trunc('$u', $castStr)").getOrElse(castStr))
       }
     }
-    val s0 = replaceMasked(sPrec, "(?i)\\bTIMESTAMP\\s*\\(\\s*\\d+\\s*\\)".r)((_, _) => "TIMESTAMP")
-    val s1 = replaceMasked(s0, "(?i)\\bVARCHAR\\b(?!\\s*\\()".r)((_, _) => "STRING")
-    val s2 = replaceMasked(s1, "(?i)\\bVARBINARY\\b(?!\\s*\\()".r)((_, _) => "BINARY")
+    val s0 = replaceMasked(sPrec, timestampRe)((_, _) => "TIMESTAMP")
+    val s1 = replaceMasked(s0, varcharRe)((_, _) => "STRING")
+    val s2 = replaceMasked(s1, varbinaryRe)((_, _) => "BINARY")
     // SQL-standard postfix collection types in CASTs (`x AS INTEGER
     // ARRAY`, lambda.iq:82) → Spark's generic spelling. Scoped to the
     // AS-type position so `ARRAY` constructors/literals stay untouched.
-    val s3 = replaceMasked(s2, "(?i)\\bAS\\s+(\\w+)\\s+(ARRAY|MULTISET)\\s*\\)".r)((m, o) =>
+    val s3 = replaceMasked(s2, asArrayMultisetRe)((m, o) =>
       s"AS ARRAY<${origGroup(m, o, 1)}>)")
     // the same postfix form NESTED inside a MAP/ARRAY type argument
     // (`map<varchar multiset, ...>`, misc.iq:2554 CALCITE-5570) — scoped
     // to a `,`/`>` follower so only type positions rewrite
-    replaceMasked(s3, "(?i)\\b(\\w+)\\s+(ARRAY|MULTISET)\\b(?=\\s*[,>])".r)((m, o) =>
+    replaceMasked(s3, arrayMultisetRe)((m, o) =>
       s"ARRAY<${origGroup(m, o, 1)}>")
   }
 
   /** `DECIMAL 'n.n'` typed literals (misc.iq:2532) → an explicit CAST
     * (Spark has no DECIMAL literal prefix). */
   private def rewriteDecimalLit(sql: String): String =
-    replaceMasked(sql, "(?is)\\bDECIMAL\\s*('[^']*')".r)((m, o) =>
+    replaceMasked(sql, decimalRe)((m, o) =>
       s"CAST(${origGroup(m, o, 1)} AS DECIMAL(38, 9))")
 
   /** Fold `NULLIF(x, x)` with identical literal arguments to NULL
     * (misc.iq:2435 uses it inside VALUES, where Spark's inline-table
     * evaluator only accepts foldable expressions it understands). */
   private def rewriteNullifFold(sql: String): String =
-    replaceMasked(sql, "(?is)\\bNULLIF\\s*\\(\\s*('[^']*'|-?[\\d.]+)\\s*,\\s*('[^']*'|-?[\\d.]+)\\s*\\)".r)((m, o) => {
+    replaceMasked(sql, nullifRe)((m, o) => {
       val (a, b) = (origGroup(m, o, 1), origGroup(m, o, 2))
       if (a == b) "NULL" else o.substring(m.start, m.end)
     })
@@ -954,8 +999,7 @@ object GraftSql {
     * Both of the reference's methods are row-level Bernoulli at Spark's
     * scan granularity; p is a literal percentage. */
   private def rewriteTablesample(sql: String): String =
-    replaceMasked(sql,
-      "(?is)\\bTABLESAMPLE\\s+(?:SYSTEM|BERNOULLI)\\s*\\(\\s*([\\d.]+)\\s*\\)(\\s*REPEATABLE\\s*\\(\\s*(\\d+)\\s*\\))?".r)((m, o) => {
+    replaceMasked(sql, tablesampleRe)((m, o) => {
       val rep = if (m.group(2) != null) s" REPEATABLE (${m.group(3)})" else ""
       s"TABLESAMPLE (${m.group(1)} PERCENT)$rep"
     })
@@ -966,14 +1010,12 @@ object GraftSql {
     * MINUTE` — SqlIntervalQualifier over a dynamic operand) becomes
     * `make_interval`, which takes expressions. */
   private def rewriteIntervalExpr(sql: String): String = {
-    val s1 = replaceMasked(sql,
-      "(?is)\\bINTERVAL\\s+('[^']*')\\s+(WEEK|QUARTER)S?\\b".r)((m, o) => {
+    val s1 = replaceMasked(sql, intervalWeekQuarterRe)((m, o) => {
       val n = origGroup(m, o, 1).stripPrefix("'").stripSuffix("'").trim.toLong
       if (m.group(2).equalsIgnoreCase("WEEK")) s"INTERVAL '${n * 7}' DAY"
       else s"INTERVAL '${n * 3}' MONTH"
     })
-    replaceMasked(s1,
-      "(?is)\\bINTERVAL\\s+(\\w+|\\((?:[^()]|\\([^()]*\\))*\\))\\s+(YEAR|MONTH|WEEK|DAY|HOUR|MINUTE|SECOND)S?\\b".r)((m, o) => {
+    replaceMasked(s1, intervalUnitRe)((m, o) => {
       val e = origGroup(m, o, 1)
       if (e.matches("(?i)\\d+|'[^']*'")) o.substring(m.start, m.end) // literal: Spark-native
       else m.group(2).toUpperCase match {
@@ -1044,8 +1086,7 @@ object GraftSql {
     * col1. Append an explicit column list only when every row is a bare
     * scalar (no parenthesized row constructors). */
   private def rewriteValuesAlias(sql: String): String =
-    replaceMasked(sql,
-      "(?is)(\\(\\s*VALUES\\s+[^()]+?\\))\\s+AS\\s+(\\w+)(?!\\s*\\()".r)((m, o) =>
+    replaceMasked(sql, valuesAsRe)((m, o) =>
       s"${origGroup(m, o, 1)} AS ${m.group(2)}(${m.group(2)})")
 
   /** `ROW(f1, …) IS [NOT] NULL` — the reference follows the standard's
@@ -1082,7 +1123,7 @@ object GraftSql {
     * the same way (CALCITE-7311). The harness compares by position so
     * the col1/col2 field names Spark assigns don't matter. */
   private def rewriteRowCtor(sql: String): String =
-    replaceMasked(sql, "(?is)\\bROW\\s*\\(".r)((_, _) => "struct(")
+    replaceMasked(sql, rowOpenRe)((_, _) => "struct(")
 
   /** `SELECT items BY byItems FROM ...` (Parser.jj:3192 SqlSelectBy —
     * syntactic sugar, SqlByRewriter.java): the BY items are prepended to
@@ -1093,8 +1134,7 @@ object GraftSql {
     * ANY_VALUE as MAX, so MAX is used here for value parity). */
   private def rewriteSelectBy(sql: String): String = {
     val masked = mask(sql)
-    val selRe = "(?is)^\\s*SELECT\\s".r
-    if (selRe.findFirstIn(masked).isEmpty) return sql
+    if (selectHeadRe.findFirstIn(masked).isEmpty) return sql
     val fromAt = topLevelIndex(masked, "FROM")
     if (fromAt < 0) return sql
     val byAt = topLevelIndex(masked, "BY")
@@ -1103,7 +1143,6 @@ object GraftSql {
     val selItems = splitTop(sql.substring(selStart, byAt))
     val byItems = splitTop(sql.substring(byAt + 2, fromAt))
     if (byItems.isEmpty || selItems.isEmpty) return sql
-    val byRe = "(?is)^(.*?)(?:\\s+AS\\s+(\\w+))?(\\s+(?:ASC|DESC))?(\\s+NULLS\\s+(?:FIRST|LAST))?\\s*$".r
     case class By(expr: String, alias: Option[String], mods: String)
     val parsed = byItems.map(_.trim).map {
       case byRe(e, a, d, n) => By(e.trim, Option(a),
@@ -1114,9 +1153,8 @@ object GraftSql {
     val byGroup = parsed.map(_.expr).mkString(", ")
     val byOrder = parsed.map(b => b.expr + b.mods).mkString(", ")
     // bare column select items get the implicit aggregate
-    val colRe = "(?is)^([\\w.`]+)(?:\\s+AS\\s+(\\w+))?$".r
     val wrapped = selItems.map(_.trim).map {
-      case colRe(c, a) =>
+      case columnAliasRe(c, a) =>
         val alias = Option(a).getOrElse(c.split('.').last)
         s"max($c) AS $alias"
       case other => other
@@ -1133,8 +1171,7 @@ object GraftSql {
     * one-per-group survivors, matching the reference. */
   private[graft] def rewriteDistinctOn(sql: String): String = {
     val masked = mask(sql)
-    val re = "(?is)^(\\s*SELECT\\s+)DISTINCT\\s+ON\\s*\\(".r
-    val m = re.findFirstMatchIn(masked).getOrElse(return sql)
+    val m = selectDistinctOnRe.findFirstMatchIn(masked).getOrElse(return sql)
     val open = m.end - 1
     val close = closeOf(masked, open)
     if (close < 0) return sql
@@ -1148,12 +1185,10 @@ object GraftSql {
     val items = splitTop(sql.substring(close + 1, fromAt)).map(_.trim)
     val rest = sql.substring(fromAt + 4, orderAt).trim
     // bare columns pass through *; computed items materialize inner-side
-    val colRe = "(?is)^[\\w.`]+$".r
-    val aliasRe = "(?is)^(.*?)\\s+AS\\s+(\\w+)\\s*$".r
     var n = 0
     val (innerExtra, outer) = items.map {
-      case c if colRe.matches(c) => (None, c.split('.').last)
-      case aliasRe(e, a) => (Some(s"$e AS $a"), a)
+      case c if columnRefRe.matches(c) => (None, c.split('.').last)
+      case trailingAliasRe(e, a) => (Some(s"$e AS $a"), a)
       case e => { n += 1; (Some(s"$e AS __don_$n"), s"__don_$n") }
     }.unzip
     val inner = (Seq("*") ++ innerExtra.flatten :+
@@ -1167,7 +1202,7 @@ object GraftSql {
     * `* EXCEPT (cols)`, with column qualifiers inside the list dropped
     * (Spark's EXCEPT list takes bare names). */
   private def rewriteExclude(sql: String): String =
-    replaceMasked(sql, "(?is)\\*\\s+EXCLUDE\\s*\\(([^)]*)\\)".r)((m, o) => {
+    replaceMasked(sql, excludeRe)((m, o) => {
       // the reference tolerates duplicates in the list (CALCITE-7310);
       // Spark's EXCEPT demands distinct names — dedup here
       val cols = origGroup(m, o, 1).split(",")
@@ -1184,9 +1219,8 @@ object GraftSql {
     * trailing LIMIT would silently limit the whole union. A trailing
     * semicolon is stripped before the LIMIT is appended. */
   private def rewriteTop(sql: String): String = {
-    val re = "(?is)^(\\s*SELECT)\\s+TOP\\s+(\\d+)\\s".r
     val masked = mask(sql)
-    re.findFirstMatchIn(masked) match {
+    selectTopRe.findFirstMatchIn(masked) match {
       case Some(m) if !Seq("UNION", "INTERSECT", "EXCEPT").exists(topLevelIndex(masked, _, m.end) >= 0) =>
         val body = sql.substring(m.end).replaceFirst("(?s)\\s*;\\s*$", "")
         sql.substring(0, m.end(1)) + " " + body + s" LIMIT ${m.group(2)}"
@@ -1203,9 +1237,6 @@ object GraftSql {
     * offset.iq; Sort.fetch/offset in the algebra) → Spark's
     * LIMIT/OFFSET clauses. */
   private def rewriteFetch(sql: String): String = {
-    val both = "(?is)\\bOFFSET\\s+(.+?)\\s+(?:ROWS?\\s+)?FETCH\\s+(?:FIRST|NEXT)\\s+(.+?)\\s+ROWS?\\s+ONLY".r
-    val fetchOnly = "(?is)\\bFETCH\\s+(?:FIRST|NEXT)\\s+(.+?)\\s+ROWS?\\s+ONLY".r
-    val offsetRows = "(?is)\\bOFFSET\\s+(.+?)\\s+ROWS\\b".r
     // the count may be any expression (fetch.iq:23-173 — `(1 + abs(-2))`,
     // fractional `(1.5)` rounds half-up, beyond-BIGINT values mean "all
     // rows"); a plain integer passes through untouched, an expression is
@@ -1215,7 +1246,7 @@ object GraftSql {
       if (e.matches("\\d+")) // beyond-INT literals clamp (sort.iq:421)
         Some(if (BigInt(e) > Int.MaxValue) Int.MaxValue.toString else e)
       else if (e.length > 200 ||
-        "(?is)\\b(SELECT|FROM|WHERE|ORDER|GROUP)\\b".r.findFirstIn(e).isDefined) None
+        queryWordRe.findFirstIn(e).isDefined) None
       else {
         // the reference's grammar: a non-literal FETCH count must be
         // PARENTHESIZED (`fetch next 1 + 2` is a parse error,
@@ -1225,26 +1256,26 @@ object GraftSql {
         if (isFetch && !e.startsWith("("))
           throw new IllegalArgumentException(
             s"FETCH count must be an integer literal or a parenthesized expression: $e")
-        if ("(?is)^\\(?\\s*CAST\\s*\\(\\s*NULL\\b.*".r.matches(e))
+        if (castNullRe.matches(e))
           throw new IllegalArgumentException(
             "FETCH/OFFSET expression evaluated to NULL")
         Some(s"(CAST(LEAST(ROUND($e), 2147483647) AS INT))")
       }
     }
-    val s1 = replaceMasked(sql, both)((m, o) =>
+    val s1 = replaceMasked(sql, offsetFetchRe)((m, o) =>
       (num(origGroup(m, o, 1)), num(origGroup(m, o, 2), isFetch = true)) match {
         case (Some(off), Some(lim)) => s"LIMIT $lim OFFSET $off"
         case _ => o.substring(m.start, m.end)
       })
-    val s2 = replaceMasked(s1, fetchOnly)((m, o) =>
+    val s2 = replaceMasked(s1, fetchOnlyRe)((m, o) =>
       num(origGroup(m, o, 1), isFetch = true).map(l => s"LIMIT $l").getOrElse(o.substring(m.start, m.end)))
-    val s3 = replaceMasked(s2, offsetRows)((m, o) =>
+    val s3 = replaceMasked(s2, offsetRowsRe)((m, o) =>
       num(origGroup(m, o, 1)).map(x => s"OFFSET $x").getOrElse(o.substring(m.start, m.end)))
     // plain LIMIT/OFFSET beyond Spark's INT domain (sort.iq:421
     // `limit 3000000000`) clamp to MaxInt/2 each — Spark additionally
     // requires limit + offset <= MaxInt, and a 2^30-row offset already
     // means "skip everything" at any realistic cardinality
-    replaceMasked(s3, "(?is)\\b(LIMIT|OFFSET)\\s+(\\d{10,})\\b".r)((m, o) =>
+    replaceMasked(s3, hugeLimitRe)((m, o) =>
       s"${m.group(1)} ${if (BigInt(m.group(2)) > 1073741823) "1073741823" else m.group(2)}")
   }
 
@@ -1252,7 +1283,7 @@ object GraftSql {
     * scott-mysql cases) — Spark spells these LIMIT/OFFSET. Standard SQL
     * never puts a comma after LIMIT n, so the pattern can't misfire. */
   private def rewriteMysqlLimit(sql: String): String =
-    replaceMasked(sql, "(?is)\\bLIMIT\\s+(\\d+)\\s*,\\s*(\\d+|ALL)\\b".r) { (m, _) =>
+    replaceMasked(sql, limitCommaRe) { (m, _) =>
       if (m.group(2).equalsIgnoreCase("ALL")) s"OFFSET ${m.group(1)}"
       else s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}"
     }
@@ -1261,9 +1292,9 @@ object GraftSql {
     * scalar select in Spark. `SELECT * FROM DUAL` surfaces DUAL's one
     * 'X' row under the reference's generated column name. */
   private def rewriteDual(sql: String): String =
-    if ("(?is)^\\s*SELECT\\s+\\*\\s+FROM\\s+DUAL\\s*$".r.findFirstIn(sql.trim).isDefined)
+    if (selectFromDualRe.findFirstIn(sql.trim).isDefined)
       "SELECT 'X' AS `EXPR$0`"
-    else replaceMasked(sql, "(?is)\\bFROM\\s+DUAL\\b".r)((_, _) => "")
+    else replaceMasked(sql, fromDualRe)((_, _) => "")
 
   /** Calcite `FROM t EXTEND (c TYPE, ...)` (SqlStdOperatorTable.java
     * :265 EXTEND — declare columns a schemaless/dynamic table doesn't
@@ -1419,19 +1450,17 @@ object GraftSql {
     * session catalog and lowered to the direct qualified column — no
     * struct is built at all. */
   private def rowStarFieldAccess(spark: SparkSession, sql: String): String = {
-    val re = ("(?is)\\bROW\\s*\\(([^()]*\\.\\s*\\*[^()]*)\\)" +
-      "\\s*\\.\\s*([A-Za-z_]\\w*?)(\\d+)\\b").r
-    replaceMasked(sql, re) { (m, o) =>
+    replaceMasked(sql, rowStarFieldRe) { (m, o) =>
       val whole = o.substring(m.start, m.end)
       try {
         val args = splitTop(o.substring(m.start(1), m.end(1))).map(_.trim)
         val fields = args.flatMap { a =>
-          "(?is)^([A-Za-z_]\\w*)\\s*\\.\\s*\\*$".r.findFirstMatchIn(a) match {
+          qualifiedStarRe.findFirstMatchIn(a) match {
             case Some(t) =>
               spark.table(t.group(1)).schema.fields.toSeq
                 .map(f => (t.group(1), f.name))
             case None =>
-              Seq(("", "(?is)([A-Za-z_]\\w*)\\s*$".r.findFirstMatchIn(a)
+              Seq(("", callWordRe.findFirstMatchIn(a)
                 .map(_.group(1)).getOrElse(a)))
           }
         }
@@ -1490,15 +1519,13 @@ object GraftSql {
     * as functions instead — functions/BigQueryFns.scala — because TRY_
     * returns Infinity on DOUBLE overflow where SAFE_ must return NULL. */
   private def rewriteSafeCast(sql: String): String =
-    replaceMasked(sql, "(?i)\\bSAFE_CAST\\s*\\(".r)((_, _) => "TRY_CAST(")
+    replaceMasked(sql, safeCastRe)((_, _) => "TRY_CAST(")
 
   /** `<ident or dotted ident> [NOT] SIMILAR TO '<pattern>'` →
     * `[NOT] similar_to(ident, '<pattern>')`. */
   private def rewriteSimilarTo(sql: String): String = {
-    val re = ("(?i)([A-Za-z_][A-Za-z0-9_\\.]*)\\s+(NOT\\s+)?SIMILAR\\s+TO\\s+" +
-      "('(?:[^']|'')*')").r
     // the pattern literal (group 3) is masked — splice it from the original
-    replaceMasked(sql, re) { (m, orig) =>
+    replaceMasked(sql, similarToRe) { (m, orig) =>
       val not = if (m.group(2) != null) "NOT " else ""
       s"${not}similar_to(${m.group(1)}, ${origGroup(m, orig, 3)})"
     }

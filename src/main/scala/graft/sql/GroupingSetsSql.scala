@@ -17,6 +17,23 @@ import SqlText.{Splice, clauseEnd, closeOf, commaRanges, groupEnd, mask, openOf,
   * shape (one Expand over one aggregation exchange) is unchanged. */
 object GroupingSetsSql {
 
+  private val setOpRe = "(?is)\\b(UNION\\s+ALL|UNION|INTERSECT|EXCEPT)\\b".r
+  private val selectWithRe = "(?is)\\(\\s*(SELECT|WITH)\\b".r
+  private val groupingIdRe = "(?is)\\bgrouping(_id)?\\s*\\(".r
+  private val groupingElementRe = "(?is)^(CUBE|ROLLUP|GROUPING\\s+SETS)\\s*\\(".r
+  private val havingRe = "(?is)\\bHAVING\\b".r
+  private val groupingRe = "(?is)\\bgrouping\\s*\\(".r
+  private val selectRe = "(?is)\\bSELECT\\b".r
+  private val aliasRe = "(?is)^(.*\\S)\\s+AS\\s+(\\w+)\\s*$".r
+  private val gidRe = "(?is)\\bgroup_id\\s*\\(\\s*\\)".r
+  private val plainAggCallRe = "(?is)\\b(sum|count|avg|min|max|stddev|var_pop|var_samp|every|some)\\s*\\(".r
+  private val orderByRe = "(?is)\\bORDER\\s+BY\\s".r
+  private val selectHeadRe = "(?is)^\\s*SELECT\\s".r
+  private val asRe = "(?is)\\s+as\\s+([A-Za-z_]\\w*)\\s*$".r
+  private val cubeRollupRe = "(?is)^(CUBE|ROLLUP)\\s*\\(".r
+  private val groupByDistinctRe = "(?is)\\bGROUP\\s+BY\\s+DISTINCT\\s".r
+  private val dottedIdentRe = "^[A-Za-z_][\\w.]*$".r
+
   def rewrite(sql: String): String =
     rewriteGroupingFns(rewriteGroupId(rewriteEmptySetUnion(
       rewriteMixedEmpty(rewriteDistinct(flattenNested(sql))))))
@@ -77,12 +94,11 @@ object GroupingSetsSql {
     * (one top-level GROUP BY). */
   private[sql] def rewriteGroupingFns(sql: String): String = {
     val masked0 = mask(sql)
-    if ("(?is)\\bgrouping(_id)?\\s*\\(".r.findFirstIn(masked0).isEmpty) return sql
+    if (groupingIdRe.findFirstIn(masked0).isEmpty) return sql
     // process each top-level set-operation branch independently — a
     // UNION ALL of grouped selects has one GROUP BY per branch
     // (agg.iq's manual GROUP_ID-equivalence unions)
-    val setOp = "(?is)\\b(UNION\\s+ALL|UNION|INTERSECT|EXCEPT)\\b".r
-    val topOps = topLevelMatches(masked0, setOp).toSeq
+    val topOps = topLevelMatches(masked0, setOpRe).toSeq
     if (topOps.nonEmpty) {
       val bounds = (0 +: topOps.map(_.end)).zip(topOps.map(_.start) :+ sql.length)
       val parts = bounds.map { case (a, b) => sql.substring(a, b) }
@@ -93,9 +109,9 @@ object GroupingSetsSql {
     val masked = masked0
     // a grouping call inside a SUBQUERY would be lowered against the
     // wrong universe — leave those statements alone
-    for (m <- "(?is)\\(\\s*(SELECT|WITH)\\b".r.findAllMatchIn(masked)) {
+    for (m <- selectWithRe.findAllMatchIn(masked)) {
       val close = closeOf(masked, m.start)
-      if (close > 0 && "(?is)\\bgrouping(_id)?\\s*\\(".r
+      if (close > 0 && groupingIdRe
           .findFirstIn(masked.substring(m.start, close)).isDefined) return sql
     }
     val gbs = topLevelMatches(masked, groupByRe).toSeq
@@ -114,14 +130,14 @@ object GroupingSetsSql {
     // for grouped x (agg.iq:731 — Spark instead rejects grouping()
     // outside grouping-sets queries), 1 for never-grouped x
     val hasSets = gbElems.exists(e =>
-      "(?is)^(CUBE|ROLLUP|GROUPING\\s+SETS)\\s*\\(".r.findFirstIn(e._2).isDefined)
+      groupingElementRe.findFirstIn(e._2).isDefined)
     // forward scan: emit processed text to `sb`, never re-scan it
     val sb = new StringBuilder
     var rest = sql
     var more = true
     while (more) {
       val m0 = mask(rest)
-      "(?is)\\bgrouping(_id)?\\s*\\(".r.findFirstMatchIn(m0) match {
+      groupingIdRe.findFirstMatchIn(m0) match {
         case None =>
           sb.append(rest); more = false
         case Some(call) =>
@@ -164,18 +180,17 @@ object GroupingSetsSql {
     * wins over the single calls inside it). */
   private def havingByAlias(sql: String): String = {
     val masked = mask(sql)
-    val hv = topLevelMatches(masked, "(?is)\\bHAVING\\b".r).nextOption().getOrElse(return sql)
+    val hv = topLevelMatches(masked, havingRe).nextOption().getOrElse(return sql)
     val hvEnd = listEnd(masked, hv.end)
-    if (!"(?is)\\bgrouping\\s*\\(".r.findFirstIn(masked.substring(hv.end, hvEnd)).isDefined)
+    if (!groupingRe.findFirstIn(masked.substring(hv.end, hvEnd)).isDefined)
       return sql
-    val sel = "(?is)\\bSELECT\\b".r.findFirstMatchIn(masked).getOrElse(return sql)
+    val sel = selectRe.findFirstMatchIn(masked).getOrElse(return sql)
     val from = SqlText.topLevelIndex(masked, "FROM", sel.end)
     if (from < 0) return sql
     val items = splitElems(sql, masked, sel.end, from)
-    val aliasRe = "(?is)^(.*\\S)\\s+AS\\s+(\\w+)\\s*$".r
     val pairs = items.flatMap { case (t, _) =>
       aliasRe.findFirstMatchIn(t.trim).filter(m =>
-        "(?is)\\bgrouping\\s*\\(".r.findFirstIn(m.group(1)).isDefined)
+        groupingRe.findFirstIn(m.group(1)).isDefined)
         .map(m => (m.group(1).trim, m.group(2)))
     }.sortBy(-_._1.length)
     if (pairs.isEmpty) return sql
@@ -224,7 +239,6 @@ object GroupingSetsSql {
     * the reference's validator does (agg.iq:1060). */
   private def rewriteGroupId(sql: String): String = {
     val masked = mask(sql)
-    val gidRe = "(?is)\\bgroup_id\\s*\\(\\s*\\)".r
     if (gidRe.findFirstIn(masked).isEmpty) return sql
     // only the statement's own (paren-depth-0) GROUP BY defines the
     // grouping sets GROUP_ID numbers; a subquery's clause must not bind
@@ -238,8 +252,7 @@ object GroupingSetsSql {
         // The replacement keeps the query an AGGREGATE query
         // (agg.iq:1089: GROUP BY () over empty input must still emit
         // its one global group) — a bare literal 0 would demote it.
-        val isAgg = "(?is)\\b(sum|count|avg|min|max|stddev|var_pop|var_samp|every|some)\\s*\\(".r
-          .findFirstIn(masked).isDefined
+        val isAgg = plainAggCallRe.findFirstIn(masked).isDefined
         return if (isAgg) gidRe.replaceAllIn(sql, "coalesce(min(0), 0)") else sql
     }
     val end = listEnd(masked, gb.end)
@@ -258,7 +271,7 @@ object GroupingSetsSql {
     val maxMult = byKey.values.map(_._2).max
     if (maxMult == 1) return gidRe.replaceAllIn(sql, "coalesce(min(0), 0)")
     // trailing top-level ORDER BY moves outside the UNION ALL
-    val ob = topLevelMatches(masked, "(?is)\\bORDER\\s+BY\\s".r).toSeq.lastOption
+    val ob = topLevelMatches(masked, orderByRe).toSeq.lastOption
     val (body, orderTxt) = ob match {
       case Some(o) => (sql.substring(0, o.start), " " + sql.substring(o.start).trim)
       case None => (sql, "")
@@ -292,17 +305,17 @@ object GroupingSetsSql {
     if (missing.isEmpty) return branch
     val missingNorm = missing.map(norm).toSet
     val m0 = mask(branch)
-    val sel = "(?is)^\\s*SELECT\\s".r.findFirstMatchIn(m0).getOrElse(return branch)
+    val sel = selectHeadRe.findFirstMatchIn(m0).getOrElse(return branch)
     val from = topLevelIndex(m0, "FROM", sel.end)
     if (from < 0) return branch
     val items = splitElems(branch, m0, sel.end, from)
     val rebuilt = items.map { case (txt, _) =>
-      val asM = "(?is)\\s+as\\s+([A-Za-z_]\\w*)\\s*$".r.findFirstMatchIn(txt)
+      val asM = asRe.findFirstMatchIn(txt)
       val exprTxt = asM.map(a => txt.substring(0, a.start)).getOrElse(txt)
       if (missingNorm.contains(norm(exprTxt)))
         "NULL" + asM.map(a => txt.substring(a.start)).getOrElse {
           val t = exprTxt.trim
-          if ("^[A-Za-z_][\\w.]*$".r.matches(t)) " AS " + t.split('.').last else ""
+          if (dottedIdentRe.matches(t)) " AS " + t.split('.').last else ""
         }
       else txt
     }
@@ -389,8 +402,8 @@ object GroupingSetsSql {
   /** Grouping element → its list of column tuples (CUBE = all subsets,
     * ROLLUP = prefixes, GROUPING SETS = its members, expr = itself). */
   private def expand(txt: String, mtxt: String): Seq[Seq[String]] = {
-    val cu = "(?is)^(CUBE|ROLLUP)\\s*\\(".r.findFirstMatchIn(mtxt)
-    val gs = "(?is)^GROUPING\\s+SETS\\s*\\(".r.findFirstMatchIn(mtxt)
+    val cu = cubeRollupRe.findFirstMatchIn(mtxt)
+    val gs = groupingSetsHeadRe.findFirstMatchIn(mtxt)
     if (gs.isDefined) {
       val open = mtxt.indexOf('(', gs.get.start)
       val close = closeOf(mtxt, open)
@@ -409,7 +422,7 @@ object GroupingSetsSql {
   /** `GROUP BY DISTINCT <elements>` → dedup'd GROUPING SETS list. */
   private def rewriteDistinct(sql: String): String = {
     val masked = mask(sql)
-    val m = "(?is)\\bGROUP\\s+BY\\s+DISTINCT\\s".r.findFirstMatchIn(masked)
+    val m = groupByDistinctRe.findFirstMatchIn(masked)
       .getOrElse(return sql)
     val end = listEnd(masked, m.end)
     val elems = splitElems(sql, masked, m.end, end)

@@ -143,57 +143,9 @@ object MaterializedViewSql {
     * needs) — a deliberate one-time 2× DDL cost for zero-fact-scan
     * answers afterwards; a shared-scan derivation is possible if DDL
     * latency ever matters. */
-  private def maybeRegisterTile(spark: SparkSession, name: String,
-      df: DataFrame): Unit = try {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Literal}
-    import org.apache.spark.sql.catalyst.expressions.aggregate._
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    df.queryExecution.analyzed match {
-      case Aggregate(groupings, aggExprs, child, _)
-          if groupings.nonEmpty && groupings.forall(_.isInstanceOf[AttributeReference]) =>
-        val keys = groupings.map(_.asInstanceOf[AttributeReference].name)
-        val sums = Seq.newBuilder[String]
-        val mins = Seq.newBuilder[String]
-        val maxs = Seq.newBuilder[String]
-        val cnts = Seq.newBuilder[String]
-        val ok = aggExprs.forall {
-          case a: AttributeReference => keys.contains(a.name)
-          case Alias(a: AttributeReference, _) => keys.contains(a.name)
-          case Alias(ae: AggregateExpression, _)
-              if !ae.isDistinct && ae.filter.isEmpty =>
-            ae.aggregateFunction match {
-              case Sum(a: AttributeReference, _) => sums += a.name; true
-              case Min(a: AttributeReference) => mins += a.name; true
-              case Max(a: AttributeReference) => maxs += a.name; true
-              case Count(Seq(Literal(_, _))) => true
-              // COUNT(x)/AVG(x) roll up from the cntn partials; only a
-              // NUMERIC counted column rides the sums list (register
-              // would compute SUM over it — an ANSI error on a string);
-              // non-numeric counted columns carry a count-ONLY partial
-              case Count(Seq(a: AttributeReference)) =>
-                if (a.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType])
-                  sums += a.name
-                else cnts += a.name
-                true
-              case avg: Average => avg.child match {
-                case a: AttributeReference => sums += a.name; true
-                case _ => false
-              }
-              case _ => false
-            }
-          case _ => false
-        }
-        if (ok) {
-          val src = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, child)
-          val sumCols = sums.result().distinct
-          graft.plans.MaterializedViews.registerOnce(spark, s"ddl:$name", src,
-            keys, sumCols, mins.result().distinct,
-            maxs.result().distinct,
-            counts = cnts.result().distinct.filterNot(sumCols.contains)): Unit
-        }
-      case _ => ()
-    }
-  } catch { case scala.util.control.NonFatal(_) => () }
+  private def maybeRegisterTile(spark: SparkSession, name: String, df: DataFrame): Unit =
+    try graft.plans.MaterializedViews.registerRollup(spark, s"ddl:$name", df)
+    catch { case scala.util.control.NonFatal(_) => () }
 
   private val metadataTablesRe =
     "(?is)^select\\s+\\*\\s+from\\s+[`\"]?metadata[`\"]?\\s*\\.\\s*tables\\s*$".r

@@ -2,7 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.SparkSession
 
-import SqlText.{balanced, closeOf, mask, splitTop, topLevelIndex}
+import SqlText.{balanced, clauseEnd, closeOf, mask, splitTop, topLevelIndex}
 
 /** SQL measures — `<expr> AS MEASURE <name>` columns (ref: the measure
   * feature of the reference: sql/fun/SqlLibraryOperators.java AGGREGATE,
@@ -30,6 +30,19 @@ import SqlText.{balanced, closeOf, mask, splitTop, topLevelIndex}
   * argument against the detail relation. */
 object MeasureSql {
 
+  private val createViewRe = "(?is)^\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?(?:TEMP(?:ORARY)?\\s+)?VIEW\\s+(\\w+)\\s+AS\\b".r
+  private val groupByRe = "(?i)\\bGROUP\\s+BY\\b".r
+  private val aggregateCallRe = "(?i)\\b(AGGREGATE|COUNT|SUM|AVG|MIN|MAX)\\s*\\(".r
+  private val selectRe = "(?i)\\bSELECT\\b".r
+  private val lastNamePartRe = "(?s)^(?:[\\w\"`]+\\.)?([\\w\"`]+)$".r
+  private val avgRe = "(?is)^\\s*AVG\\s*\\((.*)\\)\\s*$".r
+  private val measureCallRe = "(?i)\\b(AVG|SUM|MIN|MAX|COUNT|STDDEV|VARIANCE|ANY_VALUE)\\s*\\(".r
+  private val filterWhereRe = "(?is)^\\s*FILTER\\s*\\(\\s*WHERE\\b".r
+  private val createRe = "(?is)^\\s*CREATE\\b".r
+  private val endsWithAsRe = "(?is).*\\bAS\\s*$".r
+  private val nameTokenRe = ("(?:[A-Za-z_]\\w*|\"\\w+\"|`[^`]+`)" +
+    "(?:\\s*\\.\\s*(?:[A-Za-z_]\\w*|\"\\w+\"|`[^`]+`))*").r
+
   /** Measure views registered by CREATE VIEW (name → ordered defs). */
   private val viewDefs =
     scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
@@ -53,8 +66,7 @@ object MeasureSql {
   def ddlRewrite(sql: String): String = {
     val masked = mask(sql)
     if (asMeasureRe.findFirstIn(masked).isEmpty) return sql
-    val m = "(?is)^\\s*CREATE\\s+(?:OR\\s+REPLACE\\s+)?(?:TEMP(?:ORARY)?\\s+)?VIEW\\s+(\\w+)\\s+AS\\b".r
-      .findFirstMatchIn(masked).getOrElse(return sql)
+    val m = createViewRe.findFirstMatchIn(masked).getOrElse(return sql)
     val name = sql.substring(m.start(1), m.end(1))
     val body = sql.substring(m.end)
     splitList(body) match {
@@ -71,7 +83,7 @@ object MeasureSql {
   /** Query hook (needs the session for AVG return-type resolution). */
   def maybeRewrite(spark: SparkSession, sql: String): String = {
     val masked = mask(sql)
-    if ("(?is)^\\s*CREATE\\b".r.findFirstIn(masked).isDefined) return ddlRewrite(sql)
+    if (createRe.findFirstIn(masked).isDefined) return ddlRewrite(sql)
     asMeasureRe.findFirstMatchIn(masked) match {
       case Some(mm) => rewriteInline(spark, sql, masked, mm.start)
       case None => rewriteViewConsumer(spark, sql, masked)
@@ -138,13 +150,13 @@ object MeasureSql {
 
   /** Does the consumer text establish an aggregate evaluation context? */
   private def aggContext(masked: String): Boolean =
-    "(?i)\\bGROUP\\s+BY\\b".r.findFirstIn(masked).isDefined ||
-    "(?i)\\b(AGGREGATE|COUNT|SUM|AVG|MIN|MAX)\\s*\\(".r.findFirstIn(masked).isDefined
+    groupByRe.findFirstIn(masked).isDefined ||
+    aggregateCallRe.findFirstIn(masked).isDefined
 
   /** (prefix, items, suffix) of the select list of `sel`. */
   private def splitList(sel: String): Option[(String, Seq[String], String)] = {
     val masked = mask(sel)
-    val selAt = "(?i)\\bSELECT\\b".r.findFirstMatchIn(masked).map(_.start).getOrElse(return None)
+    val selAt = selectRe.findFirstMatchIn(masked).map(_.start).getOrElse(return None)
     val fromAt = topLevelIndex(masked, "FROM")
     if (fromAt < selAt) return None
     val items = splitTop(sel.substring(selAt + 6, fromAt))
@@ -183,15 +195,13 @@ object MeasureSql {
       val exposed = kept.flatMap { i =>
         val t = i.trim
         aliasRe.findFirstMatchIn(t).map(_.group(2)) orElse
-          "(?s)^(?:[\\w\"`]+\\.)?([\\w\"`]+)$".r.findFirstMatchIn(t).map(_.group(1))
+          lastNamePartRe.findFirstMatchIn(t).map(_.group(1))
       }.map(bare).toSet
       val measureNames = defs.map(d => bare(d._1)).toSet
-      val tokRe = ("(?:[A-Za-z_]\\w*|\"\\w+\"|`[^`]+`)" +
-        "(?:\\s*\\.\\s*(?:[A-Za-z_]\\w*|\"\\w+\"|`[^`]+`))*").r
       val args =
         if (hasStar) Seq.empty
         else defs.flatMap { case (_, e) =>
-          tokRe.findAllMatchIn(mask(e)).toSeq
+          nameTokenRe.findAllMatchIn(mask(e)).toSeq
             // a name directly followed by '(' is a call, not a column
             .filterNot(m => e.drop(m.end).trim.startsWith("("))
             .map(m => e.substring(m.start, m.end))
@@ -258,7 +268,6 @@ object MeasureSql {
   private def aggForm(spark: SparkSession, e: String, rel: String,
       prior: Seq[(String, String)]): String = {
     val e1 = subst(e, prior)
-    val avgRe = "(?is)^\\s*AVG\\s*\\((.*)\\)\\s*$".r
     e1 match {
       case avgRe(a) if balanced(mask(a)) =>
         argType(spark, a, rel) match {
@@ -307,7 +316,7 @@ object MeasureSql {
       out = ("(?i)(?<![.\\w])" + np + "(?!\\w)").r.replaceAllIn(out, m => {
         // not an output alias: `AGGREGATE(m) AS m` keeps its AS m
         val before = m.source.subSequence(0, m.start).toString
-        if ("(?is).*\\bAS\\s*$".r.matches(before)) m.matched
+        if (endsWithAsRe.matches(before)) m.matched
         else java.util.regex.Matcher.quoteReplacement(f)
       })
     }
@@ -332,25 +341,9 @@ object MeasureSql {
     val pred = sql.substring(whereAt + 5, groupAt).trim
     if (pred.isEmpty) return sql
     // end of the GROUP BY key list: next top-level clause or EOS
-    val tailKw = "(?i)\\b(HAVING|ORDER|LIMIT|OFFSET|FETCH)\\b".r
-    var depth = 0
-    var insertAt = masked.length
-    var havingAt = -1
-    var i = groupAt
-    while (i < masked.length && insertAt == masked.length) {
-      val ch = masked.charAt(i)
-      if (ch == '(') depth += 1
-      else if (ch == ')') depth -= 1
-      else if (depth == 0 && (i == 0 || { val p = masked.charAt(i - 1)
-            !p.isLetterOrDigit && p != '_' }) &&
-          tailKw.pattern.matcher(masked.substring(i,
-            math.min(masked.length, i + 7))).lookingAt()) {
-        insertAt = i
-        if (masked.substring(i).toUpperCase(java.util.Locale.ROOT)
-            .startsWith("HAVING")) havingAt = i
-      }
-      i += 1
-    }
+    val insertAt = clauseEnd(masked, groupAt, "HAVING", "ORDER", "LIMIT", "OFFSET", "FETCH")
+    val havingAt =
+      if (masked.regionMatches(true, insertAt, "HAVING", 0, 6)) insertAt else -1
     val keep = s"max(CASE WHEN $pred THEN 1 ELSE 0 END) = 1"
     val sb = new StringBuilder(sql)
     if (havingAt >= 0) sb.insert(havingAt + 6, s" $keep AND ")
@@ -358,15 +351,14 @@ object MeasureSql {
     sb.replace(whereAt, groupAt, " ")
     // regular aggregate calls in the select list keep the filtered rows
     val selRegion = sb.substring(0, whereAt)
-    val callRe = "(?i)\\b(AVG|SUM|MIN|MAX|COUNT|STDDEV|VARIANCE|ANY_VALUE)\\s*\\(".r
-    callRe.findAllMatchIn(mask(selRegion)).toSeq.sortBy(-_.start)
+    measureCallRe.findAllMatchIn(mask(selRegion)).toSeq.sortBy(-_.start)
       .foreach { m =>
         val open = selRegion.indexOf('(', m.end - 1)
         val close = closeOf(mask(selRegion), open)
         if (close > 0) {
           // merge with an existing FILTER clause if one follows
           val after = selRegion.substring(close + 1)
-          val fm = "(?is)^\\s*FILTER\\s*\\(\\s*WHERE\\b".r.findFirstMatchIn(after)
+          val fm = filterWhereRe.findFirstMatchIn(after)
           if (fm.isDefined)
             sb.insert(close + 1 + fm.get.end, s" ($pred) AND ")
           else sb.insert(close + 1, s" FILTER (WHERE $pred)")
@@ -379,9 +371,8 @@ object MeasureSql {
     * (the expansion may wrap the call — CAST(AVG(x) AS t) — so the
     * clause attaches inside, at the call itself). */
   private def attachFilter(f: String, filt: String): String = {
-    val callRe = "(?i)\\b(AVG|SUM|MIN|MAX|COUNT|STDDEV|VARIANCE|ANY_VALUE)\\s*\\(".r
     val sb = new StringBuilder(f)
-    callRe.findAllMatchIn(f).toSeq.sortBy(-_.start).foreach { m =>
+    measureCallRe.findAllMatchIn(f).toSeq.sortBy(-_.start).foreach { m =>
       val open = f.indexOf('(', m.end - 1)
       val close = closeOf(mask(f), open)
       if (close > 0) sb.insert(close + 1, s" FILTER ($filt)")

@@ -1,6 +1,6 @@
 package graft.sql
 
-import SqlText.{closeOf, mask, splitElems}
+import SqlText.{closeOf, mask, openOf, splitElems}
 
 /** UNPIVOT with TUPLE labels (pivot.iq:394 —
   * `FOR (job, deptno) IN ((c10_ss, c10_c) AS ('CLERK', 10), ...)`):
@@ -15,6 +15,8 @@ import SqlText.{closeOf, mask, splitElems}
   * re-read the source relation — acceptable for the conformance
   * surface; native single-label UNPIVOT stays on Spark's operator. */
 object UnpivotTupleSql {
+
+  private val trailingNameRe = "(?is)([A-Za-z_`][\\w.`]*)\\s*$".r
 
   def rewrite(sql: String): String = {
     val masked = mask(sql)
@@ -82,20 +84,11 @@ object UnpivotTupleSql {
     var p = um.start - 1
     while (p >= 0 && masked.charAt(p).isWhitespace) p -= 1
     if (p < 0) return None
-    var i = p
-    if (masked.charAt(p) == ')') {
-      var depth = 1
-      i = p - 1
-      while (i >= 0 && depth > 0) {
-        val c = masked.charAt(i)
-        if (c == ')') depth += 1 else if (c == '(') depth -= 1
-        if (depth > 0) i -= 1
-      }
-    } else {
-      val nameM = "(?is)([A-Za-z_`][\\w.`]*)\\s*$".r
-        .findFirstMatchIn(masked.substring(0, p + 1)).getOrElse(return None)
-      i = nameM.start(1)
-    }
+    val i =
+      if (masked.charAt(p) == ')') openOf(masked, p)
+      else trailingNameRe.findFirstMatchIn(masked.substring(0, p + 1))
+        .getOrElse(return None).start(1)
+    if (i < 0) return None
     val rel = sql.substring(i, p + 1)
 
     val allMeasureCols = entries.flatMap(_._1).map(_.trim).distinct

@@ -321,6 +321,17 @@ class GraftSqlSpec extends SparkSpec {
       "SELECT 'it\\'s' AS a  \n, 1 AS b")
   }
 
+  test("EXCLUDE-frame lowering keeps a select alias that ends in _from") {
+    // `_` is a word character: the alias `s_from` holds no FROM keyword
+    val sql = "SELECT empno, sum(sal) OVER (PARTITION BY deptno ORDER BY empno " +
+      "ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW) AS s_from " +
+      "FROM emp ORDER BY empno"
+    val out = GraftSql.rewrite(sql)
+    assert(out != sql && !out.contains("FROM FROM"), out)
+    assert(out.replace("AS s_from", "AS s") ==
+      GraftSql.rewrite(sql.replace("AS s_from", "AS s")), out)
+  }
+
   test("BigQuery SAFE_ arithmetic family lowers to TRY_ builtins") {
     val r = GraftSql.sql(spark, """
       SELECT SAFE_DIVIDE(1, 0) AS d, SAFE_ADD(9223372036854775807, 1) AS a,

@@ -1261,4 +1261,92 @@ class MaterializedViewSpec extends SparkSpec {
       assert(got.map(_.toString).toSeq == q2.collect().map(_.toString).toSeq)
     } finally MaterializedViews.clear()
   }
+
+  test("a tile carrying every partial kind keeps its stored layout through " +
+      "generations, compaction, durable write-through, adoption and a DML fold") {
+    import spark.implicits._
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.types.{DecimalType, StructType}
+    val dec = DecimalType(12, 2)
+    val fact = java.nio.file.Files.createTempDirectory("mvall").toString + "/t"
+    val lat = java.nio.file.Files.createTempDirectory("mvall_lat").toString
+    def rows(rs: (Long, String, String, Double, Double, Double)*) =
+      rs.toDF("id", "tag", "name", "qty", "amt", "disc")
+        .withColumn("amt", col("amt").cast(dec)).withColumn("disc", col("disc").cast(dec))
+    rows((1L, "a", "x", 1.5, 10.25, 0.1), (2L, "a", null, 2.25, 20.5, 0.2),
+      (3L, "b", "y", 3.0, 30.0, 0.0)).write.parquet(fact)
+    def revenue = col("amt") * (lit(1).cast(dec) - col("disc"))
+    // sums and a derived measure side by side: their non-null count
+    // blocks are the ones a mis-ordered merge would cross
+    def define(s: SparkSession) = MaterializedViews.registerOnce(s, "mv_all",
+      s.read.parquet(fact), keys = Seq("tag"), sums = Seq("amt", "qty"),
+      mins = Seq("qty"), maxs = Seq("amt"), approxDistincts = Seq("id"),
+      sumExprs = Seq("rev" -> revenue), counts = Seq("name"))
+    def rollup(s: SparkSession) = s.read.parquet(fact).groupBy("tag")
+      .agg(sum("amt"), sum("qty"), avg("qty"), count("amt"), count("name"),
+        min("qty"), max("amt"), sum(revenue), count(revenue),
+        approx_count_distinct("id"), count(lit(1)))
+      .orderBy("tag")
+    // every rollup rides the tile and equals its recompute with the
+    // tile rewrite excluded
+    def check(s: SparkSession, step: String): Unit = {
+      val q = rollup(s)
+      val plan = q.queryExecution.optimizedPlan
+      assert(plan.toString.contains("InMemoryRelation") && plan.collect {
+        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr
+      }.isEmpty, s"$step: the rollup must ride the tile:\n$plan")
+      val got = q.collect().toSeq
+      val key = "spark.sql.optimizer.excludedRules"
+      s.conf.set(key, MaterializedViews.MvRewrite.ruleName)
+      try assert(got == rollup(s).collect().toSeq, step)
+      finally s.conf.unset(key)
+    }
+    def shape(st: StructType) = st.fields.map(f => f.name -> f.dataType).toSeq
+    def appendRows(d: org.apache.spark.sql.DataFrame) =
+      d.write.mode("append").parquet(fact)
+    try {
+      val stored = shape(define(spark).schema)
+      assert(stored.map(_._1) == Seq("tag", "__mv_sum_amt", "__mv_sum_qty",
+        "__mv_sum_rev", "__mv_cntn_rev", "__mv_cntn_amt", "__mv_cntn_qty",
+        "__mv_cntn_name", "__mv_min_qty", "__mv_max_amt", "__mv_hll_id", "__mv_cnt"))
+      def same(st: StructType, step: String) = assert(shape(st) == stored, step)
+      check(spark, "register")
+      // two generations; their rows land in the files too
+      Seq(rows((4L, "a", "z", 0.5, 5.5, 0.5)), rows((5L, "c", null, 4.0, 7.75, 0.25)))
+        .zipWithIndex.foreach { case (d, i) =>
+          appendRows(d)
+          same(MaterializedViews.appendIncremental(spark, "mv_all", d,
+            deltaInFiles = true).schema, s"generation ${i + 1}")
+          check(spark, s"generation ${i + 1}")
+        }
+      assert(MaterializedViews.generations("mv_all") == 3)
+      // compaction merges both generations and one more delta
+      val d3 = rows((6L, "b", "w", 1.25, 2.0, 0.0))
+      appendRows(d3)
+      same(MaterializedViews.refreshIncremental(spark, "mv_all", d3,
+        deltaInFiles = true).schema, "compaction")
+      assert(MaterializedViews.generations("mv_all") == 1)
+      check(spark, "compaction")
+      // a durable home, then a generation written through as gen-0
+      val tileDir = MaterializedViews.persistTile(spark, "mv_all", lat)
+      val d4 = rows((7L, "c", "v", 2.5, 1.5, 0.1))
+      appendRows(d4)
+      MaterializedViews.appendIncremental(spark, "mv_all", d4, deltaInFiles = true)
+      same(spark.read.parquet(s"$tileDir/data").schema, "durable base")
+      same(spark.read.parquet(s"$tileDir/gen-0").schema, "durable gen-0")
+      check(spark, "write-through")
+      // restart analog: a new session adopts the base and merges gen-0
+      MaterializedViews.release(spark, "mv_all")
+      val s2 = spark.newSession()
+      assert(MaterializedViews.adoptTiles(s2, lat) == Seq("mv_all"))
+      check(s2, "adopt")
+      same(define(s2).schema, "adopt")
+      // a DML append folds into the adopted tile and re-persists it
+      graft.plans.TableDml.insertInto(s2, fact, rows((8L, "a", null, 0.75, 3.25, 0.3)))
+      assert(MaterializedViews.isRegistered("mv_all"), "the append must fold, not drop")
+      check(s2, "insertInto fold")
+      same(define(s2).schema, "insertInto fold")
+      same(s2.read.parquet(s"$tileDir/data").schema, "durable after the fold")
+    } finally MaterializedViews.clear()
+  }
 }

@@ -3,12 +3,15 @@
 # one optimizer-rule install point in src/main, one SQL text scanner
 # (no scanner helper defined in graft/sql outside SqlText.scala) and one
 # site driver (no hand-written fixpoint loop in the modules the front
-# end's passes live in), a green compile, the front end's golden corpus
+# end's passes live in, no hand-written depth loop in the clause
+# scanners that moved onto SqlText), one tile layout (every
+# materialized-view partial column name is spelled in the layout
+# definition only), a green compile, the front end's golden corpus
 # (every pass fires on it and its outputs hold), the scanner's
 # quoting/nesting checks, the
 # spine parity spec's rule-list checks, the rule ablation (each graft
 # rule changes at least one path's plan and no path's rows), the
-# tile-fold job checks (one job stores a fold's generation; a
+# every-partial-kind tile round trip, the tile-fold job checks (one job stores a fold's generation; a
 # join-tile append runs no job on the DML thread beyond its write), and
 # a ten-query oracle smoke.
 # Round 8 zeroed its artifacts by committing a non-compiling tree — this
@@ -54,6 +57,22 @@ if [ -n "$fixpoints" ]; then
   echo "$fixpoints"; exit 1
 fi
 
+echo "[precommit] one depth scanner: no hand-written depth loop in the clause scanners..."
+depths="$(grep -nE 'var depth\b' \
+  src/main/scala/graft/sql/{ExcludeFrameSql,MeasureSql,Decorrelate,UnpivotTupleSql}.scala || true)"
+if [ -n "$depths" ]; then
+  echo "hand-written depth loop; use SqlText's topLevelIndex/topLevelMatches/clauseEnd/openOf:"
+  echo "$depths"; exit 1
+fi
+
+echo "[precommit] one tile layout: partial column names live in the layout definition only..."
+partials="$(grep -rnE '"__mv_(sum_|cntn_|min_|max_|hll_|cnt)' src/main \
+  | grep -vE '^src/main/scala/graft/plans/MaterializedViews\.scala:[0-9]+:    case object [A-Za-z]+ extends Kind\("__mv_' || true)"
+if [ -n "$partials" ]; then
+  echo "partial column name spelled outside MaterializedViews' Kind definitions; read it from the tile definition:"
+  echo "$partials"; exit 1
+fi
+
 echo "[precommit] sbt compile + Test/compile..."
 sbt -batch compile Test/compile
 
@@ -65,6 +84,9 @@ sbt -batch "testOnly graft.RuleAblationSpec -- -z \"every graft rule changes at 
 
 echo "[precommit] tile folds: one job per stored generation, no DML-thread schema job..."
 sbt -batch "testOnly graft.DmlLatticeSpec -- -z \"one materialization per fold\" -z \"no DML-thread job for the other leaves\""
+
+echo "[precommit] tile layout: every partial kind keeps its stored layout end to end..."
+sbt -batch "testOnly graft.MaterializedViewSpec -- -z \"every partial kind\""
 
 echo "[precommit] front-end golden corpus: outputs hold and every pass fires..."
 sbt -batch "testOnly graft.FrontEndGoldenSpec"
